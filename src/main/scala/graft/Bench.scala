@@ -474,7 +474,7 @@ object Bench {
     // should read alongside a number that moved).
     val attributionNotes = Map(
       "q_ann_recall" -> ("r16: brute-force ground truth STAGED in " +
-        "VectorStage.annTruth (tools/AnnProfile attributed 1.0-1.8 s " +
+        "VectorStage.annTruth (the r16 phase split attributed 1.0-1.8 s " +
         "per invocation to the corpus-scan crossJoin recompute — also " +
         "the phase most sensitive to box load, which explains the " +
         "4.17 s driver vs 1.47 s quiet r15 discrepancy; solo rerun " +
@@ -505,7 +505,7 @@ object Bench {
         "serving-model work and moved into GraphStage.recCands " +
         "(recommend_cands build phase). The consumer keeps the " +
         "per-customer top-3 window + presentation sort: 0.80 s solo"),
-      "q_source_overlap" -> ("r18: tools/OverlapProfile attributed the " +
+      "q_source_overlap" -> ("r18: the phase split attributed the " +
         "r17 driver-bench spread (1.42-1.64 s quiet but the one " +
         "unresolved outlier under load) to the lazily-cached distinct " +
         "(source, shingle) relation: its THREE consumers in the one " +
@@ -524,7 +524,7 @@ object Bench {
         "(doc_id, token, tf) relation (tf-weighted cells, re-summed " +
         "exact side): solo 1.40 -> 0.62 s with 0.78/0.62/0.60 " +
         "iterations"),
-      "q_auc" -> ("r17: tools/AucProfile attributed the r16 1.4x quiet " +
+      "q_auc" -> ("r17: the phase split attributed the r16 1.4x quiet " +
         "spread (median 1.31, min 0.93 — reproduced SOLO, GC flat) to " +
         "subtree RECOMPUTE: the KS path re-derived scored+rank and the " +
         "centroid agg ran ~3x per invocation, and the KS stage alone " +

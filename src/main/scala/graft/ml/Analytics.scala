@@ -86,9 +86,13 @@ object Analytics {
     // guard rides the same agg (one extra long buffer, |labels| rows)
     // and fails LOUDLY on sparse/short vectors instead of silently
     // shifting the centroid denominator; VecDot makes the same density
-    // assumption.
+    // assumption. The width test alone misses a NULL embedding (its
+    // size is NULL, not -1, under ANSI) and a D-wide vector holding a
+    // NULL element, so both are counted bad explicitly.
     val centRows = emb.groupBy(col("label"))
-      .agg(sum(when(size(col("embedding")) =!= D, 1L).otherwise(0L))
+      .agg(sum(when(size(col("embedding")) =!= D ||
+            col("embedding").isNull ||
+            exists(col("embedding"), _.isNull), 1L).otherwise(0L))
           .as("bad"),
         count(lit(1)).as("cnt") +:
         (0 until D).map(i => sum(col("embedding").getItem(i).cast("double")

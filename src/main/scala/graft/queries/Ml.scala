@@ -1271,7 +1271,7 @@ object Ml {
     * boundaries (scores pre-rounded to 6, so tie groups agree across
     * engines); each rate is one BIGINT/BIGINT divide.
     *
-    * Scale shape (r17 rewrite — AucProfile attributed the r16 quiet
+    * Scale shape (r17 rewrite — the r17 phase split attributed the r16 quiet
     * spread to subtree RECOMPUTE: the old plan derived AUC from a
     * row-level rank window and KS from a second pass whose broadcast
     * side re-derived the rank path, so `scored` + the centroid agg ran

@@ -1240,7 +1240,7 @@ object Text {
       // build thread plus both legs of the self-join), and a lazy
       // InMemoryRelation let them race to populate — then contend on
       // block locks for — the same partitions mid-query.
-      // tools/OverlapProfile (r18, solo sf0.1): lazy cache 2.2–3.7 s
+      // r18 overlap phase split (solo sf0.1): lazy cache 2.2–3.7 s
       // with exactly the adjudication-tripping spread the r17 driver
       // bench flagged; eager stage 0.8–1.3 s to materialize plus a
       // tight 0.6–1.0 s consume. Same expression DAG → bit-identical.

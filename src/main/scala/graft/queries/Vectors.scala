@@ -394,7 +394,7 @@ object Vectors {
       // its groundtruth files beside the index for the same reason):
       // deterministic per snapshot, ≤ NQ×TopK rows, broadcast here.
       // Recomputing it per audit was q_ann_recall's largest phase
-      // (tools/AnnProfile: 1.0–1.8 s of ~3.5 s at sf0.1). The DuckDB
+      // (r16 phase split: 1.0–1.8 s of ~3.5 s at sf0.1). The DuckDB
       // oracle still derives it from raw embeddings, so every green
       // gate run re-proves the staged copy.
       val truth = broadcast(graft.warehouse.VectorStage.annTruth(s, d))
@@ -729,7 +729,7 @@ object Vectors {
     * text) via [[withCellDistsJoin]] — same vec_d2 chains, identical
     * values (VectorCellSpec proves it), plan size O(1) in k.
     *
-    * Bound CHOICE (r18, tools/CellProfile at the ScaleUp sf1 point,
+    * Bound CHOICE (r18 cell phase split at the ScaleUp sf1 point,
     * n = 20k, k = cellCount = 100): the literal plan's generated code
     * grows ∝ k·dim, and Janino pays a fresh multi-second compile for
     * every DISTINCT literal set — which Lloyd produces every
@@ -958,7 +958,7 @@ object Vectors {
         "cast(conv(substring(md5(concat(cast(vec_id as string), '#split')), 1, 8), 16, 10) as bigint) % 100")
       val emb = Tables.embeddings(s, d)
       // the cell quantizer comes from the persisted VectorStage fit
-      // (r19): the DecontamProfile phase split measured the inline
+      // (r19): the decontam phase split measured the inline
       // 2-round fit at ~0.9 s of this query's ~1.8 s steady state —
       // index-build work, not query work
       val cents = graft.warehouse.VectorStage.cellCents(s, d)
@@ -1376,8 +1376,8 @@ object Vectors {
       import graft.util.{PhaseTimer => PT}
       val emb = Tables.embeddings(s, d).cache()
       val dim = VF.Dim
-      val n = PT("pca:count+cache")(emb.count()) // scalar only
-      val mu: Seq[Double] = PT("pca:mean")(emb
+      val n = PT("phase-timing", "pca:count+cache")(emb.count()) // scalar only
+      val mu: Seq[Double] = PT("phase-timing", "pca:mean")(emb
         .select(posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy("pos")
         .agg(round(sum(col("v").cast("double").cast(DecimalType(28, 20)))
@@ -1415,7 +1415,7 @@ object Vectors {
       val gramAggs = (0 until dim).map(k =>
         (sum(floor(element_at(col("c"), k + 1) * col("xj") * lit(1e9)
           + lit(0.5))).cast("double") / lit(1e9)).as(s"g$k"))
-      val gramRows = PT("pca:gram")(emb.select(centered.as("c"))
+      val gramRows = PT("phase-timing", "pca:gram")(emb.select(centered.as("c"))
         .select(col("c"), posexplode(col("c")).as(Seq("j", "xj")))
         .groupBy("j")
         .agg(gramAggs.head, gramAggs.tail: _*)
@@ -1471,7 +1471,7 @@ object Vectors {
         .select(col("pos"), col("loading"), col("lambda"))
       // localCheckpoint inside checkpointRelease materializes eagerly,
       // so the narrowed width covers every iteration AND the output
-      PT("pca:iterate+checkpoint")(
+      PT("phase-timing", "pca:iterate+checkpoint")(
         graft.util.Staged.checkpointRelease("q_pca_power", out, gdf))
     },
     Some {

@@ -1055,16 +1055,6 @@ object Commit {
     * buckets this version did not rewrite), or a single whole-dir
     * entry when the writer produced no bucket dirs.
     */
-  /** SPARK_GRAFT_PUBLISH_TIMING=1 → one stderr line per publish with
-    * phase wall times (write / footer harvest / manifest commit) — the
-    * measurement knob behind the gold-refresh latency work; zero cost
-    * when unset.
-    */
-  private val timing = sys.env.get("SPARK_GRAFT_PUBLISH_TIMING").contains("1")
-  @inline private def timed[T](enabled: Boolean)(body: => T): (T, Long) =
-    if (!enabled) (body, 0L)
-    else { val t0 = System.nanoTime(); val r = body; (r, System.nanoTime() - t0) }
-
   /** Per-root writer serialization (r18). A publish is
     * read-prev → write-data → claim-version → swap-pointer; two
     * writers on the SAME table interleaving between another's
@@ -1137,10 +1127,6 @@ object Commit {
       prev: Option[Manifest])
       (write: String => Unit): Long = {
     val f = fs(spark, root)
-    // timing is wanted when either the env knob prints stderr lines OR
-    // a measurement main turned on PhaseTimer's in-process sink
-    // (tools/StreamFloor attributing the foreachBatch interior)
-    val tEn = timing || graft.util.PhaseTimer.accEnabled
     // ---- cross-JVM version claim (r19) ----------------------------
     // The in-driver writer lock cannot see writers in OTHER JVMs. Two
     // of those racing used to collide only at the exclusive manifest
@@ -1193,7 +1179,10 @@ object Commit {
         "be dropped by our carry-forward — the lower claim wins")
     try {
     val vdir = s"v=$v"
-    val (_, tWrite) = timed(tEn)(write(s"$root/$vdir"))
+    // publish phases (write / footer harvest / manifest commit) ride
+    // the one phase timer: `publish.write`, `publish.harvest`,
+    // `publish.manifest`
+    graft.util.PhaseTimer("publish", "write")(write(s"$root/$vdir"))
     faultPoint("after-write")
     val newBuckets = f.listStatus(new Path(root, vdir))
       .map(_.getPath.getName).filter(_.startsWith("bucket="))
@@ -1293,8 +1282,9 @@ object Commit {
     // one flat pool batch across ALL fresh entry dirs (an incremental
     // publish's fresh version is one dir per touched bucket — a
     // per-dir harvest loop would serialize their footer opens)
-    val (harvests, tHarvest) = timed(tEn)(Skipping.harvestMany(conf,
-      fresh.map(e => e.dir -> new Path(s"$root/${e.dir}"))))
+    val harvests = graft.util.PhaseTimer("publish", "harvest")(
+      Skipping.harvestMany(conf,
+        fresh.map(e => e.dir -> new Path(s"$root/${e.dir}"))))
     val freshStats = harvests.view.mapValues(_.entry).toMap
     // single-file entries: the entry box IS the file box — no #fstats
     val freshFileStats = harvests.collect {
@@ -1338,19 +1328,11 @@ object Commit {
       prevTxns.updated(app,
         math.max(prevTxns.getOrElse(app, Long.MinValue), ver))
     }
-    val (_, tCommit) = timed(tEn)(commitManifest(spark, root, v, parent,
-      (carried ++ fresh).sortBy(_.key),
-      snapSchema, rows, carriedStats ++ freshStats,
-      carriedFileStats ++ freshFileStats, layout, txns))
-    if (tEn) {
-      graft.util.PhaseTimer.record("publish.write", tWrite)
-      graft.util.PhaseTimer.record("publish.harvest", tHarvest)
-      graft.util.PhaseTimer.record("publish.manifest", tCommit)
-    }
-    if (timing) Console.err.println(
-      f"[publish-timing] v=$v files=${fresh.size} " +
-        f"write=${tWrite / 1e9}%.3f harvest=${tHarvest / 1e9}%.3f " +
-        f"manifest=${tCommit / 1e9}%.3f")
+    graft.util.PhaseTimer("publish", "manifest")(
+      commitManifest(spark, root, v, parent,
+        (carried ++ fresh).sortBy(_.key),
+        snapSchema, rows, carriedStats ++ freshStats,
+        carriedFileStats ++ freshFileStats, layout, txns))
     v
     } finally {
       // the publish DECIDED (committed, refused a rail, or lost the

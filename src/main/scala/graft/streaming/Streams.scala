@@ -372,10 +372,9 @@ object Streams {
     // outermost timer: `upsert.total` minus the publish/layout/probe
     // phases is statusUpsert's own planning residue, and addBatch
     // minus `upsert.total` is the foreachBatch sink machinery —
-    // the split tools/StreamFloor reports (zero cost unless the env
-    // knob or StreamFloor's in-process sink is on)
-    graft.util.PhaseTimer.gated("SPARK_GRAFT_PUBLISH_TIMING",
-      "upsert", "total") {
+    // the split tools/StreamFloor reports (zero cost unless
+    // SPARK_GRAFT_PHASE_TIMING or the in-process sink is on)
+    graft.util.PhaseTimer("upsert", "total") {
       statusUpsertInner(batch, statusPath, buckets, txn)
     }
 
@@ -415,8 +414,7 @@ object Streams {
     // assigns keys under the evolved modulus — without this, a stale
     // writer modulus would put a user's row in a bucket the carry-
     // forward merge never folds, duplicating the key across buckets.
-    val eff = graft.util.PhaseTimer.gated("SPARK_GRAFT_PUBLISH_TIMING",
-      "upsert", "layout_read") {
+    val eff = graft.util.PhaseTimer("upsert", "layout_read") {
       graft.sources.Commit.layout(spark, statusPath)
         .map(_.buckets).getOrElse(buckets)
     }
@@ -433,8 +431,7 @@ object Streams {
     // probe/merge split GoldStage.refreshHourly uses, with the same
     // expectBuckets abort guarding the two independent evaluations of
     // `batch` against non-deterministic sources.
-    val touched = graft.util.PhaseTimer.gated("SPARK_GRAFT_PUBLISH_TIMING",
-      "upsert", "touched_probe") {
+    val touched = graft.util.PhaseTimer("upsert", "touched_probe") {
       batch.select(pmod(col("user_id"), lit(eff)).cast("int").as("bucket"))
         .distinct()
         .collect().map(r => Int.box(r.getInt(0))).toSeq

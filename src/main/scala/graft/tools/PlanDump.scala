@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: run named queries from the registry and print each one's
   * EXECUTED physical plan (post-AQE) plus wall time — the generic
@@ -18,14 +17,7 @@ object PlanDump {
     require(args.length >= 2, "usage: PlanDump <sfDir> <query> [query ...]")
     val dir = args(0)
     val planOut = sys.env.get("SPARK_GRAFT_PLAN_OUT")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("plan-dump")
     args.drop(1).foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
       val t0 = System.nanoTime()

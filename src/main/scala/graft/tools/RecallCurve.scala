@@ -4,7 +4,6 @@ import graft.Tables
 import graft.functions.{VectorFunctions => VF}
 import graft.queries.Vectors
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,14 +27,7 @@ object RecallCurve {
     require(args.nonEmpty, "usage: RecallCurve <sfDir> [out.json]")
     val dir = args(0)
     val out = if (args.length > 1) args(1) else "RECALL_CURVE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("recall-curve")
 
     val NQ = 20; val TopK = 10
     val emb = Tables.embeddings(spark, dir)

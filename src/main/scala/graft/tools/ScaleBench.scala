@@ -88,7 +88,6 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "2").toInt.max(1)
     val testRoot = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
     val genRoot = sys.env.getOrElse("SPARK_GRAFT_SCALEDATA",
@@ -102,17 +101,11 @@ object ScaleBench {
     val withSf3 = sys.env.get("SPARK_GRAFT_SCALE_MAX").exists(_.toDouble >= 3.0)
     val loadBefore = loadavg1()
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = ToolSession.local("scale-bench",
       // explicit (both default-on in Spark 4): the skewed sweep relies
       // on AQE's oversized-partition splitting being engaged
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true")
 
     // Generate the above-fixture points (deterministic; cached on disk).
     val genSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -255,7 +248,7 @@ object ScaleBench {
     val cdfOn = sys.env.getOrElse("SPARK_GRAFT_SCALE_CDF", "1") != "0"
     val cdfJson = if (!cdfOn) "null" else {
       // `buckets` names the r15 exponent-0.44 question: the phase split
-      // (SPARK_GRAFT_PUBLISH_TIMING over these four points) measured
+      // (r16 publish phase split over these four points) measured
       // manifest commit (14-21 ms), footer harvest (13-18 ms) and the
       // touched-bucket probe (~0.1 s) FLAT across 100×; the growth sat
       // entirely in the one-bucket WRITE (0.35→0.49 s), i.e. the
@@ -423,7 +416,7 @@ object ScaleBench {
         s""""touched_bucket_publish_auto_rebucket":{"secs_min":$s3Secs,"exponent_top":$s3Exp},""" +
         s""""changes_since_keyed_auto_rebucket":{"secs_min":$c3Secs,"exponent_top":$c3Exp},""" +
         s""""auto_rebucket_buckets":$autoBk,""" +
-        s""""note":"full_build is ∝ table (expect ~linear). r16 phase split (SPARK_GRAFT_PUBLISH_TIMING): in the one-bucket publish, manifest commit 14-21 ms, footer harvest 13-18 ms and the touched-bucket probe ~0.1 s are FLAT across 100×; the residual growth (the r15 exponent 0.44) is the one-bucket WRITE — per-bucket bytes ∝ table at the fixed 16-bucket layout. The *_scaled_buckets curves hold per-bucket bytes constant (bucket count ∝ table, the Staging.bucketsFor posture) and are the measured cap on that term. The *_auto_rebucket curves (r17) build every point at the FIXED 16-bucket layout and let Commit.optimizeBuckets(maxBucketBytes) evolve the modulus itself — the cap as ENGINE behavior, no pre-scaled fixtures; auto_rebucket_buckets records the modulus the engine chose per point, and the CDF poll is from the post-re-bucket cursor (steady state; the one boundary-crossing poll pays a whole-table keyed diff by contract)."}"""
+        s""""note":"full_build is ∝ table (expect ~linear). r16 publish phase split: in the one-bucket publish, manifest commit 14-21 ms, footer harvest 13-18 ms and the touched-bucket probe ~0.1 s are FLAT across 100×; the residual growth (the r15 exponent 0.44) is the one-bucket WRITE — per-bucket bytes ∝ table at the fixed 16-bucket layout. The *_scaled_buckets curves hold per-bucket bytes constant (bucket count ∝ table, the Staging.bucketsFor posture) and are the measured cap on that term. The *_auto_rebucket curves (r17) build every point at the FIXED 16-bucket layout and let Commit.optimizeBuckets(maxBucketBytes) evolve the modulus itself — the cap as ENGINE behavior, no pre-scaled fixtures; auto_rebucket_buckets records the modulus the engine chose per point, and the CDF poll is from the post-re-bucket cursor (steady state; the one boundary-crossing poll pays a whole-table keyed diff by contract)."}"""
     }
 
     // ---- adversarially-skewed points (join/graph/dedup under hot keys) ----
@@ -563,7 +556,7 @@ object ScaleBench {
     val out =
       s"""{"points":$ptJson,"iters":$iters,"families":$famJson,""" +
         s""""stage_builds":$stageJson,"commit_cdf":$cdfJson,"versions_deep":$verDeepJson,"skewed":$skewJson,""" +
-        s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"build_iters":$buildIters,"driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}","cpus":"$cpus",""" +
+        s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"build_iters":$buildIters,"driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}","cpus":"${ToolSession.cpus}",""" +
         s""""note":"exponents fit on per-SF min times (contention-robust); exponent_top (slope over the two largest SFs) is the cluster-scale statistic; exponent_fit includes overhead-dominated small points and reads low. sf>=0.3 points are ScaleUp-derived from sf0.1 (key-shifted, content-decorrelated replicas)."}"""
     // a filtered run (family filter, or a segment switched off) is a
     // local-iteration tool — it must never clobber the committed

@@ -37,6 +37,8 @@ import org.apache.spark.sql.functions._
   * land under the caller's outDir (the repo keeps them in target/,
   * out of git); layout mirrors TESTDATA.md (`<dir>/<table>.parquet`),
   * so every loader in [[graft.Tables]] works unchanged.
+  *
+  * Usage: runMain graft.tools.ScaleUp <k> <outDir> [srcDir]
   */
 object ScaleUp {
 
@@ -177,5 +179,13 @@ object ScaleUp {
     val probe = new org.apache.hadoop.fs.Path(s"$outDir/embeddings.parquet/_SUCCESS")
     val fs = probe.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(probe)) buildSkewed(spark, srcDir, outDir, k)
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: ScaleUp <k> <outDir> [srcDir]")
+    val src = args.lift(2).getOrElse("/root/testdata/sf0.1")
+    val spark = ToolSession.local("scale-up")
+    try ensure(spark, src, args(1), args(0).toInt) finally spark.stop()
+    println(s"GENSCALE_OK ${args(1)} x${args(0)} from $src")
   }
 }

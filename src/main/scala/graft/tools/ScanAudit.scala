@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Registry-wide column-pruning / filter-pushdown audit — the
@@ -67,15 +66,8 @@ object ScanAudit {
     require(args.nonEmpty, "usage: ScanAudit <sfDir> [out.json]")
     val dir = args(0)
     val out = if (args.length > 1) args(1) else "SCAN_AUDIT.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // static tree; see Scaladoc
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("scan-audit",
+      "spark.sql.adaptive.enabled" -> "false") // static tree; see Scaladoc
 
     val (streaming, batch) = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .partition(_._1.startsWith("q_stream"))

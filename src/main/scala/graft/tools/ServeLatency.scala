@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.serve.DashboardServer
-import org.apache.spark.sql.SparkSession
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -40,14 +39,7 @@ object ServeLatency {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "SERVE_LATENCY.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("serve-latency")
 
     val routes = DashboardServer.DashboardQueries
 
@@ -102,7 +94,7 @@ object ServeLatency {
       s""""warm_cache_best_of_3":${json(warm)},""" +
       s""""first_hit_after_publish_best_of_3":${json(postPublish)},""" +
       f""""warm_refresh_secs":$warmRefreshSecs%.3f,"single_flight":true,""" +
-      s""""sf":"$sfDir","cpus":"$cpus"}"""
+      s""""sf":"$sfDir","cpus":"${ToolSession.cpus}"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), body)
     println(s"SERVE_LATENCY -> $out")
     println(body)

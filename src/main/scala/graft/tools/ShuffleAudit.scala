@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -57,14 +56,7 @@ object ShuffleAudit {
     require(args.nonEmpty, "usage: ShuffleAudit <sfDir> [out.json]")
     val dir = args(0)
     val out = if (args.length > 1) args(1) else "SHUFFLE_AUDIT.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("shuffle-audit")
     // warmup: staged artifacts (TextStage/VectorStage/…) build once
     // here so per-query numbers measure the QUERY, not stage builds
     Queries.foreach(q => graft.SparkEntry.queries(q)(spark, dir).collect())

@@ -71,15 +71,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val soakSecs = if (args.length > 1) args(1).toInt else 180
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("soak")
     import spark.implicits._
 
     val root = graft.util.TempRoot.fresh("soak")
@@ -317,7 +309,7 @@ object Soak {
       .map(_._1).getOrElse(0L)
     val ok = failures.isEmpty
     val body =
-      s"""{"ok":$ok,"wall_secs":${j(wallSecs)},"sf":"$sfDir","cpus":"$cpus",""" +
+      s"""{"ok":$ok,"wall_secs":${j(wallSecs)},"sf":"$sfDir","cpus":"${ToolSession.cpus}",""" +
         s""""clients":8,"status_epochs_appended":${appendedEpoch.get()},""" +
         s""""status_versions":$statusVersions,"final_marker":$finalMarker,""" +
         s""""gold_slices_folded":$foldedSlices,"gold_versions":$goldVersions,""" +

@@ -123,15 +123,7 @@ object StateAb {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("state-ab")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession.local("state-ab")
     val providers = Seq("hdfs", "rocksdb")
     def j(v: Double) = BigDecimal(v)
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
@@ -186,7 +178,7 @@ object StateAb {
 
     val crossover =
       s"""{"sf1_attrib":$sf1Json,"synthetic":$synthJson,""" +
-        s""""cpus":"$cpus","driver_mem":"${sys.env.getOrElse(
+        s""""cpus":"${ToolSession.cpus}","driver_mem":"${sys.env.getOrElse(
           "SPARK_DRIVER_MEM", "8g")}",""" +
         """"note":"provider A/B (default HDFS-backed map vs RocksDB) on the attribution stream-stream join at sf1 state volume and on a synthetic wide-state twin (192B payload both sides, 4 micro-batches, nothing evicted) sized by SPARK_GRAFT_STATE_ROWS; best of 2 after an untimed warm per (shape, provider), fresh checkpoints, noop sink. state_memory_bytes = provider-reported memoryUsedBytes at the last progress — the axis the switch threshold is stated in (SCALING.md)."}"""
 

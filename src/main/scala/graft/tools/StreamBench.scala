@@ -107,14 +107,8 @@ object StreamBench {
     val eventsPerSec = if (args.nonEmpty) args(0).toLong else 20000L
     val seconds = if (args.length > 1) args(1).toInt else 25
     val outPath = if (args.length > 2) args(2) else "STREAM_BENCH.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8") // state stores track volume
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.local("stream-bench",
+      "spark.sql.shuffle.partitions" -> "8") // state stores track volume
     import spark.implicits._
 
     val accel = 120L // 1 wall second ≈ 2 event-time minutes

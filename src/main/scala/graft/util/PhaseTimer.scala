@@ -1,19 +1,23 @@
 package graft.util
 
-/** Env-gated wall timer for attributing a query's cost to its phases
-  * (SPARK_GRAFT_PHASE_TIMING=1 → one stderr line per phase; zero cost
-  * when unset). The measurement knob behind per-query latency work —
-  * bench medians say WHICH query is slow, these lines say WHY.
+/** The one wall timer for attributing a path's cost to its phases.
+  * `PhaseTimer(prefix, label)(body)` records `prefix.label`:
+  *   - SPARK_GRAFT_PHASE_TIMING=1 → one `[prefix] label secs` stderr
+  *     line per call;
+  *   - the in-process sink ([[accumulate]]) → nanos summed per label,
+  *     read back as data through [[totalsMs]].
+  * With both off the body runs bare: one field and one volatile read.
+  * Bench medians say WHICH path is slow; these phases say WHY.
   */
 object PhaseTimer {
-  private val on = sys.env.get("SPARK_GRAFT_PHASE_TIMING").contains("1")
+  private val printOn = sys.env.get("SPARK_GRAFT_PHASE_TIMING").contains("1")
 
   /** In-process accumulation sink, enabled PROGRAMMATICALLY by
-    * measurement mains (tools/StreamFloor) that need phase totals back
-    * as data instead of parsing stderr — stderr lines from inside a
-    * foreachBatch interleave with Spark's own logging and can't be
-    * attributed per run. One volatile read when disabled; labels
-    * accumulate nanos across calls until the next [[accumulate]].
+    * measurement mains (tools/StreamFloor, the perfbench traced run)
+    * that need phase totals back as data instead of parsing stderr —
+    * stderr lines from inside a foreachBatch interleave with Spark's
+    * own logging and can't be attributed per run. Labels accumulate
+    * nanos across calls until the next [[accumulate]].
     */
   @volatile private var accOn = false
   private val acc = new java.util.concurrent.ConcurrentHashMap[
@@ -25,45 +29,21 @@ object PhaseTimer {
     accOn = enable
   }
 
-  private[graft] def accEnabled: Boolean = accOn
-
   /** Accumulated wall time per label, in milliseconds. */
   def totalsMs: Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     acc.asScala.map { case (k, v) => k -> v.get / 1000000L }.toMap
   }
 
-  private[graft] def record(label: String, nanos: Long): Unit =
-    if (accOn) {
-      acc.computeIfAbsent(label,
-        _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(nanos)
-      ()
+  def apply[T](prefix: String, label: String)(body: => T): T =
+    if (!printOn && !accOn) body
+    else {
+      val t0 = System.nanoTime()
+      val r = body
+      val dt = System.nanoTime() - t0
+      if (accOn) acc.computeIfAbsent(s"$prefix.$label",
+        _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(dt)
+      if (printOn) Console.err.println(f"[$prefix] $label%-24s ${dt / 1e9}%.3f s")
+      r
     }
-
-  def apply[T](label: String)(body: => T): T =
-    if (!on && !accOn) body else run("phase-timing", label, print = on)(body)
-
-  /** The same timer under a caller-chosen env gate and line prefix —
-    * the ONE implementation behind every env-gated phase line
-    * (GoldStage's refresh phases ride SPARK_GRAFT_PUBLISH_TIMING
-    * through here; Commit.publish keeps its own variant because it
-    * aggregates three phase durations into a single line). The
-    * in-process sink ([[accumulate]]) captures these labels too,
-    * whatever the env gate says.
-    */
-  def gated[T](envKey: String, prefix: String, label: String)(body: => T): T = {
-    val printIt = sys.env.get(envKey).contains("1")
-    if (!printIt && !accOn) body
-    else run(prefix, label, printIt)(body)
-  }
-
-  private def run[T](prefix: String, label: String, print: Boolean)
-      (body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    val dt = System.nanoTime() - t0
-    record(s"$prefix.$label", dt)
-    if (print) Console.err.println(f"[$prefix] $label%-24s ${dt / 1e9}%.3f s")
-    r
-  }
 }

@@ -34,7 +34,7 @@ object Staged {
   def materialize(df: DataFrame): DataFrame = {
     val mode =
       try df.sparkSession.conf.get("spark.graft.materialize", "local")
-      catch { case _: Throwable => "local" }
+      catch { case scala.util.control.NonFatal(_) => "local" }
     mode match {
       case "reliable" => df.checkpoint(true)
       case "replicated" =>

@@ -298,8 +298,7 @@ object GoldStage {
         batch.sparkSession, path, app))
       if (epoch <= last) return // replayed epoch: its fold already landed
     def t[T](label: String)(body: => T): T =
-      graft.util.PhaseTimer.gated(
-        "SPARK_GRAFT_PUBLISH_TIMING", "refresh-timing", label)(body)
+      graft.util.PhaseTimer("refresh-timing", label)(body)
     val spark = batch.sparkSession
     // layout-aware bucketing (same contract as Streams.statusUpsert):
     // the table's recorded modulus wins — `buckets` only sizes a table

@@ -121,8 +121,7 @@ object GraphStage {
     // steepest curve in SCALING_CURVE.json, and "which of the six
     // stages grows" should be a measurement, not a guess
     def ph[T](label: String)(body: => T): T =
-      graft.util.PhaseTimer.gated("SPARK_GRAFT_PHASE_TIMING",
-        "graph-build", label)(body)
+      graft.util.PhaseTimer("graph-build", label)(body)
     Staging.withShuffleWidth(s, b) {
     ph("raw_copurchase") {
     val raw0 = Tables.orders(s, d).select("o_orderkey", "o_custkey")
@@ -171,7 +170,7 @@ object GraphStage {
     // cap=64 would trim pair instances only 2% — so the stage's lever
     // is per-row cost, not row count. The 125M-instance partial agg
     // keys on ONE packed long (u << 32 | v) instead of two longs —
-    // measured 11.5 → 8.0 s at sf1 (tools/GraphPairsProfile; the
+    // measured 11.5 → 8.0 s at sf1 (r19 sim-pairs phase split; the
     // array-generation alternative loses 2× to allocation). Packing
     // bounds the key domain: sk must fit 32 bits unsigned and u 31 —
     // guarded once per build from the already-aggregated degree side.

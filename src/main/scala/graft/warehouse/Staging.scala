@@ -126,19 +126,25 @@ object Staging {
     * INSIDE a timed query path (q_gold_incremental). Bytes are
     * identical to the path probe (both sum the data files' lengths),
     * so the chosen width — and the table layout — cannot move.
-    * Falls back to 0 (→ `min`) for non-file-backed plans.
+    * Falls back to 0 (→ `min`) for non-file-backed plans, and for a
+    * relation whose `sizeInBytes` is Spark's unknown-size default
+    * (`spark.sql.defaultSizeInBytes`, the BaseRelation fallback).
     */
   def bucketsForRelation(dfs: Seq[org.apache.spark.sql.DataFrame],
       expansion: Double, bucketBytes: Long = 128L << 20,
       min: Int = 8, max: Int = 4096): Int = {
     import org.apache.spark.sql.execution.datasources.{
       HadoopFsRelation, LogicalRelation}
-    val bytes = dfs.map(_.queryExecution.logical.collectFirst {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.sizeInBytes
-        case r => r.sizeInBytes
-      }
-    }.getOrElse(0L)).sum
+    val bytes = dfs.map { df =>
+      val unknown = df.sparkSession.sessionState.conf.defaultSizeInBytes
+      df.queryExecution.logical.collectFirst {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location.sizeInBytes
+          case r if r.sizeInBytes >= unknown => 0L
+          case r => r.sizeInBytes
+        }
+      }.getOrElse(0L)
+    }.sum
     widthFor(bytes, expansion, bucketBytes, min, max)
   }
 

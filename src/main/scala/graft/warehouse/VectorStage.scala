@@ -75,7 +75,7 @@ object VectorStage {
     * Deterministic per corpus snapshot, so it is INDEX-BUILD work, not
     * query work: before this artifact `q_ann_recall` re-ran the
     * corpus×sample crossJoin per invocation — measured as its largest
-    * phase (1.0–1.8 s of a ~3.5 s replay at sf0.1, tools/AnnProfile).
+    * phase (1.0–1.8 s of a ~3.5 s replay at sf0.1, r16 phase split).
     * ≤ NQ×TopK rows; consumers broadcast it.
     */
   def annTruth(s: SparkSession, d: String): DataFrame =
@@ -135,8 +135,7 @@ object VectorStage {
     // grows" should be a measurement, not a guess (r19 verdict #6;
     // same posture as the graph build's timers)
     def ph[T](label: String)(body: => T): T =
-      graft.util.PhaseTimer.gated("SPARK_GRAFT_PHASE_TIMING",
-        "vector-build", label)(body)
+      graft.util.PhaseTimer("vector-build", label)(body)
     Staging.withShuffleWidth(s, b) {
       val emb = Tables.embeddings(s, d)
       ph("lsh_index") {

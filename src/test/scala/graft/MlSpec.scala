@@ -142,4 +142,19 @@ class MlSpec extends SparkSpec {
     assert(kept / total > 0.1 && kept / total < 0.9,
       s"degenerate keep fraction ${kept / total}")
   }
+
+  test("anomalyTagDeterministic refuses a NULL embedding and a NULL element") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val vecType = emb.schema("embedding").dataType
+    val nullVec = emb.limit(1)
+      .withColumn("embedding", lit(null).cast(vecType))
+    val nullElem = emb.limit(1).withColumn("embedding",
+      transform(col("embedding"), (x, i) => when(i === 0, lit(null)).otherwise(x)))
+    for ((what, bad) <- Seq("NULL embedding" -> nullVec,
+        "NULL element" -> nullElem)) {
+      val e = intercept[IllegalArgumentException](
+        ml.Analytics.anomalyTagDeterministic(emb.union(bad)))
+      assert(e.getMessage.contains("must be dense"), s"$what: ${e.getMessage}")
+    }
+  }
 }

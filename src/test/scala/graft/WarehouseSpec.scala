@@ -90,4 +90,24 @@ class WarehouseSpec extends SparkSpec {
     assert(Staging.bucketsFor(spark, d, Seq("u"), expansion = 8) === 8)
     assert(Staging.bucketsFor(spark, d, Seq("u"), expansion = 16) === 16)
   }
+
+  test("bucketsForRelation sizes an unknown-size relation to min, not max") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    def stub(size: Option[Long]) = spark.baseRelationToDataFrame(
+      new BaseRelation with TableScan {
+        override def sqlContext = spark.sqlContext
+        override def schema = StructType(Seq(StructField("x", LongType)))
+        override def sizeInBytes: Long = size.getOrElse(super.sizeInBytes)
+        override def buildScan() = spark.sparkContext.emptyRDD[Row]
+      })
+    // no size override: BaseRelation reports spark.sql.defaultSizeInBytes,
+    // which means "unknown" and must size like an empty input
+    assert(Staging.bucketsForRelation(Seq(stub(None)), expansion = 32) === 8)
+    // a relation that does report its size is still sized by it:
+    // 96 MB x 32 / 128 MB = 24 -> 32
+    assert(Staging.bucketsForRelation(Seq(stub(Some(96L << 20))),
+      expansion = 32) === 32)
+  }
 }
