@@ -1,11 +1,14 @@
 package graft
 
+import graft.sources.ParquetScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-provided deterministic testdata tables
   * (see TESTDATA.md). Explicit single-parquet-per-table layout;
   * at cluster scale these would be partitioned directories — the
-  * reader API is identical (`spark.read.parquet(dir)`).
+  * reader is identical ([[graft.sources.ParquetScan]], which resolves
+  * the schema off one footer on the driver: opening a table runs no
+  * Spark job).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -13,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetScan.read(spark, s"$dir/$name.parquet")
 
   /** The testdata tables are single-row-group parquet files → ONE input
     * split, so a CPU-heavy narrow stage (shingling, hashing, dot
@@ -67,19 +70,20 @@ object Tables {
     }
   }
   /** Events read that enables the legacy `nanosAsLong` flag ONLY when
-    * the footer actually carries TIMESTAMP(NANOS): schema inference is
-    * attempted clean first (footer metadata, no job) and the flag is
-    * set on the NANOS rejection, then the read retried. The flag must
-    * remain set afterwards — the lazy plan re-reads footers at
-    * execution — but with the modern µs layout no legacy flag ever
-    * leaks into the session's unrelated parquet reads.
+    * the footer actually carries TIMESTAMP(NANOS): the schema is
+    * resolved clean first — one footer read on the driver, no job
+    * ([[ParquetScan]]) — and the flag is set on the NANOS rejection,
+    * then the read retried. The flag must remain set afterwards — the
+    * lazy plan re-reads footers at execution — but with the modern µs
+    * layout no legacy flag ever leaks into the session's unrelated
+    * parquet reads.
     */
   private[graft] def loadEventsAdaptive(s: SparkSession, path: String): DataFrame =
-    try s.read.parquet(path)
+    try ParquetScan.read(s, path)
     catch {
       case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.read.parquet(path)
+        ParquetScan.read(s, path)
     }
 
   def documents(s: SparkSession, d: String): DataFrame = fanout(load(s, d, "documents"))

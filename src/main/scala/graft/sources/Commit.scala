@@ -960,7 +960,9 @@ object Commit {
       fileSel: Map[String, Seq[String]] = Map.empty): DataFrame = {
     // fileSel: entry dir → surviving file subset (file-grain skipping).
     // The scan is planned over those leaf files with the same basePath,
-    // so partition discovery still derives the bucket column.
+    // so partition discovery still derives the bucket column. Each
+    // scan's schema comes off one footer read on the driver
+    // (ParquetScan), so assembling a snapshot runs no Spark job.
     def paths(e: Entry): Seq[String] = fileSel.get(e.dir) match {
       case Some(files) => files.map(f => s"$root/${e.dir}/$f")
       case None => Seq(s"$root/${e.dir}")
@@ -969,16 +971,15 @@ object Commit {
     val byVersion = entries.filter(_.key >= 0)
       .groupBy(e => e.dir.takeWhile(_ != '/'))
     val parts =
-      whole.map(e => spark.read.option("basePath", s"$root/${e.dir}")
-        .parquet(paths(e): _*)) ++
+      whole.map(e => ParquetScan.readUnder(spark, s"$root/${e.dir}", paths(e): _*)) ++
         byVersion.toSeq.sortBy(_._1).map { case (vdir, es) =>
           // partition discovery names the column by the dir layout
           // ("bucket=<b>"); cast first, then rename to the caller's
           // bucketCol (no-op for the default). A bucketCol colliding
           // with a DATA column would make the rename ambiguous — fail
           // loudly rather than emit two same-named columns.
-          val scan = spark.read.option("basePath", s"$root/$vdir")
-            .parquet(es.flatMap(paths): _*)
+          val scan = ParquetScan.readUnder(spark, s"$root/$vdir",
+            es.flatMap(paths): _*)
           require(bucketCol == "bucket" ||
             !scan.columns.contains(bucketCol),
             s"bucketCol '$bucketCol' collides with a data column")
@@ -1275,9 +1276,9 @@ object Commit {
     // Schema, row count, per-entry AND per-file zone maps all come
     // from the fresh files' FOOTERS, read once driver-side — publish
     // is on the streaming commit critical path (one call per
-    // micro-batch), and both a Spark job and a second directory
-    // listing (spark.read.parquet partition discovery) there would
-    // re-scan the fresh version every epoch for audit metadata.
+    // micro-batch), and a second directory listing plus footer read
+    // (the whole-dir fallback below) there would re-scan the fresh
+    // version every epoch for audit metadata.
     val conf = spark.sessionState.newHadoopConf()
     // one flat pool batch across ALL fresh entry dirs (an incremental
     // publish's fresh version is one dir per touched bucket — a
@@ -1294,7 +1295,8 @@ object Commit {
     // controls the write), so footer schema + the int partition column
     // reproduces what partition discovery would infer. Whole-dir
     // writers may nest their own partition dirs the footers don't
-    // know about — those keep the spark.read inference.
+    // know about — those keep Spark's partition discovery, over a
+    // schema ParquetScan reads off one footer (a listing, no job).
     val footerSchema: Option[org.apache.spark.sql.types.StructType] =
       if (newBuckets.isEmpty || harvests.size != fresh.size) None
       else harvests.values.flatMap(_.schema).headOption.flatMap { mt =>
@@ -1307,7 +1309,7 @@ object Commit {
         } catch { case scala.util.control.NonFatal(_) => None }
       }
     val snapSchema = footerSchema.orElse(
-      try Some(spark.read.parquet(s"$root/$vdir").schema)
+      try Some(ParquetScan.read(spark, s"$root/$vdir").schema)
       catch { case scala.util.control.NonFatal(_) => None })
     // untouched buckets keep the zone maps recorded when THEIR data
     // was written — immutable data, immutable stats

@@ -164,7 +164,7 @@ object Sources {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(path).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).repartition(n)
+    ParquetScan.read(spark, inDir).repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(outDir)
     n
   }

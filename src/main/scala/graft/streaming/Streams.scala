@@ -28,8 +28,10 @@ object Streams {
     * same way as `Tables.events` (the testdata has shipped `ts` both as
     * INT64 TIMESTAMP(NANOS) and as native TIMESTAMP(MICROS)). The file
     * streaming source requires an explicit schema, so probe the landing
-    * files' physical schema with a batch read first — footer metadata
-    * only, no job — and pick the normalization from the probed dtype.
+    * files' physical schema with a batch read first — one footer read
+    * on the driver, no job (graft.sources.ParquetScan, through
+    * graft.Tables.loadEventsAdaptive) — and pick the normalization from
+    * the probed dtype.
     * Hardcoding the nanos layout here once read the µs integers as
     * long and ÷1000 silently sent every timestamp to ~1970; the probe
     * (plus StreamingSpec's min-ts-year sanity check) prevents that
@@ -39,7 +41,8 @@ object Streams {
     // glob (not a bare file path): the file source requires a directory
     // or pattern; production points this at a landing directory.
     val glob = s"$dir/events.parque*"
-    // batch read of one matched file (footer metadata only, no job);
+    // batch read of one matched file: its schema comes off that file's
+    // footer on the driver (ParquetScan), so the probe runs no job;
     // the glob is resolved by hand — the batch reader stats it literally.
     // The probe sets the legacy nanosAsLong flag only if the footer's
     // NANOS layout demands it (graft.Tables.loadEventsAdaptive), so the
@@ -449,31 +452,42 @@ object Streams {
     val existingTouched =
       graft.sources.Commit.readWhere(spark, statusPath,
         s"bucket in (${touched.mkString(",")})")
-    val merged = existingTouched match {
-      case None => incoming
-      case Some(existing) =>
-        bucketed(existing
-          .drop("bucket")
-          .unionByName(incoming.drop("bucket"))
-          .groupBy("user_id")
-          .agg(max_by(struct(col("last_ts"), col("last_value"), col("last_type")),
-            col("last_ts")).as("s"))
-          .select(col("user_id"), col("s.last_ts").as("last_ts"),
-            col("s.last_value").as("last_value"),
-            col("s.last_type").as("last_type")))
-    }
-    // bucket-align the merge output (one file per touched bucket per
-    // version): a stream of micro-batches otherwise fragments each
-    // bucket into parallelism-many files per trigger — the small-file
-    // problem optimizeBuckets exists to undo, cheaper to not create.
-    // Per-bucket volume is bounded by the micro-batch, so the narrowed
-    // write parallelism costs nothing.
+    // existing rows are re-bucketed under the effective modulus, as
+    // the incoming ones are: a key must meet its new reading in one
+    // group whatever bucket an older writer filed it under
     graft.sources.Commit.publishBuckets(
-      merged.repartition(col("bucket")), statusPath,
+      mergeStatus(existingTouched.map(e => bucketed(e.drop("bucket"))),
+        incoming, touched.size),
+      statusPath,
       expectBuckets = Some(touched.map(_.intValue).toSet),
       layout = Some(graft.sources.Commit.Layout(eff, "user_id")),
       txn = txn)
   }
+
+  /** The status merge, one code path for a first publish and a fold:
+    * the touched buckets' existing rows (if any) unioned with the
+    * batch's per-user latest, exchanged ONCE keyed on the bucket and
+    * folded last-writer-wins per (bucket, user_id) — bucket is a
+    * function of user_id, so the groups are the per-user ones, and the
+    * aggregation reuses the exchange because hash(bucket) clusters
+    * them. Each output partition then holds whole buckets, so publish
+    * writes one file per touched bucket (a stream of micro-batches
+    * otherwise fragments each bucket into parallelism-many files per
+    * trigger — the small-file problem optimizeBuckets exists to undo).
+    * Exchange width = touched buckets (`width`), so a one-bucket batch
+    * schedules one task. Same shape as GoldStage.mergeBucketAligned;
+    * PlanSpec pins the single bucket-keyed exchange.
+    */
+  private[graft] def mergeStatus(existing: Option[DataFrame],
+      incoming: DataFrame, width: Int): DataFrame =
+    existing.fold(incoming)(_.unionByName(incoming))
+      .repartition(width, col("bucket"))
+      .groupBy("bucket", "user_id")
+      .agg(max_by(struct(col("last_ts"), col("last_value"), col("last_type")),
+        col("last_ts")).as("s"))
+      .select(col("user_id"), col("s.last_ts").as("last_ts"),
+        col("s.last_value").as("last_value"),
+        col("s.last_type").as("last_type"), col("bucket"))
 
   /** Reader for the maintained status table — resolves through the
     * manifest pointer (None before the first upsert commits).

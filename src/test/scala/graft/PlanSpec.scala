@@ -14,6 +14,42 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  test("status merge: ONE bucket-keyed exchange between the union and the final aggregate") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.streaming.Streams
+    val path = graft.util.TempRoot.freshDir("plan-status").toString + "/status"
+    def events(rows: (Long, Long, Double, Long)*) = rows
+      .map { case (u, sec, v, e) => (u, new java.sql.Timestamp(sec * 1000L), v, "flow", e) }
+      .toDF("user_id", "ts", "value", "event_type", "event_id")
+    def bucketed(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("bucket", pmod(col("user_id"), lit(16)).cast("int"))
+    Streams.statusUpsert(events((1L, 100L, 1.0, 1L), (2L, 100L, 2.0, 2L),
+      (17L, 100L, 3.0, 3L)), path, buckets = 16)
+    // the upsert's own inputs for a batch touching buckets 1 and 2
+    val existing = sources.Commit.readWhere(spark, path, "bucket in (1,2)").get
+    val incoming = bucketed(Streams.latestPerUser(
+      events((1L, 200L, 5.0, 4L), (18L, 200L, 6.0, 5L))))
+    val merged = Streams.mergeStatus(
+      Some(bucketed(existing.drop("bucket"))), incoming, 2)
+    // AQE wraps the tree; the unexecuted plan renders it once, root first
+    val lines = merged.queryExecution.executedPlan.toString.linesIterator.toSeq
+    val p = lines.mkString("\n")
+    val bucketEx = lines.indices
+      .filter(i => lines(i).contains("Exchange hashpartitioning(bucket"))
+    assert(bucketEx.size === 1, s"expected ONE bucket-keyed exchange:\n$p")
+    assert(lines(bucketEx.head).contains(", 2)"),
+      s"exchange width must be the touched-bucket count:\n$p")
+    val above = lines.take(bucketEx.head)
+    assert(!above.exists(_.contains("Exchange")),
+      s"an exchange above the bucket exchange (the old user_id fold):\n$p")
+    assert(above.exists(_.contains("Aggregate")), s"no final aggregate above:\n$p")
+    assert(lines.drop(bucketEx.head).exists(_.contains("Union")),
+      s"the union must sit below the exchange:\n$p")
+    assert(merged.select("user_id", "last_value").as[(Long, Double)].collect().toSet ===
+      Set(1L -> 5.0, 2L -> 2.0, 17L -> 3.0, 18L -> 6.0))
+  }
+
   test("q_scan_project: filter pushed to scan, columns pruned") {
     val p = plan("q_scan_project")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate"), p)

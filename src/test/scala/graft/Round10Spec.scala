@@ -33,12 +33,14 @@ class Round10Spec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      // baseline: opening the query's three table handles costs N
-      // parquet schema-inference jobs on its own
+      // baseline: opening the query's three table handles runs no job
+      // (the schema comes off one footer on the driver, not from a
+      // Spark inference job — see TableOpenJobsSpec)
       Tables.orders(spark, sf0001); Tables.orders(spark, sf0001)
       Tables.lineitem(spark, sf0001)
       org.apache.spark.GraftListener.drain(spark.sparkContext, 10000)
       val tableOpenJobs = jobs.getAndSet(0)
+      assert(tableOpenJobs === 0, s"opening 3 tables ran $tableOpenJobs jobs")
       val plan = run("q_bloom_semijoin").queryExecution.executedPlan.toString
       org.apache.spark.GraftListener.drain(spark.sparkContext, 10000)
       assert(plan.contains("might_contain"), plan)

@@ -35,4 +35,6 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
   }
   val sf0001 = "/root/testdata/sf0.001"
+  /** The oracle gate's scale factor, beside the spec one. */
+  val sf001: String = sf0001.stripSuffix("sf0.001") + "sf0.01"
 }

@@ -275,6 +275,51 @@ class StreamingSpec extends SparkSpec {
     assert(out === Set((1L, 9.0), (2L, 2.0)))
   }
 
+  test("statusUpsert over a seeded batch sequence equals a last-writer-wins oracle") {
+    // a first publish, then merges. Readings arrive out of order across
+    // batches (a later batch may carry an OLDER reading, which must
+    // lose), and within a batch users have equal-ts readings, broken by
+    // event_id. Seconds never tie ACROSS batches (batch b owns seconds
+    // ≡ b mod 5): the fold orders existing vs incoming rows by ts alone.
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val path = graft.util.TempRoot.freshDir("status_lww").toString + "/status"
+    val rnd = new scala.util.Random(3301)
+    val types = Seq("flow", "ph", "pressure")
+    var eid = 0L
+    val batches = (0 until 5).map { b =>
+      (0 until 40).flatMap { _ =>
+        eid += 1
+        val r = (rnd.nextInt(24).toLong, ts(5L * rnd.nextInt(400) + b),
+          rnd.nextInt(10000) / 100.0, types(rnd.nextInt(types.size)), eid)
+        // every third reading gets an equal-ts twin with a later event_id
+        if (eid % 3 == 0) { eid += 1; Seq(r, r.copy(_3 = r._3 + 1.0, _5 = eid)) }
+        else Seq(r)
+      }
+    }
+    for ((batch, i) <- batches.zipWithIndex) {
+      Streams.statusUpsert(
+        batch.toDF("user_id", "ts", "value", "event_type", "event_id"), path,
+        buckets = 8)
+      val want = batches.take(i + 1).flatten.groupBy(_._1).values
+        .map(_.maxBy(r => (r._2.getTime, r._5)))
+        .map(r => (r._1, r._2, r._3, r._4)).toSet
+      val got = Streams.readStatus(spark, path).get
+        .select("user_id", "last_ts", "last_value", "last_type")
+        .as[(Long, Timestamp, Double, String)].collect()
+      assert(got.length === want.size, s"batch $i: a user holds two rows")
+      assert(got.toSet === want, s"batch $i: status differs from the oracle")
+      // one file per touched bucket in the fresh version
+      val fresh = Paths.get(path, s"v=${i + 1}")
+      Files.list(fresh).iterator().asScala.filter(Files.isDirectory(_)).foreach { b =>
+        val files = Files.list(b).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+        assert(files === 1, s"batch $i: $b holds $files files")
+      }
+    }
+  }
+
   test("statusMaintainer skips replayed epochs: no redundant version bump") {
     // content-idempotence already makes a replay SAFE; the txn
     // watermark makes it FREE — a re-delivered epoch commits nothing
