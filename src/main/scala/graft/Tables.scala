@@ -16,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    ParquetScan.read(spark, s"$dir/$name.parquet")
+    ParquetScan.read(spark, Seq(s"$dir/$name.parquet"))
 
   /** The testdata tables are single-row-group parquet files → ONE input
     * split, so a CPU-heavy narrow stage (shingling, hashing, dot
@@ -79,11 +79,11 @@ object Tables {
     * parquet reads.
     */
   private[graft] def loadEventsAdaptive(s: SparkSession, path: String): DataFrame =
-    try ParquetScan.read(s, path)
+    try ParquetScan.read(s, Seq(path))
     catch {
       case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ParquetScan.read(s, path)
+        ParquetScan.read(s, Seq(path))
     }
 
   def documents(s: SparkSession, d: String): DataFrame = fanout(load(s, d, "documents"))

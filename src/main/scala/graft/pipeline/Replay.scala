@@ -86,7 +86,7 @@ object Replay {
     */
   def run(spark: SparkSession): DataFrame = {
     Generator.readings(spark).write.mode("overwrite").parquet(FixturePath)
-    districtHourly(withAnomalyScores(withFeatures(ParquetScan.read(spark, FixturePath))))
+    districtHourly(withAnomalyScores(withFeatures(ParquetScan.read(spark, Seq(FixturePath)))))
   }
 
   /** The same chain instrumented with the Observation API — the
@@ -99,7 +99,7 @@ object Replay {
     import org.apache.spark.sql.functions._
     val obs = org.apache.spark.sql.Observation("replay_metrics")
     Generator.readings(spark).write.mode("overwrite").parquet(FixturePath)
-    val scored = withAnomalyScores(withFeatures(ParquetScan.read(spark, FixturePath)))
+    val scored = withAnomalyScores(withFeatures(ParquetScan.read(spark, Seq(FixturePath))))
       .observe(obs,
         count(lit(1)).as("n_rows"),
         sum(col("anomaly_flag")).as("n_anomalies"),

@@ -971,15 +971,14 @@ object Commit {
     val byVersion = entries.filter(_.key >= 0)
       .groupBy(e => e.dir.takeWhile(_ != '/'))
     val parts =
-      whole.map(e => ParquetScan.readUnder(spark, s"$root/${e.dir}", paths(e): _*)) ++
+      whole.map(e => ParquetScan.read(spark, paths(e), Some(s"$root/${e.dir}"))) ++
         byVersion.toSeq.sortBy(_._1).map { case (vdir, es) =>
           // partition discovery names the column by the dir layout
           // ("bucket=<b>"); cast first, then rename to the caller's
           // bucketCol (no-op for the default). A bucketCol colliding
           // with a DATA column would make the rename ambiguous — fail
           // loudly rather than emit two same-named columns.
-          val scan = ParquetScan.readUnder(spark, s"$root/$vdir",
-            es.flatMap(paths): _*)
+          val scan = ParquetScan.read(spark, es.flatMap(paths), Some(s"$root/$vdir"))
           require(bucketCol == "bucket" ||
             !scan.columns.contains(bucketCol),
             s"bucketCol '$bucketCol' collides with a data column")
@@ -1309,7 +1308,7 @@ object Commit {
         } catch { case scala.util.control.NonFatal(_) => None }
       }
     val snapSchema = footerSchema.orElse(
-      try Some(ParquetScan.read(spark, s"$root/$vdir").schema)
+      try Some(ParquetScan.read(spark, Seq(s"$root/$vdir")).schema)
       catch { case scala.util.control.NonFatal(_) => None })
     // untouched buckets keep the zone maps recorded when THEIR data
     // was written — immutable data, immutable stats

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -38,19 +38,26 @@ import org.apache.spark.sql.types.StructType
   * "path does not exist" / "unable to infer schema" errors are kept;
   * also in the corner case [[schema]] names.
   * SchemaEquivalenceSpec pins the result to `spark.read.parquet`'s.
+  *
+  * Known cost: to pick the file Spark would pick, the tree under each
+  * path is listed once on the driver, and Spark's file index then lists
+  * it again. For a flat dir of one-row files on a local disk (4-core
+  * VM), opening the read took 24 ms against Spark's 123 ms at 10
+  * files, 109 against 125 ms at 1000 and 262 against 280 ms at 5000:
+  * the saved job stops paying for the second listing somewhere past a
+  * few thousand files. `Rest`'s landing-dir read, re-run after every
+  * append, is the caller whose tree keeps growing.
   */
 object ParquetScan {
 
-  def read(spark: SparkSession, paths: String*): DataFrame =
-    reader(spark, paths, None).parquet(paths: _*)
-
-  /** [[read]] with partition discovery rooted at `basePath`. */
-  def readUnder(spark: SparkSession, basePath: String, paths: String*): DataFrame =
-    reader(spark, paths, Some(basePath)).option("basePath", basePath).parquet(paths: _*)
-
-  private def reader(spark: SparkSession, paths: Seq[String],
-      basePath: Option[String]): DataFrameReader =
-    schema(spark, paths, basePath).fold(spark.read)(spark.read.schema)
+  /** `spark.read.parquet(paths: _*)`, with partition discovery rooted
+    * at `basePath` when given (Spark's `basePath` option).
+    */
+  def read(spark: SparkSession, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame = {
+    val r = schema(spark, paths, basePath).fold(spark.read)(spark.read.schema)
+    basePath.fold(r)(r.option("basePath", _)).parquet(paths: _*)
+  }
 
   /** The data schema Spark's non-merging inference would resolve for
     * `paths` (without partition columns); None where Spark must infer.

@@ -167,7 +167,7 @@ object Rest {
                 col("data_source")))
           stamped.write.mode(SaveMode.Append).parquet(landingDir)
           // per-source landed counts, read back from the landing batch
-          ParquetScan.read(spark, landingDir)
+          ParquetScan.read(spark, Seq(landingDir))
             .filter(col("batch_id") === batchId)
             .groupBy("data_source").count()
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

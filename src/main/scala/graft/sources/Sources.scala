@@ -164,7 +164,7 @@ object Sources {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(path).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    ParquetScan.read(spark, inDir).repartition(n)
+    ParquetScan.read(spark, Seq(inDir)).repartition(n)
       .write.mode(SaveMode.Overwrite).parquet(outDir)
     n
   }

@@ -26,32 +26,24 @@ class Round10Spec extends SparkSpec {
 
   test("q_bloom_semijoin: might_contain prefilter reaches the fact scan side; " +
       "plan construction runs zero jobs and dumps small") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // baseline: opening the query's three table handles runs no job
-      // (the schema comes off one footer on the driver, not from a
-      // Spark inference job — see TableOpenJobsSpec)
+    // baseline: opening the query's three table handles runs no job
+    // (the schema comes off one footer on the driver, not from a Spark
+    // inference job — see TableOpenJobsSpec)
+    val (_, tableOpenJobs) = jobsOf {
       Tables.orders(spark, sf0001); Tables.orders(spark, sf0001)
       Tables.lineitem(spark, sf0001)
-      org.apache.spark.GraftListener.drain(spark.sparkContext, 10000)
-      val tableOpenJobs = jobs.getAndSet(0)
-      assert(tableOpenJobs === 0, s"opening 3 tables ran $tableOpenJobs jobs")
-      val plan = run("q_bloom_semijoin").queryExecution.executedPlan.toString
-      org.apache.spark.GraftListener.drain(spark.sparkContext, 10000)
-      assert(plan.contains("might_contain"), plan)
-      // the sketch is a scalar SUBQUERY, not an eager build: building +
-      // planning the query runs nothing beyond the table opens (the old
-      // form paid a count job + a bloom-aggregate job here)
-      assert(jobs.get() <= tableOpenJobs,
-        s"plan construction ran ${jobs.get()} jobs vs $tableOpenJobs table-open jobs")
-      // …and the dump carries the subquery plan, not megabytes of bloom bits
-      assert(plan.length < 10000, s"plan dump is ${plan.length} chars")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(tableOpenJobs === 0, s"opening 3 tables ran $tableOpenJobs jobs")
+    val (plan, planJobs) =
+      jobsOf(run("q_bloom_semijoin").queryExecution.executedPlan.toString)
+    assert(plan.contains("might_contain"), plan)
+    // the sketch is a scalar SUBQUERY, not an eager build: building +
+    // planning the query runs nothing beyond the table opens (the old
+    // form paid a count job + a bloom-aggregate job here)
+    assert(planJobs <= tableOpenJobs,
+      s"plan construction ran $planJobs jobs vs $tableOpenJobs table-open jobs")
+    // …and the dump carries the subquery plan, not megabytes of bloom bits
+    assert(plan.length < 10000, s"plan dump is ${plan.length} chars")
   }
 
   test("bloom prefilter passes the true matches and prunes most non-matches") {

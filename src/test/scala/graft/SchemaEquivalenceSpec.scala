@@ -33,7 +33,7 @@ class SchemaEquivalenceSpec extends SparkSpec {
   test("every testdata table: the helper's schema equals Spark's inference") {
     for (sf <- Seq(sf0001, sf001); name <- Tables.names) {
       val p = s"$sf/$name.parquet"
-      assertSame(ParquetScan.read(spark, p), spark.read.parquet(p), p)
+      assertSame(ParquetScan.read(spark, Seq(p)), spark.read.parquet(p), p)
     }
   }
 
@@ -48,23 +48,23 @@ class SchemaEquivalenceSpec extends SparkSpec {
     val vdirs = versionDirs(root)
     assert(vdirs.size === 2)
     for (vdir <- vdirs) {
-      assertSame(ParquetScan.read(spark, vdir), spark.read.parquet(vdir), vdir)
+      assertSame(ParquetScan.read(spark, Seq(vdir)), spark.read.parquet(vdir), vdir)
       // the manifest reader's shape: bucket dirs under the version as basePath
       val buckets = new File(vdir).listFiles().filter(_.isDirectory)
         .map(_.getPath).toSeq.sorted
-      assertSame(ParquetScan.readUnder(spark, vdir, buckets: _*),
+      assertSame(ParquetScan.read(spark, buckets, Some(vdir)),
         spark.read.option("basePath", vdir).parquet(buckets: _*), s"$vdir buckets")
       // and the file-grain skipping shape: leaf files under the version
       val files = buckets.flatMap(b => new File(b).listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.getPath)).sorted
-      assertSame(ParquetScan.readUnder(spark, vdir, files: _*),
+      assertSame(ParquetScan.read(spark, files, Some(vdir)),
         spark.read.option("basePath", vdir).parquet(files: _*), s"$vdir files")
     }
     // both versions in one read under the table root: the `v=<n>` dirs
     // become a partition column named like the data column `v`, which
     // Spark merges by position and type — the helper defers to it
     assert(ParquetScan.schema(spark, vdirs, Some(root)) === None)
-    assertSame(ParquetScan.readUnder(spark, root, vdirs.reverse: _*),
+    assertSame(ParquetScan.read(spark, vdirs.reverse, Some(root)),
       spark.read.option("basePath", root).parquet(vdirs.reverse: _*), "v=1 + v=2")
   }
 
@@ -77,8 +77,8 @@ class SchemaEquivalenceSpec extends SparkSpec {
       .toDF("user_id", "n", "bucket").withColumn("bucket", col("bucket").cast("int")), root)
     val vdirs = versionDirs(root)
     assert(vdirs.size === 2)
-    vdirs.foreach(v => assertSame(ParquetScan.read(spark, v), spark.read.parquet(v), v))
-    assert(ParquetScan.read(spark, vdirs.last).schema("n").dataType === LongType)
+    vdirs.foreach(v => assertSame(ParquetScan.read(spark, Seq(v)), spark.read.parquet(v), v))
+    assert(ParquetScan.read(spark, Seq(vdirs.last)).schema("n").dataType === LongType)
   }
 
   test("a TIMESTAMP(NANOS) footer still raises the NANOS error; the retry reads it as long") {
@@ -104,7 +104,7 @@ class SchemaEquivalenceSpec extends SparkSpec {
       // the message Tables.loadEventsAdaptive keys its retry on
       val oracle = intercept[Exception](spark.read.parquet(file))
       assert(String.valueOf(oracle.getMessage).contains("NANOS"), oracle.getMessage)
-      val helper = intercept[Exception](ParquetScan.read(spark, file))
+      val helper = intercept[Exception](ParquetScan.read(spark, Seq(file)))
       assert(String.valueOf(helper.getMessage).contains("NANOS"), helper.getMessage)
       // …so the adaptive loader's retry fires, and reads the raw nanos
       val ev = Tables.loadEventsAdaptive(spark, file)
@@ -127,7 +127,7 @@ class SchemaEquivalenceSpec extends SparkSpec {
     try {
       spark.conf.set(key, "true")
       assert(ParquetScan.schema(spark, vdirs) === None)
-      val merged = ParquetScan.readUnder(spark, root, vdirs: _*)
+      val merged = ParquetScan.read(spark, vdirs, Some(root))
       // every footer seen: the column only v=2 carries is present
       assert(merged.columns.contains("extra"), merged.columns.mkString(","))
       assertSame(merged,
@@ -137,7 +137,7 @@ class SchemaEquivalenceSpec extends SparkSpec {
       case None => spark.conf.unset(key)
     }
     // without merging, the first footer decides — the column is absent
-    assert(!ParquetScan.readUnder(spark, root, vdirs: _*).columns.contains("extra"))
+    assert(!ParquetScan.read(spark, vdirs, Some(root)).columns.contains("extra"))
   }
 
   test("an empty dir and a missing path keep Spark's own errors") {
@@ -148,7 +148,7 @@ class SchemaEquivalenceSpec extends SparkSpec {
     for (p <- Seq(empty, missing)) {
       assert(ParquetScan.schema(spark, Seq(p)) === None)
       val want = intercept[Exception](spark.read.parquet(p))
-      val got = intercept[Exception](ParquetScan.read(spark, p))
+      val got = intercept[Exception](ParquetScan.read(spark, Seq(p)))
       assert(got.getClass === want.getClass)
       assert(got.getMessage === want.getMessage)
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -37,4 +38,31 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf0001 = "/root/testdata/sf0.001"
   /** The oracle gate's scale factor, beside the spec one. */
   val sf001: String = sf0001.stripSuffix("sf0.001") + "sf0.01"
+
+  /** Jobs started from this thread while `body` runs. The listener bus
+    * is drained first and jobs are tagged through a thread-local
+    * property, so neither a late event of an earlier test nor a stray
+    * job of another suite's leftover stream is counted.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"spec-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(_.getProperty("graft.spec.tag") == tag))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListener.drain(sc, 10000)
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      val out = body
+      org.apache.spark.GraftListener.drain(sc, 10000)
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(l)
+    }
+  }
 }

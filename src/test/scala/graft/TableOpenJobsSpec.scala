@@ -2,10 +2,7 @@ package graft
 
 import graft.sources.Commit
 import graft.streaming.Streams
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Opening a table is planning, not computing: the testdata loaders,
   * the events stream's schema probe and the manifest readers resolve
@@ -17,32 +14,6 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 class TableOpenJobsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs started from this thread while `body` runs (tagged through a
-    * thread-local property, so a stray job of another suite's leftover
-    * stream is not counted).
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"table-open-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (Option(s.properties).exists(_.getProperty("graft.spec.tag") == tag))
-          jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftListener.drain(sc, 10000)
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try {
-      val out = body
-      org.apache.spark.GraftListener.drain(sc, 10000)
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(l)
-    }
-  }
 
   /** A 3-version bucketed table whose last version adds a column. */
   private def threeVersionTable(): String = {

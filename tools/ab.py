@@ -11,11 +11,18 @@ goes first flips every pair, so a drift of the host during the session
 lands on both sides alike. Reads BENCHMARK.json (never writes it or
 anything under perfbench/) and needs no network.
 
+Each run lasts BENCHMARK.json's `run_seconds`. Every run is printed as one
+JSON line on stderr; `2>>runs.jsonl` keeps the record.
+
 At the end it prints, per metric, each side's median and quartiles
-and the number of pairs the change won (ties count for neither side),
-and whether the change clears the gain rule: it wins at least 9 in 10
-pairs and its median beats the base's by more than the base's
-inter-quartile distance.
+(over the runs that finished and printed `correct: true`), the number
+of pairs the change won out of all pairs run, and whether the change
+clears the gain rule: it wins at least 9 in 10 of all pairs run and its
+median beats the base's by more than the base's inter-quartile
+distance. Ties count for neither side; a run that crashed or was not
+correct loses its pair (both bad: neither wins). The verdict is "no"
+whenever the change fails more operations, or a larger share of them,
+than the base.
 """
 import argparse
 import json
@@ -41,10 +48,10 @@ def export(rev, workdir):
     return sha, dest
 
 
-def run(checkout, a, seed):
+def run(checkout, a, seed, seconds):
     cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
            "--workload", a.workload, "--seed", str(seed),
-           "--seconds", str(a.seconds), "--trace", a.trace]
+           "--seconds", str(seconds), "--trace", a.trace]
     p = subprocess.run(cmd, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -68,15 +75,11 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, required=True)
-    ap.add_argument("--seconds", type=float)
     ap.add_argument("--trace", choices=("0", "1"), default="0")
     ap.add_argument("--workdir", help="where the base export lives (default: a temp dir)")
-    ap.add_argument("--json", help="append every run as one JSON line to this file")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
-    if a.seconds is None:
-        a.seconds = spec["run_seconds"]
     better = {m["name"]: m["better"]
               for m in spec["per_layer" if a.trace == "1" else "end_to_end"]}
     sha, base = export(a.base, a.workdir or tempfile.mkdtemp(prefix="ab-"))
@@ -86,35 +89,44 @@ def main():
         seed = a.seed0 + i
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
-            r = run(sides[side], a, seed)
+            r = run(sides[side], a, seed, spec["run_seconds"])
             r.update(side=side, seed=seed, pair=i, first=order[0], workload=a.workload,
                      rev=sha if side == "base" else "working tree")
             runs[side].append(r)
             print(json.dumps(r), file=sys.stderr, flush=True)
-            if a.json:
-                with open(a.json, "a") as fh:
-                    fh.write(json.dumps(r) + "\n")
 
-    ok = {s: [r for r in runs[s] if r["ok"]] for s in runs}
+    good = {s: [r for r in runs[s] if r["ok"] and r["correct"]] for s in runs}
+    failed, share = {}, {}
     for s in ("base", "change"):
-        bad = [r for r in ok[s] if not r["correct"]]
-        print(f"{s:6} {len(ok[s])}/{a.pairs} runs ok, {len(bad)} incorrect, "
-              f"failed ops {sum(r['failed'] for r in ok[s])}"
-              f"/{sum(r['attempted'] for r in ok[s])}")
-    pairs = [(b, c) for b, c in zip(runs["base"], runs["change"]) if b["ok"] and c["ok"]]
+        done = [r for r in runs[s] if r["ok"]]
+        attempted = sum(r["attempted"] for r in done)
+        failed[s] = sum(r["failed"] for r in done)
+        share[s] = failed[s] / attempted if attempted else 1.0
+        print(f"{s:6} {len(done)}/{a.pairs} runs ok, {len(done) - len(good[s])} incorrect, "
+              f"failed ops {failed[s]}/{attempted}")
+    more_failed = failed["change"] > failed["base"] or share["change"] > share["base"]
     print(f"{'metric':40} {'base q1/med/q3':>30} {'change q1/med/q3':>30}  wins  gain")
     for name, direction in better.items():
-        b = [r["metrics"][name] for r in ok["base"] if name in r["metrics"]]
-        c = [r["metrics"][name] for r in ok["change"] if name in r["metrics"]]
+        b = [r["metrics"][name] for r in good["base"] if name in r["metrics"]]
+        c = [r["metrics"][name] for r in good["change"] if name in r["metrics"]]
         if not b or not c:
             continue
         sign = 1 if direction == "lower" else -1
-        wins = sum(1 for pb, pc in pairs
-                   if sign * (pb["metrics"][name] - pc["metrics"][name]) > 0)
+
+        def value(r):
+            return r["metrics"].get(name) if r["ok"] and r["correct"] else None
+
+        def change_wins(pb, pc):
+            vb, vc = value(pb), value(pc)
+            if vc is None:
+                return False
+            return vb is None or sign * (vb - vc) > 0
+        wins = sum(change_wins(pb, pc) for pb, pc in zip(runs["base"], runs["change"]))
         bq, cq = quartiles(b), quartiles(c)
-        gain = wins >= 0.9 * len(pairs) and sign * (bq[1] - cq[1]) > bq[2] - bq[0]
+        gain = (wins >= 0.9 * a.pairs and sign * (bq[1] - cq[1]) > bq[2] - bq[0]
+                and not more_failed)
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
-        print(f"{name:40} {fmt(bq):>30} {fmt(cq):>30}  {wins:>2}/{len(pairs):<2} "
+        print(f"{name:40} {fmt(bq):>30} {fmt(cq):>30}  {wins:>2}/{a.pairs:<2} "
               f"{'yes' if gain else 'no'}")
 
 
