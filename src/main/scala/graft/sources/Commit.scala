@@ -85,6 +85,31 @@ object Commit {
       pmod(expr(keyExprSql), lit(buckets)).cast("int")
   }
 
+  /** The bucket ids `layout` assigns to `df`'s rows, ascending: what a
+    * maintainer's micro-batch touches. One stage, no exchange: each
+    * partition folds its ids into a bit set and the driver takes the
+    * union, so the result is bounded by partitions × buckets. A null key
+    * has no bucket and fails the probe.
+    */
+  def touchedBuckets(df: DataFrame, layout: Layout): Seq[Int] =
+    touchedProbe(df, layout).collect().iterator.flatten.toSeq.distinct.sorted
+
+  /** The probe [[touchedBuckets]] runs: one bucket set per partition. */
+  private[graft] def touchedProbe(df: DataFrame,
+      layout: Layout): org.apache.spark.sql.Dataset[Array[Int]] = {
+    import df.sparkSession.implicits._
+    val keyExprSql = layout.keyExprSql
+    df.select(layout.bucketExpr).mapPartitions { rows =>
+      val seen = scala.collection.mutable.BitSet.empty
+      rows.foreach { r =>
+        if (r.isNullAt(0))
+          throw new IllegalStateException(s"null bucket for key $keyExprSql")
+        seen += r.getInt(0)
+      }
+      Iterator.single(seen.toArray)
+    }
+  }
+
   private val Pointer = "_POINTER"
 
   private def fs(spark: SparkSession, root: String) =
@@ -423,64 +448,39 @@ object Commit {
       bucketCol: String = "bucket"): Option[DataFrame] =
     if (!chainContains(spark, root, v)) None
     else manifestAt(spark, root, v).map(m =>
-      applySchema(assemble(spark, root, m.entries, bucketCol), m.schema,
-        if (m.entries.exists(_.key >= 0)) bucketCol else "bucket"))
+      snapshot(spark, root, m, m.entries, bucketColOf(m, bucketCol)))
 
   /** Read the current snapshot. Bucketed entries come back with the
     * bucket id as an int column named `bucketCol`; whole-dir entries
     * (key -1) come back as-is. One parquet scan per distinct VERSION
-    * dir (entries sharing a version are listed into a single scan with
-    * that version as basePath, so `bucket=<b>` partition pruning and
-    * parallel listing still apply) — versions outstanding are bounded
-    * by vacuum cadence, not by table size. Returns None before any
-    * commit.
+    * dir — versions outstanding are bounded by vacuum cadence, not by
+    * table size — each over a [[ManifestFileIndex]], so a filter on the
+    * result opens only the buckets and files it can match. Returns None
+    * before any commit.
     */
   def read(spark: SparkSession, root: String,
       bucketCol: String = "bucket"): Option[DataFrame] =
     currentManifest(spark, root).map(m =>
-      applySchema(assemble(spark, root, m.entries, bucketCol), m.schema,
-        // the rename concerns the PARTITION column; a whole-dir
-        // snapshot has none, and a data column that happens to be
-        // named "bucket" must not be touched
-        if (m.entries.exists(_.key >= 0)) bucketCol else "bucket"))
+      snapshot(spark, root, m, m.entries, bucketColOf(m, bucketCol)))
 
-  /** Read the current snapshot with manifest-level data skipping:
-    * entries whose zone maps ([[Skipping]], harvested from parquet
-    * footers at publish time) prove the predicate can match no row
-    * are never scanned — the scan is planned over the surviving
-    * entries only, so at scale a narrow time-range or key-range read
-    * of a large maintained table costs IO proportional to the
-    * MATCHING data, not the table. The bucket partition column prunes
-    * too (each bucketed entry's key is its exact value). The FULL
-    * predicate is still applied to the surviving rows: pruning is an
-    * IO optimization, never a correctness dependency, and a predicate
-    * shape or column the evaluator does not understand simply keeps
-    * every entry. `predicateSql` is one SQL boolean expression over
-    * the snapshot's columns.
+  /** The rename concerns the PARTITION column; a whole-dir snapshot has
+    * none, and a data column that happens to be named "bucket" must not
+    * be touched.
+    */
+  private def bucketColOf(m: Manifest, bucketCol: String): String =
+    if (m.entries.exists(_.key >= 0)) bucketCol else "bucket"
+
+  /** Read the current snapshot filtered by `predicateSql`, one SQL
+    * boolean expression over the snapshot's columns: [[read]] with the
+    * filter applied. The scan's [[ManifestFileIndex]] skips the entries
+    * and files whose zone maps ([[Skipping]], harvested from parquet
+    * footers at publish time) or bucket prove the filter matches no row,
+    * so a narrow read of a large maintained table costs IO proportional
+    * to the MATCHING data. [[planWhere]] reports that pruning.
     */
   def readWhere(spark: SparkSession, root: String, predicateSql: String,
       bucketCol: String = "bucket"): Option[DataFrame] =
-    currentManifest(spark, root).map { m =>
-      val (keptSel, _) = splitEntriesFiles(spark, m, predicateSql, bucketCol)
-      val kept = keptSel.map(_._1)
-      val fileSel = keptSel.collect { case (e, Some(fs)) => e.dir -> fs }.toMap
-      val bc = if (m.entries.exists(_.key >= 0)) bucketCol else "bucket"
-      val base =
-        if (kept.nonEmpty)
-          applySchema(assemble(spark, root, kept, bc, fileSel), m.schema, bc)
-        else m.schema match {
-          // fully pruned: an empty relation with the committed schema
-          // (stats-bearing manifests always carry one)
-          case Some(st) =>
-            val renamed = org.apache.spark.sql.types.StructType(
-              st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f))
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-          case None =>
-            applySchema(assemble(spark, root, m.entries, bc), m.schema, bc)
-        }
-      base.filter(expr(predicateSql))
-    }
+    read(spark, root, bucketCol).map(_.filter(expr(predicateSql)))
 
   /** Change feed at bucket grain: the rows of every entry the current
     * snapshot does NOT share with committed version `since` — i.e.
@@ -515,15 +515,15 @@ object Commit {
     } yield {
       val baseline = base.entries.toSet
       val changed = cur.entries.filterNot(baseline.contains)
-      val bc = if (cur.entries.exists(_.key >= 0)) bucketCol else "bucket"
+      val bc = bucketColOf(cur, bucketCol)
       if (changed.isEmpty) {
         val st = cur.schema.getOrElse(
-          applySchema(assemble(spark, root, cur.entries, bc), cur.schema, bc).schema)
+          snapshot(spark, root, cur, cur.entries, bc).schema)
         val renamed = org.apache.spark.sql.types.StructType(
           st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-      } else applySchema(assemble(spark, root, changed, bc), cur.schema, bc)
+      } else snapshot(spark, root, cur, changed, bc)
     }
 
   /** Row-level change feed over the bucket-grain [[changesSince]]: the
@@ -581,7 +581,7 @@ object Commit {
       if chainContains(spark, root, since)
       base <- manifestAt(spark, root, since)
     } yield {
-      val bc = if (cur.entries.exists(_.key >= 0)) bucketCol else "bucket"
+      val bc = bucketColOf(cur, bucketCol)
       val baseline = base.entries.toSet
       val changed = cur.entries.filterNot(baseline.contains)
       // buckets present at `since` that were rewritten or dropped: the
@@ -605,12 +605,12 @@ object Commit {
       def readEntries(m: Manifest, es: Seq[Entry]): DataFrame =
         if (es.isEmpty) {
           val st = m.schema.getOrElse(
-            applySchema(assemble(spark, root, m.entries, bc), m.schema, bc).schema)
+            snapshot(spark, root, m, m.entries, bc).schema)
           val renamed = org.apache.spark.sql.types.StructType(
             st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f))
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-        } else applySchema(assemble(spark, root, es, bc), m.schema, bc)
+        } else snapshot(spark, root, m, es, bc)
       // compare under the CURRENT schema so a schema evolution between
       // the snapshots diffs by value, not by column-set accident. The
       // schema-less path's applySchema is an identity, so the old side
@@ -853,63 +853,24 @@ object Commit {
   }
 
   /** The full skipping plan: kept entries with their surviving file
-    * subset (None = read the whole entry dir), plus pruned entries.
+    * subset (None = read the whole entry dir), plus pruned entries —
+    * answered by [[ManifestFileIndex.Pruner.select]], the function the
+    * read's file index calls, over the parsed predicate and the
+    * snapshot schema. A predicate that does not parse keeps everything.
     */
   private[graft] def planWhereFiles(spark: SparkSession, root: String,
       predicateSql: String, bucketCol: String = "bucket")
       : (Seq[(Entry, Option[Seq[String]])], Seq[Entry]) =
-    currentManifest(spark, root)
-      .map(splitEntriesFiles(spark, _, predicateSql, bucketCol))
-      .getOrElse((Nil, Nil))
-
-  private def splitEntriesFiles(spark: SparkSession, m: Manifest,
-      predicateSql: String, bucketCol: String)
-      : (Seq[(Entry, Option[Seq[String]])], Seq[Entry]) = {
-    val pred =
-      try Some(spark.sessionState.sqlParser.parseExpression(predicateSql))
-      catch { case scala.util.control.NonFatal(_) => None }
-    pred match {
-      case None => (m.entries.map(e => (e, Option.empty[Seq[String]])), Nil)
-      case Some(p) =>
-        // a bucketed entry's key IS the bucket column's value — let
-        // the evaluator prune on it like any other zone map. Stats are
-        // filtered through Skipping.trusted first: reads cast carried
-        // buckets to the CURRENT schema, and a stat a lossy cast could
-        // have invalidated must not prune (the bucket key itself is
-        // cast-free — the partition value is the manifest's own int).
-        def withKey(e: Entry, base: Option[Skipping.EntryStats])
-            : Option[Skipping.EntryStats] = {
-          val t = base.map(Skipping.trusted(_, m.schema))
-          if (e.key < 0) t
-          else {
-            val b = Skipping.ColStat("l", e.key.toString, e.key.toString, 0L)
-            Some(t.fold(Skipping.EntryStats(0L, Map(bucketCol -> b)))(s =>
-              s.copy(cols = s.cols + (bucketCol -> b))))
-          }
-        }
-        def may(st: Option[Skipping.EntryStats]): Boolean =
-          st.forall(s =>
-            try Skipping.mayMatch(p, s)
-            catch { case scala.util.control.NonFatal(_) => true })
-
-        val kept = Seq.newBuilder[(Entry, Option[Seq[String]])]
-        val pruned = Seq.newBuilder[Entry]
-        m.entries.foreach { e =>
-          if (!may(withKey(e, m.stats.get(e.dir)))) pruned += e
-          else m.fileStats.get(e.dir).filter(_.nonEmpty) match {
-            case None => kept += ((e, None))
-            case Some(files) =>
-              val survivors = files.collect {
-                case (f, st) if may(withKey(e, Some(st))) => f
-              }
-              if (survivors.isEmpty) pruned += e
-              else if (survivors.size == files.size) kept += ((e, None))
-              else kept += ((e, Some(survivors)))
-          }
-        }
-        (kept.result(), pruned.result())
-    }
-  }
+    currentManifest(spark, root).map { m =>
+      val pruner = ManifestFileIndex.Pruner(m.entries, m.stats, m.fileStats,
+        m.layout, m.schema, bucketCol)
+      try pruner.select(Nil,
+        Seq(spark.sessionState.sqlParser.parseExpression(predicateSql)))
+      catch {
+        case _: org.apache.spark.sql.catalyst.parser.ParseException =>
+          (m.entries.map(e => (e, Option.empty[Seq[String]])), Nil)
+      }
+    }.getOrElse((Nil, Nil))
 
   /** Project the assembled scan through the manifest's committed
     * schema: exactly its columns, in its order, cast to its types — a
@@ -940,6 +901,11 @@ object Commit {
     }
   }
 
+  /** [[assemble]] projected through `m`'s committed schema. */
+  private def snapshot(spark: SparkSession, root: String, m: Manifest,
+      entries: Seq[Entry], bucketCol: String): DataFrame =
+    applySchema(assemble(spark, root, m, entries, bucketCol), m.schema, bucketCol)
+
   private def applySchema(df: DataFrame,
       schema: Option[org.apache.spark.sql.types.StructType],
       bucketCol: String): DataFrame =
@@ -955,40 +921,79 @@ object Commit {
       }: _*)
     }
 
-  private def assemble(spark: SparkSession, root: String,
-      entries: Seq[Entry], bucketCol: String,
-      fileSel: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    // fileSel: entry dir → surviving file subset (file-grain skipping).
-    // The scan is planned over those leaf files with the same basePath,
-    // so partition discovery still derives the bucket column. Each
-    // scan's schema comes off one footer read on the driver
-    // (ParquetScan), so assembling a snapshot runs no Spark job.
-    def paths(e: Entry): Seq[String] = fileSel.get(e.dir) match {
-      case Some(files) => files.map(f => s"$root/${e.dir}/$f")
-      case None => Seq(s"$root/${e.dir}")
+  /** The snapshot's scan over `entries` of manifest `m`: one
+    * [[ManifestFileIndex]] relation per footer schema of the bucketed
+    * entries (`bucket` an int partition column, then renamed to
+    * `bucketCol`) and one per whole-dir entry, unioned by name. Version
+    * dirs whose footers agree share one relation: every relation pays
+    * its own reader setup when the query runs, and a maintained table's
+    * snapshot spans as many version dirs as it has recent batches.
+    *
+    * Every entry dir is listed once, on the driver, in one pooled batch
+    * ([[Skipping.listMany]]); each version dir's data schema comes off
+    * that listing's footer through [[ParquetScan.schemaOf]] (Spark's own
+    * inference where the session merges schemas). Opening a snapshot
+    * therefore runs no Spark job, however many buckets it has.
+    */
+  private def assemble(spark: SparkSession, root: String, m: Manifest,
+      entries: Seq[Entry], bucketCol: String): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val conf = spark.sessionState.newHadoopConf()
+    val dirs = entries.map(e => new Path(s"$root/${e.dir}"))
+    // entry dir → (path relative to it, status) of each visible file,
+    // relative as the footer harvest names #fstats files
+    val listed = entries.map(_.dir).zip(dirs).zip(Skipping.listMany(conf, dirs))
+      .map { case ((dir, p), tried) =>
+        val base = p.getFileSystem(conf).makeQualified(p).toString + "/"
+        dir -> tried.get.map(st => st.getPath.toString.stripPrefix(base) -> st)
+          .filterNot(_._1.split('/').exists(ParquetScan.hidden))
+          .sortBy(_._1)
+      }.toMap
+    // nullable throughout, as Spark's file sources read any schema: a
+    // footer's `required` does not bind the other files of the scan
+    def dataSchema(es: Seq[Entry]): StructType = {
+      val leaves = es.flatMap(e => listed(e.dir).map(_._2))
+      widenNullability(ParquetScan.schemaOf(spark, leaves)
+        .orElse(new ParquetFileFormat().inferSchema(spark, Map.empty, leaves))
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"no parquet data files under ${es.map(e => s"$root/${e.dir}").mkString(", ")}")))
+        .asInstanceOf[StructType]
     }
-    val whole = entries.filter(_.key < 0)
-    val byVersion = entries.filter(_.key >= 0)
-      .groupBy(e => e.dir.takeWhile(_ != '/'))
-    val parts =
-      whole.map(e => ParquetScan.read(spark, paths(e), Some(s"$root/${e.dir}"))) ++
-        byVersion.toSeq.sortBy(_._1).map { case (vdir, es) =>
-          // partition discovery names the column by the dir layout
-          // ("bucket=<b>"); cast first, then rename to the caller's
-          // bucketCol (no-op for the default). A bucketCol colliding
-          // with a DATA column would make the rename ambiguous — fail
-          // loudly rather than emit two same-named columns.
-          val scan = ParquetScan.read(spark, es.flatMap(paths), Some(s"$root/$vdir"))
-          require(bucketCol == "bucket" ||
-            !scan.columns.contains(bucketCol),
-            s"bucketCol '$bucketCol' collides with a data column")
-          scan.withColumn("bucket", col("bucket").cast("int"))
-            .withColumnRenamed("bucket", bucketCol)
-        }
+    def scan(es: Seq[Entry], dataSchema: StructType,
+        partitionSchema: StructType): DataFrame = {
+      val pruner = ManifestFileIndex.Pruner(es, m.stats, m.fileStats, m.layout,
+        Some(dataSchema), "bucket")
+      val index = new ManifestFileIndex(pruner,
+        es.map(e => e.dir -> listed(e.dir).filter(f => ParquetScan.isData(f._2))).toMap,
+        es.map(e => new Path(s"$root/${e.dir}")), partitionSchema)
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+        dataSchema, None, new ParquetFileFormat(), Map.empty)(spark))
+    }
+    val whole = entries.filter(_.key < 0).map { e =>
+      // a whole-dir writer may nest its own partition dirs, which only
+      // Spark's partition discovery knows how to name
+      if (listed(e.dir).exists(_._1.contains("/")))
+        ParquetScan.read(spark, Seq(s"$root/${e.dir}"), Some(s"$root/${e.dir}"))
+      else scan(Seq(e), dataSchema(Seq(e)), StructType(Nil))
+    }
+    val bySchema = entries.filter(_.key >= 0)
+      .groupBy(e => e.dir.takeWhile(_ != '/')).toSeq.sortBy(_._1)
+      .map { case (_, es) => (dataSchema(es), es) }
+    val byVersion = bySchema.map(_._1).distinct.map { st =>
+      val part = scan(bySchema.filter(_._1 == st).flatMap(_._2), st,
+        StructType(Seq(StructField("bucket", IntegerType, nullable = true))))
+      // a bucketCol colliding with a DATA column would make the rename
+      // ambiguous — fail loudly rather than emit two same-named columns
+      require(bucketCol == "bucket" || !part.columns.contains(bucketCol),
+        s"bucketCol '$bucketCol' collides with a data column")
+      part.withColumnRenamed("bucket", bucketCol)
+    }
     // allowMissingColumns: version dirs written before an additive
     // column appeared union with it null; the manifest schema then
     // fixes column order/types in applySchema
-    parts.reduce(_.unionByName(_, allowMissingColumns = true))
+    (whole ++ byVersion).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   private def readSmall(f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
@@ -1674,8 +1679,7 @@ object Commit {
     currentManifest(spark, root)
       .filter(_.entries.exists(_.key >= 0))
       .map { m =>
-        val df = applySchema(assemble(spark, root, m.entries, bucketCol),
-          m.schema, bucketCol)
+        val df = snapshot(spark, root, m, m.entries, bucketCol)
         val evolved: Option[Layout] =
           for {
             thr <- maxBucketBytes

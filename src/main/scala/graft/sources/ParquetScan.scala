@@ -39,14 +39,19 @@ import org.apache.spark.sql.types.StructType
   * also in the corner case [[schema]] names.
   * SchemaEquivalenceSpec pins the result to `spark.read.parquet`'s.
   *
-  * Known cost: to pick the file Spark would pick, the tree under each
-  * path is listed once on the driver, and Spark's file index then lists
-  * it again. For a flat dir of one-row files on a local disk (4-core
-  * VM), opening the read took 24 ms against Spark's 123 ms at 10
-  * files, 109 against 125 ms at 1000 and 262 against 280 ms at 5000:
-  * the saved job stops paying for the second listing somewhere past a
-  * few thousand files. `Rest`'s landing-dir read, re-run after every
-  * append, is the caller whose tree keeps growing.
+  * Known cost: to pick the file Spark would pick, [[read]] lists the
+  * tree under each path once on the driver, and Spark's file index
+  * then lists it again. For a flat dir of one-row files on a local disk
+  * (4-core VM), opening the read took 24 ms against Spark's 123 ms at
+  * 10 files, 109 against 125 ms at 1000 and 262 against 280 ms at
+  * 5000: the saved job stops paying for the second listing somewhere
+  * past a few thousand files. [[Commit]] snapshot reads list once:
+  * their file index is built from the same listing [[schemaOf]] picks
+  * from. The readers that still list twice are `Tables`, `Rest`,
+  * `Replay` and `Sources.compact` (and `Commit` for whole-dir versions
+  * only: a publish's schema read, an entry with nested partition dirs);
+  * `Rest`'s landing-dir read, re-run after every append, is the one
+  * whose tree keeps growing.
   */
 object ParquetScan {
 
@@ -66,42 +71,71 @@ object ParquetScan {
     * position and type in a way a pinned schema cannot express.
     */
   private[graft] def schema(spark: SparkSession, paths: Seq[String],
-      basePath: Option[String] = None): Option[StructType] = {
+      basePath: Option[String] = None): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else {
+      val (leaves, partitionNames) =
+        leafFiles(spark.sessionState.newHadoopConf(), paths, basePath)
+      leaves.flatMap(schemaOf(spark, _)).filterNot(_.fieldNames.exists(f =>
+        partitionNames.exists(spark.sessionState.conf.resolver(_, f))))
+    }
+
+  /** The data schema Spark's non-merging inference reads off `leaves`,
+    * leaf files already listed (summary files included, other hidden
+    * names left out): the footer [[footerFile]] picks, through the
+    * converter Spark builds from the session conf. None when the session
+    * merges schemas, or when no leaf is a parquet data or summary file.
+    */
+  private[graft] def schemaOf(spark: SparkSession,
+      leaves: Seq[FileStatus]): Option[StructType] = {
     val conf = spark.sessionState.conf
     if (conf.isParquetSchemaMergingEnabled) None
-    else {
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      val (footer, partitionNames) = footerFile(hadoopConf, paths, basePath)
-      footer.map { st =>
-        val converter = new ParquetToSparkSchemaConverter(
-          assumeBinaryIsString = conf.isParquetBinaryAsString,
-          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
-          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-          nanosAsLong = conf.legacyParquetNanosAsLong,
-          respectUnknownTypeAnnotation =
-            conf.parquetReaderRespectUnknownTypeAnnotation)
-        val meta = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(st, hadoopConf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(
-          new Footer(st.getPath, meta), converter)
-      }.filterNot(_.fieldNames.exists(f => partitionNames.exists(conf.resolver(_, f))))
+    else footerFile(leaves).map { st =>
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          conf.parquetReaderRespectUnknownTypeAnnotation)
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, meta), converter)
     }
   }
 
   private val SummaryFiles = Seq("_common_metadata", "_metadata")
 
-  /** The one footer Spark's inference touches for `paths`, and the
-    * names of the `name=value` dirs between the base path and the
-    * files.
+  /** A file or dir name Spark's file listing skips, summary files
+    * excepted.
     */
-  private def footerFile(conf: Configuration, paths: Seq[String],
-      basePath: Option[String]): (Option[FileStatus], Set[String]) = {
-    def hidden(st: FileStatus): Boolean = {
-      val name = st.getPath.getName
-      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-        name.endsWith("._COPYING_")) && !SummaryFiles.exists(name.startsWith)
-    }
+  private[graft] def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !SummaryFiles.exists(name.startsWith)
+
+  private def hidden(st: FileStatus): Boolean = hidden(st.getPath.getName)
+
+  /** A leaf Spark reads rows from: not hidden and not a summary file. */
+  private[graft] def isData(st: FileStatus): Boolean =
+    !hidden(st) && !SummaryFiles.exists(st.getPath.getName.startsWith)
+
+  /** The one footer Spark's inference touches among `leaves`: the
+    * summary file if any, else the first data file by full path.
+    */
+  private def footerFile(leaves: Seq[FileStatus]): Option[FileStatus] = {
+    val files = leaves.sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    SummaryFiles.flatMap(named).headOption
+      .orElse(files.find(f => !SummaryFiles.contains(f.getPath.getName)))
+  }
+
+  /** The leaf files under `paths`, and the names of the `name=value`
+    * dirs between the base path and the files; None when a path is
+    * missing (Spark's read then resolves it, or reports it).
+    */
+  private def leafFiles(conf: Configuration, paths: Seq[String],
+      basePath: Option[String]): (Option[Seq[FileStatus]], Set[String]) = {
     def children(st: FileStatus): Seq[FileStatus] =
       st.getPath.getFileSystem(conf).listStatus(st.getPath).toSeq
         .filterNot(hidden).flatMap(c => if (c.isDirectory) children(c) else Seq(c))
@@ -109,8 +143,7 @@ object ParquetScan {
       val path = new Path(p)
       path.getFileSystem(conf).makeQualified(path)
     }
-    // a missing path (or a glob, which no caller passes): Spark's read
-    // resolves it, or reports it
+    // a missing path (or a glob, which no caller passes)
     val roots = paths.map { p =>
       val q = qualify(p)
       try Some(q.getFileSystem(conf).getFileStatus(q))
@@ -127,11 +160,7 @@ object ParquetScan {
       val partitionNames = leaves.flatMap { case (b, files) =>
         files.flatMap(_.getPath.getParent.toString.stripPrefix(b).split('/'))
       }.filter(_.contains("=")).map(_.takeWhile(_ != '=')).toSet
-      val files = leaves.flatMap(_._2).sortBy(_.getPath.toString)
-      def named(n: String) = files.find(_.getPath.getName == n)
-      (SummaryFiles.flatMap(named).headOption
-        .orElse(files.find(f => !SummaryFiles.contains(f.getPath.getName))),
-        partitionNames)
+      (Some(leaves.flatMap(_._2)), partitionNames)
     }
   }
 }

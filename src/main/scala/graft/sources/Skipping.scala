@@ -16,7 +16,8 @@ import java.util.Base64
 /** Manifest-level zone maps ("data skipping"): per-entry column
   * min / max / null-count statistics harvested from parquet FOOTERS at
   * publish time, recorded in the commit manifest, and evaluated
-  * against a read predicate BEFORE any scan is planned.
+  * against a read's filters by its [[ManifestFileIndex]] before any
+  * file is opened.
   *
   * This is the table-format statistics lever (Delta `stats`, Iceberg
   * manifest `lower_bounds`/`upper_bounds`) re-expressed over
@@ -32,9 +33,8 @@ import java.util.Base64
   * Everything here is CONSERVATIVE: a column, file, or predicate
   * shape the harvester or evaluator does not understand simply
   * declines to prune (the entry is kept and the ordinary row filter
-  * does the work). Correctness never rests on a statistic —
-  * [[Commit.readWhere]] always re-applies the full predicate to the
-  * surviving scan.
+  * does the work). Correctness never rests on a statistic — Spark
+  * always applies a data filter to the rows the pruned scan returns.
   *
   * The reference keeps its maintained tables in Postgres, where the
   * planner gets this for free from indexes (ref:
@@ -203,7 +203,8 @@ object Skipping {
     * physical types, NaN-polluted float bounds, and stats-less chunks
     * all fold to "don't know" for that column.
     */
-  /** Shared daemon pool for driver-side footer reads: publish sits on
+  /** Shared daemon pool for driver-side footer reads and dir listings
+    * ([[listMany]]): publish sits on
     * the streaming commit critical path and an incremental writer's
     * version dir holds (writer parallelism × touched buckets) small
     * files — reading their footers one by one serializes cheap
@@ -256,6 +257,28 @@ object Skipping {
     } finally rd.close()
   }
 
+  /** The recursive file listings of several dirs, in order, as one
+    * batch on the shared pool: one listing task per dir, so a snapshot
+    * of many buckets pays about one listing round trip, not one per
+    * bucket. A dir whose listing fails is a Failure in its slot.
+    */
+  def listMany(conf: Configuration, dirs: Seq[Path])
+      : Seq[scala.util.Try[Seq[org.apache.hadoop.fs.LocatedFileStatus]]] =
+    dirs.map(dir => footerPool.submit(
+      new java.util.concurrent.Callable[Seq[org.apache.hadoop.fs.LocatedFileStatus]] {
+        def call() = {
+          val it = dir.getFileSystem(conf).listFiles(dir, true)
+          val out = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
+          while (it.hasNext) {
+            val st = it.next()
+            if (st.isFile) out += st
+          }
+          out.result()
+        }
+      })).map(f => scala.util.Try(f.get()).recoverWith {
+        case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
+      })
+
   /** Harvest SEVERAL directories through one flat pool batch: an
     * incremental publish's fresh version holds one dir per touched
     * bucket, each usually a single file — harvesting them dir-by-dir
@@ -271,18 +294,12 @@ object Skipping {
   def harvestMany(conf: Configuration,
       dirs: Seq[(String, Path)]): Map[String, Harvest] = {
     val failed = scala.collection.mutable.Set.empty[String]
-    val listed = dirs.flatMap { case (key, dir) =>
-      try {
-        val fsys = dir.getFileSystem(conf)
-        val base = fsys.makeQualified(dir).toString
-        val it = fsys.listFiles(dir, true)
-        val statuses = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet")) statuses += st
-        }
-        Some((key, base, statuses.result()))
-      } catch { case scala.util.control.NonFatal(_) => failed += key; None }
+    val listed = dirs.zip(listMany(conf, dirs.map(_._2))).flatMap {
+      case ((key, dir), tried) =>
+        tried.map { files =>
+          val base = dir.getFileSystem(conf).makeQualified(dir).toString
+          (key, base, files.filter(_.getPath.getName.endsWith(".parquet")))
+        }.toOption.orElse { failed += key; None }
     }
     val futures = listed.flatMap { case (key, base, statuses) =>
       statuses.map(st => key -> footerPool.submit(
@@ -643,27 +660,35 @@ object Skipping {
       }).getOrElse(true)
 
     case Like(a, pat, escape) if escape == '\\' =>
-      (for {
-        n <- attrName(a); c <- statOf(s, n)
-        p <- Option(pat).collect { case Literal(u, StringType) if u != null =>
-          u.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString }
-        if p.nonEmpty && p.endsWith("%") &&
-          !p.init.exists(ch => ch == '%' || ch == '_' || ch == '\\')
-      } yield {
-        if (c.t == "n") false
-        else if (c.t != "s") true
-        else {
-          val prefix = p.init.getBytes(StandardCharsets.UTF_8)
-          val (lo, hi) = bounds(c)
-          val belowAll = hi.exists(cmpDom(_, BytesD(prefix)) < 0)
-          val aboveAll = prefixUpper(prefix).exists(u =>
-            lo.exists(cmpDom(_, BytesD(u)) >= 0))
-          !(belowAll || aboveAll)
-        }
-      }).getOrElse(true)
+      Option(pat).collect { case Literal(u, StringType) if u != null =>
+        u.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString }
+        .filter(p => p.nonEmpty && p.endsWith("%") &&
+          !p.init.exists(ch => ch == '%' || ch == '_' || ch == '\\'))
+        .fold(true)(p => prefixMayMatch(a, p.init, s))
+    // the optimizer's form of `LIKE 'p%'`, which is what a scan is handed
+    case StartsWith(a, Literal(u, StringType)) if u != null =>
+      prefixMayMatch(a, u.toString, s)
+    // the optimizer's form of a long IN list
+    case InSet(a, vs) =>
+      mayMatch(In(a, vs.toSeq.map(Literal(_, a.dataType))), s)
 
     case _ => true
   }
+
+  /** Whether a column can hold a value starting with `prefix`. */
+  private def prefixMayMatch(a: Expression, prefix: String, s: EntryStats): Boolean =
+    (for { n <- attrName(a); c <- statOf(s, n) } yield {
+      if (c.t == "n") false
+      else if (c.t != "s") true
+      else {
+        val p = prefix.getBytes(StandardCharsets.UTF_8)
+        val (lo, hi) = bounds(c)
+        val belowAll = hi.exists(cmpDom(_, BytesD(p)) < 0)
+        val aboveAll = prefixUpper(p).exists(u =>
+          lo.exists(cmpDom(_, BytesD(u)) >= 0))
+        !(belowAll || aboveAll)
+      }
+    }).getOrElse(true)
 
   /** Range logic for one comparison; `flipped` means the column was on
     * the RIGHT (`5 < x` ≡ `x > 5`).

@@ -421,34 +421,31 @@ object Streams {
       graft.sources.Commit.layout(spark, statusPath)
         .map(_.buckets).getOrElse(buckets)
     }
-    def bucketed(df: DataFrame) =
-      df.withColumn("bucket", pmod(col("user_id"), lit(eff)).cast("int"))
+    val layout = graft.sources.Commit.Layout(eff, "user_id")
+    def bucketed(df: DataFrame) = df.withColumn("bucket", layout.bucketExpr)
     // ≤ `buckets` driver values — which partitions this batch touches.
-    // Probed from the RAW batch's key column (pruned scan + map-side
-    // partial distinct), NOT from the latestPerUser reduction: the r18
-    // StreamFloor split attributed ~half the upsert's addBatch to this
-    // probe paying the full max_by aggregation (plus its cache
-    // materialization) before asking a question only user_id answers.
-    // With the probe off the reduction, `incoming` has exactly one
-    // consumer (the merge write) and needs no cache at all — same
-    // probe/merge split GoldStage.refreshHourly uses, with the same
-    // expectBuckets abort guarding the two independent evaluations of
-    // `batch` against non-deterministic sources.
+    // Probed from the RAW batch's key column (pruned scan, one stage),
+    // NOT from the latestPerUser reduction: the r18 StreamFloor split
+    // attributed ~half the upsert's addBatch to this probe paying the
+    // full max_by aggregation (plus its cache materialization) before
+    // asking a question only user_id answers. With the probe off the
+    // reduction, `incoming` has exactly one consumer (the merge write)
+    // and needs no cache at all — same probe/merge split
+    // GoldStage.refreshHourly uses, with the same expectBuckets abort
+    // guarding the two independent evaluations of `batch` against
+    // non-deterministic sources.
     val touched = graft.util.PhaseTimer("upsert", "touched_probe") {
-      batch.select(pmod(col("user_id"), lit(eff)).cast("int").as("bucket"))
-        .distinct()
-        .collect().map(r => Int.box(r.getInt(0))).toSeq
+      graft.sources.Commit.touchedBuckets(batch, layout)
     }
     val incoming = bucketed(latestPerUser(batch))
-    // manifest-level skipping: untouched buckets' version dirs are
-    // pruned by entry key before any scan is planned (readWhere also
-    // re-applies the filter row-side, so the merge stays exact)
     // empty micro-batch → no-op, no version bump: recovery replays and
     // multi-source unions hand foreachBatch empty frames routinely, and
     // publishing one would commit an empty whole-dir snapshot REPLACING
     // the status table (no bucket dirs to carry forward — Commit.publish
     // now also refuses that shape as a backstop)
     if (touched.isEmpty) return
+    // the bucket filter is a partition filter of the read's file
+    // index: untouched buckets' files are never listed into the scan
     val existingTouched =
       graft.sources.Commit.readWhere(spark, statusPath,
         s"bucket in (${touched.mkString(",")})")
@@ -459,8 +456,8 @@ object Streams {
       mergeStatus(existingTouched.map(e => bucketed(e.drop("bucket"))),
         incoming, touched.size),
       statusPath,
-      expectBuckets = Some(touched.map(_.intValue).toSet),
-      layout = Some(graft.sources.Commit.Layout(eff, "user_id")),
+      expectBuckets = Some(touched.toSet),
+      layout = Some(layout),
       txn = txn)
   }
 

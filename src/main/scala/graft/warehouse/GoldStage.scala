@@ -306,8 +306,8 @@ object GoldStage {
     // every later refresh's assignment with it
     val eff = graft.sources.Commit.layout(spark, path)
       .map(_.buckets).getOrElse(buckets)
-    def bucketed(df: DataFrame) = df.withColumn("bucket",
-      pmod(col("user_id"), lit(eff)).cast("int"))
+    val layout = graft.sources.Commit.Layout(eff, "user_id")
+    def bucketed(df: DataFrame) = df.withColumn("bucket", layout.bucketExpr)
     // the touched-bucket probe reads ONLY the key column (column
     // pruning keeps the parquet scan to user_id + the caller's filter
     // columns) — the expensive per-row work (JSON quality extraction,
@@ -317,19 +317,15 @@ object GoldStage {
     // into the merge: one extra full shuffle plus a cache
     // materialization per refresh (measured as the dominant cost of
     // the gold replay after the write itself).
-    val touched = t("touched-probe")(batch
-      .select(pmod(col("user_id"), lit(eff)).cast("int").as("bucket"))
-      .distinct()
-      .collect().map(r => Int.box(r.getInt(0))).toSeq)
+    val touched = t("touched-probe")(graft.sources.Commit.touchedBuckets(batch, layout))
     // empty batch → no-op, no version bump (the Delta MERGE-with-empty-
     // source semantics). Publishing would be worse than wasteful: an
     // empty bucketed write has no bucket dirs, which the manifest would
     // commit as a whole-dir EMPTY snapshot replacing the table
     // (Commit.publish now also refuses that shape as a backstop).
     if (touched.isEmpty) return
-    // manifest-level skipping: untouched buckets' version dirs are
-    // pruned by entry key before any scan is planned (readWhere also
-    // re-applies the filter row-side, so this stays exact)
+    // the bucket filter is a partition filter of the read's file
+    // index: untouched buckets' files are never listed into the scan
     val existingTouched = graft.sources.Commit.readWhere(spark, path,
       s"bucket in (${touched.mkString(",")})")
     // ONE hash aggregation, ONE exchange, does the batch's partial
@@ -374,8 +370,8 @@ object GoldStage {
     // TASKS as well as bytes — the shape the scale claim states.
     t("merge+publish")(graft.sources.Commit.publishBuckets(
       mergeBucketAligned(unioned, touched.size), path,
-      expectBuckets = Some(touched.map(_.intValue).toSet),
-      layout = Some(graft.sources.Commit.Layout(eff, "user_id")),
+      expectBuckets = Some(touched.toSet),
+      layout = Some(layout),
       txn = txn))
   }
 

@@ -50,6 +50,32 @@ class PlanSpec extends SparkSpec {
       Set(1L -> 5.0, 2L -> 2.0, 17L -> 3.0, 18L -> 6.0))
   }
 
+  test("touched-bucket probe: one stage, no exchange; a null key fails") {
+    import spark.implicits._
+    import sources.Commit
+    val layout = Commit.Layout(16, "user_id")
+    val batch = Seq(1L, 17L, 2L, 35L, 900000000L, -3L).toDF("user_id").repartition(3)
+    val probe = Commit.touchedProbe(batch, layout)
+    probe.collect()
+    val p = probe.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    // the repartition above is the input's own; the probe adds none
+    assert("Exchange".r.findAllIn(p).size === 1, p)
+    val unshuffled = Commit.touchedProbe(Seq(1L, 2L).toDF("user_id"), layout)
+    assert(!unshuffled.queryExecution.executedPlan.toString.contains("Exchange"),
+      unshuffled.queryExecution.executedPlan.toString)
+    // the same set the old select(bucket).distinct() gave
+    assert(Commit.touchedBuckets(batch, layout) ===
+      batch.select(layout.bucketExpr).distinct().as[Int].collect().toSeq.sorted)
+    assert(Commit.touchedBuckets(batch, layout) === Seq(0, 1, 2, 3, 13))
+    assert(Commit.touchedBuckets(batch.limit(0), layout).isEmpty)
+    val err = intercept[Exception] {
+      Commit.touchedBuckets(Seq(Some(1L), None).toDF("user_id"), layout)
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("null bucket")), err)
+  }
+
   test("q_scan_project: filter pushed to scan, columns pruned") {
     val p = plan("q_scan_project")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate"), p)

@@ -55,4 +55,22 @@ class TableOpenJobsSpec extends SparkSpec {
     assert(rows.length === 3)
     assert(collectJobs >= 1)
   }
+
+  test("a snapshot of more buckets than Spark lists without a job opens with zero jobs") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32
+    // paths) Spark's own file index lists through a job; tables go up
+    // to 4096 buckets (Staging.bucketsFor, Commit.optimizeBuckets)
+    val root = graft.util.TempRoot.freshDir("table-open-wide").toString + "/t"
+    Commit.publishBuckets((0L until 80L).map(u => (u, u.toDouble)).toDF("user_id", "v")
+      .withColumn("bucket", pmod(col("user_id"), lit(40)).cast("int")), root,
+      layout = Some(Commit.Layout(40, "user_id")))
+    assert(Commit.current(spark, root).get._2.size === 40)
+    val (reads, jobs) = jobsOf(Seq(
+      Commit.read(spark, root).get,
+      Commit.readWhere(spark, root, "user_id = 41").get,
+      Commit.readAt(spark, root, 1L).get))
+    assert(jobs === 0, s"opening a 40-bucket snapshot ran $jobs Spark jobs")
+    assert(reads.head.count() === 80)
+    assert(reads(1).select("v").as[Double].collect().toSeq === Seq(41.0))
+  }
 }

@@ -23,6 +23,15 @@ distance. Ties count for neither side; a run that crashed or was not
 correct loses its pair (both bad: neither wins). The verdict is "no"
 whenever the change fails more operations, or a larger share of them,
 than the base.
+
+Then, per end-to-end metric, it prints the change's median against the
+base's and one label:
+  REGRESSION  the change's median is worse than the base's by more than
+              the metric's BENCHMARK.json `bound` times the base median;
+  unresolved  otherwise, when the base's own inter-quartile distance is
+              wider than that bound, unless every change run beats every
+              base run;
+  ok          otherwise.
 """
 import argparse
 import json
@@ -128,6 +137,29 @@ def main():
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{name:40} {fmt(bq):>30} {fmt(cq):>30}  {wins:>2}/{a.pairs:<2} "
               f"{'yes' if gain else 'no'}")
+
+    print(f"{'end-to-end metric':40} {'base med':>12} {'change med':>12} {'bound':>7}  label")
+    for m in spec["end_to_end"]:
+        name, bound = m["name"], m["bound"]
+        b = [r["metrics"][name] for r in good["base"] if name in r["metrics"]]
+        c = [r["metrics"][name] for r in good["change"] if name in r["metrics"]]
+        if not b or not c:
+            continue
+        print(f"{name:40} {quartiles(b)[1]:>12.4g} {quartiles(c)[1]:>12.4g} {bound:>7}  "
+              f"{regression_label(b, c, bound, m['better'])}")
+
+
+def regression_label(b, c, bound, better):
+    """REGRESSION / unresolved / ok for one end-to-end metric (see the
+    module doc): `b` and `c` are the base's and the change's runs."""
+    sign = 1 if better == "lower" else -1
+    bq, cq = quartiles(b), quartiles(c)
+    limit = bound * abs(bq[1])
+    if sign * (cq[1] - bq[1]) > limit:
+        return "REGRESSION"
+    if bq[2] - bq[0] > limit and not all(sign * (x - y) < 0 for x in c for y in b):
+        return "unresolved"
+    return "ok"
 
 
 if __name__ == "__main__":
