@@ -55,10 +55,6 @@ final class DashboardServer(
   def computeCount(name: String): Long =
     Option(computes.get(name)).map(_.longValue).getOrElse(0L)
 
-  /** Rows → a JSON array of objects. Timestamps/strings are quoted;
-    * numerics and booleans bare; null is null. The dashboard payload is
-    * small by construction, so a StringBuilder is fine.
-    */
   /** JSON string-body escape. Truncate BEFORE calling this — cutting
     * the escaped form can split a two-char escape and emit invalid
     * JSON.
@@ -73,6 +69,10 @@ final class DashboardServer(
     case c => c.toString
   }
 
+  /** Rows → a JSON array of objects. Timestamps/strings are quoted;
+    * numerics and booleans bare; null is null. The dashboard payload is
+    * small by construction, so a StringBuilder is fine.
+    */
   private def toJson(df: DataFrame): String = {
     val cols = df.schema.fieldNames
     val sb = new StringBuilder("[")
@@ -109,14 +109,6 @@ final class DashboardServer(
   private val inflight = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.CompletableFuture[String]]()
 
-  /** Cached payload for `name`, recomputing if stale — SINGLE-FLIGHT:
-    * when an entry expires under concurrent load, exactly one request
-    * runs the Spark job; the others serve the STALE payload until the
-    * swap (stale-while-revalidate — a 30 s dashboard would rather see
-    * a 31 s-old page than queue N identical Spark jobs). On a cold
-    * entry there is nothing stale to serve, so followers wait on the
-    * winner's future instead of stampeding the cluster.
-    */
   /** The single-flight winner's body: run `name`'s Spark job, swap the
     * fresh payload into the cache, settle `mine`. Callers hold the
     * flight (their putIfAbsent won with `mine`).
@@ -149,6 +141,14 @@ final class DashboardServer(
     json
   }
 
+  /** Cached payload for `name`, recomputing if stale — SINGLE-FLIGHT:
+    * when an entry expires under concurrent load, exactly one request
+    * runs the Spark job; the others serve the STALE payload until the
+    * swap (stale-while-revalidate — a 30 s dashboard would rather see
+    * a 31 s-old page than queue N identical Spark jobs). On a cold
+    * entry there is nothing stale to serve, so followers wait on the
+    * winner's future instead of stampeding the cluster.
+    */
   private def payload(name: String): String = {
     val hit = cache.get(name)
     if (hit != null && clock() - hit._2 < ttlMillis) hit._1
@@ -474,13 +474,13 @@ final class DashboardServer(
 }
 
 object DashboardServer {
-  /** The reference's 6-query dashboard page (app.py routes). */
   /** Max concurrent ad-hoc SQL requests: admission-controlled so at
-    * most this many of the 4 dispatch threads ever block on SQL — the
+    * most this many of the 12 dispatch threads ever block on SQL — the
     * dashboard routes always keep free dispatchers. Excess → 429.
     */
   val SqlInflight = 2
 
+  /** The reference's 6-query dashboard page (app.py routes). */
   val DashboardQueries: Seq[String] = Seq(
     "q_dash_metrics", "q_dash_sensors", "q_dash_alerts",
     "q_dash_patterns", "q_dash_sensor_types", "q_dash_districts")

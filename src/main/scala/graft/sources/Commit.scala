@@ -41,6 +41,17 @@ import java.nio.charset.StandardCharsets
   * accumulated table grows, and crash safety is no longer traded away
   * for it.
   *
+  * Read-modify-publish contract: a publisher whose write depends on
+  * the table's content builds it from the manifest it commits over.
+  * [[withHead]] reads the head ONCE, inside the per-root writer lock,
+  * and hands it to the writer: the txn replay check, the layout, the
+  * rows folded or compacted ([[mergeBuckets]], [[optimizeBuckets]])
+  * and the carry-forward all derive from that one manifest. In-driver
+  * writers therefore behave as SOME serial order — one that committed
+  * while another waited on the lock is folded in, never overwritten.
+  * Blind writers ([[publishBuckets]], [[publishDir]]) write data that
+  * does not depend on the head and only carry forward from it.
+  *
   * Layout:
   * {{{
   *   <root>/_POINTER            one line: current manifest file name
@@ -176,14 +187,9 @@ object Commit {
       .collect { case (d, Some(f), Some(p)) if !badDirs.contains(d) => (d, f, p) }
       .groupBy(_._1).map { case (d, xs) => d -> xs.toSeq.map(x => (x._2, x._3)) }
     // `#layout=<buckets>\t<keyExprSql>`: the snapshot's bucketing
-    // discipline. A malformed line degrades to "layout unknown" (the
-    // pre-r17 state: writers own their modulus), never a read error.
+    // discipline ([[parseLayout]])
     val layout = lines.tail.collectFirst {
-      case l if l.startsWith("#layout=") =>
-        try {
-          val Array(n, k) = l.stripPrefix("#layout=").split("\t", 2)
-          Some(Layout(n.toInt, k))
-        } catch { case scala.util.control.NonFatal(_) => None }
+      case l if l.startsWith("#layout=") => parseLayout(l.stripPrefix("#layout="))
     }.flatten
     // `#txn=<appId>\t<version>`: the idempotent-writer watermark (the
     // Delta txnAppId/txnVersion analog) — one line per app that has
@@ -207,111 +213,90 @@ object Commit {
   }
 
   /** The manifest header-order CONTRACT shared by [[commitManifest]]
-    * (the writer) and the streamed header readers ([[layout]],
-    * [[parentAt]]): light meta lines (`#parent`, `#schema`, `#rows`,
-    * `#layout`) are written BEFORE the heavy ones (`#stats`,
-    * `#fstats`), which precede the entry lines. The streamed readers
-    * may therefore stop at the first heavy-meta or entry line and
-    * still have seen every light line — that early stop is what keeps
-    * the lineage walk O(1) bytes per manifest when the stats tail is
-    * megabytes. Both sides reference THIS predicate (the writer via
-    * the order assertion in [[commitManifest]], the readers as their
+    * (the writer) and the streamed header reader [[headerValue]]
+    * ([[layout]], [[lastTxn]], [[parentAt]]): light meta lines
+    * (`#parent`, `#schema`, `#rows`, `#layout`, `#txn`) are written
+    * BEFORE the heavy ones (`#stats`, `#fstats`), which precede the
+    * entry lines. The streamed reader may therefore stop at the first
+    * heavy-meta or entry line and still have seen every light line —
+    * that early stop is what keeps the lineage walk O(1) bytes per
+    * manifest when the stats tail is megabytes. Both sides reference THIS predicate (the writer via
+    * the order assertion in [[commitManifest]], the reader as its
     * stop condition), and CommitSpec("streamed header readers agree
     * with parseManifest") pins agreement on a freshly committed
     * manifest, so a future reordering of meta lines fails loudly
-    * instead of making the readers silently return None/Some(0).
+    * instead of making the reader silently return None/Some(0).
     */
   private[graft] val HeavyMetaPrefixes = Seq("#stats=", "#fstats=")
   private def pastLightMeta(line: String): Boolean =
     HeavyMetaPrefixes.exists(line.startsWith) || !line.startsWith("#")
 
-  /** The current snapshot's recorded bucketing discipline, if any —
-    * what a layout-aware maintainer ([[graft.streaming.Streams
-    * .statusUpsert]], [[graft.warehouse.GoldStage.refreshHourly]])
-    * buckets NEW batches with, so its modulus always matches the
-    * table's even after [[optimizeBuckets]] re-buckets it. None for
-    * whole-dir tables, pre-layout manifests, and tables that never
-    * declared one (those writers keep owning their modulus, the
-    * pre-r17 contract).
+  /** The current snapshot's recorded bucketing discipline, if any.
+    * None for whole-dir tables, pre-layout manifests, and tables that
+    * never declared one (those writers keep owning their modulus, the
+    * pre-r17 contract). Maintainers do not call this: [[mergeBuckets]]
+    * takes the layout from the manifest it reads inside the writer
+    * lock. It is for readers outside a publish — specs, tools, and a
+    * change-feed consumer detecting a re-bucket across its cursor.
+    * Streamed header read ([[headerValue]]), O(1) bytes.
     */
   def layout(spark: SparkSession, root: String): Option[Layout] = {
-    // streamed header read, not a currentManifest parse: maintainers
-    // call this once per MICRO-BATCH (statusUpsert, refreshHourly), and
-    // a full parse decodes every zone-map stats line — O(stats volume)
-    // on the streaming commit critical path. `#layout=` is written in
-    // the meta block BEFORE the stats lines (commitManifest), so the
-    // scan stops at the first stats or entry line.
     val f = fs(spark, root)
-    val ptr = new Path(root, Pointer)
-    if (!f.exists(ptr)) None
-    else {
-      val mf = new Path(root, readSmall(f, ptr).trim)
-      if (!f.exists(mf)) None
-      else {
-        val in = f.open(mf)
-        try {
-          val br = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-          br.readLine() // the version line
-          var line = br.readLine()
-          var out: Option[Layout] = None
-          var done = false
-          while (!done && line != null) {
-            if (line.startsWith("#layout=")) {
-              out = try {
-                val Array(n, k) = line.stripPrefix("#layout=").split("\t", 2)
-                Some(Layout(n.toInt, k))
-              } catch { case scala.util.control.NonFatal(_) => None }
-              done = true
-            } else if (pastLightMeta(line)) done = true
-            else line = br.readLine()
-          }
-          out
-        } finally in.close()
-      }
-    }
+    headManifest(f, root).flatMap(headerValue(f, _, "#layout="))
+      .flatMap(parseLayout)
   }
 
   /** The idempotent-writer watermark for `appId`: the highest epoch id
     * this app has ever committed into the table (the Delta
-    * txnAppId/txnVersion analog). An at-least-once replayed
-    * micro-batch whose epoch is ≤ this watermark already landed — its
-    * publish was made durable by the SAME pointer swap that recorded
-    * the watermark, so skipping the re-apply is exact, not heuristic.
-    * None = this app never published with a txn (or the table is
-    * empty): the writer applies. Streamed header read, same contract
-    * and cost as [[layout]] — once per micro-batch, O(1) bytes.
+    * txnAppId/txnVersion analog). None = this app never published with
+    * a txn (or the table is empty). Publishers do not call this: the
+    * authoritative replay check reads the watermark from the manifest
+    * the commit extends, inside the writer lock ([[withHead]]). It is
+    * for readers outside a publish; streamed header read, same cost as
+    * [[layout]].
     */
   def lastTxn(spark: SparkSession, root: String,
       appId: String): Option[Long] = {
     val f = fs(spark, root)
+    headManifest(f, root).flatMap(headerValue(f, _, s"#txn=$appId\t"))
+      .flatMap(_.toLongOption)
+  }
+
+  /** `#layout=` value → layout; a malformed line degrades to "layout
+    * unknown" (the pre-r17 state: writers own their modulus), never a
+    * read error.
+    */
+  private def parseLayout(value: String): Option[Layout] =
+    try {
+      val Array(n, k) = value.split("\t", 2)
+      Some(Layout(n.toInt, k))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The manifest file the pointer names, if both exist. */
+  private def headManifest(f: org.apache.hadoop.fs.FileSystem,
+      root: String): Option[Path] = {
     val ptr = new Path(root, Pointer)
     if (!f.exists(ptr)) None
-    else {
-      val mf = new Path(root, readSmall(f, ptr).trim)
-      if (!f.exists(mf)) None
-      else {
-        val prefix = s"#txn=$appId\t"
-        val in = f.open(mf)
-        try {
-          val br = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-          br.readLine() // the version line
-          var line = br.readLine()
-          var out: Option[Long] = None
-          var done = false
-          while (!done && line != null) {
-            if (line.startsWith(prefix)) {
-              out = try Some(line.stripPrefix(prefix).toLong)
-              catch { case scala.util.control.NonFatal(_) => None }
-              done = true
-            } else if (pastLightMeta(line)) done = true
-            else line = br.readLine()
-          }
-          out
-        } finally in.close()
-      }
-    }
+    else Some(new Path(root, readSmall(f, ptr).trim)).filter(f.exists)
+  }
+
+  /** The value of manifest `mf`'s light meta line starting with
+    * `prefix`, STREAMED, not slurped: the read stops at the first
+    * heavy-meta or entry line ([[pastLightMeta]]), so it costs one
+    * buffer of a file whose stats tail may hold megabytes. None when
+    * no light line carries the prefix.
+    */
+  private def headerValue(f: org.apache.hadoop.fs.FileSystem, mf: Path,
+      prefix: String): Option[String] = {
+    val in = f.open(mf)
+    try {
+      val br = new java.io.BufferedReader(
+        new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
+      br.readLine() // the version line
+      Iterator.continually(br.readLine())
+        .takeWhile(l => l != null && !pastLightMeta(l))
+        .collectFirst { case l if l.startsWith(prefix) => l.stripPrefix(prefix) }
+    } finally in.close()
   }
 
   private def manifestAt(spark: SparkSession, root: String,
@@ -344,36 +329,15 @@ object Commit {
     * of versions whose manifests each carry per-bucket and per-file
     * stats; walking lineage through [[parseManifest]] would make every
     * history/CDF-membership question O(versions × stats volume), so
-    * the walk reads headers only. None = manifest missing (vacuumed or
-    * never committed); Some(0) = pre-lineage manifest (chain ends).
+    * the walk reads streamed headers only ([[headerValue]]). None =
+    * manifest missing (vacuumed or never committed); Some(0) =
+    * pre-lineage manifest (chain ends).
     */
   private[graft] def parentAt(f: org.apache.hadoop.fs.FileSystem, root: String,
       v: Long): Option[Long] = {
     val mf = new Path(root, s"manifest-$v.txt")
     if (!f.exists(mf)) None
-    else {
-      // STREAMED, not slurped: `#parent=` is the first metadata line
-      // ([[commitManifest]]), so this reads one buffer of a file whose
-      // tail may hold megabytes of stats — the walk is O(1) bytes per
-      // step, not just O(1) decode. Legacy pre-lineage manifests have
-      // no #parent line; the scan stops at the first entry line.
-      val in = f.open(mf)
-      try {
-        val br = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-        br.readLine() // the version line
-        var line = br.readLine()
-        var out: Option[Long] = Some(0L)
-        var done = false
-        while (!done && line != null) {
-          if (line.startsWith("#parent=")) {
-            out = Some(line.stripPrefix("#parent=").toLong); done = true
-          } else if (pastLightMeta(line)) done = true
-          else line = br.readLine()
-        }
-        out
-      } finally in.close()
-    }
+    else Some(headerValue(f, mf, "#parent=").fold(0L)(_.toLong))
   }
 
   /** The version the pointer currently names, WITHOUT reading the head
@@ -515,15 +479,21 @@ object Commit {
     } yield {
       val baseline = base.entries.toSet
       val changed = cur.entries.filterNot(baseline.contains)
-      val bc = bucketColOf(cur, bucketCol)
-      if (changed.isEmpty) {
-        val st = cur.schema.getOrElse(
-          snapshot(spark, root, cur, cur.entries, bc).schema)
-        val renamed = org.apache.spark.sql.types.StructType(
-          st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-      } else snapshot(spark, root, cur, changed, bc)
+      readEntries(spark, root, cur, changed, bucketColOf(cur, bucketCol))
+    }
+
+  /** [[snapshot]] over `es`, or, when `es` is empty, an EMPTY relation
+    * with `m`'s columns (the bucket column named `bc`): a change feed
+    * with nothing to deliver still has the snapshot's shape.
+    */
+  private def readEntries(spark: SparkSession, root: String, m: Manifest,
+      es: Seq[Entry], bc: String): DataFrame =
+    if (es.nonEmpty) snapshot(spark, root, m, es, bc)
+    else {
+      val st = m.schema.getOrElse(snapshot(spark, root, m, m.entries, bc).schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(
+          st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f)))
     }
 
   /** Row-level change feed over the bucket-grain [[changesSince]]: the
@@ -602,15 +572,6 @@ object Commit {
       val oldSide = base.entries.filter(e =>
         wholeDir || changedKeys.contains(e.key) ||
           !cur.entries.exists(_.key == e.key))
-      def readEntries(m: Manifest, es: Seq[Entry]): DataFrame =
-        if (es.isEmpty) {
-          val st = m.schema.getOrElse(
-            snapshot(spark, root, m, m.entries, bc).schema)
-          val renamed = org.apache.spark.sql.types.StructType(
-            st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f))
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], renamed)
-        } else snapshot(spark, root, m, es, bc)
       // compare under the CURRENT schema so a schema evolution between
       // the snapshots diffs by value, not by column-set accident. The
       // schema-less path's applySchema is an identity, so the old side
@@ -618,7 +579,8 @@ object Commit {
       // evolution null-fills (at the current column's type), dropped
       // columns are projected away — the same contract applySchema
       // gives schema-bearing manifests.
-      val curRows = readEntries(cur, if (wholeDir) cur.entries else changed)
+      val curRows = readEntries(spark, root, cur,
+        if (wholeDir) cur.entries else changed, bc)
       val cols = curRows.columns.toSeq
       val oldRows = {
         // the old side is read under ITS OWN committed schema, then
@@ -647,7 +609,7 @@ object Commit {
               org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, to)
           }
         }
-        val o0 = readEntries(base, oldSide)
+        val o0 = readEntries(spark, root, base, oldSide, bc)
         val have = o0.columns.toSet
         o0.select(cols.map(x =>
           if (!have.contains(x))
@@ -872,13 +834,6 @@ object Commit {
       }
     }.getOrElse((Nil, Nil))
 
-  /** Project the assembled scan through the manifest's committed
-    * schema: exactly its columns, in its order, cast to its types — a
-    * carried bucket written before an additive column existed reads as
-    * null for it (the standard additive-evolution contract), and a
-    * column dropped later never leaks back into an old snapshot.
-    * Pre-schema manifests read as the files merge (legacy behavior).
-    */
   /** Nested nullability widened to the read-side reality: parquet
     * cannot enforce Catalyst's strict nested nullability round-trip,
     * so a snapshot whose writer carried e.g. `array<int, containsNull
@@ -906,6 +861,13 @@ object Commit {
       entries: Seq[Entry], bucketCol: String): DataFrame =
     applySchema(assemble(spark, root, m, entries, bucketCol), m.schema, bucketCol)
 
+  /** Project the assembled scan through the manifest's committed
+    * schema: exactly its columns, in its order, cast to its types — a
+    * carried bucket written before an additive column existed reads as
+    * null for it (the standard additive-evolution contract), and a
+    * column dropped later never leaks back into an old snapshot.
+    * Pre-schema manifests read as the files merge (legacy behavior).
+    */
   private def applySchema(df: DataFrame,
       schema: Option[org.apache.spark.sql.types.StructType],
       bucketCol: String): DataFrame =
@@ -1054,12 +1016,6 @@ object Commit {
       .stripPrefix("manifest-").stripSuffix(".txt").toLong
   }
 
-  /** Publish a new version whose data was just written by `write`
-    * (given the fresh version dir). The manifest's entries are the
-    * version dir's `bucket=<b>` children (plus carried entries for
-    * buckets this version did not rewrite), or a single whole-dir
-    * entry when the writer produced no bucket dirs.
-    */
   /** Per-root writer serialization (r18). A publish is
     * read-prev → write-data → claim-version → swap-pointer; two
     * writers on the SAME table interleaving between another's
@@ -1089,39 +1045,57 @@ object Commit {
     lock.synchronized(body)
   }
 
+  /** The read-modify-publish critical section every publisher runs:
+    * under the writer lock, read the head manifest ONCE (timed under
+    * `readPhase`); if `appTxn`'s epoch already landed there, return the
+    * head version without running `body`; else hand that manifest to
+    * `body`, which builds its write from it and commits over it through
+    * [[publishLocked]]. The replay check and the commit are one
+    * critical section (r18 advice): two writers sharing an appId that
+    * checked the watermark outside the lock could both pass and
+    * double-apply a non-idempotent fold — Delta's in-transaction
+    * txnVersion check.
+    */
+  private def withHead(spark: SparkSession, root: String,
+      appTxn: Option[(String, Long)], readPhase: Option[(String, String)])
+      (body: Option[Manifest] => Option[Long]): Option[Long] =
+    withWriterLock(spark, root) {
+      val prev = timed(readPhase)(currentManifest(spark, root))
+      val replayed = for {
+        (app, ver) <- appTxn
+        p <- prev
+        last <- p.txns.get(app)
+        if ver <= last
+      } yield p.v
+      replayed.orElse(body(prev))
+    }
+
+  private def timed[T](phase: Option[(String, String)])(body: => T): T =
+    phase.fold(body) { case (prefix, label) => graft.util.PhaseTimer(prefix, label)(body) }
+
+  /** Publish a new version whose data `write` writes into the fresh
+    * version dir it is given, over the head read inside the lock. The
+    * manifest's entries are the version dir's `bucket=<b>` children
+    * (plus carried entries for buckets this version did not rewrite),
+    * or a single whole-dir entry when the writer produced no bucket
+    * dirs. A blind write: `write` does not depend on the head.
+    */
   private def publish(spark: SparkSession, root: String,
       expectBuckets: Option[Set[Int]] = None,
       bucketedWriter: Boolean = false,
       declaredLayout: Option[Layout] = None,
       fullRewrite: Boolean = false,
       appTxn: Option[(String, Long)] = None)
-      (write: String => Unit): Long = withWriterLock(spark, root) {
-    val prev = currentManifest(spark, root) // ONE manifest read per publish
-    // Exactly-once under concurrent in-driver writers (r18 advice):
-    // the replay check and the commit are ONE critical section. Two
-    // writers sharing an appId that check lastTxn OUTSIDE the lock can
-    // both read the same watermark, both pass, and double-apply a
-    // non-idempotent fold — the lock would serialize only their
-    // publishes, not their skip decisions. Callers keep a cheap
-    // unlocked pre-check as a fast path (skip planning the batch at
-    // all), but THIS check is the authoritative one: it reads the
-    // watermark from the same manifest snapshot the commit extends,
-    // under the same lock — Delta's in-transaction txnVersion check.
-    // A replayed epoch returns the current version as a no-op.
-    val replayed = for {
-      (app, ver) <- appTxn
-      p <- prev
-      last <- p.txns.get(app)
-      if ver <= last
-    } yield p.v
-    replayed.getOrElse(publishLocked(spark, root, expectBuckets,
-      bucketedWriter, declaredLayout, fullRewrite, appTxn, prev)(write))
-  }
+      (write: String => Unit): Long =
+    withHead(spark, root, appTxn, None) { prev =>
+      Some(publishLocked(spark, root, expectBuckets, bucketedWriter,
+        declaredLayout, fullRewrite, appTxn, prev)(write))
+    }.get
 
-  /** The publish body; runs only under [[withWriterLock]] with the
-    * replay watermark already cleared. `prev` is the manifest snapshot
-    * read inside the lock — everything downstream (carry-forward,
-    * layout rules, version claim, txn fold) derives from it.
+  /** The publish body; runs only inside [[withHead]] with the replay
+    * watermark already cleared. `prev` is the manifest snapshot read
+    * inside the lock — everything downstream (carry-forward, layout
+    * rules, version claim, txn fold) derives from it.
     */
   private def publishLocked(spark: SparkSession, root: String,
       expectBuckets: Option[Set[Int]],
@@ -1208,7 +1182,7 @@ object Commit {
         "whole-dir version; skip empty batches, or use publishDir for " +
         "an intentional whole-table replace")
     // a caller that pre-read existing state for a PROBED bucket set
-    // (GoldStage.refreshHourly) hands that set in: if the input's
+    // ([[mergeBuckets]]) hands that set in: if the input's
     // re-evaluation at write time produced a bucket the probe never
     // saw, its existing state was NOT folded in — committing would
     // silently replace that bucket with batch-only rows. Abort BEFORE
@@ -1431,8 +1405,8 @@ object Commit {
       }
     // Writer-side enforcement of the header-order contract
     // ([[HeavyMetaPrefixes]]): no line a streamed header reader needs
-    // (#parent, #layout) may follow the first heavy stats line, or
-    // layout()/parentAt() would stop before seeing it.
+    // (#parent, #layout, #txn) may follow the first heavy stats line,
+    // or headerValue would stop before seeing it.
     require(!meta
       .dropWhile(l => !HeavyMetaPrefixes.exists(l.startsWith))
       .exists(l => l.startsWith("#parent=") || l.startsWith("#layout=") ||
@@ -1549,7 +1523,10 @@ object Commit {
   /** Commit `df` partitioned by `bucketCol`: only the buckets present
     * in `df` are written; the rest carry forward from the current
     * manifest. This is the incremental-upsert publication: bounded
-    * write amplification AND a transactional boundary.
+    * write amplification AND a transactional boundary. A BLIND write:
+    * `df` does not read the table. A write that folds the table's
+    * existing rows goes through [[mergeBuckets]], which reads them from
+    * the manifest it commits over.
     *
     * Contract edges: a rewritten bucket carries ALL its surviving keys
     * (bucket-wholesale, like a Delta partition overwrite), and a
@@ -1558,17 +1535,10 @@ object Commit {
     * An empty `df` against an existing table is therefore refused
     * (it would otherwise commit a whole-dir empty snapshot replacing
     * the table); retiring a bucket's last row takes a full rewrite or
-    * [[publishDir]], and incremental maintainers should no-op on
-    * empty batches (refreshHourly/statusUpsert do).
+    * [[publishDir]], and incremental maintainers no-op on empty
+    * batches ([[mergeBuckets]] does).
     *
     * `layout` declares the bucketing discipline this write used
-    * `txn = Some((appId, epoch))` records the idempotent-writer
-    * watermark atomically with the data (the Delta txnAppId/txnVersion
-    * analog): an at-least-once caller (foreachBatch) checks
-    * [[lastTxn]] before applying and skips epochs ≤ the watermark —
-    * the exactly-once contract a NON-idempotent merge (additive fold)
-    * needs under micro-batch replay.
-    *
     * ([[Layout]]) — recorded in the manifest so maintainers and
     * [[optimizeBuckets]] can evolve the bucket count; when absent the
     * table's recorded layout carries forward. `fullRewrite = true`
@@ -1576,6 +1546,13 @@ object Commit {
     * buckets absent from the write (required for a modulus change;
     * also the way to retire a bucket's last row without going
     * whole-dir).
+    *
+    * `txn = Some((appId, epoch))` records the idempotent-writer
+    * watermark atomically with the data (the Delta txnAppId/txnVersion
+    * analog): an epoch ≤ the app's watermark is a replay, and the
+    * publish returns the current version without writing — the
+    * exactly-once contract a NON-idempotent merge (additive fold)
+    * needs under micro-batch replay.
     */
   def publishBuckets(df: DataFrame, root: String,
       bucketCol: String = "bucket",
@@ -1583,15 +1560,26 @@ object Commit {
       layout: Option[Layout] = None,
       fullRewrite: Boolean = false,
       txn: Option[(String, Long)] = None): Long = {
+    requireTxnApp(txn)
+    publish(df.sparkSession, root, expectBuckets, bucketedWriter = true,
+      declaredLayout = layout, fullRewrite = fullRewrite,
+      appTxn = txn)(bucketWriter(df, bucketCol))
+  }
+
+  private def requireTxnApp(txn: Option[(String, Long)]): Unit =
     txn.foreach { case (app, _) =>
       require(app.nonEmpty && !app.contains("\n") && !app.contains("\t"),
         s"txn appId must be a single manifest-line-safe token: '$app'")
     }
-    // the on-disk layout is ALWAYS `bucket=<b>` — publish() scans for
-    // that prefix to enumerate fresh entries, and the read side
-    // renames back to the caller's bucketCol. Writing `<bucketCol>=`
-    // dirs would silently degrade the table to one whole-dir entry
-    // (no bucket keys, no carry-forward, no key pruning).
+
+  /** The writer of a bucketed publish: `df` partitioned by `bucketCol`
+    * into the version dir. The on-disk layout is ALWAYS `bucket=<b>` —
+    * publish scans for that prefix to enumerate fresh entries, and the
+    * read side renames back to the caller's bucketCol. Writing
+    * `<bucketCol>=` dirs would silently degrade the table to one
+    * whole-dir entry (no bucket keys, no carry-forward, no key pruning).
+    */
+  private def bucketWriter(df: DataFrame, bucketCol: String): String => Unit = {
     val onDisk =
       if (bucketCol == "bucket") df
       else {
@@ -1600,10 +1588,66 @@ object Commit {
             "'bucket': the DataFrame already has a 'bucket' column")
         df.withColumnRenamed(bucketCol, "bucket")
       }
-    publish(df.sparkSession, root, expectBuckets, bucketedWriter = true,
-      declaredLayout = layout, fullRewrite = fullRewrite,
-      appTxn = txn) { vdir =>
-      onDisk.write.mode("overwrite").partitionBy("bucket").parquet(vdir)
+    vdir => onDisk.write.mode("overwrite").partitionBy("bucket").parquet(vdir)
+  }
+
+  /** PhaseTimer `(prefix, label)`s under which a [[mergeBuckets]]
+    * caller records its phases: the in-lock manifest read (which
+    * yields the layout), the touched-bucket probe, and the
+    * read-fold-publish of the touched buckets. None leaves a phase
+    * untimed.
+    */
+  final case class MergePhases(manifestRead: Option[(String, String)],
+      probe: Option[(String, String)], mergePublish: Option[(String, String)])
+
+  /** Fold `batch` into the bucketed table at `root`, keyed by
+    * `keyExprSql` — the read-modify-publish of every incremental
+    * maintainer (Streams.statusUpsert, GoldStage.refreshHourly),
+    * decided in ONE critical section under the writer lock
+    * ([[withHead]]):
+    *  1. read the head manifest once;
+    *  2. a `txn` epoch at or below the app's watermark is a replay:
+    *     return the head version;
+    *  3. the layout: the recorded modulus wins over `buckets`, which
+    *     only sizes a table being created — after [[optimizeBuckets]]
+    *     re-buckets, every later batch assigns keys under the evolved
+    *     modulus (a stale one would file a key in a bucket the fold
+    *     never reads, duplicating it);
+    *  4. probe the buckets `batch` touches ([[touchedBuckets]]); none
+    *     → no-op, None (an empty batch must not publish: it has no
+    *     bucket dirs, and would replace the table);
+    *  5. read THAT manifest's touched entries — only their dirs are
+    *     listed — re-bucketed under the layout, so a key meets its new
+    *     rows in one group whatever bucket an older writer filed it in;
+    *  6. `fold(existing, incoming(batch) bucketed, touched count)`;
+    *  7. publish the fold over that same manifest with the touched set
+    *     as `expectBuckets`.
+    * A writer that committed while this one waited on the lock is
+    * therefore folded in, never overwritten. `batch` is evaluated twice
+    * (probe, fold) without a cache; a batch that re-evaluates into a
+    * bucket the probe never saw aborts before the pointer swap.
+    */
+  def mergeBuckets(batch: DataFrame, root: String, keyExprSql: String,
+      buckets: Int, txn: Option[(String, Long)], phases: MergePhases)
+      (incoming: DataFrame => DataFrame,
+       fold: (Option[DataFrame], DataFrame, Int) => DataFrame): Option[Long] = {
+    val spark = batch.sparkSession
+    requireTxnApp(txn)
+    withHead(spark, root, txn, phases.manifestRead) { prev =>
+      val layout = Layout(prev.flatMap(_.layout).fold(buckets)(_.buckets), keyExprSql)
+      def bucketed(df: DataFrame) = df.withColumn("bucket", layout.bucketExpr)
+      val touched = timed(phases.probe)(touchedBuckets(batch, layout)).toSet
+      if (touched.isEmpty) None
+      else timed(phases.mergePublish) {
+        val existing = for {
+          m <- prev
+          es = m.entries.filter(e => touched(e.key))
+          if es.nonEmpty
+        } yield bucketed(snapshot(spark, root, m, es, "bucket").drop("bucket"))
+        val merged = fold(existing, bucketed(incoming(batch)), touched.size)
+        Some(publishLocked(spark, root, Some(touched), bucketedWriter = true,
+          Some(layout), fullRewrite = false, txn, prev)(bucketWriter(merged, "bucket")))
+      }
     }
   }
 
@@ -1614,6 +1658,19 @@ object Commit {
   def publishDir(spark: SparkSession, root: String)
       (write: String => Unit): Long =
     publish(spark, root)(write)
+
+  /** Total on-disk bytes of the CURRENT snapshot's entries (live data
+    * only — superseded versions' garbage excluded): the sizing input a
+    * caller needs to pick an [[optimizeBuckets]] `maxBucketBytes`
+    * threshold, resolved through the same Hadoop FileSystem every
+    * other Commit path uses. None before any commit.
+    */
+  def liveDataBytes(spark: SparkSession, root: String): Option[Long] =
+    currentManifest(spark, root).map { m =>
+      val f = fs(spark, root)
+      m.entries.map(e =>
+        f.getContentSummary(new Path(s"$root/${e.dir}")).getLength).sum
+    }
 
   /** Compact the current snapshot's buckets to ONE file each and
     * publish the result as a new version — the Delta `OPTIMIZE` /
@@ -1633,6 +1690,11 @@ object Commit {
     * not the file count. No-op (None) when the table is missing or
     * has no bucketed entries (whole-dir snapshots recompact through
     * [[Sources.compactCommit]]).
+    *
+    * The compacted snapshot is the manifest read inside the writer
+    * lock, the one this publish commits over ([[withHead]]): a writer
+    * that committed while the compaction waited on the lock is
+    * compacted in, not reverted.
     *
     * RE-BUCKET MODE (`maxBucketBytes`): when the manifest records a
     * [[Layout]] and any bucket's on-disk bytes exceed the threshold,
@@ -1660,25 +1722,11 @@ object Commit {
     * diff — a pure re-bucket (same rows, new buckets) yields an EMPTY
     * feed (see its scaladoc).
     */
-  /** Total on-disk bytes of the CURRENT snapshot's entries (live data
-    * only — superseded versions' garbage excluded): the sizing input a
-    * caller needs to pick an [[optimizeBuckets]] `maxBucketBytes`
-    * threshold, resolved through the same Hadoop FileSystem every
-    * other Commit path uses. None before any commit.
-    */
-  def liveDataBytes(spark: SparkSession, root: String): Option[Long] =
-    currentManifest(spark, root).map { m =>
-      val f = fs(spark, root)
-      m.entries.map(e =>
-        f.getContentSummary(new Path(s"$root/${e.dir}")).getLength).sum
-    }
-
   def optimizeBuckets(spark: SparkSession, root: String,
       bucketCol: String = "bucket",
       maxBucketBytes: Option[Long] = None): Option[Long] =
-    currentManifest(spark, root)
-      .filter(_.entries.exists(_.key >= 0))
-      .map { m =>
+    withHead(spark, root, None, None) { prev =>
+      prev.filter(_.entries.exists(_.key >= 0)).map { m =>
         val df = snapshot(spark, root, m, m.entries, bucketCol)
         val evolved: Option[Layout] =
           for {
@@ -1694,21 +1742,20 @@ object Commit {
             while (n < 4096L && total / n > thr) n *= 2
             Layout(math.min(n, 4096L).toInt, l.keyExprSql)
           }
-        evolved match {
+        // one partition per bucket → partitionBy writes one file per
+        // bucket. A new modulus is a full rewrite that recomputes the
+        // bucket column from the recorded key expression; a plain
+        // compaction carries the recorded layout forward.
+        val (out, layout) = evolved match {
           case Some(nl) if nl.buckets != m.layout.map(_.buckets).getOrElse(0) =>
-            // full rewrite under the NEW modulus: recompute the bucket
-            // column from the recorded key expression, one partition
-            // per new bucket → one file per bucket
-            val rebucketed = df.withColumn(bucketCol, nl.bucketExpr)
-            publishBuckets(rebucketed.repartition(col(bucketCol)), root,
-              bucketCol, layout = Some(nl), fullRewrite = true)
-          case _ =>
-            // plain compaction: each bucket collapses into exactly one
-            // input partition, so partitionBy writes one file per
-            // bucket; the recorded layout carries forward
-            publishBuckets(df.repartition(col(bucketCol)), root, bucketCol)
+            (df.withColumn(bucketCol, nl.bucketExpr), Some(nl))
+          case _ => (df, None)
         }
+        publishLocked(spark, root, None, bucketedWriter = true, layout,
+          fullRewrite = layout.nonEmpty, None, prev)(
+          bucketWriter(out.repartition(col(bucketCol)), bucketCol))
       }
+    }
 
   /** Delete versions and manifests outside the retained history —
     * crashed-publish garbage and superseded snapshots. `retain` is the

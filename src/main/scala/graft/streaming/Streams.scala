@@ -334,29 +334,6 @@ object Streams {
       .select(col("p_event_id"), col("c_event_id"), col("p_user").as("user_id"))
   }
 
-  /** foreachBatch upsert (the Postgres AFTER INSERT trigger rewrite,
-    * enhanced_data_schema.sql:566-591): merge each micro-batch's
-    * per-user latest reading into a status table kept as parquet,
-    * PARTITIONED BY user bucket (user_id mod `buckets`).
-    * Last-writer-wins on (ts, event_id).
-    *
-    * Write amplification is bounded by the buckets the batch TOUCHES,
-    * not the table: only those buckets are read for the merge and only
-    * they are written into the new version — a micro-batch touching
-    * one user costs one bucket's worth of IO however large the
-    * accumulated status table grows.
-    *
-    * Publication goes through [[graft.sources.Commit]]: the merged
-    * slices land in a fresh version dir and commit in one atomic
-    * pointer swap, untouched buckets carried forward by manifest entry.
-    * A micro-batch killed mid-write leaves readers on the previous
-    * complete snapshot, and the stream's retry simply re-runs the merge
-    * — safe because last-writer-wins is idempotent, and the crashed
-    * attempt's version dir is unreferenced garbage (Commit.vacuum).
-    * At production scale the same shape is one Delta/Iceberg MERGE —
-    * the manifest keeps the engine dependency-free with the same
-    * transactional boundary and IO bound.
-    */
   /** The per-micro-batch incoming projection of [[statusUpsert]]: each
     * user's latest reading, last-writer-wins on (ts, event_id). Shared
     * with the static scan census ([[StreamStatic]]) so the audited
@@ -370,6 +347,25 @@ object Streams {
       .select(col("user_id"), col("s.ts").as("last_ts"),
         col("s.value").as("last_value"), col("s.event_type").as("last_type"))
 
+  /** foreachBatch upsert (the Postgres AFTER INSERT trigger rewrite,
+    * enhanced_data_schema.sql:566-591): merge each micro-batch's
+    * per-user latest reading ([[latestPerUser]]) into a status table
+    * kept as parquet, PARTITIONED BY user bucket (user_id mod
+    * `buckets`, unless the table records its own modulus).
+    * Last-writer-wins on (ts, event_id) ([[mergeStatus]]).
+    *
+    * One [[graft.sources.Commit.mergeBuckets]] call: under the table's
+    * writer lock it reads the manifest once, skips a replayed `txn`
+    * epoch, probes the buckets the batch touches, folds only those
+    * buckets' existing rows with the batch, and commits the merged
+    * slices in one atomic pointer swap, untouched buckets carried
+    * forward by manifest entry. Write amplification is bounded by the
+    * touched buckets, not the table, and a micro-batch killed
+    * mid-write leaves readers on the previous complete snapshot; the
+    * stream's retry re-runs the merge — safe because last-writer-wins
+    * is idempotent. At production scale the same shape is one
+    * Delta/Iceberg MERGE.
+    */
   def statusUpsert(batch: DataFrame, statusPath: String,
       buckets: Int = 16, txn: Option[(String, Long)] = None): Unit =
     // outermost timer: `upsert.total` minus the publish/layout/probe
@@ -378,7 +374,12 @@ object Streams {
     // the split tools/StreamFloor reports (zero cost unless
     // SPARK_GRAFT_PHASE_TIMING or the in-process sink is on)
     graft.util.PhaseTimer("upsert", "total") {
-      statusUpsertInner(batch, statusPath, buckets, txn)
+      graft.sources.Commit.mergeBuckets(batch, statusPath, "user_id",
+        buckets, txn, graft.sources.Commit.MergePhases(
+          manifestRead = Some("upsert" -> "layout_read"),
+          probe = Some("upsert" -> "touched_probe"), mergePublish = None))(
+        latestPerUser, mergeStatus)
+      ()
     }
 
   /** foreachBatch adapter for [[statusUpsert]] with the manifest txn
@@ -401,65 +402,6 @@ object Streams {
       appId: String = "status_upsert"): (DataFrame, Long) => Unit =
     (batch, epoch) =>
       statusUpsert(batch, statusPath, buckets, txn = Some((appId, epoch)))
-
-  private def statusUpsertInner(batch: DataFrame, statusPath: String,
-      buckets: Int, txn: Option[(String, Long)]): Unit = {
-    // fast path only — the authoritative check re-runs inside
-    // Commit.publish under the writer lock (efficiency here either
-    // way: this merge is content-idempotent)
-    for ((app, epoch) <- txn; last <- graft.sources.Commit.lastTxn(
-        batch.sparkSession, statusPath, app))
-      if (epoch <= last) return // replayed epoch: already applied
-    val spark = batch.sparkSession
-    // layout-aware bucketing: the table's RECORDED modulus wins over
-    // the parameter (which only sizes a table being created), so after
-    // Commit.optimizeBuckets re-buckets the table, every later upsert
-    // assigns keys under the evolved modulus — without this, a stale
-    // writer modulus would put a user's row in a bucket the carry-
-    // forward merge never folds, duplicating the key across buckets.
-    val eff = graft.util.PhaseTimer("upsert", "layout_read") {
-      graft.sources.Commit.layout(spark, statusPath)
-        .map(_.buckets).getOrElse(buckets)
-    }
-    val layout = graft.sources.Commit.Layout(eff, "user_id")
-    def bucketed(df: DataFrame) = df.withColumn("bucket", layout.bucketExpr)
-    // ≤ `buckets` driver values — which partitions this batch touches.
-    // Probed from the RAW batch's key column (pruned scan, one stage),
-    // NOT from the latestPerUser reduction: the r18 StreamFloor split
-    // attributed ~half the upsert's addBatch to this probe paying the
-    // full max_by aggregation (plus its cache materialization) before
-    // asking a question only user_id answers. With the probe off the
-    // reduction, `incoming` has exactly one consumer (the merge write)
-    // and needs no cache at all — same probe/merge split
-    // GoldStage.refreshHourly uses, with the same expectBuckets abort
-    // guarding the two independent evaluations of `batch` against
-    // non-deterministic sources.
-    val touched = graft.util.PhaseTimer("upsert", "touched_probe") {
-      graft.sources.Commit.touchedBuckets(batch, layout)
-    }
-    val incoming = bucketed(latestPerUser(batch))
-    // empty micro-batch → no-op, no version bump: recovery replays and
-    // multi-source unions hand foreachBatch empty frames routinely, and
-    // publishing one would commit an empty whole-dir snapshot REPLACING
-    // the status table (no bucket dirs to carry forward — Commit.publish
-    // now also refuses that shape as a backstop)
-    if (touched.isEmpty) return
-    // the bucket filter is a partition filter of the read's file
-    // index: untouched buckets' files are never listed into the scan
-    val existingTouched =
-      graft.sources.Commit.readWhere(spark, statusPath,
-        s"bucket in (${touched.mkString(",")})")
-    // existing rows are re-bucketed under the effective modulus, as
-    // the incoming ones are: a key must meet its new reading in one
-    // group whatever bucket an older writer filed it under
-    graft.sources.Commit.publishBuckets(
-      mergeStatus(existingTouched.map(e => bucketed(e.drop("bucket"))),
-        incoming, touched.size),
-      statusPath,
-      expectBuckets = Some(touched.toSet),
-      layout = Some(layout),
-      txn = txn)
-  }
 
   /** The status merge, one code path for a first publish and a fold:
     * the touched buckets' existing rows (if any) unioned with the
@@ -493,6 +435,15 @@ object Streams {
       statusPath: String): Option[DataFrame] =
     graft.sources.Commit.read(spark, statusPath)
 
+  /** Micro-batch counts of the last completed bounded run, per memory
+    * sink name — bench instrumentation: a batch-count change explains a
+    * stream timing shift that a code diff doesn't (each extra
+    * micro-batch pays full state-store commit overhead). Bench embeds
+    * this map in BENCH_DETAIL.json.
+    */
+  val lastBatchCounts: scala.collection.concurrent.TrieMap[String, Long] =
+    scala.collection.concurrent.TrieMap.empty
+
   /** Run a streaming DataFrame to completion over bounded input
     * (Trigger.AvailableNow) into a named memory sink; returns the
     * collected result. This is how the streaming paths join the batch
@@ -516,15 +467,6 @@ object Streams {
     * reload lazily on the next streaming start, so this is pure
     * hygiene, not a behavior change.
     */
-  /** Micro-batch counts of the last completed bounded run, per memory
-    * sink name — bench instrumentation: a batch-count change explains a
-    * stream timing shift that a code diff doesn't (each extra
-    * micro-batch pays full state-store commit overhead). Bench embeds
-    * this map in BENCH_DETAIL.json.
-    */
-  val lastBatchCounts: scala.collection.concurrent.TrieMap[String, Long] =
-    scala.collection.concurrent.TrieMap.empty
-
   def runToTable(df: DataFrame, name: String, outputMode: String,
       statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession

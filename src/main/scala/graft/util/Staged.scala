@@ -29,22 +29,21 @@ object Staged {
     *                  (HDFS/object store — survives executor loss)
     *   - "replicated" persist(MEMORY_AND_DISK_2) + eager force (2nd
     *                  replica tolerates one executor loss, no dir)
+    * Any other value throws IllegalArgumentException.
     * See SCALING.md ("Materialization posture") for the full trade.
     */
-  def materialize(df: DataFrame): DataFrame = {
-    val mode =
-      try df.sparkSession.conf.get("spark.graft.materialize", "local")
-      catch { case scala.util.control.NonFatal(_) => "local" }
-    mode match {
+  def materialize(df: DataFrame): DataFrame =
+    df.sparkSession.conf.get("spark.graft.materialize", "local") match {
+      case "local" => df.localCheckpoint(true)
       case "reliable" => df.checkpoint(true)
       case "replicated" =>
         val p = df.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_2)
         p.count() // force eager, like the checkpoint modes
         p
-      case _ => df.localCheckpoint(true)
+      case other => throw new IllegalArgumentException(
+        s"spark.graft.materialize=$other: expected local, reliable or replicated")
     }
-  }
 
   def checkpointRelease(tag: String, result: DataFrame,
       release: Dataset[_]*): DataFrame = {

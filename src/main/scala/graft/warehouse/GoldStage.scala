@@ -246,10 +246,10 @@ object GoldStage {
     * Every hourly measure is an ASSOCIATIVE partial (counts + DECIMAL
     * sums), so the fold is ONE aggregation: the batch's raw rows enter
     * as singleton partials ([[singletonPartials]]) unioned with the
-    * current partials at the touched keys, [[mergePartials]] — shared
-    * with the snapshot build, so the two paths cannot drift — sums
-    * them, and the refresh rewrites ONLY the user-buckets the batch touched
-    * (dynamic partition overwrite — the same bounded-write-
+    * current partials at the touched keys, [[mergeBucketAligned]] —
+    * the snapshot build's measures ([[partialAggs]]), so the two paths
+    * cannot drift — sums them, and the refresh rewrites ONLY the
+    * user-buckets the batch touched (dynamic partition overwrite — the same bounded-write-
     * amplification pattern as `Streams.statusUpsert`; at production
     * scale the identical shape is one Delta/Iceberg MERGE). A batch
     * touching one user costs one bucket of IO however large the
@@ -264,115 +264,54 @@ object GoldStage {
     * stays under 10^24, which a (user, type, hour) grain cannot
     * approach.
     *
-    * Publication goes through [[graft.sources.Commit]]: the merged
-    * touched-bucket slices land in a NEW version dir and become
-    * visible in one atomic pointer swap, with untouched buckets
-    * carried forward by manifest entry (no IO). A job killed mid-write
-    * leaves readers on the previous complete snapshot (CommitSpec
-    * kills one and proves it) — the crash-safety the reference gets
-    * from Postgres transactions on its MV refresh
-    * (enhanced_data_schema.sql:440-467). Because the merge now reads
-    * committed version dirs and writes a fresh one, no
-    * read-what-you-overwrite materialization barrier is needed.
-    * Unlike statusUpsert's last-writer-wins, an additive merge is NOT
-    * idempotent under batch replay — so a streaming caller passes
-    * `txn = Some((appId, batchId))`: the epoch watermark commits in
-    * the SAME atomic pointer swap as the fold
-    * ([[graft.sources.Commit.lastTxn]], the Delta txnAppId/txnVersion
-    * analog), and a replayed micro-batch whose epoch already landed is
-    * skipped exactly — the crash window between publish and the
-    * stream's checkpoint commit can no longer double-count
-    * (StreamingSpec kills one there and proves it). Batch callers
-    * (snapshot rebuilds, tests) omit it and keep at-least-once
-    * semantics under their own orchestration.
+    * Publication is one [[graft.sources.Commit.mergeBuckets]] call:
+    * under the table's writer lock it reads the manifest once, probes
+    * the touched buckets, folds their existing partials with the
+    * batch's singletons ([[mergeBucketAligned]]), and commits the
+    * merged slices in a NEW version dir with one atomic pointer swap,
+    * untouched buckets carried forward by manifest entry (no IO). A
+    * job killed mid-write leaves readers on the previous complete
+    * snapshot (CommitSpec kills one and proves it) — the crash-safety
+    * the reference gets from Postgres transactions on its MV refresh
+    * (enhanced_data_schema.sql:440-467). Unlike statusUpsert's
+    * last-writer-wins, an additive merge is NOT idempotent under batch
+    * replay — so a streaming caller passes `txn = Some((appId,
+    * batchId))`: the epoch watermark commits in the SAME atomic
+    * pointer swap as the fold (the Delta txnAppId/txnVersion analog),
+    * and a replayed micro-batch whose epoch already landed is skipped
+    * exactly — the crash window between publish and the stream's
+    * checkpoint commit can no longer double-count (StreamingSpec kills
+    * one there and proves it). Batch callers (snapshot rebuilds,
+    * tests) omit it and keep at-least-once semantics under their own
+    * orchestration.
+    *
+    * The fold is ONE hash aggregation over ONE bucket-keyed exchange:
+    * raw rows enter as singleton partials, so the batch's partial
+    * build, the fold into current state and the bucket alignment of
+    * the output files share it. Shape choice at scale: the alternative
+    * (pre-aggregate the batch, exchange on the grain, then re-exchange
+    * on the bucket) ships the EXISTING partials across the wire twice
+    * and the batch once map-side-combined; this shape ships existing
+    * once and the batch raw. An MV refresh's design point is batch <<
+    * accumulated state, so the existing side dominates wire volume and
+    * one exchange wins — for a bulk backfill whose batch collapses
+    * heavily under map-side combine, run the snapshot build instead.
+    * The touched-bucket probe reads only the key column, so the
+    * per-row JSON quality extraction runs once, in the fold. Exchange
+    * width = touched buckets, not the table's: a one-bucket micro-batch
+    * schedules one task (the r16 scaled-bucket sweep measured ~1 s of
+    * empty-task scheduling per publish at width 160).
     */
   def refreshHourly(batch: DataFrame, path: String, buckets: Int = 16,
       txn: Option[(String, Long)] = None): Unit = {
-    // FAST PATH only: skip planning the merge for an epoch that
-    // already landed. The AUTHORITATIVE replay check runs inside
-    // Commit.publish under the per-root writer lock (one critical
-    // section with the commit), so two in-driver writers sharing an
-    // appId cannot both pass a stale read here and double-fold — the
-    // second one's publish no-ops at the watermark (r18 advice).
-    for ((app, epoch) <- txn; last <- graft.sources.Commit.lastTxn(
-        batch.sparkSession, path, app))
-      if (epoch <= last) return // replayed epoch: its fold already landed
-    def t[T](label: String)(body: => T): T =
-      graft.util.PhaseTimer("refresh-timing", label)(body)
-    val spark = batch.sparkSession
-    // layout-aware bucketing (same contract as Streams.statusUpsert):
-    // the table's recorded modulus wins — `buckets` only sizes a table
-    // being created — so a Commit.optimizeBuckets re-bucket evolves
-    // every later refresh's assignment with it
-    val eff = graft.sources.Commit.layout(spark, path)
-      .map(_.buckets).getOrElse(buckets)
-    val layout = graft.sources.Commit.Layout(eff, "user_id")
-    def bucketed(df: DataFrame) = df.withColumn("bucket", layout.bucketExpr)
-    // the touched-bucket probe reads ONLY the key column (column
-    // pruning keeps the parquet scan to user_id + the caller's filter
-    // columns) — the expensive per-row work (JSON quality extraction,
-    // decimal casts) is deferred to the single merge aggregation
-    // below, where it runs exactly once. The previous shape aggregated
-    // the full batch here, cached the partials, and re-aggregated them
-    // into the merge: one extra full shuffle plus a cache
-    // materialization per refresh (measured as the dominant cost of
-    // the gold replay after the write itself).
-    val touched = t("touched-probe")(graft.sources.Commit.touchedBuckets(batch, layout))
-    // empty batch → no-op, no version bump (the Delta MERGE-with-empty-
-    // source semantics). Publishing would be worse than wasteful: an
-    // empty bucketed write has no bucket dirs, which the manifest would
-    // commit as a whole-dir EMPTY snapshot replacing the table
-    // (Commit.publish now also refuses that shape as a backstop).
-    if (touched.isEmpty) return
-    // the bucket filter is a partition filter of the read's file
-    // index: untouched buckets' files are never listed into the scan
-    val existingTouched = graft.sources.Commit.readWhere(spark, path,
-      s"bucket in (${touched.mkString(",")})")
-    // ONE hash aggregation, ONE exchange, does the batch's partial
-    // build, the fold into current state, AND the bucket alignment of
-    // the output files: raw rows enter as singleton partials
-    // ([[singletonPartials]]) unioned with the existing partial rows,
-    // the union is exchanged ONCE keyed on the bucket, and the
-    // aggregation (grouped by bucket + the hourly grain — bucket is a
-    // function of user_id, so the groups are identical) reuses that
-    // exchange because hash(bucket) clusters every grouping key.
-    // Each output partition then holds whole buckets, so partitionBy
-    // writes exactly one file per touched bucket (no fragmentation for
-    // readers, the footer harvest, or optimizeBuckets to pay for).
-    // Shape choice at scale: the alternative (pre-aggregate the batch,
-    // exchange on the grain, then re-exchange on the bucket) ships the
-    // EXISTING partials across the wire twice and the batch once
-    // map-side-combined; this shape ships existing once and the batch
-    // raw. An MV refresh's design point is batch << accumulated state,
-    // so the existing side dominates wire volume and one exchange wins
-    // — for a bulk backfill whose batch collapses heavily under
-    // map-side combine, run the snapshot build instead.
-    val inc = bucketed(singletonPartials(withQuality(batch)))
-    val unioned = existingTouched match {
-      case None => inc
-      case Some(existing) => existing.unionByName(inc)
-    }
-    // the probe and the merge evaluate `batch` independently (no cache
-    // pins one evaluation): a batch that re-evaluates DIFFERENTLY —
-    // non-deterministic expression, source mutated mid-refresh — could
-    // write a bucket the probe never saw, whose existing state was
-    // therefore not folded in. expectBuckets makes publish abort
-    // BEFORE the pointer swap in that case (loud error, no state loss)
-    // instead of silently replacing the bucket with batch-only rows.
-    // exchange width = TOUCHED buckets, not the table's bucket count:
-    // hash(bucket) still keys the exchange (so the agg reuses it and
-    // partitionBy still writes one file per bucket — two buckets that
-    // share a partition just write two files from one task), but a
-    // one-bucket micro-batch schedules 1 task instead of `buckets`.
-    // Measured (r16 scaled-bucket sweep): at 160 total buckets the
-    // one-bucket publish paid ~1 s of empty-task scheduling at width
-    // 160; width=touched makes the publish cost ∝ touched buckets in
-    // TASKS as well as bytes — the shape the scale claim states.
-    t("merge+publish")(graft.sources.Commit.publishBuckets(
-      mergeBucketAligned(unioned, touched.size), path,
-      expectBuckets = Some(touched.toSet),
-      layout = Some(layout),
-      txn = txn))
+    graft.sources.Commit.mergeBuckets(batch, path, "user_id", buckets, txn,
+      graft.sources.Commit.MergePhases(manifestRead = None,
+        probe = Some("refresh-timing" -> "touched-probe"),
+        mergePublish = Some("refresh-timing" -> "merge+publish")))(
+      ev => singletonPartials(withQuality(ev)),
+      (existing, inc, width) =>
+        mergeBucketAligned(existing.fold(inc)(_.unionByName(inc)), width))
+    ()
   }
 
   /** foreachBatch adapter for [[refreshHourly]]: the exactly-once

@@ -48,4 +48,16 @@ class CacheHygieneSpec extends SparkSpec {
         s"$q left a cache registered after its action completed")
     }
   }
+
+  test("Staged.materialize refuses an unknown mode instead of running local") {
+    val key = "spark.graft.materialize"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "replicate") // a typo of "replicated"
+    try {
+      val e = intercept[IllegalArgumentException](
+        graft.util.Staged.materialize(spark.range(3).toDF()))
+      assert(Seq("replicate", "local", "reliable", "replicated")
+        .forall(e.getMessage.contains), e.getMessage)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

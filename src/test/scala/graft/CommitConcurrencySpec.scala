@@ -1,13 +1,20 @@
 package graft
 
 import graft.sources.Commit
+import graft.streaming.Streams
+import graft.warehouse.GoldStage
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 /** Concurrent writers on ONE table within one driver — the real
   * posture of a maintained table whose statusUpsert stream, gold
   * refresh, and optimizeBuckets cron share the JVM. Commit's per-root
   * writer lock serializes the read-prev → write → claim → swap
-  * sequence, so racing publishes must behave as SOME serial order:
+  * sequence — for the maintainers and optimizeBuckets the read of the
+  * rows they rewrite too — so racing publishes must behave as SOME
+  * serial order:
   * every publish lands exactly once, versions are dense, no writer's
   * bucket rewrite is lost to a stale carry-forward, txn watermarks
   * max-merge across apps, and the CDF from the baseline reproduces the
@@ -262,4 +269,136 @@ class CommitConcurrencySpec extends SparkSpec {
       .compareTo(new java.math.BigDecimal(after.getString(0))) === 0,
       s"v_sum ${after.getString(0)} is not exactly 2× ${once.getString(0)}")
   }
+
+  private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+
+  /** `rows` written as ONE parquet file and read back: a file-backed
+    * batch keeps a UDF on it from being evaluated at planning time
+    * (a local `toDF` relation is constant-folded by the optimizer,
+    * which would run the UDF outside the writer lock).
+    */
+  private def fileBatch(dir: String, rows: DataFrame): DataFrame = {
+    rows.coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Writer `b` runs until its blocking UDF on `value` (handed to it
+    * as a column wrapper) reports it is inside its locked write; then
+    * writer `a` starts and must end up BLOCKED on the writer lock;
+    * then `b` is released. Both must finish without error.
+    */
+  private def race(tag: String)(b: (Column => Column) => Unit)(a: => Unit): Unit = {
+    val inWrite = s"graft.spec.$tag.inWrite"
+    val release = s"graft.spec.$tag.release"
+    System.getProperties.put(inWrite, new CountDownLatch(1))
+    System.getProperties.put(release, new CountDownLatch(1))
+    val hold = udf { (v: Double) =>
+      CommitConcurrencySpec.latch(inWrite).countDown()
+      CommitConcurrencySpec.latch(release).await(120, TimeUnit.SECONDS)
+      v
+    }
+    val errs = new ConcurrentLinkedQueue[Throwable]()
+    def start(body: => Unit): Thread = {
+      val t = new Thread(() => try body catch { case e: Throwable => errs.add(e) })
+      t.start()
+      t
+    }
+    try {
+      val tb = start(b(c => hold(c)))
+      assert(CommitConcurrencySpec.latch(inWrite).await(120, TimeUnit.SECONDS),
+        s"$tag: writer B never reached its write")
+      val ta = start(a)
+      def waitsOnLock = ta.getState == Thread.State.BLOCKED &&
+        ta.getStackTrace.exists(_.getMethodName.contains("withWriterLock"))
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(120)
+      while (!waitsOnLock && ta.isAlive && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(waitsOnLock, s"$tag: writer A never waited on the writer lock " +
+        s"(state ${ta.getState}, errors ${errs.peek()})")
+      CommitConcurrencySpec.latch(release).countDown()
+      tb.join(TimeUnit.SECONDS.toMillis(120))
+      ta.join(TimeUnit.SECONDS.toMillis(120))
+      assert(!tb.isAlive && !ta.isAlive, s"$tag: a writer did not finish")
+      assert(errs.isEmpty, s"$tag: a racing writer threw: ${errs.peek()}")
+    } finally {
+      CommitConcurrencySpec.latch(release).countDown()
+      System.getProperties.remove(inWrite)
+      System.getProperties.remove(release)
+    }
+  }
+
+  test("a writer waiting on the lock folds against the head it commits " +
+      "over: a committed update in between survives") {
+    val dir = graft.util.TempRoot.freshDir("commit-lost").toString
+    // users 1 and 17 share bucket 1 of the default 16
+    def status(rows: (Long, Long, Double)*) = rows.map { case (u, sec, v) =>
+      (u, ts(sec), v, "flow", u * 1000 + sec)
+    }.toDF("user_id", "ts", "value", "event_type", "event_id")
+    def statusOf(root: String) = Streams.readStatus(spark, root).get
+      .select("user_id", "last_value").as[(Long, Double)].collect().toMap
+    // B rewrites user 17 to 99.0 and is held inside its locked write
+    def statusB(root: String, tag: String)(hold: Column => Column): Unit =
+      Streams.statusUpsert(
+        fileBatch(s"$dir/$tag-b", status((17L, 200L, 99.0)))
+          .withColumn("value", hold(col("value"))), root)
+
+    // A = a second status upsert on the same bucket
+    def upsertRace(): Unit = {
+      val up = s"$dir/upsert"
+      Streams.statusUpsert(status((1L, 100L, 1.0), (17L, 100L, 17.0)), up)
+      race("upsert")(statusB(up, "upsert"))(
+        Streams.statusUpsert(status((1L, 300L, 5.0)), up))
+      assert(statusOf(up) === Map(1L -> 5.0, 17L -> 99.0),
+        "a status upsert waiting on the lock overwrote the one committed before it")
+      assert(Commit.current(spark, up).get._1 === 3L)
+    }
+
+    // A = optimizeBuckets: it compacts the snapshot it commits over
+    def optimizeRace(): Unit = {
+      val opt = s"$dir/optimize"
+      Streams.statusUpsert(status((1L, 100L, 1.0), (17L, 100L, 17.0)), opt)
+      race("optimize")(statusB(opt, "optimize"))(
+        Commit.optimizeBuckets(spark, opt))
+      assert(statusOf(opt) === Map(1L -> 1.0, 17L -> 99.0),
+        "optimizeBuckets reverted the status upsert committed before it")
+      val (head, entries) = Commit.current(spark, opt).get
+      assert(head === 3L && entries.forall(_.dir.startsWith("v=3/")),
+        s"optimizeBuckets did not rewrite every bucket at v=3: $head $entries")
+    }
+
+    // A = a second gold refresh on the same bucket
+    def events(rows: (Long, Long, Double)*) = rows.map { case (u, sec, v) =>
+      (u, ts(sec), v, "flow", """{"k": 50}""", u * 1000 + sec)
+    }.toDF("user_id", "ts", "value", "event_type", "props", "event_id")
+    def nOf(root: String) = GoldStage.readHourly(spark, root).get
+      .groupBy("user_id").agg(sum("n")).as[(Long, Long)].collect().toMap
+    def goldRace(): Unit = {
+      val gold = s"$dir/gold"
+      GoldStage.refreshHourly(events((1L, 100L, 1.0), (17L, 100L, 17.0)), gold)
+      race("gold") { hold =>
+        GoldStage.refreshHourly(
+          fileBatch(s"$dir/gold-b", events((17L, 200L, 99.0)))
+            .withColumn("value", hold(col("value"))), gold)
+      }(GoldStage.refreshHourly(events((1L, 300L, 5.0)), gold))
+      assert(nOf(gold) === Map(1L -> 2L, 17L -> 2L),
+        "a gold refresh waiting on the lock dropped the fold committed before it")
+    }
+
+    // every variant runs, so one report names each writer that lost an update
+    val failures = Seq("upsert" -> (() => upsertRace()),
+        "optimize" -> (() => optimizeRace()), "gold" -> (() => goldRace()))
+      .flatMap { case (name, run) =>
+        scala.util.Try(run()).failed.toOption.map(e => s"$name: ${e.getMessage}")
+      }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+}
+
+object CommitConcurrencySpec {
+  /** A latch by system-property key: executor threads deserialize
+    * their own copy of a task's closure, so a latch captured there
+    * would not be the test's; the property map is one per JVM.
+    */
+  def latch(key: String): CountDownLatch =
+    System.getProperties.get(key).asInstanceOf[CountDownLatch]
 }
