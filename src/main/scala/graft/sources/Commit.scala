@@ -55,11 +55,26 @@ import java.nio.charset.StandardCharsets
   * Layout:
   * {{{
   *   <root>/_POINTER            one line: current manifest file name
-  *   <root>/manifest-<v>.txt    line 1 = version; "#parent=<v>",
-  *                              "#schema=<StructType JSON>", "#rows=<n>";
+  *   <root>/manifest-<v>.txt    line 1 = version; light meta "#parent=<v>",
+  *                              "#schema=<StructType JSON>", "#rows=<n>",
+  *                              "#layout=…", "#txn=…"; heavy meta
+  *                              "#stats=…", "#fstats=…", "#files=…";
   *                              then "<bucket>\t<dir>" entries
   *   <root>/v=<v>/bucket=<b>/…  parquet data (or v=<v>/… for whole dirs)
   * }}}
+  *
+  * What the manifest records per publish: the fresh entries, the
+  * snapshot schema, the rows written, each entry's zone maps (and
+  * per-file ones where an entry has several files), and — for every
+  * bucketed publish, which writes through ([[writeBuckets]]) — the name
+  * and size of EVERY file of each fresh entry (`#files=`). A bucketed
+  * write has no file-commit protocol of its own: its tasks write final
+  * names into the claimed `v=<n>` dir and report each file with its
+  * footer's zone map, and the manifest naming those files is the
+  * commit (the Delta Lake log's contract). Readers open exactly the
+  * named files without listing, so a file a retried task attempt left
+  * behind is never read. Entries written before `#files=` existed, and
+  * whole dirs from [[publishDir]], are listed when a snapshot opens.
   *
   * The `#parent=` line records committed lineage: [[history]] walks it
   * from the pointer, [[readAt]] time-travels to any retained link, and
@@ -143,7 +158,8 @@ object Commit {
       stats: Map[String, Skipping.EntryStats] = Map.empty,
       fileStats: Map[String, Seq[(String, Skipping.EntryStats)]] = Map.empty,
       layout: Option[Layout] = None,
-      txns: Map[String, Long] = Map.empty)
+      txns: Map[String, Long] = Map.empty,
+      files: Map[String, Seq[(String, Long)]] = Map.empty)
 
   private def parseManifest(text: String): Manifest = {
     val lines = text.split("\n").toSeq.filter(_.nonEmpty)
@@ -205,19 +221,29 @@ object Commit {
         Some(app -> ver.toLong)
       } catch { case scala.util.control.NonFatal(_) => None }
     }.toMap
+    // `#files=<entry dir>(\t<file rel path>\t<bytes>)*`: the COMPLETE
+    // file list of a write-through entry, which readers open instead of
+    // listing the dir. Unlike the stats lines it decides which rows a
+    // read returns, so a malformed line fails the read loudly.
+    val files = lines.tail.filter(_.startsWith("#files=")).map { l =>
+      val parts = l.stripPrefix("#files=").split("\t", -1)
+      if (parts.length % 2 != 1)
+        throw new IllegalStateException(s"manifest $v: malformed file list line: $l")
+      parts.head -> parts.tail.grouped(2).map(p => p(0) -> p(1).toLong).toSeq
+    }.toMap
     val entries = lines.tail.filterNot(_.startsWith("#")).map { l =>
       val Array(k, dir) = l.split("\t", 2)
       Entry(k.toInt, dir)
     }
-    Manifest(v, parent, schema, rows, entries, stats, fileStats, layout, txns)
+    Manifest(v, parent, schema, rows, entries, stats, fileStats, layout, txns, files)
   }
 
   /** The manifest header-order CONTRACT shared by [[commitManifest]]
     * (the writer) and the streamed header reader [[headerValue]]
     * ([[layout]], [[lastTxn]], [[parentAt]]): light meta lines
     * (`#parent`, `#schema`, `#rows`, `#layout`, `#txn`) are written
-    * BEFORE the heavy ones (`#stats`, `#fstats`), which precede the
-    * entry lines. The streamed reader may therefore stop at the first
+    * BEFORE the heavy ones (`#stats`, `#fstats`, `#files`), which
+    * precede the entry lines. The streamed reader may therefore stop at the first
     * heavy-meta or entry line and still have seen every light line —
     * that early stop is what keeps the lineage walk O(1) bytes per
     * manifest when the stats tail is megabytes. Both sides reference THIS predicate (the writer via
@@ -227,7 +253,7 @@ object Commit {
     * manifest, so a future reordering of meta lines fails loudly
     * instead of making the reader silently return None/Some(0).
     */
-  private[graft] val HeavyMetaPrefixes = Seq("#stats=", "#fstats=")
+  private[graft] val HeavyMetaPrefixes = Seq("#stats=", "#fstats=", "#files=")
   private def pastLightMeta(line: String): Boolean =
     HeavyMetaPrefixes.exists(line.startsWith) || !line.startsWith("#")
 
@@ -242,7 +268,7 @@ object Commit {
     */
   def layout(spark: SparkSession, root: String): Option[Layout] = {
     val f = fs(spark, root)
-    headManifest(f, root).flatMap(headerValue(f, _, "#layout="))
+    head(f, root).flatMap(h => headerValue(f, h._2, "#layout="))
       .flatMap(parseLayout)
   }
 
@@ -258,7 +284,7 @@ object Commit {
   def lastTxn(spark: SparkSession, root: String,
       appId: String): Option[Long] = {
     val f = fs(spark, root)
-    headManifest(f, root).flatMap(headerValue(f, _, s"#txn=$appId\t"))
+    head(f, root).flatMap(h => headerValue(f, h._2, s"#txn=$appId\t"))
       .flatMap(_.toLongOption)
   }
 
@@ -272,12 +298,28 @@ object Commit {
       Some(Layout(n.toInt, k))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The manifest file the pointer names, if both exist. */
-  private def headManifest(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[Path] = {
+  /** The committed head: the version `_POINTER` names and its manifest
+    * file; None when nothing was ever committed (no pointer — a first
+    * version that crashed before its pointer swap reads as None). The
+    * one pointer-follow every head question goes through, at O(1)
+    * bytes: the pointer's content is the manifest FILE NAME, which
+    * encodes the version, so no caller pays a manifest parse it does
+    * not need. The one missing-manifest rule: a pointer naming a
+    * manifest that is not there is a broken table, not an empty one,
+    * and throws whatever the caller asked.
+    */
+  private def head(f: org.apache.hadoop.fs.FileSystem,
+      root: String): Option[(Long, Path)] = {
     val ptr = new Path(root, Pointer)
     if (!f.exists(ptr)) None
-    else Some(new Path(root, readSmall(f, ptr).trim)).filter(f.exists)
+    else {
+      val name = readSmall(f, ptr).trim
+      val mf = new Path(root, name)
+      if (!f.exists(mf))
+        throw new java.io.FileNotFoundException(
+          s"$root/$Pointer names $name, which does not exist")
+      Some(name.stripPrefix("manifest-").stripSuffix(".txt").toLong -> mf)
+    }
   }
 
   /** The value of manifest `mf`'s light meta line starting with
@@ -313,14 +355,10 @@ object Commit {
   def current(spark: SparkSession, root: String): Option[(Long, Seq[Entry])] =
     currentManifest(spark, root).map(m => (m.v, m.entries))
 
-  /** The manifest the pointer currently resolves to — the single
-    * pointer-follow both [[current]] and [[read]] share.
-    */
+  /** The head manifest ([[head]]), parsed. */
   private def currentManifest(spark: SparkSession, root: String): Option[Manifest] = {
     val f = fs(spark, root)
-    val ptr = new Path(root, Pointer)
-    if (!f.exists(ptr)) None
-    else Some(parseManifest(readSmall(f, new Path(root, readSmall(f, ptr).trim))))
+    head(f, root).map(h => parseManifest(readSmall(f, h._2)))
   }
 
   /** The `#parent=` pointer of manifest `v` WITHOUT decoding the rest
@@ -340,25 +378,6 @@ object Commit {
     else Some(headerValue(f, mf, "#parent=").fold(0L)(_.toLong))
   }
 
-  /** The version the pointer currently names, WITHOUT reading the head
-    * manifest at all: the pointer's one-line content is the manifest
-    * FILE NAME, which encodes it. [[chainContains]]/[[history]] start
-    * here so a membership question never pays the head manifest's
-    * schema-JSON + stats parse (the callers that need the parsed head
-    * already hold it).
-    */
-  private def headVersion(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[Long] = {
-    val ptr = new Path(root, Pointer)
-    if (!f.exists(ptr)) None
-    else {
-      val name = readSmall(f, ptr).trim
-      try Some(name.stripPrefix("manifest-").stripSuffix(".txt").toLong)
-        .filter(_ => f.exists(new Path(root, name)))
-      catch { case _: NumberFormatException => None }
-    }
-  }
-
   /** Is version `v` on the committed chain and still reconstructable?
     * The membership question [[changesSinceKeyed]]/[[changesSince]]/
     * [[readAt]] ask per call — answered by walking parent HEADERS from
@@ -373,7 +392,7 @@ object Commit {
   private def chainContains(spark: SparkSession, root: String,
       v: Long): Boolean = {
     val f = fs(spark, root)
-    var at = headVersion(f, root) // invariant: manifest exists
+    var at = head(f, root).map(_._1) // invariant: manifest exists
     var found = false
     while (!found && at.exists(_ >= v)) {
       if (at.get == v) found = true
@@ -392,8 +411,7 @@ object Commit {
     */
   def history(spark: SparkSession, root: String): Seq[Long] = {
     val f = fs(spark, root)
-    val head = headVersion(f, root)
-    Iterator.iterate(head) {
+    Iterator.iterate(head(f, root).map(_._1)) {
       case Some(v) => parentAt(f, root, v)
         .filter(p => p > 0 && f.exists(new Path(root, s"manifest-$p.txt")))
       case None => None
@@ -437,8 +455,8 @@ object Commit {
   /** Read the current snapshot filtered by `predicateSql`, one SQL
     * boolean expression over the snapshot's columns: [[read]] with the
     * filter applied. The scan's [[ManifestFileIndex]] skips the entries
-    * and files whose zone maps ([[Skipping]], harvested from parquet
-    * footers at publish time) or bucket prove the filter matches no row,
+    * and files whose zone maps ([[Skipping]], folded from the parquet
+    * footers when they were written) or bucket prove the filter matches no row,
     * so a narrow read of a large maintained table costs IO proportional
     * to the MATCHING data. [[planWhere]] reports that pruning.
     */
@@ -891,28 +909,42 @@ object Commit {
     * its own reader setup when the query runs, and a maintained table's
     * snapshot spans as many version dirs as it has recent batches.
     *
-    * Every entry dir is listed once, on the driver, in one pooled batch
-    * ([[Skipping.listMany]]); each version dir's data schema comes off
-    * that listing's footer through [[ParquetScan.schemaOf]] (Spark's own
-    * inference where the session merges schemas). Opening a snapshot
-    * therefore runs no Spark job, however many buckets it has.
+    * A write-through entry's files are the ones its manifest names
+    * (`#files=`), opened without listing the dir: a file there that the
+    * manifest does not name — a retried task attempt's leftover, a
+    * stray copy — is never read. Every other entry dir is listed once,
+    * on the driver, in one pooled batch ([[Skipping.listMany]]). Each
+    * version dir's data schema comes off one footer through
+    * [[ParquetScan.schemaOf]] (Spark's own inference where the session
+    * merges schemas). Opening a snapshot therefore runs no Spark job,
+    * however many buckets it has.
     */
   private def assemble(spark: SparkSession, root: String, m: Manifest,
       entries: Seq[Entry], bucketCol: String): DataFrame = {
+    import org.apache.hadoop.fs.FileStatus
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val conf = spark.sessionState.newHadoopConf()
-    val dirs = entries.map(e => new Path(s"$root/${e.dir}"))
+    val f = fs(spark, root)
+    val qroot = f.makeQualified(new Path(root))
+    val blockSize = f.getDefaultBlockSize(qroot)
+    val (named, unnamed) = entries.partition(e => m.files.contains(e.dir))
+    val dirs = unnamed.map(e => new Path(s"$root/${e.dir}"))
     // entry dir → (path relative to it, status) of each visible file,
-    // relative as the footer harvest names #fstats files
-    val listed = entries.map(_.dir).zip(dirs).zip(Skipping.listMany(conf, dirs))
+    // relative as #fstats and #files name them
+    val listed: Map[String, Seq[(String, FileStatus)]] = named.map { e =>
+      e.dir -> m.files(e.dir).map { case (rel, bytes) =>
+        rel -> new FileStatus(bytes, false, 1, blockSize, 0L,
+          new Path(qroot, s"${e.dir}/$rel"))
+      }
+    }.toMap ++ unnamed.map(_.dir).zip(dirs).zip(Skipping.listMany(conf, dirs))
       .map { case ((dir, p), tried) =>
         val base = p.getFileSystem(conf).makeQualified(p).toString + "/"
-        dir -> tried.get.map(st => st.getPath.toString.stripPrefix(base) -> st)
+        dir -> tried.get.map(st => st.getPath.toString.stripPrefix(base) -> (st: FileStatus))
           .filterNot(_._1.split('/').exists(ParquetScan.hidden))
           .sortBy(_._1)
-      }.toMap
+      }
     // nullable throughout, as Spark's file sources read any schema: a
     // footer's `required` does not bind the other files of the scan
     def dataSchema(es: Seq[Entry]): StructType = {
@@ -994,27 +1026,12 @@ object Commit {
     }
   }
 
-  private def nextVersion(spark: SparkSession, root: String,
-      committed: Long): Long =
-    math.max(committed, scanVersions(fs(spark, root), root)._1) + 1
-
   /** Version-claim files (`.claim-v=<n>`): a writer's exclusive
     * reservation of its version number, created BEFORE any data is
     * written and removed when the publish decides (commit or abort).
     * Dot-prefixed so no reader's file listing ever sees one.
     */
   private[graft] val ClaimPrefix = ".claim-v="
-
-  /** The committed head version, from the pointer file name alone —
-    * O(1) bytes, no manifest parse. 0 = nothing committed.
-    */
-  private def committedVersion(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Long = {
-    val ptr = new Path(root, Pointer)
-    if (!f.exists(ptr)) 0L
-    else readSmall(f, ptr).trim
-      .stripPrefix("manifest-").stripSuffix(".txt").toLong
-  }
 
   /** Per-root writer serialization (r18). A publish is
     * read-prev → write-data → claim-version → swap-pointer; two
@@ -1075,22 +1092,39 @@ object Commit {
 
   /** Publish a new version whose data `write` writes into the fresh
     * version dir it is given, over the head read inside the lock. The
-    * manifest's entries are the version dir's `bucket=<b>` children
-    * (plus carried entries for buckets this version did not rewrite),
-    * or a single whole-dir entry when the writer produced no bucket
-    * dirs. A blind write: `write` does not depend on the head.
+    * manifest's entries are the buckets `write` reports (plus carried
+    * entries for buckets this version did not rewrite), or a single
+    * whole-dir entry for a caller-written dir or an empty bucketed
+    * write. A blind write: `write` does not depend on the head.
     */
   private def publish(spark: SparkSession, root: String,
       expectBuckets: Option[Set[Int]] = None,
-      bucketedWriter: Boolean = false,
       declaredLayout: Option[Layout] = None,
       fullRewrite: Boolean = false,
       appTxn: Option[(String, Long)] = None)
-      (write: String => Unit): Long =
+      (write: String => Written): Long =
     withHead(spark, root, appTxn, None) { prev =>
-      Some(publishLocked(spark, root, expectBuckets, bucketedWriter,
+      Some(publishLocked(spark, root, expectBuckets,
         declaredLayout, fullRewrite, appTxn, prev)(write))
     }.get
+
+  /** What a publish's writer put into its fresh version dir. */
+  private sealed trait Written
+  /** Write-through bucket files as their tasks reported them
+    * ([[writeBuckets]]), and the data schema they were written with.
+    */
+  private final case class BucketFiles(files: Seq[WrittenFile],
+      dataSchema: org.apache.spark.sql.types.StructType) extends Written
+  /** A caller-written whole dir ([[publishDir]]): publish lists it and
+    * reads its footers.
+    */
+  private case object WholeDir extends Written
+
+  /** One file a write-through task wrote: its bucket and its footer,
+    * folded ([[Skipping.FileFold]]; `rel` is the name inside the bucket
+    * dir).
+    */
+  private final case class WrittenFile(bucket: Int, fold: Skipping.FileFold)
 
   /** The publish body; runs only inside [[withHead]] with the replay
     * watermark already cleared. `prev` is the manifest snapshot read
@@ -1099,12 +1133,11 @@ object Commit {
     */
   private def publishLocked(spark: SparkSession, root: String,
       expectBuckets: Option[Set[Int]],
-      bucketedWriter: Boolean,
       declaredLayout: Option[Layout],
       fullRewrite: Boolean,
       appTxn: Option[(String, Long)],
       prev: Option[Manifest])
-      (write: String => Unit): Long = {
+      (write: String => Written): Long = {
     val f = fs(spark, root)
     // ---- cross-JVM version claim (r19) ----------------------------
     // The in-driver writer lock cannot see writers in OTHER JVMs. Two
@@ -1146,37 +1179,41 @@ object Commit {
       throw new ConcurrentCommitException(v,
         new java.io.IOException(reason), reason)
     }
-    val head = committedVersion(f, root)
-    if (head != prevV)
-      abortClaim(s"table advanced to v=$head after this publish " +
+    // guard (a). In-driver writers cannot trip it: they are serialized
+    // by the writer lock, under which [[withHead]] read `prev`. It only
+    // catches a writer in ANOTHER JVM that committed since then.
+    val headV = head(f, root).fold(0L)(_._1)
+    if (headV != prevV)
+      abortClaim(s"table advanced to v=$headV after this publish " +
         s"snapshotted v=$prevV; committing would carry forward stale " +
         "state over the newer writer's changes")
-    val inFlight = liveClaims.filter(c => c > head && c < v)
+    val inFlight = liveClaims.filter(c => c > headV && c < v)
     if (inFlight.nonEmpty)
       abortClaim(s"writer(s) with claim(s) v=${inFlight.sorted.mkString(",")} " +
         "are in flight below this publish's version; their commits would " +
         "be dropped by our carry-forward — the lower claim wins")
     try {
     val vdir = s"v=$v"
-    // publish phases (write / footer harvest / manifest commit) ride
+    // publish phases (write / zone-map fold / manifest commit) ride
     // the one phase timer: `publish.write`, `publish.harvest`,
     // `publish.manifest`
-    graft.util.PhaseTimer("publish", "write")(write(s"$root/$vdir"))
+    val written = graft.util.PhaseTimer("publish", "write")(write(s"$root/$vdir"))
     faultPoint("after-write")
-    val newBuckets = f.listStatus(new Path(root, vdir))
-      .map(_.getPath.getName).filter(_.startsWith("bucket="))
-      .map(_.stripPrefix("bucket=").toInt).sorted.toSeq
+    val newBuckets = written match {
+      case BucketFiles(files, _) => files.map(_.bucket).distinct.sorted
+      case WholeDir => Nil
+    }
     // an EMPTY bucketed write against an existing table must abort, not
-    // commit: partitionBy writes no dirs for an empty DataFrame, and the
-    // no-bucket-dirs fallback below would publish a whole-dir (empty)
-    // snapshot that REPLACES the table outright — an empty upsert batch
-    // silently wiping the accumulated state (found by the r16 scaled-
-    // bucket sweep review; incremental callers now no-op before publish,
-    // this guard is the backstop for any other bucketed writer). A
-    // caller that truly means "replace the table with nothing" states
-    // it with publishDir. The fresh vdir is unreferenced garbage for
-    // [[vacuum]]; readers stay on the previous snapshot.
-    require(!(bucketedWriter && newBuckets.isEmpty && prev.nonEmpty),
+    // commit: it writes no bucket file, and the whole-dir shape below
+    // would publish an empty snapshot that REPLACES the table outright
+    // — an empty upsert batch silently wiping the accumulated state
+    // (found by the r16 scaled-bucket sweep review; incremental callers
+    // now no-op before publish, this guard is the backstop for any
+    // other bucketed writer). A caller that truly means "replace the
+    // table with nothing" states it with publishDir. The fresh vdir is
+    // unreferenced garbage for [[vacuum]]; readers stay on the previous
+    // snapshot.
+    require(!(written != WholeDir && newBuckets.isEmpty && prev.nonEmpty),
       s"bucketed publish to $root wrote no bucket dirs (empty input?) — " +
         "committing would replace the existing snapshot with an empty " +
         "whole-dir version; skip empty batches, or use publishDir for " +
@@ -1251,54 +1288,45 @@ object Commit {
           s"${l.buckets} buckets — the declaration does not describe " +
           "this table; re-bucket with a full rewrite instead")
     }
-    // Schema, row count, per-entry AND per-file zone maps all come
-    // from the fresh files' FOOTERS, read once driver-side — publish
-    // is on the streaming commit critical path (one call per
-    // micro-batch), and a second directory listing plus footer read
-    // (the whole-dir fallback below) there would re-scan the fresh
-    // version every epoch for audit metadata.
-    val conf = spark.sessionState.newHadoopConf()
-    // one flat pool batch across ALL fresh entry dirs (an incremental
-    // publish's fresh version is one dir per touched bucket — a
-    // per-dir harvest loop would serialize their footer opens)
-    val harvests = graft.util.PhaseTimer("publish", "harvest")(
-      Skipping.harvestMany(conf,
-        fresh.map(e => e.dir -> new Path(s"$root/${e.dir}"))))
+    // The fresh entries' zone maps, row count, file lists and schema.
+    // A write-through write brings them with it: each task folded the
+    // footer it just wrote, so the driver only folds those reports per
+    // entry, and the schema is the one the files were written with —
+    // nullable throughout, as Spark reads any parquet file, plus the
+    // int bucket partition column. A caller-written whole dir is listed
+    // and its footers read once here; Spark infers its schema, since a
+    // whole-dir writer may nest partition dirs the footers don't know.
+    val (harvests, freshFiles, rows, snapSchema) = written match {
+      case BucketFiles(files, dataSchema) =>
+        val byBucket = files.groupBy(_.bucket)
+        val folds = fresh.map(e => e.dir -> byBucket.getOrElse(e.key, Nil).map(_.fold))
+        val hs = graft.util.PhaseTimer("publish", "harvest")(
+          folds.flatMap { case (dir, fs) => Skipping.fold(fs).map(dir -> _) }.toMap)
+        val schema = Option.when(newBuckets.nonEmpty) {
+          import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+          StructType(widenNullability(dataSchema).asInstanceOf[StructType].fields :+
+            StructField("bucket", IntegerType, nullable = true))
+        }
+        (hs, folds.map { case (dir, fs) => dir -> fs.map(x => x.rel -> x.bytes).sortBy(_._1) }.toMap,
+          Some(files.map(_.fold.rows).sum), schema)
+      case WholeDir =>
+        val hs = graft.util.PhaseTimer("publish", "harvest")(
+          Skipping.harvestMany(spark.sessionState.newHadoopConf(),
+            fresh.map(e => e.dir -> new Path(s"$root/${e.dir}"))))
+        (hs, Map.empty[String, Seq[(String, Long)]], hs.get(vdir).map(_.entry.rows),
+          try Some(ParquetScan.read(spark, Seq(s"$root/$vdir")).schema)
+          catch { case scala.util.control.NonFatal(_) => None })
+    }
     val freshStats = harvests.view.mapValues(_.entry).toMap
     // single-file entries: the entry box IS the file box — no #fstats
     val freshFileStats = harvests.collect {
       case (dir, h) if h.files.size > 1 => dir -> h.files
     }
-    // bucketed version dirs are exactly bucket=<b>/files (publish
-    // controls the write), so footer schema + the int partition column
-    // reproduces what partition discovery would infer. Whole-dir
-    // writers may nest their own partition dirs the footers don't
-    // know about — those keep Spark's partition discovery, over a
-    // schema ParquetScan reads off one footer (a listing, no job).
-    val footerSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (newBuckets.isEmpty || harvests.size != fresh.size) None
-      else harvests.values.flatMap(_.schema).headOption.flatMap { mt =>
-        try {
-          val st = new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(mt)
-          Some(org.apache.spark.sql.types.StructType(st.fields :+
-            org.apache.spark.sql.types.StructField("bucket",
-              org.apache.spark.sql.types.IntegerType, nullable = true)))
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-    val snapSchema = footerSchema.orElse(
-      try Some(ParquetScan.read(spark, Seq(s"$root/$vdir")).schema)
-      catch { case scala.util.control.NonFatal(_) => None })
-    // untouched buckets keep the zone maps recorded when THEIR data
-    // was written — immutable data, immutable stats
+    // untouched buckets keep the zone maps and file lists recorded when
+    // THEIR data was written — immutable data, immutable metadata
     val carriedDirs = carried.map(_.dir).toSet
-    val carriedStats = prev.map(_.stats).getOrElse(Map.empty)
-      .filter { case (dir, _) => carriedDirs.contains(dir) }
-    val carriedFileStats = prev.map(_.fileStats).getOrElse(Map.empty)
-      .filter { case (dir, _) => carriedDirs.contains(dir) }
-    val rows =
-      if (freshStats.size == fresh.size) Some(freshStats.values.map(_.rows).sum)
-      else footerRows(spark, s"$root/$vdir")
+    def carry[T](of: Manifest => Map[String, T]): Map[String, T] =
+      prev.fold(Map.empty[String, T])(of(_).filter { case (dir, _) => carriedDirs(dir) })
     // idempotent-writer watermarks survive EVERY publish path (an
     // optimizeBuckets compaction or an unrelated writer's publish must
     // not wipe another app's replay cursor); a writer's own watermark
@@ -1311,8 +1339,9 @@ object Commit {
     graft.util.PhaseTimer("publish", "manifest")(
       commitManifest(spark, root, v, parent,
         (carried ++ fresh).sortBy(_.key),
-        snapSchema, rows, carriedStats ++ freshStats,
-        carriedFileStats ++ freshFileStats, layout, txns))
+        snapSchema, rows, carry(_.stats) ++ freshStats,
+        carry(_.fileStats) ++ freshFileStats, layout, txns,
+        carry(_.files) ++ freshFiles))
     v
     } finally {
       // the publish DECIDED (committed, refused a rail, or lost the
@@ -1339,27 +1368,6 @@ object Commit {
       claims.length
     }
   }
-
-  /** Rows written into a version dir, from parquet footer metadata
-    * only (no Spark job, no column IO). None on any read problem —
-    * `#rows=` is audit lineage, never worth failing a commit over.
-    */
-  private def footerRows(spark: SparkSession, dir: String): Option[Long] =
-    try {
-      val conf = spark.sessionState.newHadoopConf()
-      val it = new Path(dir).getFileSystem(conf)
-        .listFiles(new Path(dir), true)
-      var n = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-          try n += rd.getRecordCount finally rd.close()
-        }
-      }
-      Some(n)
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Two writers raced to the same version number: the second one's
     * exclusive manifest create failed. The losing commit wrote only
@@ -1388,7 +1396,8 @@ object Commit {
       stats: Map[String, Skipping.EntryStats] = Map.empty,
       fileStats: Map[String, Seq[(String, Skipping.EntryStats)]] = Map.empty,
       layout: Option[Layout] = None,
-      txns: Map[String, Long] = Map.empty): Unit = {
+      txns: Map[String, Long] = Map.empty,
+      files: Map[String, Seq[(String, Long)]] = Map.empty): Unit = {
     val f = fs(spark, root)
     val name = s"manifest-$v.txt"
     val meta = Seq(s"#parent=$parent") ++
@@ -1402,6 +1411,10 @@ object Commit {
         files.sortBy(_._1).map { case (file, es) =>
           s"#fstats=$dir\t$file\t${Skipping.encode(es)}"
         }
+      } ++
+      files.toSeq.sortBy(_._1).map { case (dir, fs) =>
+        (dir +: fs.flatMap { case (file, bytes) => Seq(file, bytes.toString) })
+          .mkString("#files=", "\t", "")
       }
     // Writer-side enforcement of the header-order contract
     // ([[HeavyMetaPrefixes]]): no line a streamed header reader needs
@@ -1520,7 +1533,7 @@ object Commit {
     }
   }
 
-  /** Commit `df` partitioned by `bucketCol`: only the buckets present
+  /** Commit `df` bucketed by `bucketCol`: only the buckets present
     * in `df` are written; the rest carry forward from the current
     * manifest. This is the incremental-upsert publication: bounded
     * write amplification AND a transactional boundary. A BLIND write:
@@ -1530,8 +1543,9 @@ object Commit {
     *
     * Contract edges: a rewritten bucket carries ALL its surviving keys
     * (bucket-wholesale, like a Delta partition overwrite), and a
-    * bucket cannot be published EMPTY — partitionBy writes no dir for
-    * an empty input, so "present but empty" is not expressible here.
+    * bucket cannot be published EMPTY — the writer ([[writeBuckets]])
+    * writes a file only for a bucket that has rows, so "present but
+    * empty" is not expressible here.
     * An empty `df` against an existing table is therefore refused
     * (it would otherwise commit a whole-dir empty snapshot replacing
     * the table); retiring a bucket's last row takes a full rewrite or
@@ -1561,9 +1575,9 @@ object Commit {
       fullRewrite: Boolean = false,
       txn: Option[(String, Long)] = None): Long = {
     requireTxnApp(txn)
-    publish(df.sparkSession, root, expectBuckets, bucketedWriter = true,
+    publish(df.sparkSession, root, expectBuckets,
       declaredLayout = layout, fullRewrite = fullRewrite,
-      appTxn = txn)(bucketWriter(df, bucketCol))
+      appTxn = txn)(writeBuckets(onDisk(df, bucketCol)))
   }
 
   private def requireTxnApp(txn: Option[(String, Long)]): Unit =
@@ -1572,23 +1586,113 @@ object Commit {
         s"txn appId must be a single manifest-line-safe token: '$app'")
     }
 
-  /** The writer of a bucketed publish: `df` partitioned by `bucketCol`
-    * into the version dir. The on-disk layout is ALWAYS `bucket=<b>` —
-    * publish scans for that prefix to enumerate fresh entries, and the
-    * read side renames back to the caller's bucketCol. Writing
-    * `<bucketCol>=` dirs would silently degrade the table to one
-    * whole-dir entry (no bucket keys, no carry-forward, no key pruning).
+  /** `df` with its bucket column under the on-disk name. The layout is
+    * ALWAYS `bucket=<b>` — the manifest's entries name those dirs, and
+    * the read side renames back to the caller's bucketCol.
     */
-  private def bucketWriter(df: DataFrame, bucketCol: String): String => Unit = {
-    val onDisk =
-      if (bucketCol == "bucket") df
-      else {
-        require(!df.columns.contains("bucket"),
-          s"bucketCol '$bucketCol' cannot be renamed to the on-disk " +
-            "'bucket': the DataFrame already has a 'bucket' column")
-        df.withColumnRenamed(bucketCol, "bucket")
+  private def onDisk(df: DataFrame, bucketCol: String): DataFrame =
+    if (bucketCol == "bucket") df
+    else {
+      require(!df.columns.contains("bucket"),
+        s"bucketCol '$bucketCol' cannot be renamed to the on-disk " +
+          "'bucket': the DataFrame already has a 'bucket' column")
+      df.withColumnRenamed(bucketCol, "bucket")
+    }
+
+  /** The writer of every bucketed publish, write-through: `df`'s rows,
+    * sorted within their partitions on `bucket` so each task holds one
+    * open file at a time, go straight to
+    * `<vdir>/bucket=<b>/part-<uuid><ext>` through the
+    * `OutputWriterFactory` of Spark's own parquet sink
+    * (`ParquetFileFormat.prepareWrite`, resolved on the driver from the
+    * session), so the encoding, the codec and the row-metadata footer
+    * key stay Spark's. There is no `_temporary` dir, rename commit,
+    * `_SUCCESS` marker or dynamic-partition bookkeeping: nothing
+    * references the claimed version dir until the manifest names its
+    * files, so the manifest is the commit. Each task re-reads the
+    * footer it just closed and reports the file with its folded zone
+    * map ([[Skipping.readFold]]); publish builds the manifest from the
+    * reports instead of listing and re-opening the files. The job runs
+    * under its own SQL execution id, as a Spark write does.
+    */
+  private def writeBuckets(df: DataFrame): String => Written = vdir => {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.types.StructType
+    val spark = df.sparkSession
+    val in = df.withColumn("bucket", col("bucket").cast("int"))
+      .sortWithinPartitions("bucket")
+    val fields = in.schema.fields.toSeq
+    val bucketAt = in.schema.fieldIndex("bucket")
+    val data = fields.indices.filter(_ != bucketAt)
+    val dataSchema = StructType(data.map(fields))
+    val dataRefs: Seq[Expression] = data.map(i =>
+      BoundReference(i, fields(i).dataType, fields(i).nullable))
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, dataSchema)
+    // the job's conf (a JobConf) travels as a broadcast, as a Spark scan
+    // ships its conf: deserialized once per executor, not once per task
+    val conf = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+    val dir = fs(spark, vdir).makeQualified(new Path(vdir)).toString
+    val qe = in.queryExecution
+    val files =
+      try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some(s"write-through publish $vdir")) {
+        qe.toRdd.mapPartitions(rows =>
+          Iterator.single(writeTask(rows, dir, bucketAt, dataSchema, dataRefs, factory,
+            conf.value.value))).collect().toSeq.flatten
+      } finally conf.destroy()
+    BucketFiles(files, dataSchema)
+  }
+
+  /** One write-through task: writes its sorted rows, one file per bucket
+    * run, and reports each file once it is closed. A failed attempt
+    * closes its open file and leaves it unreported; the retry writes
+    * fresh names, so the manifest never names a partial file. `conf` is
+    * only read: every task of the write may share one instance.
+    */
+  private def writeTask(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      dir: String, bucketAt: Int, dataSchema: org.apache.spark.sql.types.StructType,
+      dataRefs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+      conf: org.apache.hadoop.conf.Configuration): Seq[WrittenFile] = {
+    import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+    val tc = org.apache.spark.TaskContext.get()
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
+      new TaskAttemptID(new TaskID(new JobID("graft-commit", tc.stageId()),
+        TaskType.MAP, tc.partitionId()), tc.attemptNumber()))
+    val ext = factory.getFileExtension(ctx)
+    val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(dataRefs)
+    val out = Seq.newBuilder[WrittenFile]
+    var bucket = 0
+    var path: Path = null
+    var writer: org.apache.spark.sql.execution.datasources.OutputWriter = null
+    def finish(): Unit = if (writer != null) {
+      writer.close()
+      writer = null
+      out += WrittenFile(bucket, Skipping.readFold(
+        path.getFileSystem(conf).getFileStatus(path), path.getName, conf))
+    }
+    var done = false
+    try {
+      rows.foreach { r =>
+        if (r.isNullAt(bucketAt))
+          throw new IllegalStateException(s"a row of the write to $dir has a null bucket")
+        val b = r.getInt(bucketAt)
+        if (writer == null || b != bucket) {
+          finish()
+          bucket = b
+          path = new Path(s"$dir/bucket=$b/part-${java.util.UUID.randomUUID()}$ext")
+          writer = factory.newInstance(path.toString, dataSchema, ctx)
+        }
+        writer.write(project(r))
       }
-    vdir => onDisk.write.mode("overwrite").partitionBy("bucket").parquet(vdir)
+      finish()
+      done = true
+    } finally if (!done && writer != null)
+      try writer.close() catch { case scala.util.control.NonFatal(_) => () }
+    out.result()
   }
 
   /** PhaseTimer `(prefix, label)`s under which a [[mergeBuckets]]
@@ -1645,8 +1749,8 @@ object Commit {
           if es.nonEmpty
         } yield bucketed(snapshot(spark, root, m, es, "bucket").drop("bucket"))
         val merged = fold(existing, bucketed(incoming(batch)), touched.size)
-        Some(publishLocked(spark, root, Some(touched), bucketedWriter = true,
-          Some(layout), fullRewrite = false, txn, prev)(bucketWriter(merged, "bucket")))
+        Some(publishLocked(spark, root, Some(touched), Some(layout),
+          fullRewrite = false, txn, prev)(writeBuckets(merged)))
       }
     }
   }
@@ -1657,7 +1761,7 @@ object Commit {
     */
   def publishDir(spark: SparkSession, root: String)
       (write: String => Unit): Long =
-    publish(spark, root)(write)
+    publish(spark, root) { vdir => write(vdir); WholeDir }
 
   /** Total on-disk bytes of the CURRENT snapshot's entries (live data
     * only — superseded versions' garbage excluded): the sizing input a
@@ -1683,7 +1787,7 @@ object Commit {
     * rewrite lands in a fresh version dir, readers stay on the old
     * complete snapshot until the pointer swap, and [[vacuum]]
     * reclaims superseded files after the grace period. Zone maps are
-    * re-harvested from the compacted footers (same bounds, fewer
+    * folded from the compacted files' footers (same bounds, fewer
     * files). The one-partition-per-bucket repartition is correct at
     * scale because bucket count, not data volume, bounds parallelism
     * here — callers with very large buckets raise the bucket count,
@@ -1742,18 +1846,19 @@ object Commit {
             while (n < 4096L && total / n > thr) n *= 2
             Layout(math.min(n, 4096L).toInt, l.keyExprSql)
           }
-        // one partition per bucket → partitionBy writes one file per
-        // bucket. A new modulus is a full rewrite that recomputes the
-        // bucket column from the recorded key expression; a plain
-        // compaction carries the recorded layout forward.
+        // hash-partitioned on the bucket, each bucket's rows meet in one
+        // task, which writes them as one file. A new modulus is a full
+        // rewrite that recomputes the bucket column from the recorded
+        // key expression; a plain compaction carries the recorded
+        // layout forward.
         val (out, layout) = evolved match {
           case Some(nl) if nl.buckets != m.layout.map(_.buckets).getOrElse(0) =>
             (df.withColumn(bucketCol, nl.bucketExpr), Some(nl))
           case _ => (df, None)
         }
-        publishLocked(spark, root, None, bucketedWriter = true, layout,
+        publishLocked(spark, root, None, layout,
           fullRewrite = layout.nonEmpty, None, prev)(
-          bucketWriter(out.repartition(col(bucketCol)), bucketCol))
+          writeBuckets(onDisk(out.repartition(col(bucketCol)), bucketCol)))
       }
     }
 

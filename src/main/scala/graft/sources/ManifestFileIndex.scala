@@ -9,9 +9,11 @@ import org.apache.spark.sql.types._
 
 /** The file index of one [[Commit]] scan group: the entries of one
   * version dir (partition column `bucket`, one value per entry) or one
-  * whole-dir entry (no partition column). The group's files were listed
-  * once, on the driver, when the snapshot was opened; `listFiles` hands
-  * Spark only the entries and files the pushed filters can match.
+  * whole-dir entry (no partition column). The group's files were
+  * resolved once, on the driver, when the snapshot was opened — named
+  * by the manifest for a write-through entry (`#files=`), listed for an
+  * older or caller-written one — and `listFiles` hands Spark only the
+  * entries and files the pushed filters can match, never a listing.
   *
   * The manifest already records what a scan needs to skip work: each
   * entry's bucket, its zone maps (`#stats`, `#fstats`) and the table's

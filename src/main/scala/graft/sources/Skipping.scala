@@ -13,11 +13,15 @@ import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-/** Manifest-level zone maps ("data skipping"): per-entry column
-  * min / max / null-count statistics harvested from parquet FOOTERS at
-  * publish time, recorded in the commit manifest, and evaluated
-  * against a read's filters by its [[ManifestFileIndex]] before any
-  * file is opened.
+/** Manifest-level zone maps ("data skipping"): per-entry and per-file
+  * column min / max / null-count statistics folded from the parquet
+  * FOOTERS of the entry's files, recorded in the commit manifest, and
+  * evaluated against a read's filters by its [[ManifestFileIndex]]
+  * before any file is opened. A write-through bucket publish folds
+  * each file's footer in the task that just closed it ([[readFold]])
+  * and the driver folds those reports per entry ([[fold]]); a
+  * caller-written dir is swept once on the driver ([[harvestMany]]).
+  * Both run the same chunk code, so the two paths cannot disagree.
   *
   * This is the table-format statistics lever (Delta `stats`, Iceberg
   * manifest `lower_bounds`/`upper_bounds`) re-expressed over
@@ -26,9 +30,9 @@ import java.util.Base64
   * hour of a year-long status table consults a few KB of manifest
   * stats and opens only the entries whose value ranges intersect —
   * partition (bucket) layout prunes on the HASH dimension, zone maps
-  * prune on every VALUE dimension the footers cover, with zero extra
-  * write cost (the footers already exist; publish reads them once for
-  * its `#rows=` audit line anyway).
+  * prune on every VALUE dimension the footers cover, at the cost of
+  * re-reading one footer per written file (the footers already exist,
+  * and the same read yields the `#rows=` audit line).
   *
   * Everything here is CONSERVATIVE: a column, file, or predicate
   * shape the harvester or evaluator does not understand simply
@@ -113,8 +117,11 @@ object Skipping {
   // footer harvest
   // ---------------------------------------------------------------
 
-  /** Per-column accumulation state across row groups / files. */
-  private sealed trait Acc
+  /** Per-column accumulation state across row groups / files.
+    * Serializable: a write-through task ships it back in its
+    * [[FileFold]].
+    */
+  private[sources] sealed trait Acc extends Serializable
   private case object Unusable extends Acc
   private final case class AllNull(nulls: Long) extends Acc
   private final case class Valued(t: String, lo: Any, hi: Any, nulls: Long)
@@ -183,35 +190,28 @@ object Skipping {
     case "s" => Base64.getDecoder.decode(s)
   }
 
-  /** Everything one footer sweep of an entry dir yields: the folded
-    * entry-level zone map, the per-FILE zone maps (relative path →
-    * stats — the file-grain skipping lever: a range-sorted or
-    * z-ordered bucket has disjoint per-file boxes, so a narrow
-    * predicate opens a strict subset of its files), and the first
-    * file's parquet schema (the publish path derives the snapshot's
-    * Spark schema from it instead of paying a second directory
-    * listing + footer read through `spark.read.parquet`).
+  /** Everything the footers of one entry's files yield: the folded
+    * entry-level zone map and the per-FILE zone maps (path relative to
+    * the entry dir → stats — the file-grain skipping lever: a
+    * range-sorted or z-ordered bucket has disjoint per-file boxes, so
+    * a narrow predicate opens a strict subset of its files).
     */
-  final case class Harvest(entry: EntryStats,
-      files: Seq[(String, EntryStats)],
-      schema: Option[org.apache.parquet.schema.MessageType])
+  final case class Harvest(entry: EntryStats, files: Seq[(String, EntryStats)])
 
-  /** Read every parquet footer under `dir` once and fold the chunk
-    * statistics into per-file AND per-entry column stats. None if any
-    * file fails to open (an entry with unreadable footers gets no
-    * stats and no one ever prunes on it). Nested columns, unknown
-    * physical types, NaN-polluted float bounds, and stats-less chunks
-    * all fold to "don't know" for that column.
+  /** One file's footer, folded over its row groups: its path relative
+    * to the entry dir, rows, bytes on disk and per-column state. What a
+    * write-through task returns for the file it wrote, and what a
+    * footer sweep reads per file; [[fold]] combines them per entry.
     */
+  private[sources] final case class FileFold(rel: String, rows: Long, bytes: Long,
+      cols: Map[String, Acc])
+
   /** Shared daemon pool for driver-side footer reads and dir listings
-    * ([[listMany]]): publish sits on
-    * the streaming commit critical path and an incremental writer's
-    * version dir holds (writer parallelism × touched buckets) small
-    * files — reading their footers one by one serializes cheap
-    * metadata IO (measured: the dominant publish cost in the gold MV
-    * replay). Footer reads are independent; the fold below is
-    * order-insensitive (min/max/null merges commute) and the output is
-    * sorted by path for manifest stability.
+    * ([[listMany]], [[harvestMany]]): a caller-written version dir can
+    * hold many small files, and reading their footers one by one
+    * serializes cheap metadata IO. Footer reads are independent; the
+    * fold is order-insensitive (min/max/null merges commute) and its
+    * output is sorted by path for manifest stability.
     */
   private lazy val footerPool = java.util.concurrent.Executors
     .newFixedThreadPool(8, r => {
@@ -223,18 +223,19 @@ object Skipping {
   def harvestAll(conf: Configuration, dir: Path): Option[Harvest] =
     harvestMany(conf, Seq("" -> dir)).get("")
 
-  private type FileRead = (String, Long, Map[String, Acc],
-    Option[org.apache.parquet.schema.MessageType])
-
-  private def readOne(st: org.apache.hadoop.fs.FileStatus, base: String,
-      conf: Configuration): FileRead = {
-    val full = st.getPath.toString
-    val rel =
-      if (full.startsWith(base + "/")) full.substring(base.length + 1)
-      else st.getPath.getName
-    val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+  /** Read the footer of file `st` (named `rel` inside its entry dir)
+    * and fold its chunk statistics. Nested columns, unknown physical
+    * types, NaN-polluted float bounds and stats-less chunks fold to
+    * "don't know" for that column. The reader takes its options from
+    * `conf`: parquet's default options build a fresh Hadoop
+    * `Configuration`, whose first read parses the default XML resources
+    * — most of a small footer read's cost.
+    */
+  private[sources] def readFold(st: org.apache.hadoop.fs.FileStatus, rel: String,
+      conf: Configuration): FileFold = {
+    val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, st.getPath).build())
     try {
-      val schema = Some(rd.getFooter.getFileMetaData.getSchema)
       var rows = 0L
       var acc = Map.empty[String, Acc]
       val bit = rd.getFooter.getBlocks.iterator()
@@ -253,9 +254,33 @@ object Skipping {
           }
         }
       }
-      (rel, rows, acc, schema)
+      FileFold(rel, rows, st.getLen, acc)
     } finally rd.close()
   }
+
+  /** One entry's zone maps from its files' folds: per-file stats sorted
+    * by path, and their entry-level fold. None when the fold fails —
+    * the entry then gets no stats and no one prunes on it, never a
+    * failed publish.
+    */
+  private[sources] def fold(files: Seq[FileFold]): Option[Harvest] =
+    try {
+      def colsOf(acc: Map[String, Acc]): Map[String, ColStat] = acc.collect {
+        case (n, Valued(t, lo, hi, nulls)) =>
+          n -> ColStat(t, render(t, lo), render(t, hi), nulls)
+        case (n, AllNull(nulls)) => n -> ColStat("n", "", "", nulls)
+      }
+      val sorted = files.sortBy(_.rel)
+      // entry fold: a column missing from one file but present in
+      // another has unknown values in the missing file → Unusable
+      val allCols = sorted.iterator.flatMap(_.cols.keys).toSet
+      val entryAcc = allCols.iterator.map { n =>
+        n -> sorted.iterator.map(_.cols.getOrElse(n, Unusable: Acc))
+          .reduceOption(merge).getOrElse(Unusable)
+      }.toMap
+      Some(Harvest(EntryStats(sorted.iterator.map(_.rows).sum, colsOf(entryAcc)),
+        sorted.map(f => f.rel -> EntryStats(f.rows, colsOf(f.cols)))))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The recursive file listings of several dirs, in order, as one
     * batch on the shared pool: one listing task per dir, so a snapshot
@@ -279,17 +304,13 @@ object Skipping {
         case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
       })
 
-  /** Harvest SEVERAL directories through one flat pool batch: an
-    * incremental publish's fresh version holds one dir per touched
-    * bucket, each usually a single file — harvesting them dir-by-dir
-    * serializes the per-dir footer read behind its `get()` (the pool
-    * only ever parallelized WITHIN a dir), which put ~16 sequential
-    * footer opens on the gold-refresh publish path. Here every
-    * (dir, file) footer read across all requested dirs is one task on
-    * the shared pool — never a nested submit, so the fixed pool cannot
-    * deadlock on itself. Per-dir contract unchanged: a dir whose
-    * listing or ANY footer read fails is absent from the result (no
-    * stats → no pruning), other dirs are unaffected.
+  /** Read every parquet footer under SEVERAL directories through one
+    * flat pool batch and fold them per dir ([[fold]]): every (dir,
+    * file) footer read across all requested dirs is one task on the
+    * shared pool — never a nested submit, so the fixed pool cannot
+    * deadlock on itself. A dir whose listing, ANY footer read or the
+    * fold fails is absent from the result (no stats → no pruning);
+    * other dirs are unaffected.
     */
   def harvestMany(conf: Configuration,
       dirs: Seq[(String, Path)]): Map[String, Harvest] = {
@@ -302,40 +323,22 @@ object Skipping {
         }.toOption.orElse { failed += key; None }
     }
     val futures = listed.flatMap { case (key, base, statuses) =>
-      statuses.map(st => key -> footerPool.submit(
-        new java.util.concurrent.Callable[FileRead] {
-          def call() = readOne(st, base, conf)
-        }))
+      statuses.map { st =>
+        val full = st.getPath.toString
+        val rel =
+          if (full.startsWith(base + "/")) full.substring(base.length + 1)
+          else st.getPath.getName
+        key -> footerPool.submit(new java.util.concurrent.Callable[FileFold] {
+          def call() = readFold(st, rel, conf)
+        })
+      }
     }
     val byKey = futures.flatMap { case (key, fut) =>
       try Some(key -> fut.get())
       catch { case scala.util.control.NonFatal(_) => failed += key; None }
     }.groupBy(_._1)
-    def colsOf(acc: Map[String, Acc]): Map[String, ColStat] = acc.collect {
-      case (n, Valued(t, lo, hi, nulls)) =>
-        n -> ColStat(t, render(t, lo), render(t, hi), nulls)
-      case (n, AllNull(nulls)) => n -> ColStat("n", "", "", nulls)
-    }
     listed.iterator.map(_._1).filterNot(failed).flatMap { key =>
-      // the fold itself stays under the same per-dir degradation
-      // contract as the reads: a dir whose stats cannot be folded is
-      // ABSENT (pruning declines there), it never fails the publish
-      try {
-        val results = byKey.getOrElse(key, Nil).map(_._2).sortBy(_._1)
-        val schema = results.iterator.flatMap(_._4).nextOption()
-        val perFile = results.map(r => (r._1, r._2, r._3))
-        // entry fold: a column missing from one file but present in
-        // another has unknown values in the missing file → Unusable
-        val allCols = perFile.iterator.flatMap(_._3.keys).toSet
-        val entryAcc = allCols.iterator.map { n =>
-          n -> perFile.iterator.map(_._3.getOrElse(n, Unusable: Acc))
-            .reduceOption(merge).getOrElse(Unusable)
-        }.toMap
-        Some(key -> Harvest(
-          EntryStats(perFile.iterator.map(_._2).sum, colsOf(entryAcc)),
-          perFile.map { case (rel, rows, acc) => rel -> EntryStats(rows, colsOf(acc)) },
-          schema))
-      } catch { case scala.util.control.NonFatal(_) => None }
+      fold(byKey.getOrElse(key, Nil).map(_._2)).map(key -> _)
     }.toMap
   }
 

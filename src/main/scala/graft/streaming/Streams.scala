@@ -409,10 +409,12 @@ object Streams {
     * folded last-writer-wins per (bucket, user_id) — bucket is a
     * function of user_id, so the groups are the per-user ones, and the
     * aggregation reuses the exchange because hash(bucket) clusters
-    * them. Each output partition then holds whole buckets, so publish
-    * writes one file per touched bucket (a stream of micro-batches
-    * otherwise fragments each bucket into parallelism-many files per
-    * trigger — the small-file problem optimizeBuckets exists to undo).
+    * them. Each output partition then holds whole buckets, and the
+    * write-through writer gives each bucket run of a task one file, so
+    * a touched bucket gets one file per publish (a stream of
+    * micro-batches otherwise fragments each bucket into
+    * parallelism-many files per trigger — the small-file problem
+    * optimizeBuckets exists to undo).
     * Exchange width = touched buckets (`width`), so a one-bucket batch
     * schedules one task. Same shape as GoldStage.mergeBucketAligned;
     * PlanSpec pins the single bucket-keyed exchange.

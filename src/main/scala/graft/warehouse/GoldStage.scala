@@ -179,9 +179,9 @@ object GoldStage {
     * function of user_id, so adding it changes no group), planned as
     * ONE exchange keyed on the bucket. The aggregation reuses that
     * exchange (hash(bucket) clusters every grouping key), and each
-    * output partition holds whole buckets, so partitionBy writes one
-    * file per touched bucket. GoldIncrementalSpec pins the one-
-    * Exchange plan.
+    * output partition holds whole buckets, so the write-through writer
+    * gives each touched bucket one file. GoldIncrementalSpec pins the
+    * one-Exchange plan.
     */
   private[graft] def mergeBucketAligned(unioned: DataFrame,
       buckets: Int): DataFrame = {
@@ -249,7 +249,7 @@ object GoldStage {
     * current partials at the touched keys, [[mergeBucketAligned]] —
     * the snapshot build's measures ([[partialAggs]]), so the two paths
     * cannot drift — sums them, and the refresh rewrites ONLY the
-    * user-buckets the batch touched (dynamic partition overwrite — the same bounded-write-
+    * user-buckets the batch touched (the same bounded-write-
     * amplification pattern as `Streams.statusUpsert`; at production
     * scale the identical shape is one Delta/Iceberg MERGE). A batch
     * touching one user costs one bucket of IO however large the
