@@ -363,12 +363,12 @@ object Bench {
     val totalNormalized = total / controlsRatio
     // The harness keeps only the last ~2000 chars of output. A 94-query
     // map is ~3 kB — it gets truncated mid-line and the driver records
-    // parsed:null (observed in BENCH_r01..r03). So the printed contract
-    // line carries the BASELINE-graded headline queries plus the
-    // suite's slowest, capped so the line always fits the tail capture
-    // with room for sbt's trailer; the FULL per-query map (and the
-    // per-iteration reproducibility evidence) is committed as
-    // BENCH_DETAIL.json.
+    // parsed:null (observed in BENCH_r01..r03, at commit 2b4ae67). So
+    // the printed contract line carries the BASELINE-graded headline
+    // queries plus the suite's slowest, capped so the line always fits
+    // the tail capture with room for sbt's trailer; the FULL per-query
+    // map (and the per-iteration reproducibility evidence) is committed
+    // as BENCH_DETAIL.json.
     def f2(v: Double): String = BigDecimal(v)
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
     val sfTag = sfDir.stripPrefix("/root/testdata/")

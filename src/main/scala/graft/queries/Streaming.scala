@@ -114,7 +114,7 @@ object Streaming {
   val streamAttrib = QueryDef(
     "q_stream_attrib",
     // statePartitions: a stream-stream join runs 4 state stores per
-    // partition, and StreamFloor's r17 partition sweep measured the
+    // partition, and the r17 partition sweep measured the
     // per-(task, store, batch) cost as FIXED machinery (~70 ms each,
     // row-count-independent; checkpoint medium irrelevant — ext4 vs
     // tmpfs A/B flat): wall 2.5→2.0 s going 8→2 partitions at this

@@ -323,10 +323,10 @@ object Warehouse {
     * (size-based broadcast at any sane catalog). The capped basket
     * relation `b` feeds four plan branches — r19 relied on
     * ReuseExchange to compute its distinct+window shuffle once, but
-    * the executed plan (plans/r20/q_basket_lift_before.txt) shows the
-    * reuse firing only partially: the window re-ran up to 4× per
-    * invocation. Since r20 `b` is checkpointed eagerly (one job) and
-    * all four branches read the materialized rows.
+    * the executed plan (plans/r20/q_basket_lift_before.txt at commit
+    * 2b4ae67) shows the reuse firing only partially: the window re-ran
+    * up to 4× per invocation. Since r20 `b` is checkpointed eagerly
+    * (one job) and all four branches read the materialized rows.
     */
   val basketLift = QueryDef(
     "q_basket_lift",

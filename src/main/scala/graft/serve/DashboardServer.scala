@@ -169,8 +169,9 @@ final class DashboardServer(
     * the first user hit after the publish is a cache hit, not the
     * 129–216 ms cold recompute (the reference's <100 ms dashboard bar
     * — README.md:282 — met on the FIRST post-publish hit, not just in
-    * steady state; measured in SERVE_LATENCY.json's
-    * first_hit_after_publish column). Unconditional on purpose:
+    * steady state: the r20 measurement at sf0.1 read 4.2–5.6 ms first
+    * hits after a 0.81 s warm(); perfbench's `serve.warm_s` carries
+    * the warm() cost now). Unconditional on purpose:
     * after a publish a TTL-fresh entry is fresh-by-age but
     * stale-by-content — and for the same reason warm() must OWN each
     * flight it counts: a request-path flight that started BEFORE the
@@ -305,9 +306,10 @@ final class DashboardServer(
     // the JDK HttpServer leaves Nagle ON; with keep-alive clients the
     // header-then-body response write pattern then hits the ~40 ms
     // delayed-ACK stall on EVERY request (the r20 soak measured
-    // cache-hit p50 at 45 ms; one-shot clients like ServeLatency's
-    // never see it, which is why SERVE_LATENCY read 5-7 ms). Read at
-    // the server impl's class init, so set before the first create.
+    // cache-hit p50 at 45 ms, 0.76 ms once set; one-shot clients never
+    // see it). perfbench's `serve.dash_ms_p50/p90/p99` carry the
+    // number now. Read at the server impl's class init, so set before
+    // the first create.
     System.setProperty("sun.net.httpserver.nodelay", "true")
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     s.createContext("/healthz", new HttpHandler {
@@ -440,7 +442,7 @@ final class DashboardServer(
     // always, but requests must be able to OVERLAP so the
     // single-flight path is exercised rather than masked by
     // dispatch-thread serialization. Sized ABOVE SqlInflight + the
-    // soak's 8-client hammer: with 4 threads and both SQL slots
+    // r20 soak's 8-client hammer: with 4 threads and both SQL slots
     // blocked, 8 concurrent dashboard clients queued behind 2 free
     // dispatchers and the r20 soak measured cache-hit p99 at 108 ms
     // under publish churn; at 12 the same soak reads p99 well under

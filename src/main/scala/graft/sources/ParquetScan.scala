@@ -47,11 +47,10 @@ import org.apache.spark.sql.types.StructType
   * 5000: the saved job stops paying for the second listing somewhere
   * past a few thousand files. [[Commit]] snapshot reads list once:
   * their file index is built from the same listing [[schemaOf]] picks
-  * from. The readers that still list twice are `Tables`, `Rest`,
-  * `Replay` and `Sources.compact` (and `Commit` for whole-dir versions
-  * only: a publish's schema read, an entry with nested partition dirs);
-  * `Rest`'s landing-dir read, re-run after every append, is the one
-  * whose tree keeps growing.
+  * from. The readers that still list twice are `Tables`, `Replay` and
+  * `Sources.compact` (and `Commit` for whole-dir versions only: a
+  * publish's schema read, an entry with nested partition dirs); `Rest`
+  * reads back only the files its batch just landed.
   */
 object ParquetScan {
 

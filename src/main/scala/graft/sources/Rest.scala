@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** REST-API ingestion with circuit breakers (SURVEY §2.1 S10; ref
@@ -139,6 +140,13 @@ object Rest {
   /** Priority-ordered single ingestion sweep over all endpoints, each
     * guarded by its breaker; successful batches are schema-unioned,
     * stamped, and appended to `landingDir`.
+    *
+    * The batch is written under a hidden staging dir in `landingDir`
+    * (a `_`-prefixed name, which Spark's file listing and the file
+    * stream source skip), then its data files move up into the flat
+    * landing dir under their unique Spark-given names, each rename
+    * landing one complete file. The per-source counts read exactly
+    * those files, so a sweep never reads what earlier batches landed.
     */
   final class Ingestion(
       endpoints: Seq[Endpoint],
@@ -165,10 +173,18 @@ object Rest {
               element_at(
                 map(endpoints.flatMap(e => Seq(lit(e.name), lit(e.priority))): _*),
                 col("data_source")))
-          stamped.write.mode(SaveMode.Append).parquet(landingDir)
-          // per-source landed counts, read back from the landing batch
-          ParquetScan.read(spark, Seq(landingDir))
-            .filter(col("batch_id") === batchId)
+          val stage = new Path(landingDir, s"_batch-${java.util.UUID.randomUUID()}")
+          stamped.write.parquet(stage.toString)
+          val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
+          val files = fs.listStatus(stage).toSeq.map(_.getPath)
+            .filterNot(p => ParquetScan.hidden(p.getName)).map { p =>
+              val to = new Path(landingDir, p.getName)
+              if (!fs.rename(p, to)) throw new java.io.IOException(s"cannot land $p as $to")
+              to.toString
+            }
+          fs.delete(stage, true)
+          // per-source landed counts, read back from this batch's files
+          ParquetScan.read(spark, files)
             .groupBy("data_source").count()
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         case None => Map.empty

@@ -336,8 +336,8 @@ object Streams {
 
   /** The per-micro-batch incoming projection of [[statusUpsert]]: each
     * user's latest reading, last-writer-wins on (ts, event_id). Shared
-    * with the static scan census ([[StreamStatic]]) so the audited
-    * plan IS the one the upsert runs.
+    * with PlanSpec's static scan census (the test tree's
+    * `StreamStatic`) so the audited plan IS the one the upsert runs.
     */
   def latestPerUser(batch: DataFrame): DataFrame =
     batch
@@ -371,8 +371,9 @@ object Streams {
     // outermost timer: `upsert.total` minus the publish/layout/probe
     // phases is statusUpsert's own planning residue, and addBatch
     // minus `upsert.total` is the foreachBatch sink machinery —
-    // the split tools/StreamFloor reports (zero cost unless
-    // SPARK_GRAFT_PHASE_TIMING or the in-process sink is on)
+    // perfbench's `phase.upsert.*` and `streaming.status.add_batch_ms_*`
+    // (zero cost unless SPARK_GRAFT_PHASE_TIMING or the in-process
+    // sink is on)
     graft.util.PhaseTimer("upsert", "total") {
       graft.sources.Commit.mergeBuckets(batch, statusPath, "user_id",
         buckets, txn, graft.sources.Commit.MergePhases(
@@ -479,8 +480,8 @@ object Streams {
       // Bounded replay into a memory sink: the checkpoint can never be
       // restarted from (the sink's rows die with the query), so its
       // durability is worthless — point it at the RAM-backed ephemeral
-      // root. Measured honestly: this is NOT a latency win (StreamFloor
-      // r17 A/B, ext4 vs tmpfs checkpoints, was flat — the bounded
+      // root. Measured honestly: this is NOT a latency win (the r17
+      // A/B, ext4 vs tmpfs checkpoints, was flat — the bounded
       // floor is fixed per-store-unit machinery, not checkpoint I/O);
       // it keeps hundreds of throwaway delta/WAL files per suite run
       // out of the page-cache writeback path (the r16 ImageIO lesson:

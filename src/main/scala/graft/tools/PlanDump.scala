@@ -7,10 +7,10 @@ package graft.tools
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <query> [query ...]
   *
-  * With SPARK_GRAFT_PLAN_OUT=<dir>/<suffix> set (e.g. `plans/r20/before`),
+  * With SPARK_GRAFT_PLAN_OUT=<dir>/<suffix> set (e.g. `plans/pr6/before`),
   * additionally writes each query's `.explain("formatted")` text to
-  * `<dir>/<query>_<suffix>.txt` — the per-round optimization evidence
-  * files the judge diffs.
+  * `<dir>/<query>_<suffix>.txt` — the before/after plan evidence a
+  * speed-up commits.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

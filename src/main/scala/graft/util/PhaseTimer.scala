@@ -12,12 +12,13 @@ package graft.util
 object PhaseTimer {
   private val printOn = sys.env.get("SPARK_GRAFT_PHASE_TIMING").contains("1")
 
-  /** In-process accumulation sink, enabled PROGRAMMATICALLY by
-    * measurement mains (tools/StreamFloor, the perfbench traced run)
-    * that need phase totals back as data instead of parsing stderr —
-    * stderr lines from inside a foreachBatch interleave with Spark's
-    * own logging and can't be attributed per run. Labels accumulate
-    * nanos across calls until the next [[accumulate]].
+  /** In-process accumulation sink, enabled PROGRAMMATICALLY by the
+    * perfbench traced run (its `phase.upsert.*` and `phase.refresh.*`
+    * metrics), which needs phase totals back as data instead of
+    * parsing stderr — stderr lines from inside a foreachBatch
+    * interleave with Spark's own logging and can't be attributed per
+    * run. Labels accumulate nanos across calls until the next
+    * [[accumulate]].
     */
   @volatile private var accOn = false
   private val acc = new java.util.concurrent.ConcurrentHashMap[

@@ -35,9 +35,10 @@ object TempRoot {
   // AvailableNow) is never restarted from — the run either completes or
   // is rerun from scratch — yet the HDFS-backed state store writes a
   // delta file per store instance per micro-batch against it, and the
-  // offset/commit WALs two more. StreamFloor's r17 A/B showed the
-  // checkpoint MEDIUM doesn't move the bounded floor (fixed per-store
-  // machinery dominates), so this is writeback hygiene, not a latency
+  // offset/commit WALs two more. The r17 checkpoint A/B (ext4 vs tmpfs,
+  // bounded attribution replay: flat) showed the checkpoint MEDIUM
+  // doesn't move the bounded floor (fixed per-store machinery
+  // dominates), so this is writeback hygiene, not a latency
   // claim: it keeps throwaway files out of the ext4 dirty-page path
   // that taxed later queries in r16 (the ImageIO disk-cache lesson).
   private lazy val ephemeralRoot: Option[java.nio.file.Path] = {

@@ -5,8 +5,9 @@ import graft.util.PhaseTimer
 import graft.warehouse.GoldStage
 import org.apache.spark.sql.functions._
 
-/** The phase-timer label contract: the perfbench traced run and
-  * tools/StreamFloor read these labels back from the in-process sink,
+/** The phase-timer label contract: the perfbench traced run reads
+  * these labels back from the in-process sink (`phase.upsert.*`,
+  * `phase.refresh.*`),
   * and a missing label reads there as a silent 0 ms, so the labels
   * themselves are pinned here.
   */

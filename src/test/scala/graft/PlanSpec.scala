@@ -160,9 +160,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("registry-wide scan census: no full-width scan of a wide table") {
-    // Quantified column pruning (tools/ScanAudit commits the census as
-    // SCAN_AUDIT.json): a scan that reads every column of a wide table
-    // multiplies IO by the table's width at 100 TB. Whitelist: the
+    // Quantified column pruning (the r19 census: 224 queries, 296 of
+    // 336 scans pruned, no unjustified wide scan). A scan that reads
+    // every column of a wide table multiplies IO by the table's width
+    // at 100 TB. Whitelist: the
     // minhash signature artifact — its 21 band columns ARE the
     // payload, reading all of them is the query. AQE off: the wrapper
     // node hides the scan tree until execution, and AQE never changes
@@ -172,9 +173,9 @@ class PlanSpec extends SparkSpec {
     try {
       for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
            if !name.startsWith("q_stream")) {
-        val offenders = graft.tools.ScanAudit.scans(
+        val offenders = PlanSpec.scans(
           fn(spark, sf0001).queryExecution.executedPlan)
-          .map(graft.tools.ScanAudit.info)
+          .map(PlanSpec.info)
           .filter(s => s.readCols == s.tableCols && s.tableCols > 8 &&
             !s.table.startsWith("dd_minhash_sig"))
         assert(offenders.isEmpty, s"$name reads full width: $offenders")
@@ -183,7 +184,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("streaming scan census: static batch twins cover every q_stream_* query") {
-    // the census (ScanAudit) audits streaming queries through
+    // the census audits streaming queries through
     // StreamStatic.twins — the same source+transform chain on a batch
     // read. This pin makes the coverage structural: a new streaming
     // query without a twin fails here, so the census can never
@@ -198,8 +199,8 @@ class PlanSpec extends SparkSpec {
       assert(twins.map(_._1).toSet === streaming,
         s"twin set drifted from the registry")
       for ((name, df) <- twins) {
-        val ss = graft.tools.ScanAudit.scans(df.queryExecution.executedPlan)
-          .map(graft.tools.ScanAudit.info)
+        val ss = PlanSpec.scans(df.queryExecution.executedPlan)
+          .map(PlanSpec.info)
         assert(ss.nonEmpty, s"$name twin plans no file scan")
         val offenders = ss.filter(s =>
           s.readCols == s.tableCols && s.tableCols > 8)
@@ -558,5 +559,36 @@ class PlanSpec extends SparkSpec {
     val p = plan("q_mutual_information")
     assert("HashAggregate".r.findAllIn(p).size >= 4, p) // partial+final per stage
     assert(!p.contains("SortMergeJoin"), p) // marginals join the cell grain small
+  }
+}
+
+object PlanSpec {
+  import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+
+  /** One parquet scan of the census: read-schema width against table
+    * width, and whether data or partition filters reached the reader.
+    */
+  final case class ScanInfo(table: String, readCols: Int, tableCols: Int,
+      pushed: Boolean, partitionPruned: Boolean)
+
+  /** All parquet scans in the plan, including subquery plans (scalar
+    * subqueries carry whole plans inside expressions — the bloom
+    * semijoin's build side lives there).
+    */
+  def scans(p: SparkPlan): Seq[FileSourceScanExec] = {
+    val self = p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }
+    self ++ p.children.flatMap(scans) ++
+      p.subqueries.flatMap(sq => scans(sq.asInstanceOf[SparkPlan]))
+  }
+
+  def info(f: FileSourceScanExec): ScanInfo = {
+    val table = f.relation.location.rootPaths.headOption
+      .map(_.getName).getOrElse("?")
+    ScanInfo(
+      table = table,
+      readCols = f.requiredSchema.fields.length,
+      tableCols = f.relation.dataSchema.fields.length,
+      pushed = f.metadata.get("PushedFilters").exists(s => s != "[]" && s.nonEmpty),
+      partitionPruned = f.partitionFilters.nonEmpty)
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.DataFrame
   * priority-ordered sweep, schema union with missing columns, landing
   * parquet the streaming source can tail.
   */
-class RestSpec extends SparkSpec {
+class RestSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def newClock(start: Long = 0L): (() => Long, Long => Unit) = {
@@ -102,6 +103,53 @@ class RestSpec extends SparkSpec {
     val got = graft.streaming.Streams.runToTable(stream, "rest_landing_counts", "complete")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === Map("weather" -> 4L, "flood" -> 2L))
+  }
+
+  test("runOnce counts its batch from the files it landed, not the whole landing dir") {
+    val landing = graft.util.TempRoot.freshDir("rest_landing4").toString + "/data"
+    val ing = new Rest.Ingestion(Seq(
+        Endpoint("weather", priority = 1, _ => weatherFetch),
+        Endpoint("flood", priority = 2, _ => floodFetch)),
+      _ => new CircuitBreaker(clock = () => 0L))
+    def dataFiles: Set[String] = new java.io.File(landing).listFiles().toSet
+      .map((f: java.io.File) => f.getName).filter(_.endsWith(".parquet"))
+    ing.runOnce(spark, landing, "B001")
+    ing.runOnce(spark, landing, "B002")
+    val before = dataFiles
+    // every query the third sweep runs, seen through the listener bus
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = runs.add(f -> qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r3 = try {
+      val r = ing.runOnce(spark, landing, "B003")
+      org.apache.spark.GraftListener.drain(spark.sparkContext, 10000)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(r3.map(s => s.source -> s.rows) === Seq("weather" -> 2L, "flood" -> 1L))
+    val third = dataFiles -- before
+    assert(third.nonEmpty && before.nonEmpty)
+    assert(spark.read.parquet(landing).filter($"batch_id" === "B003").count() === 3)
+    assert(spark.read.parquet(landing).count() === 9)
+    // the counting read is the sweep's one collect; it opens the third
+    // batch's files only
+    val counting = runs.toArray(Array.empty[(String,
+      org.apache.spark.sql.execution.QueryExecution)]).filter(_._1 == "collect")
+    assert(counting.length === 1, counting.map(_._1).mkString(","))
+    val scans = collect(counting.head._2.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scans.nonEmpty)
+    assert(scans.map(_.metrics("numFiles").value).sum === third.size,
+      s"the counting read opened more than the batch's ${third.size} files")
+    // the staging dir is gone; only flat data files remain
+    assert(new java.io.File(landing).listFiles().forall(f => !f.isDirectory),
+      new java.io.File(landing).list().mkString(","))
   }
 
   test("runOnce: failing endpoint trips its breaker; healthy endpoints still land") {
