@@ -20,7 +20,7 @@ object Bench {
     try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")))
       .split(" ").take(3).toSeq.map(_.toDouble)
-    catch { case _: Throwable => Nil }
+    catch { case scala.util.control.NonFatal(_) => Nil }
 
   /** A run on a loaded box is tagged, not trusted: multiple rounds of
     * medians have been muddied by co-tenant CPU contention (r2 ~3.4x,
@@ -59,7 +59,34 @@ object Bench {
   // they just aren't flagged as suspicious.
   private val UnresolvedMinExcessSec = 0.25
 
+  /** The detail artifact's file name, resolved in `dir` (the working
+    * directory the run writes its artifacts to). A filtered run
+    * (SPARK_GRAFT_BENCH_ONLY) is a local-iteration tool and never
+    * clobbers the committed full-suite artifact (a 1-query partial once
+    * replaced the 209-query detail the grader reads). Likewise a
+    * CONTENDED or off-reference-SF run does not shadow a committed
+    * QUIET artifact's provenance (the driver's contended run used to
+    * clobber the quiet detail in the working tree every round): those
+    * runs divert to a suffixed file unless `force`
+    * (SPARK_GRAFT_BENCH_FORCE=1).
+    */
+  private[graft] def detailName(dir: java.nio.file.Path, filtered: Boolean,
+      contended: Boolean, sfIsRef: Boolean, sfTag: String, force: Boolean): String =
+    if (filtered) "BENCH_DETAIL_partial.json"
+    else {
+      val existingQuiet =
+        try java.nio.file.Files.readString(dir.resolve("BENCH_DETAIL.json"))
+          .contains("\"contended\":false")
+        catch { case _: java.io.IOException => false }
+      if (existingQuiet && !force && (contended || !sfIsRef))
+        "BENCH_DETAIL_" + (if (contended) "contended" else sfTag.replace('/', '_')) + ".json"
+      else "BENCH_DETAIL.json"
+    }
+
   def main(args: Array[String]): Unit = {
+    // artifacts are read from and written to the checkout the run
+    // starts in
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
@@ -86,7 +113,7 @@ object Bench {
     def once(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try { fn(spark, sfDir).count(); () } catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           failures(name) = failures.getOrElse(name, 0) + 1
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
       }
@@ -142,7 +169,7 @@ object Bench {
       // if the query is genuinely broken the timed iterations will
       // record the same error in `errors`, so nothing is hidden.
       try { fn(spark, sfDir).count(); () } catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] untimed warm run of $name failed: " +
             s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
@@ -459,10 +486,10 @@ object Bench {
     // — it sweeps 3-4 SFs and fits per-family time-vs-SF exponents) so
     // one artifact carries both the sf0.1 point and the curve's shape.
     val scalingJson = try {
-      val p = java.nio.file.Paths.get("/root/repo/SCALING_CURVE.json")
+      val p = cwd.resolve("SCALING_CURVE.json")
       if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p)
       else "null"
-    } catch { case _: Throwable => "null" }
+    } catch { case scala.util.control.NonFatal(_) => "null" }
     val adjJson = adjudicated.map { case (n, orig, fin, unres, ts) =>
       val attr = attribution(n, ts, unres, loadHigh = contended)
       s"\"" + n + "\":{\"median_before\":" + orig + ",\"reported\":" + fin +
@@ -549,7 +576,7 @@ object Bench {
     // HEAD-equality, not forensics. Read from .git directly (no exec);
     // the porcelain call is best-effort and degrades to null.
     val gitHeadDirect: String = try {
-      val gitDir = java.nio.file.Paths.get("/root/repo/.git")
+      val gitDir = cwd.resolve(".git")
       val head = java.nio.file.Files.readString(gitDir.resolve("HEAD")).trim
       if (!head.startsWith("ref: ")) head
       else {
@@ -564,7 +591,7 @@ object Bench {
             .getOrElse("unknown")
         }
       }
-    } catch { case _: Throwable => "unknown" }
+    } catch { case scala.util.control.NonFatal(_) => "unknown" }
     // the direct read only understands 'ref:' + packed-refs — a
     // worktree/submodule layout where .git is a 'gitdir:' pointer file
     // would silently stamp the pointer text, weakening the
@@ -574,54 +601,42 @@ object Bench {
     val gitHead: String =
       if (gitHeadDirect.matches("[0-9a-f]{40}")) gitHeadDirect
       else try {
-        val p = new ProcessBuilder("git", "-C", "/root/repo",
+        val p = new ProcessBuilder("git", "-C", cwd.toString,
           "rev-parse", "HEAD").redirectErrorStream(true).start()
         val out = new String(p.getInputStream.readAllBytes,
           java.nio.charset.StandardCharsets.UTF_8).trim
         if (p.waitFor() == 0 && out.matches("[0-9a-f]{40}")) out
         else "unknown"
-      } catch { case _: Throwable => "unknown" }
+      } catch { case scala.util.control.NonFatal(_) => "unknown" }
     val gitDirty: String = try {
-      val p = new ProcessBuilder("git", "-C", "/root/repo", "status",
+      val p = new ProcessBuilder("git", "-C", cwd.toString, "status",
         "--porcelain").redirectErrorStream(true).start()
       val out = new String(p.getInputStream.readAllBytes,
         java.nio.charset.StandardCharsets.UTF_8)
       if (p.waitFor() == 0) (out.trim.nonEmpty).toString else "null"
-    } catch { case _: Throwable => "null" }
+    } catch { case scala.util.control.NonFatal(_) => "null" }
     val controlRefMap = controlRefMedians.toMap
     val controlsJson = controlRatios.map { case (q, ratio) =>
       s"\"" + q + "\":{\"median\":" + f2(controlObs(q)) +
         ",\"reference\":" + controlRefMap(q) + ",\"ratio\":" + f2(ratio) + "}"
     }.mkString("{", ",", "}")
-    // A filtered run (SPARK_GRAFT_BENCH_ONLY) is a local-iteration tool;
-    // it must never clobber the committed full-suite artifact (a 1-query
-    // partial once replaced the 209-query detail the grader reads).
-    // Likewise a CONTENDED or off-reference-SF run must not shadow a
-    // committed QUIET artifact's provenance (r18 verdict #8: the
-    // driver's contended run clobbered the quiet detail in the working
-    // tree every round): those runs divert to a suffixed file unless
-    // SPARK_GRAFT_BENCH_FORCE=1 explicitly overrides.
-    val detailPath = {
-      val base = if (only.isEmpty) "/root/repo/BENCH_DETAIL.json"
-        else "/root/repo/BENCH_DETAIL_partial.json"
-      val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
-      val existingQuiet = try java.nio.file.Files
-          .readString(java.nio.file.Paths.get(base))
-          .contains("\"contended\":false")
-        catch { case _: Throwable => false }
-      if (only.isEmpty && existingQuiet && !force && (contended || !sfIsRef))
-        "/root/repo/BENCH_DETAIL_" +
-          (if (contended) "contended" else sfTag.replace('/', '_')) + ".json"
-      else base
-    }
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(detailPath),
+    val detailFile = detailName(cwd, filtered = only.nonEmpty, contended, sfIsRef, sfTag,
+      force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1"))
+    val detailPath = cwd.resolve(detailFile)
+    // the contract line names the detail file, so a run that could not
+    // write it fails instead of printing one
+    try java.nio.file.Files.writeString(detailPath,
       s"""{"metric":"total","value":$total,"unit":"sec","git_head":"$gitHead","git_dirty":$gitDirty,"value_normalized":${f2(totalNormalized)},"controls_ratio":${f2(controlsRatio)},"controls_valid":$controlsValid,"controls":$controlsJson,"queries":$detail,"queries_min":$minDetail,"iterations":$iterDetail,"iteration_gc_secs":$gcDetail,"errors":$errJson,"adjudicated":$adjJson,"unresolved_outliers":$unresolvedJson,"attribution_notes":$notesJson,"sf":"$sfDir","iters":$iters,"loadavg_before":${loadJson(loadBefore)},"loadavg_after":${loadJson(loadAfter)},"contended":$contended,"spread_contended":$spreadContended,"stream_batches":$batchJson,"stage_build_secs":$stageJson,"cpus":"$cpus","driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}","scaling_curve":$scalingJson,"note":"queries=median of best iters observations after one UNTIMED warm execution per wave (warm-in paid off the clock; warm failures logged to stderr, timed errors in errors); under contention (contended=true) compare queries_min, not medians; value_normalized=value/controls_ratio (host-speed calibration vs quiet control medians pinned by tools/pin_controls.py — pin provenance and freeze rule in the controlRefMedians comment in Bench.scala; synthetics run first-wave since r20)"}""")
-    catch { case _: Throwable => () }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        spark.stop()
+        System.err.println(s"[bench] could not write $detailPath: $e")
+        sys.exit(1)
+    }
     // Stop Spark BEFORE printing: executor/state-store shutdown can log to
     // the console, and the driver parses the LAST line as the contract JSON.
     spark.stop()
-    println(s"""{"metric":"total","value":${f2(total)},"unit":"sec","git_head":"${gitHead.take(12)}","git_dirty":$gitDirty,"value_normalized":${f2(totalNormalized)},"controls_ratio":${f2(controlsRatio)},"controls_valid":$controlsValid,"n_queries":${results.size},"queries":$qs,"detail":"${detailPath.stripPrefix("/root/repo/")}","sf":"$sfTag","loadavg":${loadBefore.headOption.getOrElse(-1.0)},"contended":$contended,"rerun":${adjudicated.size},"unresolved":${unresolved.size}}""")
+    println(s"""{"metric":"total","value":${f2(total)},"unit":"sec","git_head":"${gitHead.take(12)}","git_dirty":$gitDirty,"value_normalized":${f2(totalNormalized)},"controls_ratio":${f2(controlsRatio)},"controls_valid":$controlsValid,"n_queries":${results.size},"queries":$qs,"detail":"$detailFile","sf":"$sfTag","loadavg":${loadBefore.headOption.getOrElse(-1.0)},"contended":$contended,"rerun":${adjudicated.size},"unresolved":${unresolved.size}}""")
     System.out.flush()
   }
 }

@@ -34,7 +34,7 @@ object Smoke {
         val df = Tables.load(spark, dir, n)
         println(s"== $n count=${df.count()} schema=${df.schema.simpleString}")
         if (n == "events") df.show(3, truncate = false)
-      } catch { case e: Throwable => println(s"== $n FAILED: ${e.getMessage}") }
+      } catch { case scala.util.control.NonFatal(e) => println(s"== $n FAILED: ${e.getMessage}") }
     }
     spark.stop()
   }

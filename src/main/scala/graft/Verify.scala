@@ -32,7 +32,7 @@ object Verify {
     def dump(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     val (streaming, batch) = selected.partition(_._1.startsWith("q_stream"))

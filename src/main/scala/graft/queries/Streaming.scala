@@ -175,9 +175,10 @@ object Streaming {
             WHERE c_event_id IS NOT NULL OR us < w"""))
 
   /** foreachBatch upsert under the gate: the stream drives
-    * `Streams.statusUpsert` (merge each micro-batch's per-user latest
-    * reading into a parquet status table — the Postgres-trigger
-    * rewrite), then the maintained table itself is compared against
+    * `Streams.statusUpsert` (append each micro-batch's readings to a
+    * merge-on-read parquet status table whose reads keep each user's
+    * latest — the Postgres-trigger rewrite), then the maintained table
+    * itself is compared against
     * the oracle's direct last-per-user query. Last-writer-wins on
     * (ts, event_id).
     */

@@ -126,6 +126,8 @@ final class DashboardServer(
         cache.put(name, (j, clock()))
         j
       } catch {
+        // every failure, fatal ones too, must settle the single-flight
+        // future its waiters join on; it is rethrown, never swallowed
         case e: Throwable =>
           inflight.remove(name, mine); mine.completeExceptionally(e); throw e
       }
@@ -210,7 +212,10 @@ final class DashboardServer(
       // out (success or failure) and run our own post-publish compute
       else {
         try { winner.join(); done = (lastJoined ne null) && (winner ne lastJoined) }
-        catch { case _: Throwable => () }
+        catch {
+          case _: java.util.concurrent.CompletionException |
+               _: java.util.concurrent.CancellationException => ()
+        }
         lastJoined = winner
         Thread.onSpinWait()
       }

@@ -334,105 +334,81 @@ object Streams {
       .select(col("p_event_id"), col("c_event_id"), col("p_user").as("user_id"))
   }
 
-  /** The per-micro-batch incoming projection of [[statusUpsert]]: each
-    * user's latest reading, last-writer-wins on (ts, event_id). Shared
-    * with PlanSpec's static scan census (the test tree's
-    * `StreamStatic`) so the audited plan IS the one the upsert runs.
+  /** The rows a status batch appends ([[statusUpsert]]): each reading
+    * as a candidate latest row of its user. Shared with PlanSpec's
+    * static scan census (the test tree's `StreamStatic`), so the audited
+    * plan IS the one the append writes.
     */
-  def latestPerUser(batch: DataFrame): DataFrame =
-    batch
-      .groupBy("user_id")
-      .agg(max_by(struct(col("ts"), col("value"), col("event_type")),
-        struct(col("ts"), col("event_id"))).as("s"))
-      .select(col("user_id"), col("s.ts").as("last_ts"),
-        col("s.value").as("last_value"), col("s.event_type").as("last_type"))
+  def statusRows(batch: DataFrame): DataFrame =
+    batch.select(col("user_id"), col("ts").as("last_ts"), col("value").as("last_value"),
+      col("event_type").as("last_type"), col("event_id").cast(LongType).as("last_event_id"))
+
+  /** The status table's fold, declared in its manifest: per user, the
+    * row with the greatest (last_ts, last_event_id) — the
+    * `ts DESC, event_id DESC` order of q_stream_upsert's oracle. Rows
+    * written before `last_event_id` existed read it as null, which
+    * orders lowest.
+    */
+  val StatusMerge: graft.sources.Commit.Merge =
+    graft.sources.Commit.Merge(Seq("user_id"), Seq("last_ts", "last_event_id"))
 
   /** foreachBatch upsert (the Postgres AFTER INSERT trigger rewrite,
-    * enhanced_data_schema.sql:566-591): merge each micro-batch's
-    * per-user latest reading ([[latestPerUser]]) into a status table
-    * kept as parquet, PARTITIONED BY user bucket (user_id mod
-    * `buckets`, unless the table records its own modulus).
-    * Last-writer-wins on (ts, event_id) ([[mergeStatus]]).
+    * enhanced_data_schema.sql:566-591): keeps each user's latest
+    * reading in a status table kept as parquet, PARTITIONED BY user
+    * bucket (user_id mod `buckets`, unless the table records its own
+    * modulus), last-writer-wins on (ts, event_id) ([[StatusMerge]]).
     *
-    * One [[graft.sources.Commit.mergeBuckets]] call: under the table's
-    * writer lock it reads the manifest once, skips a replayed `txn`
-    * epoch, probes the buckets the batch touches, folds only those
-    * buckets' existing rows with the batch, and commits the merged
-    * slices in one atomic pointer swap, untouched buckets carried
-    * forward by manifest entry. Write amplification is bounded by the
-    * touched buckets, not the table, and a micro-batch killed
-    * mid-write leaves readers on the previous complete snapshot; the
-    * stream's retry re-runs the merge — safe because last-writer-wins
-    * is idempotent. At production scale the same shape is one
-    * Delta/Iceberg MERGE.
+    * The table is merge-on-read, so an upsert is a blind append: one
+    * [[graft.sources.Commit.appendBuckets]] call that, under the
+    * table's writer lock, reads the manifest once, skips a replayed
+    * `txn` epoch and writes [[statusRows]] as ONE Spark job with no
+    * exchange — each touched bucket gains a delta file holding one row
+    * per user, and no existing row is read. Every read folds a bucket's
+    * base and deltas by [[StatusMerge]]; a bucket that reaches
+    * `Commit.MergeDepth` entries is compacted by the next upsert. A
+    * micro-batch killed mid-write leaves readers on the previous
+    * complete snapshot, and the stream's retry re-appends the same rows
+    * — safe because the fold is idempotent. At production scale the
+    * same shape is a Delta/Iceberg blind append with merge-on-read.
     */
   def statusUpsert(batch: DataFrame, statusPath: String,
       buckets: Int = 16, txn: Option[(String, Long)] = None): Unit =
-    // outermost timer: `upsert.total` minus the publish/layout/probe
+    // outermost timer: `upsert.total` minus the publish and layout
     // phases is statusUpsert's own planning residue, and addBatch
     // minus `upsert.total` is the foreachBatch sink machinery —
     // perfbench's `phase.upsert.*` and `streaming.status.add_batch_ms_*`
     // (zero cost unless SPARK_GRAFT_PHASE_TIMING or the in-process
     // sink is on)
     graft.util.PhaseTimer("upsert", "total") {
-      graft.sources.Commit.mergeBuckets(batch, statusPath, "user_id",
-        buckets, txn, graft.sources.Commit.MergePhases(
-          manifestRead = Some("upsert" -> "layout_read"),
-          probe = Some("upsert" -> "touched_probe"), mergePublish = None))(
-        latestPerUser, mergeStatus)
+      graft.sources.Commit.appendBuckets(statusRows(batch), statusPath, "user_id",
+        buckets, StatusMerge, txn, manifestRead = Some("upsert" -> "layout_read"))
       ()
     }
 
   /** foreachBatch adapter for [[statusUpsert]] with the manifest txn
-    * watermark wired to Spark's epoch id. The merge is already
-    * content-idempotent, so this is an EFFICIENCY contract, not a
-    * correctness one: a replayed epoch after a crash skips instead of
-    * committing a redundant version (pointless bucket rewrite + a
-    * manifest the next vacuum has to reclaim).
+    * watermark wired to Spark's epoch id. The fold is idempotent, so
+    * this is an EFFICIENCY contract, not a correctness one: a replayed
+    * epoch after a crash skips instead of appending a redundant delta
+    * (one more entry every read folds, and a manifest the next vacuum
+    * has to reclaim).
     *
     * appId ⇄ checkpoint coupling: the appId must be 1:1 with the
     * stream's checkpoint location (epoch ids restart at 0 under a
     * fresh checkpoint; a stale watermark would then skip live batches
-    * — harmless here only because this merge is content-idempotent
-    * and a LATER batch re-delivers the state, but still a lost write
-    * until then). Change one, change both; concurrent queries on one
-    * table need distinct appIds. See GoldStage.hourlyMaintainer for
-    * the non-idempotent case where this is silent data loss.
+    * — harmless here only because the fold is idempotent and a LATER
+    * batch re-delivers the state, but still a lost write until then).
+    * Change one, change both; concurrent queries on one table need
+    * distinct appIds. See GoldStage.hourlyMaintainer for the
+    * non-idempotent case where this is silent data loss.
     */
   def statusMaintainer(statusPath: String, buckets: Int = 16,
       appId: String = "status_upsert"): (DataFrame, Long) => Unit =
     (batch, epoch) =>
       statusUpsert(batch, statusPath, buckets, txn = Some((appId, epoch)))
 
-  /** The status merge, one code path for a first publish and a fold:
-    * the touched buckets' existing rows (if any) unioned with the
-    * batch's per-user latest, exchanged ONCE keyed on the bucket and
-    * folded last-writer-wins per (bucket, user_id) — bucket is a
-    * function of user_id, so the groups are the per-user ones, and the
-    * aggregation reuses the exchange because hash(bucket) clusters
-    * them. Each output partition then holds whole buckets, and the
-    * write-through writer gives each bucket run of a task one file, so
-    * a touched bucket gets one file per publish (a stream of
-    * micro-batches otherwise fragments each bucket into
-    * parallelism-many files per trigger — the small-file problem
-    * optimizeBuckets exists to undo).
-    * Exchange width = touched buckets (`width`), so a one-bucket batch
-    * schedules one task. Same shape as GoldStage.mergeBucketAligned;
-    * PlanSpec pins the single bucket-keyed exchange.
-    */
-  private[graft] def mergeStatus(existing: Option[DataFrame],
-      incoming: DataFrame, width: Int): DataFrame =
-    existing.fold(incoming)(_.unionByName(incoming))
-      .repartition(width, col("bucket"))
-      .groupBy("bucket", "user_id")
-      .agg(max_by(struct(col("last_ts"), col("last_value"), col("last_type")),
-        col("last_ts")).as("s"))
-      .select(col("user_id"), col("s.last_ts").as("last_ts"),
-        col("s.last_value").as("last_value"),
-        col("s.last_type").as("last_type"), col("bucket"))
-
   /** Reader for the maintained status table — resolves through the
-    * manifest pointer (None before the first upsert commits).
+    * manifest pointer and folds each bucket's entries
+    * ([[StatusMerge]]); None before the first upsert commits.
     */
   def readStatus(spark: org.apache.spark.sql.SparkSession,
       statusPath: String): Option[DataFrame] =

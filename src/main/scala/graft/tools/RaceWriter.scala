@@ -42,7 +42,7 @@ object RaceWriter {
       catch {
         case e: graft.sources.Commit.ConcurrentCommitException =>
           s"refused ${e.getMessage}"
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           s"error ${e.getClass.getName}: ${e.getMessage}"
       }
     Files.writeString(Path.of(outFile), result)

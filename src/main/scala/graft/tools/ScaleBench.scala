@@ -68,7 +68,7 @@ object ScaleBench {
   private def loadavg1(): Double =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case scala.util.control.NonFatal(_) => -1.0 }
 
   /** LS slope of log(t) on log(sf). */
   private def slope(pts: Seq[(Double, Double)]): Double = {

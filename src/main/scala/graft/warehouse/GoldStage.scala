@@ -249,8 +249,7 @@ object GoldStage {
     * current partials at the touched keys, [[mergeBucketAligned]] —
     * the snapshot build's measures ([[partialAggs]]), so the two paths
     * cannot drift — sums them, and the refresh rewrites ONLY the
-    * user-buckets the batch touched (the same bounded-write-
-    * amplification pattern as `Streams.statusUpsert`; at production
+    * user-buckets the batch touched (copy-on-write; at production
     * scale the identical shape is one Delta/Iceberg MERGE). A batch
     * touching one user costs one bucket of IO however large the
     * accumulated fact grows.

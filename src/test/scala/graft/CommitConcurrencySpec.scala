@@ -336,13 +336,14 @@ class CommitConcurrencySpec extends SparkSpec {
     }.toDF("user_id", "ts", "value", "event_type", "event_id")
     def statusOf(root: String) = Streams.readStatus(spark, root).get
       .select("user_id", "last_value").as[(Long, Double)].collect().toMap
-    // B rewrites user 17 to 99.0 and is held inside its locked write
+    // B sets user 17 to 99.0 and is held inside its locked write (a
+    // status upsert is an append to a merge-on-read table)
     def statusB(root: String, tag: String)(hold: Column => Column): Unit =
       Streams.statusUpsert(
         fileBatch(s"$dir/$tag-b", status((17L, 200L, 99.0)))
           .withColumn("value", hold(col("value"))), root)
 
-    // A = a second status upsert on the same bucket
+    // A = a second status append on the same bucket
     def upsertRace(): Unit = {
       val up = s"$dir/upsert"
       Streams.statusUpsert(status((1L, 100L, 1.0), (17L, 100L, 17.0)), up)

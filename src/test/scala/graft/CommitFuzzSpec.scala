@@ -331,6 +331,86 @@ class CommitFuzzSpec extends SparkSpec {
         "being fuzzed")
   }
 
+  test("seeded merge-on-read sequences: appends, compactions, optimizeBuckets " +
+      "and vacuum read as a last-writer-wins oracle at every version") {
+    import spark.implicits._
+    // a row of the table: key k, order (t, e), payload v. The oracle
+    // keeps, per key, the appended row with the greatest (t, e).
+    type Row4 = (Long, Long, Long, Double)
+    val merge = Commit.Merge(Seq("k"), Seq("t", "e"))
+    def lww(rows: Iterable[Row4]): Map[Long, Row4] =
+      rows.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(r => (r._2, r._3)) }
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Row4] = {
+      val got = df.select("k", "t", "e", "v").as[(Long, Long, Long, Double)].collect()
+      assert(got.map(_._1).distinct.length === got.length, "a key read back twice")
+      got.map(r => r._1 -> r).toMap
+    }
+    var compactions = 0
+    var rebuckets = 0
+    var multiFile = 0
+    val splitConf = "spark.sql.files.maxPartitionBytes"
+    val split = spark.conf.get(splitConf)
+    for (seed <- 1 to 3) {
+      val rng = new scala.util.Random(seed * 7919)
+      val root = graft.util.TempRoot.freshDir(s"merge-fuzz-$seed").toString + "/t"
+      // event ids are unique but arrive in random order, so a later
+      // batch often carries the lower id of an equal-t tie
+      val ids = rng.shuffle((1L to 2000L).toVector).iterator
+      var model = Map.empty[Long, Row4]
+      var atVersion = Map.empty[Long, Map[Long, Row4]]
+      for (step <- 0 until 30) {
+        val before = Commit.current(spark, root).map(_._1)
+        rng.nextInt(20) match {
+          case n if n < 13 || before.isEmpty =>
+            val batch = Seq.fill(if (n == 0 && before.nonEmpty) 0 else 1 + rng.nextInt(10))(
+              (rng.nextInt(30).toLong, rng.nextInt(12).toLong, ids.next(), rng.nextInt(1000) / 10.0))
+            val deep = Commit.current(spark, root).toSeq.flatMap(_._2)
+              .groupBy(_.key).values.exists(_.size >= Commit.MergeDepth)
+            // seed 2 appends under tiny splits: the append keeps its
+            // batch's 1-3 partitions, so a delta entry holds several
+            // files whose keys overlap
+            if (seed == 2) spark.conf.set(splitConf, "256")
+            val appended =
+              try Commit.appendBuckets(batch.toDF("k", "t", "e", "v")
+                  .repartition(1 + rng.nextInt(3)), root, "k", 4, merge, None, None)
+              finally spark.conf.set(splitConf, split)
+            for (v <- appended; b <- Option(new java.io.File(s"$root/v=$v").listFiles()).toSeq.flatten
+                if b.list().count(_.endsWith(".parquet")) > 1) multiFile += 1
+            if (deep) compactions += 1
+            model = lww(model.values ++ batch)
+          case n if n < 16 => Commit.optimizeBuckets(spark, root)
+          case n if n < 17 && Commit.layout(spark, root).exists(_.buckets < 32) =>
+            val total = Commit.liveDataBytes(spark, root).get
+            val mod = Commit.layout(spark, root).get.buckets
+            if (Commit.optimizeBuckets(spark, root,
+                maxBucketBytes = Some(total / (2 * mod) + 1)).nonEmpty &&
+                Commit.layout(spark, root).get.buckets > mod) rebuckets += 1
+          case _ => Commit.vacuum(spark, root, retain = 1 + rng.nextInt(3))
+        }
+        val head = Commit.current(spark, root).get._1
+        atVersion += head -> model
+        assert(rowsOf(Commit.read(spark, root).get) === model, s"seed=$seed step=$step: read")
+        // every retained version time-travels to its oracle, and its
+        // keyed change feed moves the oracle at that version to now
+        for (v <- Commit.history(spark, root).take(4)) {
+          assert(rowsOf(Commit.readAt(spark, root, v).get) === atVersion(v),
+            s"seed=$seed step=$step: readAt $v")
+          val feed = Commit.changesSinceKeyed(spark, root, v, Seq("k")).get
+            .select("k", "t", "e", "v", "_change").as[(Long, Long, Long, Double, String)].collect()
+          val applied = atVersion(v) -- feed.filter(_._5 == "delete").map(_._1) ++
+            feed.filter(_._5 == "upsert").map(r => r._1 -> ((r._1, r._2, r._3, r._4)))
+          assert(applied === model, s"seed=$seed step=$step: changesSinceKeyed from $v")
+          assert(feed.forall(r => r._5 == "upsert" && !atVersion(v).get(r._1)
+              .contains((r._1, r._2, r._3, r._4))),
+            s"seed=$seed step=$step: the feed from $v re-delivered an unchanged row")
+        }
+      }
+    }
+    assert(compactions > 0, "no append ever compacted a bucket")
+    assert(rebuckets > 0, "no sequence ever re-bucketed the merge table")
+    assert(multiFile > 0, "no append ever wrote a bucket as several files")
+  }
+
   test("CDF conforms evolved column TYPES by casting the old side (int -> long)") {
     import spark.implicits._
     val root = graft.util.TempRoot.freshDir("commit-fuzz-type").toString + "/t"

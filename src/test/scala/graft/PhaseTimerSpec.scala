@@ -15,7 +15,7 @@ class PhaseTimerSpec extends SparkSpec {
   import spark.implicits._
 
   private val Labels = Set(
-    "upsert.total", "upsert.layout_read", "upsert.touched_probe",
+    "upsert.total", "upsert.layout_read",
     "refresh-timing.touched-probe", "refresh-timing.merge+publish",
     "publish.write", "publish.harvest", "publish.manifest")
 

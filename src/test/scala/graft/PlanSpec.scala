@@ -14,40 +14,94 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  test("status merge: ONE bucket-keyed exchange between the union and the final aggregate") {
+  /** A status table at `dir/status` and `events` landed as parquet
+    * files under `dir` (a batch the stream would hand the upsert).
+    */
+  private def statusFixture(tag: String) = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
+    val dir = graft.util.TempRoot.freshDir(tag).toString
+    var n = 0
+    def events(rows: (Long, Long, Double, Long)*) = {
+      n += 1
+      rows.map { case (u, sec, v, e) => (u, new java.sql.Timestamp(sec * 1000L), v, "flow", e) }
+        .toDF("user_id", "ts", "value", "event_type", "event_id")
+        .coalesce(1).write.parquet(s"$dir/batch-$n")
+      spark.read.parquet(s"$dir/batch-$n")
+    }
+    (s"$dir/status", events _)
+  }
+
+  test("status append: one write with no exchange and no scan of the table") {
+    import spark.implicits._
     import graft.streaming.Streams
-    val path = graft.util.TempRoot.freshDir("plan-status").toString + "/status"
-    def events(rows: (Long, Long, Double, Long)*) = rows
-      .map { case (u, sec, v, e) => (u, new java.sql.Timestamp(sec * 1000L), v, "flow", e) }
-      .toDF("user_id", "ts", "value", "event_type", "event_id")
-    def bucketed(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("bucket", pmod(col("user_id"), lit(16)).cast("int"))
-    Streams.statusUpsert(events((1L, 100L, 1.0, 1L), (2L, 100L, 2.0, 2L),
-      (17L, 100L, 3.0, 3L)), path, buckets = 16)
-    // the upsert's own inputs for a batch touching buckets 1 and 2
-    val existing = sources.Commit.readWhere(spark, path, "bucket in (1,2)").get
-    val incoming = bucketed(Streams.latestPerUser(
-      events((1L, 200L, 5.0, 4L), (18L, 200L, 6.0, 5L))))
-    val merged = Streams.mergeStatus(
-      Some(bucketed(existing.drop("bucket"))), incoming, 2)
-    // AQE wraps the tree; the unexecuted plan renders it once, root first
-    val lines = merged.queryExecution.executedPlan.toString.linesIterator.toSeq
+    val (path, events) = statusFixture("plan-status-append")
+    Streams.statusUpsert(events(Seq((1L, 100L, 1.0, 1L), (2L, 100L, 2.0, 2L),
+      (17L, 100L, 3.0, 3L))), path, buckets = 16)
+    val batch = events(Seq((1L, 200L, 5.0, 4L), (18L, 200L, 6.0, 5L)))
+    val (_, runs) = sqlRunsOf(Streams.statusUpsert(batch, path, buckets = 16))
+    assert(runs.size === 1, s"${runs.size} executions")
+    val p = runs.head.plan.mkString("\n")
+    assert(!p.contains("Exchange"), s"the append plans an exchange:\n$p")
+    assert(runs.head.scans.forall(_._1.contains("InMemoryFileIndex(1 paths)")) &&
+      !p.contains("ManifestFileIndex"), s"the append scans the table:\n$p")
+    assert(runs.head.scans.map(_._2).sum === 1L, p)
+    assert(Streams.readStatus(spark, path).get.select("user_id", "last_value")
+      .as[(Long, Double)].collect().toSet ===
+      Set(1L -> 5.0, 2L -> 2.0, 17L -> 3.0, 18L -> 6.0))
+  }
+
+  test("status compaction: ONE bucket-keyed exchange between the union and the fold") {
+    import spark.implicits._
+    import graft.streaming.Streams
+    val (path, events) = statusFixture("plan-status")
+    // bucket 1 reaches MergeDepth entries and bucket 2 holds one; the
+    // next batch compacts bucket 1 and appends to bucket 2
+    (1 to sources.Commit.MergeDepth).foreach { i =>
+      Streams.statusUpsert(events(Seq((1L, 100L + i, i.toDouble, i.toLong)) ++
+        Option.when(i == 1)((2L, 100L, 0.5, 0L))), path, buckets = 16)
+    }
+    val batch = events(Seq((17L, 300L, 7.0, 50L), (2L, 300L, 8.0, 51L)))
+    val (_, runs) = sqlRunsOf(Streams.statusUpsert(batch, path, buckets = 16))
+    assert(runs.size === 1, s"${runs.size} executions")
+    val lines = runs.head.plan
     val p = lines.mkString("\n")
     val bucketEx = lines.indices
-      .filter(i => lines(i).contains("Exchange hashpartitioning(bucket"))
+      .filter(i => lines(i).trim.startsWith("Exchange hashpartitioning(bucket"))
     assert(bucketEx.size === 1, s"expected ONE bucket-keyed exchange:\n$p")
-    assert(lines(bucketEx.head).contains(", 2)"),
-      s"exchange width must be the touched-bucket count:\n$p")
     val above = lines.take(bucketEx.head)
-    assert(!above.exists(_.contains("Exchange")),
-      s"an exchange above the bucket exchange (the old user_id fold):\n$p")
-    assert(above.exists(_.contains("Aggregate")), s"no final aggregate above:\n$p")
+    assert(!above.exists(_.contains("Exchange")), s"an exchange above the bucket exchange:\n$p")
+    assert(above.exists(_.contains("Aggregate")), s"no fold above:\n$p")
     assert(lines.drop(bucketEx.head).exists(_.contains("Union")),
       s"the union must sit below the exchange:\n$p")
-    assert(merged.select("user_id", "last_value").as[(Long, Double)].collect().toSet ===
-      Set(1L -> 5.0, 2L -> 2.0, 17L -> 3.0, 18L -> 6.0))
+    val (_, entries) = sources.Commit.current(spark, path).get
+    assert(entries.count(_.key == 1) === 1, s"bucket 1 not compacted: $entries")
+    assert(entries.count(_.key == 2) === 2, s"bucket 2 lost its delta: $entries")
+    assert(Streams.readStatus(spark, path).get.select("user_id", "last_value")
+      .as[(Long, Double)].collect().toSet ===
+      Set(1L -> sources.Commit.MergeDepth.toDouble, 2L -> 8.0, 17L -> 7.0))
+  }
+
+  test("status read: a table within one split folds in one task; a larger " +
+      "one exchanges on its keys") {
+    import spark.implicits._
+    import graft.streaming.Streams
+    val (path, events) = statusFixture("plan-status-read")
+    Streams.statusUpsert(events(Seq((1L, 100L, 1.0, 1L), (17L, 100L, 2.0, 2L))), path)
+    Streams.statusUpsert(events(Seq((1L, 200L, 3.0, 3L), (2L, 100L, 4.0, 4L))), path)
+    def poll() = {
+      val df = Streams.readStatus(spark, path).get.filter($"user_id" === 1L)
+      (df.select("last_value").as[Double].collect().toSeq, df.queryExecution.executedPlan.toString)
+    }
+    val (small, smallPlan) = poll()
+    assert(small === Seq(3.0))
+    assert(!smallPlan.contains("Exchange") && smallPlan.contains("Coalesce 1"), smallPlan)
+    val splitConf = "spark.sql.files.maxPartitionBytes"
+    val split = spark.conf.get(splitConf)
+    spark.conf.set(splitConf, "1024")
+    val (large, largePlan) = try poll() finally spark.conf.set(splitConf, split)
+    assert(large === Seq(3.0))
+    assert(largePlan.contains("Exchange hashpartitioning(bucket") &&
+      !largePlan.contains("Coalesce"), largePlan)
   }
 
   test("touched-bucket probe: one stage, no exchange; a null key fails") {

@@ -23,7 +23,8 @@ class PruningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** A 16-bucket status table over two versions: v1 holds users 0–63
     * (4 per bucket, so every bucket's user_id range overlaps the small
-    * ids) and the marker user 900000000 (bucket 0); v2 rewrites bucket 5.
+    * ids) and the marker user 900000000 (bucket 0); v2 appends a delta
+    * to bucket 5.
     */
   private lazy val status: String = {
     val root = graft.util.TempRoot.freshDir("pruning-status").toString + "/status"
@@ -51,8 +52,8 @@ class PruningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .filter(col("user_id") === 900000000L))
     assert(rows.map(_.getAs[Double]("last_value")) === Set(7.0))
     assert(files === 1, s"the poll read $files files")
-    // the snapshot has 16 live files, one per bucket
-    assert(filesRead(Commit.read(spark, status).get)._2 === 16)
+    // the snapshot has 17 live files: one per bucket, plus bucket 5's delta
+    assert(filesRead(Commit.read(spark, status).get)._2 === 17)
   }
 
   test("an in-range user id reads only its layout bucket") {
@@ -61,11 +62,12 @@ class PruningSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .filter(col("user_id") === 5L))
     assert(rows === oracle(status, _.getAs[Long]("user_id") == 5L))
     assert(rows.map(_.getAs[Double]("last_value")) === Set(55.0))
-    assert(files === 1, s"the lookup read $files files")
+    // bucket 5's base and delta
+    assert(files === 2, s"the lookup read $files files")
     val (inRows, inFiles) = filesRead(Commit.read(spark, status).get
       .filter(col("user_id").isin(5L, 22L)))
     assert(inRows === oracle(status, r => Set(5L, 22L)(r.getAs[Long]("user_id"))))
-    assert(inFiles === 2)
+    assert(inFiles === 3)
   }
 
   test("partition-only filters return exactly their buckets' rows") {

@@ -276,11 +276,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("statusUpsert over a seeded batch sequence equals a last-writer-wins oracle") {
-    // a first publish, then merges. Readings arrive out of order across
-    // batches (a later batch may carry an OLDER reading, which must
-    // lose), and within a batch users have equal-ts readings, broken by
-    // event_id. Seconds never tie ACROSS batches (batch b owns seconds
-    // ≡ b mod 5): the fold orders existing vs incoming rows by ts alone.
+    // a first publish, then appends, past the batch that compacts each
+    // bucket (every batch touches all 8). Readings arrive out of order
+    // across batches (a later batch may carry an OLDER reading, which
+    // must lose), and within a batch users have equal-ts readings,
+    // broken by event_id. Seconds also tie ACROSS batches (batch b's
+    // seconds are ≡ b mod 5): the fold orders every row, old or new, by
+    // (ts, event_id).
     import spark.implicits._
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
@@ -288,7 +290,7 @@ class StreamingSpec extends SparkSpec {
     val rnd = new scala.util.Random(3301)
     val types = Seq("flow", "ph", "pressure")
     var eid = 0L
-    val batches = (0 until 5).map { b =>
+    val batches = (0 until sources.Commit.MergeDepth + 4).map { b =>
       (0 until 40).flatMap { _ =>
         eid += 1
         val r = (rnd.nextInt(24).toLong, ts(5L * rnd.nextInt(400) + b),
@@ -318,6 +320,57 @@ class StreamingSpec extends SparkSpec {
         assert(files === 1, s"batch $i: $b holds $files files")
       }
     }
+  }
+
+  test("statusUpsert: an equal-ts tie across batches goes to the higher " +
+      "event_id, whichever batch carries it") {
+    import spark.implicits._
+    def reading(eid: Long) = (1L, ts(100), eid * 10.0, s"t$eid", eid)
+    for ((first, second) <- Seq(1L -> 2L, 2L -> 1L)) {
+      val path = graft.util.TempRoot.freshDir("status_tie").toString + "/status"
+      val batches = Seq(first, second).map(e => Seq(reading(e)))
+      batches.foreach(b => Streams.statusUpsert(
+        b.toDF("user_id", "ts", "value", "event_type", "event_id"), path))
+      val want = batches.flatten.groupBy(_._1).values
+        .map(_.maxBy(r => (r._2.getTime, r._5)))
+        .map(r => (r._1, r._2, r._3, r._4)).toSet
+      val got = Streams.readStatus(spark, path).get
+        .select("user_id", "last_ts", "last_value", "last_type")
+        .as[(Long, Timestamp, Double, String)].collect().toSet
+      assert(got === want, s"batches carrying event_id $first then $second")
+    }
+  }
+
+  test("statusUpsert over a status table written before last_event_id: " +
+      "its rows order lowest on a ts tie") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    val path = graft.util.TempRoot.freshDir("status_legacy").toString + "/status"
+    // the copy-on-write table's shape: no last_event_id, no #merge line
+    sources.Commit.publishBuckets(Seq((1L, ts(100), 1.0, "flow"), (2L, ts(100), 2.0, "ph"))
+      .toDF("user_id", "last_ts", "last_value", "last_type")
+      .withColumn("bucket", pmod(col("user_id"), lit(16)).cast("int")), path,
+      layout = Some(sources.Commit.Layout(16, "user_id")))
+    // user 1 ties on ts (the new row wins), user 2 is older (it loses)
+    Streams.statusUpsert(Seq((1L, ts(100), 9.0, "flow", 0L), (2L, ts(50), 8.0, "ph", 5L))
+      .toDF("user_id", "ts", "value", "event_type", "event_id"), path)
+    assert(Streams.readStatus(spark, path).get
+      .select("user_id", "last_value", "last_event_id")
+      .as[(Long, Double, Option[Long])].collect().toSet ===
+      Set((1L, 9.0, Some(0L)), (2L, 2.0, None)))
+  }
+
+  test("statusUpsert: an empty batch commits no version and leaves no claim") {
+    import spark.implicits._
+    val path = graft.util.TempRoot.freshDir("status_empty").toString + "/status"
+    val b = Seq((1L, ts(100), 1.0, "flow", 1L))
+      .toDF("user_id", "ts", "value", "event_type", "event_id")
+    Streams.statusUpsert(b, path)
+    Streams.statusUpsert(b.limit(0), path)
+    assert(sources.Commit.history(spark, path) === Seq(1L))
+    val names = new java.io.File(path).list().toSeq
+    assert(!names.exists(_.startsWith(sources.Commit.ClaimPrefix)) &&
+      !names.contains("v=2"), names.mkString(", "))
   }
 
   test("statusMaintainer skips replayed epochs: no redundant version bump") {
@@ -381,9 +434,11 @@ class StreamingSpec extends SparkSpec {
     assert(bucketFiles(2, 1).nonEmpty, "touched bucket not in new version")
     assert(bucketFiles(2, 2).isEmpty,
       "untouched bucket copied into new version — write amplification")
+    // bucket 1 holds the v=1 base and the v=2 delta; bucket 2 only v=1
     val (_, entries) = sources.Commit.current(spark, path).get
-    assert(entries.find(_.key == 2).get.dir.startsWith("v=1/"))
-    assert(entries.find(_.key == 1).get.dir.startsWith("v=2/"))
+    def versions(b: Int) = entries.filter(_.key == b).map(_.dir.takeWhile(_ != '/'))
+    assert(versions(1) === Seq("v=1", "v=2"))
+    assert(versions(2) === Seq("v=1"))
     // and the merge is still last-writer-wins
     val out = Streams.readStatus(spark, path).get
       .select("user_id", "last_value").as[(Long, Double)].collect().toSet
@@ -544,7 +599,7 @@ class StreamingSpec extends SparkSpec {
 
   test("statusUpsert: re-delivering the same micro-batch is content-idempotent") {
     // foreachBatch's at-least-once contract: after a sink failure the
-    // SAME epoch replays. The max_by(last_ts) merge makes the re-apply
+    // SAME epoch replays. The (ts, event_id) fold makes the re-apply
     // a no-op on content — the retry commits a NEW version whose rows
     // equal the previous snapshot exactly
     import spark.implicits._

@@ -20,8 +20,8 @@ import scala.jdk.CollectionConverters._
   *     Spark parquet file (it carries Spark's row-metadata footer key).
   *  2. The manifest is the commit: a file in a committed bucket dir
   *     that the manifest does not name is never read, and a status
-  *     upsert pays no file-commit protocol (no extra job, no
-  *     `_temporary`, no `_SUCCESS`).
+  *     upsert pays no file-commit protocol (its write is its only job,
+  *     with no `_temporary` and no `_SUCCESS`).
   */
 class WriteThroughSpec extends SparkSpec {
   import spark.implicits._
@@ -185,31 +185,28 @@ class WriteThroughSpec extends SparkSpec {
       .collect().toSet === Set((2L, 20.0, "upsert")))
   }
 
-  test("a status upsert runs the probe, the fold's exchange stages and ONE " +
-      "write job, and leaves no _temporary or _SUCCESS") {
-    val root = graft.util.TempRoot.freshDir("write-through-jobs").toString + "/status"
+  test("a status upsert that compacts nothing runs ONE job, opens no file " +
+      "of the table, and leaves no _temporary or _SUCCESS") {
+    val dir = graft.util.TempRoot.freshDir("write-through-jobs").toString
+    val root = s"$dir/status"
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     def batch(rows: (Long, Long, Double)*) = rows
       .map { case (u, t, v) => (u, ts(t), v, "flow", t) }
       .toDF("user_id", "ts", "value", "event_type", "event_id")
     Streams.statusUpsert(batch((1L, 10L, 1.0), (2L, 11L, 2.0), (7L, 12L, 3.0)), root, buckets = 4)
-    val b2 = batch((1L, 20L, 9.0), (6L, 21L, 6.0))
-    // the same fold the upsert commits, computed into nothing: its jobs
-    // are the map stages of its exchanges (adaptive execution runs each
-    // as a job) and one result job. The upsert may add nothing to the
-    // probe's job and those: its write IS that one result job.
-    val (_, probeJobs) = jobsOf(Commit.touchedBuckets(b2, Commit.Layout(4, "user_id")))
-    val existing = Commit.read(spark, root).get.filter(col("bucket").isin(1, 2)).drop("bucket")
-      .withColumn("bucket", pmod(col("user_id"), lit(4)).cast("int"))
-    val incoming = Streams.latestPerUser(b2)
-      .withColumn("bucket", pmod(col("user_id"), lit(4)).cast("int"))
-    val (_, foldJobs) = jobsOf(Streams.mergeStatus(Some(existing), incoming, 2)
-      .write.format("noop").mode("overwrite").save())
-    val (_, upsertJobs) = jobsOf(Streams.statusUpsert(b2, root, buckets = 4))
-    assert(probeJobs === 1, s"probe ran $probeJobs jobs")
-    info(s"jobs: probe $probeJobs, fold into noop $foldJobs, upsert $upsertJobs")
-    assert(upsertJobs === probeJobs + foldJobs,
-      s"upsert ran $upsertJobs jobs; probe $probeJobs + fold into noop $foldJobs")
+    // the second batch is a landed file, so its write scans a file
+    batch((1L, 20L, 9.0), (6L, 21L, 6.0)).coalesce(1).write.parquet(s"$dir/b2")
+    val b2 = spark.read.parquet(s"$dir/b2")
+    val ((_, upsertJobs), runs) =
+      sqlRunsOf(jobsOf(Streams.statusUpsert(b2, root, buckets = 4)))
+    assert(upsertJobs === 1, s"upsert ran $upsertJobs jobs")
+    assert(runs.size === 1, s"${runs.size} SQL executions")
+    val scans = runs.head.scans
+    // one scan, of the batch's one-path index; a table read would be a
+    // ManifestFileIndex
+    assert(scans.size === 1 && scans.head._1.contains("InMemoryFileIndex(1 paths)"),
+      s"the write scanned more than its batch: ${scans.map(_._1).mkString("\n")}")
+    assert(scans.map(_._2).sum === 1L, s"the write opened ${scans.map(_._2).sum} files")
     val v2 = Paths.get(root, "v=2")
     val names = Files.walk(v2).iterator().asScala.map(_.getFileName.toString).toSeq
     assert(!names.exists(n => n == "_temporary" || n == "_SUCCESS"),

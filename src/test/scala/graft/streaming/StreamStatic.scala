@@ -79,7 +79,7 @@ object StreamStatic {
       "q_stream_session_window" -> sessionWindowTwin,
       "q_stream_attrib" -> Streams.attributionJoin(ev),
       "q_stream_attrib_outer" -> Streams.attributionJoinOuter(ev),
-      "q_stream_upsert" -> Streams.latestPerUser(ev),
+      "q_stream_upsert" -> Streams.statusRows(ev),
       "q_stream_dedup" -> dedupTwin,
       "q_stream_topk" -> Streams.topkAgg(ev),
       "q_stream_anomaly" -> Streams.anomalyStream(ev).toDF(),

@@ -14,9 +14,15 @@ anything under perfbench/) and needs no network.
 Each run lasts BENCHMARK.json's `run_seconds`. Every run is printed as one
 JSON line on stderr; `2>>runs.jsonl` keeps the record.
 
+`--pairs` must be even, so each side runs first in exactly half the
+pairs: a slot bias (a host that runs whichever side comes second slower)
+then weighs on both sides alike.
+
 At the end it prints, per metric, each side's median and quartiles
-(over the runs that finished and printed `correct: true`), the number
-of pairs the change won out of all pairs run, and whether the change
+(over the runs that finished and printed `correct: true`), each side's
+median over the runs where it went first and over those where it went
+second (a slot bias shows as a gap between the two on both sides), the
+number of pairs the change won out of all pairs run, and whether the change
 clears the gain rule: it wins at least 9 in 10 of all pairs run and its
 median beats the base's by more than the base's inter-quartile
 distance. Ties count for neither side; a run that crashed or was not
@@ -87,6 +93,9 @@ def main():
     ap.add_argument("--trace", choices=("0", "1"), default="0")
     ap.add_argument("--workdir", help="where the base export lives (default: a temp dir)")
     a = ap.parse_args()
+    if a.pairs < 2 or a.pairs % 2:
+        sys.exit("ab: --pairs must be a positive even number, so each side runs first "
+                 "in exactly half the pairs")
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
     better = {m["name"]: m["better"]
@@ -114,7 +123,8 @@ def main():
         print(f"{s:6} {len(done)}/{a.pairs} runs ok, {len(done) - len(good[s])} incorrect, "
               f"failed ops {failed[s]}/{attempted}")
     more_failed = failed["change"] > failed["base"] or share["change"] > share["base"]
-    print(f"{'metric':40} {'base q1/med/q3':>30} {'change q1/med/q3':>30}  wins  gain")
+    print(f"{'metric':40} {'base q1/med/q3':>30} {'change q1/med/q3':>30} "
+          f"{'base 1st/2nd':>19} {'change 1st/2nd':>19}  wins  gain")
     for name, direction in better.items():
         b = [r["metrics"][name] for r in good["base"] if name in r["metrics"]]
         c = [r["metrics"][name] for r in good["change"] if name in r["metrics"]]
@@ -135,7 +145,8 @@ def main():
         gain = (wins >= 0.9 * a.pairs and sign * (bq[1] - cq[1]) > bq[2] - bq[0]
                 and not more_failed)
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
-        print(f"{name:40} {fmt(bq):>30} {fmt(cq):>30}  {wins:>2}/{a.pairs:<2} "
+        print(f"{name:40} {fmt(bq):>30} {fmt(cq):>30} {slots(good['base'], name):>19} "
+              f"{slots(good['change'], name):>19}  {wins:>2}/{a.pairs:<2} "
               f"{'yes' if gain else 'no'}")
 
     print(f"{'end-to-end metric':40} {'base med':>12} {'change med':>12} {'bound':>7}  label")
@@ -147,6 +158,16 @@ def main():
             continue
         print(f"{name:40} {quartiles(b)[1]:>12.4g} {quartiles(c)[1]:>12.4g} {bound:>7}  "
               f"{regression_label(b, c, bound, m['better'])}")
+
+
+def slots(rs, name):
+    """'<median when first>/<median when second>' of metric `name` over
+    one side's good runs `rs` ('-' for a slot with no run)."""
+    def med(first):
+        xs = [r["metrics"][name] for r in rs
+              if name in r["metrics"] and (r["first"] == r["side"]) == first]
+        return f"{statistics.median(xs):.4g}" if xs else "-"
+    return f"{med(True)}/{med(False)}"
 
 
 def regression_label(b, c, bound, better):
