@@ -587,13 +587,13 @@ object Warehouse {
     * [[graft.warehouse.GoldStage.refreshHourly]] into a throwaway
     * table, then read back; the oracle re-aggregates raw `events`
     * from scratch in DuckDB. Green means the incremental fold —
-    * partial-aggregate each batch, merge-sum associative DECIMAL
-    * partials, bounded bucket rewrite — is bit-identical to a
-    * one-shot aggregation over everything ingested, which is the
-    * whole correctness claim of incremental MV maintenance
+    * partial-aggregate each batch, append it as one delta per touched
+    * bucket, sum the associative DECIMAL partials on read — is
+    * bit-identical to a one-shot aggregation over everything ingested,
+    * which is the whole correctness claim of incremental MV maintenance
     * (GoldIncrementalSpec additionally proves the bounded-write
-    * property from file stamps). Scale shape: each fold touches only
-    * the batch's buckets; nothing rescans history.
+    * property from file stamps). Scale shape: each fold writes only
+    * the batch's buckets and reads no history.
     */
   val goldIncremental = QueryDef(
     "q_gold_incremental",

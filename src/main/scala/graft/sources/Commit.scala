@@ -45,23 +45,26 @@ import java.nio.charset.StandardCharsets
   * the table's content builds it from the manifest it commits over.
   * [[withHead]] reads the head ONCE, inside the per-root writer lock,
   * and hands it to the writer: the txn replay check, the layout, the
-  * rows folded or compacted ([[mergeBuckets]], [[optimizeBuckets]])
-  * and the carry-forward all derive from that one manifest. In-driver
-  * writers therefore behave as SOME serial order — one that committed
-  * while another waited on the lock is folded in, never overwritten.
-  * Blind writers ([[publishBuckets]], [[publishDir]], [[appendBuckets]])
-  * write data that does not depend on the head and only carry forward
-  * from it.
+  * rows compacted ([[optimizeBuckets]], and an [[appendBuckets]] that
+  * compacts its deep buckets) and the carry-forward all derive from
+  * that one manifest. In-driver writers therefore behave as SOME
+  * serial order — one that committed while another waited on the lock
+  * is compacted in, never overwritten. Blind writers
+  * ([[publishBuckets]], [[publishDir]], a non-compacting
+  * [[appendBuckets]]) write data that does not depend on the head and
+  * only carry forward from it.
   *
-  * Merge-on-read: a table whose manifest declares a fold
-  * (`#merge=<keys>\t<order>`, a [[Merge]]: per key, the row with the
-  * greatest order tuple) may list SEVERAL entries per bucket — a base
+  * Merge-on-read: a table whose manifest declares a fold (`#merge=`, a
+  * [[Merge]] of one of two kinds: [[Merge.Latest]], per key the row
+  * with the greatest order tuple, or [[Merge.Sum]], per key the sum of
+  * every other column) may list SEVERAL entries per bucket — a base
   * plus deltas, oldest first. [[appendBuckets]] adds a delta per
   * touched bucket without reading the table, and compacts a bucket's
-  * entries back into one once it holds [[MergeDepth]]. Every read of
-  * such a table folds: [[read]], [[readAt]], [[changesSince]] and
-  * [[changesSinceKeyed]] (which deliver and diff a changed bucket
-  * whole, base and deltas), [[mergeBuckets]]' existing rows and
+  * entries back into one once it holds [[MergeDepth]]. Both maintained
+  * tables write this way: the status table under Latest, the gold
+  * table under Sum. Every read of such a table folds: [[read]],
+  * [[readAt]], [[changesSince]] and [[changesSinceKeyed]] (which
+  * deliver and diff a changed bucket whole, base and deltas), and
   * [[optimizeBuckets]], which folds on its bucket exchange and leaves
   * one entry per bucket. No caller reads a merge table unfolded.
   *
@@ -70,7 +73,7 @@ import java.nio.charset.StandardCharsets
   *   <root>/_POINTER            one line: current manifest file name
   *   <root>/manifest-<v>.txt    line 1 = version; light meta "#parent=<v>",
   *                              "#schema=<StructType JSON>", "#rows=<n>",
-  *                              "#layout=…", "#merge=…", "#txn=…"; heavy
+  *                              "#layout=…", "#merge=<kind>…", "#txn=…"; heavy
   *                              meta "#stats=…", "#fstats=…", "#files=…";
   *                              then "<bucket>\t<dir>" entries (several
   *                              per bucket on a merge-on-read table)
@@ -126,36 +129,103 @@ object Commit {
       pmod(expr(keyExprSql), lit(buckets)).cast("int")
   }
 
-  /** A merge-on-read table's fold, recorded per version (`#merge=`):
-    * for each `keys` value, keep the row with the greatest `order`
-    * tuple — last writer wins. The tuple compares field by field and a
-    * null field orders lowest, so rows written before an order column
-    * existed (read as null for it) lose every tie they share with a
-    * newer row. The one fold definition for the writer (each appended
-    * file keeps one row per key, [[writeTask]]), every read
-    * ([[snapshot]]) and compaction.
+  /** A merge-on-read table's fold, recorded per version (`#merge=`,
+    * which names its kind): how the rows a bucket's entries hold for
+    * one `keys` value reduce to one row. The one fold definition for
+    * an append's per-file fold ([[appendInput]]), every read
+    * ([[snapshot]]) and every compaction.
     */
-  final case class Merge(keys: Seq[String], order: Seq[String]) {
-    require(keys.nonEmpty && order.nonEmpty, "a merge needs key and order columns")
-    require((keys ++ order).forall(c =>
-        c.nonEmpty && !c.exists(ch => ch == ',' || ch == '\t' || ch == '\n')),
-      s"merge columns must be manifest-line-safe names: ${keys ++ order}")
+  sealed trait Merge {
+    def keys: Seq[String]
 
     /** `rows` folded to one row per (`group`, `keys`), columns in
       * `rows`' order. `group` is the bucket column where there is one:
       * a key's rows all carry one bucket, so it only keeps the groups
       * bucket-aligned, and an input already partitioned on the bucket
-      * is aggregated without another exchange.
+      * (or held in one partition) is aggregated without another
+      * exchange.
       */
-    def fold(rows: DataFrame, group: Seq[String]): DataFrame = {
-      val by = group ++ keys
-      val rest = rows.columns.toSeq.filterNot(by.contains)
-      def c(n: String) = col(s"`$n`")
-      rows.groupBy(by.map(c): _*)
-        .agg(max_by(struct(rest.map(c): _*), struct(order.map(c): _*)).as("_merge_w"))
-        .select(rows.columns.toSeq.map(n =>
-          if (by.contains(n)) c(n) else col(s"_merge_w.`$n`").as(n)): _*)
+    def fold(rows: DataFrame, group: Seq[String]): DataFrame
+
+    /** The `#merge=` line's value: the kind, then its column lists. */
+    private[sources] def encode: String
+  }
+
+  object Merge {
+    private def c(n: String) = col(s"`$n`")
+
+    private def lineSafe(cols: Seq[String]): Unit =
+      require(cols.forall(n =>
+          n.nonEmpty && !n.exists(ch => ch == ',' || ch == '\t' || ch == '\n')),
+        s"merge columns must be manifest-line-safe names: $cols")
+
+    /** For each `keys` value, the row with the greatest `order` tuple —
+      * last writer wins. The tuple compares field by field and a null
+      * field orders lowest, so rows written before an order column
+      * existed (read as null for it) lose every tie they share with a
+      * newer row.
+      */
+    final case class Latest(keys: Seq[String], order: Seq[String]) extends Merge {
+      require(keys.nonEmpty && order.nonEmpty, "a Latest merge needs key and order columns")
+      lineSafe(keys ++ order)
+
+      def fold(rows: DataFrame, group: Seq[String]): DataFrame = {
+        val by = group ++ keys
+        val rest = rows.columns.toSeq.filterNot(by.contains)
+        rows.groupBy(by.map(c): _*)
+          .agg(max_by(struct(rest.map(c): _*), struct(order.map(c): _*)).as("_merge_w"))
+          .select(rows.columns.toSeq.map(n =>
+            if (by.contains(n)) c(n) else col(s"_merge_w.`$n`").as(n)): _*)
+      }
+
+      private[sources] def encode = s"latest\t${keys.mkString(",")}\t${order.mkString(",")}"
     }
+
+    /** For each `keys` value, the sum of every other column, cast back
+      * to the column's stored type: counts and DECIMAL partials, whose
+      * sums are exact and associative, so any grouping of the appended
+      * rows into entries reads the same.
+      *
+      * Overflow is loud with ANSI on or off: a sum its stored type
+      * cannot hold fails the job that folds it (`raise_error`, where
+      * the non-ANSI cast would null it) — an append's per-file fold,
+      * before the pointer swap, a read, or a compaction. Because an
+      * append folds only its own batch, a key whose deltas overflow
+      * only in combination is committed, and then fails every read and
+      * compaction of its bucket, not the write.
+      */
+    final case class Sum(keys: Seq[String]) extends Merge {
+      require(keys.nonEmpty, "a Sum merge needs key columns")
+      lineSafe(keys)
+
+      def fold(rows: DataFrame, group: Seq[String]): DataFrame = {
+        val by = group ++ keys
+        val sums = rows.columns.toSeq.filterNot(by.contains).map { n =>
+          val t = rows.schema(n).dataType
+          val s = sum(c(n))
+          when(count(c(n)) > 0 && s.try_cast(t).isNull,
+            raise_error(concat(lit(s"merge Sum overflow: the sum of `$n` exceeds ${t.sql} at "),
+              to_json(struct(keys.map(c): _*)))).cast(t))
+            .otherwise(s.cast(t)).as(n)
+        }
+        rows.groupBy(by.map(c): _*).agg(sums.head, sums.tail: _*)
+          .select(rows.columns.toSeq.map(c): _*)
+      }
+
+      private[sources] def encode = s"sum\t${keys.mkString(",")}"
+    }
+
+    /** A `#merge=` value ([[Merge.encode]]) → its fold. It decides which
+      * rows a read returns, so a malformed value or an unknown kind
+      * fails the read loudly.
+      */
+    private[sources] def decode(v: Long, value: String): Merge =
+      value.split("\t", -1) match {
+        case Array("latest", k, o) => Latest(k.split(",").toSeq, o.split(",").toSeq)
+        case Array("sum", k) => Sum(k.split(",").toSeq)
+        case _ => throw new IllegalStateException(
+          s"manifest $v: malformed merge line or unknown merge kind: #merge=$value")
+      }
   }
 
   /** Entries a merge-on-read bucket may hold before the next append
@@ -174,31 +244,6 @@ object Commit {
     * run twice as often to save about 8 ms a poll.
     */
   private[graft] val MergeDepth = 8
-
-  /** The bucket ids `layout` assigns to `df`'s rows, ascending: what a
-    * maintainer's micro-batch touches. One stage, no exchange: each
-    * partition folds its ids into a bit set and the driver takes the
-    * union, so the result is bounded by partitions × buckets. A null key
-    * has no bucket and fails the probe.
-    */
-  def touchedBuckets(df: DataFrame, layout: Layout): Seq[Int] =
-    touchedProbe(df, layout).collect().iterator.flatten.toSeq.distinct.sorted
-
-  /** The probe [[touchedBuckets]] runs: one bucket set per partition. */
-  private[graft] def touchedProbe(df: DataFrame,
-      layout: Layout): org.apache.spark.sql.Dataset[Array[Int]] = {
-    import df.sparkSession.implicits._
-    val keyExprSql = layout.keyExprSql
-    df.select(layout.bucketExpr).mapPartitions { rows =>
-      val seen = scala.collection.mutable.BitSet.empty
-      rows.foreach { r =>
-        if (r.isNullAt(0))
-          throw new IllegalStateException(s"null bucket for key $keyExprSql")
-        seen += r.getInt(0)
-      }
-      Iterator.single(seen.toArray)
-    }
-  }
 
   private val Pointer = "_POINTER"
 
@@ -296,15 +341,11 @@ object Commit {
         throw new IllegalStateException(s"manifest $v: malformed file list line: $l")
       parts.head -> parts.tail.grouped(2).map(p => p(0) -> p(1).toLong).toSeq
     }.toMap
-    // `#merge=<keys>\t<order>`: the fold every read applies. Like
-    // `#files=` it decides which rows a read returns, so a malformed
-    // line fails the read loudly.
+    // `#merge=<kind>\t<keys>[\t<order>]`: the fold every read applies.
+    // Like `#files=` it decides which rows a read returns, so a malformed
+    // line or an unknown kind fails the read loudly ([[Merge.decode]]).
     val merge = lines.tail.collectFirst {
-      case l if l.startsWith("#merge=") =>
-        l.stripPrefix("#merge=").split("\t", -1) match {
-          case Array(k, o) => Merge(k.split(",").toSeq, o.split(",").toSeq)
-          case _ => throw new IllegalStateException(s"manifest $v: malformed merge line: $l")
-        }
+      case l if l.startsWith("#merge=") => Merge.decode(v, l.stripPrefix("#merge="))
     }
     val entries = lines.tail.filterNot(_.startsWith("#")).map { l =>
       val Array(k, dir) = l.split("\t", 2)
@@ -335,7 +376,7 @@ object Commit {
   /** The current snapshot's recorded bucketing discipline, if any.
     * None for whole-dir tables, pre-layout manifests, and tables that
     * never declared one (those writers keep owning their modulus, the
-    * pre-r17 contract). Maintainers do not call this: [[mergeBuckets]]
+    * pre-r17 contract). Maintainers do not call this: [[appendBuckets]]
     * takes the layout from the manifest it reads inside the writer
     * lock. It is for readers outside a publish — specs, tools, and a
     * change-feed consumer detecting a re-bucket across its cursor.
@@ -1209,14 +1250,12 @@ object Commit {
     * write. A blind write: `write` does not depend on the head.
     */
   private def publish(spark: SparkSession, root: String,
-      expectBuckets: Option[Set[Int]] = None,
       declaredLayout: Option[Layout] = None,
       fullRewrite: Boolean = false,
       appTxn: Option[(String, Long)] = None)
       (write: String => Written): Long =
     withHead(spark, root, appTxn, None) { prev =>
-      publishLocked(spark, root, expectBuckets, declaredLayout, fullRewrite, appTxn,
-        prev)(write)
+      publishLocked(spark, root, declaredLayout, fullRewrite, appTxn, prev)(write)
     }.get
 
   /** What a publish's writer put into its fresh version dir. */
@@ -1250,7 +1289,6 @@ object Commit {
     * that writes nothing commits nothing (None).
     */
   private def publishLocked(spark: SparkSession, root: String,
-      expectBuckets: Option[Set[Int]],
       declaredLayout: Option[Layout],
       fullRewrite: Boolean,
       appTxn: Option[(String, Long)],
@@ -1341,22 +1379,6 @@ object Commit {
         "committing would replace the existing snapshot with an empty " +
         "whole-dir version; skip empty batches, or use publishDir for " +
         "an intentional whole-table replace")
-    // a caller that pre-read existing state for a PROBED bucket set
-    // ([[mergeBuckets]]) hands that set in: if the input's
-    // re-evaluation at write time produced a bucket the probe never
-    // saw, its existing state was NOT folded in — committing would
-    // silently replace that bucket with batch-only rows. Abort BEFORE
-    // the pointer swap instead: readers stay on the old snapshot and
-    // the fresh dir is unreferenced garbage for [[vacuum]].
-    expectBuckets.foreach { exp =>
-      val surprise = newBuckets.filterNot(exp)
-      require(surprise.isEmpty,
-        s"publish wrote buckets ${surprise.mkString(",")} outside the " +
-          s"caller's probed set ${exp.toSeq.sorted.mkString(",")} — the " +
-          "input re-evaluated differently between probe and write " +
-          "(non-deterministic batch? source mutated mid-refresh?); " +
-          "aborting before the pointer swap, no state was lost")
-    }
     // an append's compacted buckets fold their existing entries, so
     // each must be in the write: a missing one would drop its rows
     replace.foreach { r =>
@@ -1545,7 +1567,7 @@ object Commit {
     val meta = Seq(s"#parent=$parent") ++
       schema.map(st => s"#schema=${st.json}") ++ rows.map(n => s"#rows=$n") ++
       layout.map(l => s"#layout=${l.buckets}\t${l.keyExprSql}") ++
-      merge.map(m => s"#merge=${m.keys.mkString(",")}\t${m.order.mkString(",")}") ++
+      merge.map(m => s"#merge=${m.encode}") ++
       txns.toSeq.sortBy(_._1).map { case (app, ver) => s"#txn=$app\t$ver" } ++
       stats.toSeq.sortBy(_._1).map { case (dir, es) =>
         s"#stats=$dir\t${Skipping.encode(es)}"
@@ -1680,9 +1702,8 @@ object Commit {
     * in `df` are written; the rest carry forward from the current
     * manifest. This is the incremental-upsert publication: bounded
     * write amplification AND a transactional boundary. A BLIND write:
-    * `df` does not read the table. A write that folds the table's
-    * existing rows goes through [[mergeBuckets]], which reads them from
-    * the manifest it commits over.
+    * `df` does not read the table. A maintained table whose rows fold
+    * goes through [[appendBuckets]] instead.
     *
     * Contract edges: a rewritten bucket carries ALL its surviving keys
     * (bucket-wholesale, like a Delta partition overwrite), and a
@@ -1693,7 +1714,7 @@ object Commit {
     * (it would otherwise commit a whole-dir empty snapshot replacing
     * the table); retiring a bucket's last row takes a full rewrite or
     * [[publishDir]], and incremental maintainers no-op on empty
-    * batches ([[mergeBuckets]] does).
+    * batches ([[appendBuckets]] does).
     *
     * `layout` declares the bucketing discipline this write used
     * ([[Layout]]) — recorded in the manifest so maintainers and
@@ -1713,12 +1734,11 @@ object Commit {
     */
   def publishBuckets(df: DataFrame, root: String,
       bucketCol: String = "bucket",
-      expectBuckets: Option[Set[Int]] = None,
       layout: Option[Layout] = None,
       fullRewrite: Boolean = false,
       txn: Option[(String, Long)] = None): Long = {
     requireTxnApp(txn)
-    publish(df.sparkSession, root, expectBuckets,
+    publish(df.sparkSession, root,
       declaredLayout = layout, fullRewrite = fullRewrite,
       appTxn = txn)(writeBuckets(onDisk(df, bucketCol)))
   }
@@ -1757,28 +1777,17 @@ object Commit {
     * map ([[Skipping.readFold]]); publish builds the manifest from the
     * reports instead of listing and re-opening the files. The job runs
     * under its own SQL execution id, as a Spark write does.
-    *
-    * `lastPerKey` (an append to a merge-on-read table): each task sorts
-    * its rows by (bucket, keys, order) instead and writes only the last
-    * row of each (bucket, keys) run — the greatest under the fold — so
-    * each file holds one row per key without an exchange.
     */
-  private def writeBuckets(df: DataFrame,
-      lastPerKey: Option[Merge] = None): String => Written = vdir => {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+  private def writeBuckets(df: DataFrame): String => Written = vdir => {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types.StructType
     val spark = df.sparkSession
-    val in = df.withColumn("bucket", col("bucket").cast("int"))
-      .sortWithinPartitions(("bucket" +: lastPerKey.toSeq.flatMap(m => m.keys ++ m.order))
-        .map(n => col(s"`$n`")): _*)
+    val in = df.withColumn("bucket", col("bucket").cast("int")).sortWithinPartitions("bucket")
     val fields = in.schema.fields.toSeq
     val bucketAt = in.schema.fieldIndex("bucket")
     val data = fields.indices.filter(_ != bucketAt)
     val dataSchema = StructType(data.map(fields))
-    def refs(at: Seq[Int]): Seq[Expression] = at.map(i =>
-      BoundReference(i, fields(i).dataType, fields(i).nullable))
-    val dataRefs = refs(data)
-    val keyRefs = refs(lastPerKey.toSeq.flatMap(_.keys).map(in.schema.fieldIndex))
+    val dataRefs = data.map(i => BoundReference(i, fields(i).dataType, fields(i).nullable))
     val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
     val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(spark, job, Map.empty, dataSchema)
@@ -1792,15 +1801,15 @@ object Commit {
       try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
           Some(s"write-through publish $vdir")) {
         qe.toRdd.mapPartitions(rows =>
-          Iterator.single(writeTask(rows, dir, bucketAt, dataSchema, dataRefs, keyRefs,
+          Iterator.single(writeTask(rows, dir, bucketAt, dataSchema, dataRefs,
             factory, conf.value.value))).collect().toSeq.flatten
       } finally conf.destroy()
     BucketFiles(files, dataSchema)
   }
 
   /** One write-through task: writes its sorted rows, one file per bucket
-    * run, and reports each file once it is closed. With `keyRefs`, a row
-    * is written only when the next row starts another (bucket, key) run.
+    * run, and reports each file once it is closed. A row with a null
+    * bucket (a null key) fails the task, so the write never commits.
     * A failed attempt closes its open file and leaves it unreported; the
     * retry writes fresh names, so the manifest never names a partial
     * file. `conf` is only read: every task of the write may share one
@@ -1809,7 +1818,6 @@ object Commit {
   private def writeTask(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       dir: String, bucketAt: Int, dataSchema: org.apache.spark.sql.types.StructType,
       dataRefs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      keyRefs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
       conf: org.apache.hadoop.conf.Configuration): Seq[WrittenFile] = {
     import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
@@ -1829,37 +1837,20 @@ object Commit {
       out += WrittenFile(bucket, Skipping.readFold(
         path.getFileSystem(conf).getFileStatus(path), path.getName, conf))
     }
-    def write(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-      val b = r.getInt(bucketAt)
-      if (writer == null || b != bucket) {
-        finish()
-        bucket = b
-        path = new Path(s"$dir/bucket=$b/part-${java.util.UUID.randomUUID()}$ext")
-        writer = factory.newInstance(path.toString, dataSchema, ctx)
-      }
-      writer.write(project(r))
-    }
-    val keyOf = Option.when(keyRefs.nonEmpty)(
-      org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(keyRefs))
-    // the (bucket, key) run's last row so far, held until the run ends
-    var held: org.apache.spark.sql.catalyst.InternalRow = null
-    var heldKey: org.apache.spark.sql.catalyst.expressions.UnsafeRow = null
     var done = false
     try {
       rows.foreach { r =>
         if (r.isNullAt(bucketAt))
           throw new IllegalStateException(s"a row of the write to $dir has a null bucket")
-        keyOf match {
-          case None => write(r)
-          case Some(kp) =>
-            val k = kp(r)
-            if (held != null && (held.getInt(bucketAt) != r.getInt(bucketAt) || k != heldKey))
-              write(held)
-            held = r.copy()
-            heldKey = k.copy()
+        val b = r.getInt(bucketAt)
+        if (writer == null || b != bucket) {
+          finish()
+          bucket = b
+          path = new Path(s"$dir/bucket=$b/part-${java.util.UUID.randomUUID()}$ext")
+          writer = factory.newInstance(path.toString, dataSchema, ctx)
         }
+        writer.write(project(r))
       }
-      if (held != null) write(held)
       finish()
       done = true
     } finally if (!done && writer != null)
@@ -1867,76 +1858,19 @@ object Commit {
     out.result()
   }
 
-  /** PhaseTimer `(prefix, label)`s under which a [[mergeBuckets]]
-    * caller records its phases: the in-lock manifest read (which
-    * yields the layout), the touched-bucket probe, and the
-    * read-fold-publish of the touched buckets. None leaves a phase
-    * untimed.
-    */
-  final case class MergePhases(manifestRead: Option[(String, String)],
-      probe: Option[(String, String)], mergePublish: Option[(String, String)])
-
-  /** Fold `batch` into the bucketed table at `root`, keyed by
-    * `keyExprSql` — the read-modify-publish of a copy-on-write
-    * maintainer (GoldStage.refreshHourly),
-    * decided in ONE critical section under the writer lock
-    * ([[withHead]]):
-    *  1. read the head manifest once;
-    *  2. a `txn` epoch at or below the app's watermark is a replay:
-    *     return the head version;
-    *  3. the layout: the recorded modulus wins over `buckets`, which
-    *     only sizes a table being created — after [[optimizeBuckets]]
-    *     re-buckets, every later batch assigns keys under the evolved
-    *     modulus (a stale one would file a key in a bucket the fold
-    *     never reads, duplicating it);
-    *  4. probe the buckets `batch` touches ([[touchedBuckets]]); none
-    *     → no-op, None (an empty batch must not publish: it has no
-    *     bucket dirs, and would replace the table);
-    *  5. read THAT manifest's touched entries — only their dirs are
-    *     listed — re-bucketed under the layout, so a key meets its new
-    *     rows in one group whatever bucket an older writer filed it in;
-    *  6. `fold(existing, incoming(batch) bucketed, touched count)`;
-    *  7. publish the fold over that same manifest with the touched set
-    *     as `expectBuckets`.
-    * A writer that committed while this one waited on the lock is
-    * therefore folded in, never overwritten. `batch` is evaluated twice
-    * (probe, fold) without a cache; a batch that re-evaluates into a
-    * bucket the probe never saw aborts before the pointer swap.
-    */
-  def mergeBuckets(batch: DataFrame, root: String, keyExprSql: String,
-      buckets: Int, txn: Option[(String, Long)], phases: MergePhases)
-      (incoming: DataFrame => DataFrame,
-       fold: (Option[DataFrame], DataFrame, Int) => DataFrame): Option[Long] = {
-    val spark = batch.sparkSession
-    requireTxnApp(txn)
-    withHead(spark, root, txn, phases.manifestRead) { prev =>
-      val layout = Layout(prev.flatMap(_.layout).fold(buckets)(_.buckets), keyExprSql)
-      def bucketed(df: DataFrame) = df.withColumn("bucket", layout.bucketExpr)
-      val touched = timed(phases.probe)(touchedBuckets(batch, layout)).toSet
-      if (touched.isEmpty) None
-      else timed(phases.mergePublish) {
-        val existing = for {
-          m <- prev
-          es = m.entries.filter(e => touched(e.key))
-          if es.nonEmpty
-        } yield bucketed(snapshot(spark, root, m, es, "bucket").drop("bucket"))
-        val merged = fold(existing, bucketed(incoming(batch)), touched.size)
-        publishLocked(spark, root, Some(touched), Some(layout),
-          fullRewrite = false, txn, prev)(writeBuckets(merged))
-      }
-    }
-  }
-
   /** Append `rows` to the merge-on-read table at `root`, bucketed by
-    * `keyExprSql` and folded by `merge` on every read — the blind write
-    * of a last-writer-wins maintainer (Streams.statusUpsert). Under the
-    * writer lock ([[withHead]]) it reads the head manifest once, returns
-    * the head version for a replayed `txn` epoch, and takes the layout
-    * (the recorded modulus wins over `buckets`). It runs no probe and
-    * reads no existing row: the batch is written through
-    * ([[writeBuckets]], one row per key per file) as ONE job with no
-    * exchange, in [[appendTasks]] tasks, and each bucket it touches
-    * gains one delta entry next to the entries it holds.
+    * `keyExprSql` and folded by `merge` on every read — the one write
+    * path of both maintainers: the status table (Streams.statusUpsert,
+    * [[Merge.Latest]]) and the gold table (GoldStage.refreshHourly,
+    * [[Merge.Sum]]). Under the writer lock ([[withHead]]) it reads the
+    * head manifest once, returns the head version for a replayed `txn`
+    * epoch — so a non-idempotent Sum folds each epoch once — and takes
+    * the layout (the recorded modulus wins over `buckets`, which only
+    * sizes a table being created). It reads no existing row: the batch
+    * is folded by `merge` and written through ([[writeBuckets]], one
+    * row per key per file) as ONE job, in [[appendTasks]] tasks
+    * ([[appendInput]]), and each bucket it touches gains one delta
+    * entry next to the entries it holds.
     *
     * Compaction rides the append: once a bucket holds [[MergeDepth]]
     * entries, the next append reads back every bucket holding at least
@@ -1956,18 +1890,21 @@ object Commit {
     withHead(rows.sparkSession, root, txn, manifestRead) { prev =>
       val layout = Layout(prev.flatMap(_.layout).fold(buckets)(_.buckets), keyExprSql)
       val (input, compacted) = appendInput(rows, root, prev, layout, merge)
-      publishLocked(rows.sparkSession, root, None, Some(layout), fullRewrite = false, txn,
-        prev, replace = Some(compacted), declaredMerge = Some(merge))(
-        writeBuckets(input, Option.when(compacted.isEmpty)(merge)))
+      publishLocked(rows.sparkSession, root, Some(layout), fullRewrite = false, txn,
+        prev, replace = Some(compacted), declaredMerge = Some(merge))(writeBuckets(input))
     }
   }
 
   /** What [[appendBuckets]] writes over `prev`, and the buckets it
-    * compacts: `rows` bucketed under `layout` in [[appendTasks]]
-    * partitions (no exchange) when no bucket holds [[MergeDepth]]
-    * entries; else the stored rows of every bucket holding at least
-    * half that many, unioned with `rows`, exchanged on the bucket and
-    * folded.
+    * compacts. When no bucket holds [[MergeDepth]] entries: `rows`
+    * bucketed under `layout` and folded by `merge` in [[appendTasks]]
+    * partitions, so each file holds one row per key. One task (every
+    * batch of a few landed files) plans no exchange: the fold runs in
+    * the writing task. A multi-split append plans one exchange, on the
+    * bucket and the keys, at [[appendTasks]] width, so each key's rows
+    * meet in one task and a bucket may get a file per task. Else: the
+    * stored rows of every bucket holding at least half that many,
+    * unioned with `rows`, exchanged on the bucket and folded.
     */
   private def appendInput(rows: DataFrame, root: String, prev: Option[Manifest],
       layout: Layout, merge: Merge): (DataFrame, Set[Int]) = {
@@ -1977,7 +1914,11 @@ object Commit {
     val deep =
       if (!depth.values.exists(_ >= MergeDepth)) Set.empty[Int]
       else depth.collect { case (b, n) if n >= MergeDepth / 2 => b }.toSet
-    prev.filter(_ => deep.nonEmpty).fold((incoming.coalesce(appendTasks(rows)), deep)) { m =>
+    def tasks = appendTasks(rows) match {
+      case 1 => incoming.coalesce(1)
+      case n => incoming.repartition(n, ("bucket" +: merge.keys).map(k => col(s"`$k`")): _*)
+    }
+    prev.filter(_ => deep.nonEmpty).fold((merge.fold(tasks, Seq("bucket")), deep)) { m =>
       val existing = stored(rows.sparkSession, root, m, m.entries.filter(e => deep(e.key)),
         "bucket").withColumn("bucket", layout.bucketExpr)
       (merge.fold(existing.unionByName(incoming, allowMissingColumns = true)
@@ -1987,8 +1928,7 @@ object Commit {
 
   /** Tasks of a non-compacting append: the batch's planned size over
     * `spark.sql.files.maxPartitionBytes`, at least 1 — the split a file
-    * scan of that size gets, reached by coalescing, never by an
-    * exchange.
+    * scan of that size gets.
     */
   private def appendTasks(rows: DataFrame): Int = {
     val size = rows.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -2098,7 +2038,7 @@ object Commit {
             (df.withColumn(bucketCol, nl.bucketExpr), Some(nl))
           case _ => (df, None)
         }
-        publishLocked(spark, root, None, layout,
+        publishLocked(spark, root, layout,
           fullRewrite = layout.nonEmpty, None, prev)(
           writeBuckets(onDisk(folded(m, out.repartition(col(bucketCol)), bucketCol), bucketCol)))
       }

@@ -350,7 +350,7 @@ object Streams {
     * orders lowest.
     */
   val StatusMerge: graft.sources.Commit.Merge =
-    graft.sources.Commit.Merge(Seq("user_id"), Seq("last_ts", "last_event_id"))
+    graft.sources.Commit.Merge.Latest(Seq("user_id"), Seq("last_ts", "last_event_id"))
 
   /** foreachBatch upsert (the Postgres AFTER INSERT trigger rewrite,
     * enhanced_data_schema.sql:566-591): keeps each user's latest
@@ -361,9 +361,10 @@ object Streams {
     * The table is merge-on-read, so an upsert is a blind append: one
     * [[graft.sources.Commit.appendBuckets]] call that, under the
     * table's writer lock, reads the manifest once, skips a replayed
-    * `txn` epoch and writes [[statusRows]] as ONE Spark job with no
-    * exchange — each touched bucket gains a delta file holding one row
-    * per user, and no existing row is read. Every read folds a bucket's
+    * `txn` epoch and writes [[statusRows]], folded by [[StatusMerge]]
+    * in the writing task, as ONE Spark job with no exchange — each
+    * touched bucket gains a delta file holding one row per user, and no
+    * existing row is read. Every read folds a bucket's
     * base and deltas by [[StatusMerge]]; a bucket that reaches
     * `Commit.MergeDepth` entries is compacted by the next upsert. A
     * micro-batch killed mid-write leaves readers on the previous

@@ -87,11 +87,24 @@ object ScaleBench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
+  /** The curve artifact's file name, resolved in `dir` (the working
+    * directory the run starts in, as [[graft.Bench]] resolves its
+    * detail file). A filtered run (a family filter, or a segment
+    * switched off) is a local-iteration tool and never clobbers the
+    * committed full-sweep artifact: it writes the `_partial` file (the
+    * same contract as Bench's SPARK_GRAFT_BENCH_ONLY).
+    */
+  private[graft] def curvePath(dir: java.nio.file.Path, filtered: Boolean): java.nio.file.Path =
+    dir.resolve(if (filtered) "SCALING_CURVE_partial.json" else "SCALING_CURVE.json")
+
   def main(args: Array[String]): Unit = {
+    // scale data and the curve artifact live in the checkout the run
+    // starts in
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "2").toInt.max(1)
     val testRoot = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
     val genRoot = sys.env.getOrElse("SPARK_GRAFT_SCALEDATA",
-      "/root/repo/target/scaledata")
+      cwd.resolve("target/scaledata").toString)
     val withSf1 = sys.env.get("SPARK_GRAFT_SCALE_MAX").exists(_.toDouble >= 1.0)
     // r19 verdict #3: one more decade for the steepest families — an
     // exponent that steepens at the next decade is the one curve that
@@ -558,16 +571,8 @@ object ScaleBench {
         s""""stage_builds":$stageJson,"commit_cdf":$cdfJson,"versions_deep":$verDeepJson,"skewed":$skewJson,""" +
         s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"build_iters":$buildIters,"driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}","cpus":"${ToolSession.cpus}",""" +
         s""""note":"exponents fit on per-SF min times (contention-robust); exponent_top (slope over the two largest SFs) is the cluster-scale statistic; exponent_fit includes overhead-dominated small points and reads low. sf>=0.3 points are ScaleUp-derived from sf0.1 (key-shifted, content-decorrelated replicas)."}"""
-    // a filtered run (family filter, or a segment switched off) is a
-    // local-iteration tool — it must never clobber the committed
-    // full-sweep artifact (the same _partial contract as Bench's
-    // SPARK_GRAFT_BENCH_ONLY)
-    val curvePath =
-      if (onlyFam.isEmpty && cdfOn && skewOn && verDepthOn)
-        "/root/repo/SCALING_CURVE.json"
-      else "/root/repo/SCALING_CURVE_partial.json"
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(curvePath), out)
+      curvePath(cwd, filtered = onlyFam.nonEmpty || !(cdfOn && skewOn && verDepthOn)), out)
 
     spark.stop()
     val summary = families.map { case (fam, qs) =>

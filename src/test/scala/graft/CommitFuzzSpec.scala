@@ -337,7 +337,7 @@ class CommitFuzzSpec extends SparkSpec {
     // a row of the table: key k, order (t, e), payload v. The oracle
     // keeps, per key, the appended row with the greatest (t, e).
     type Row4 = (Long, Long, Long, Double)
-    val merge = Commit.Merge(Seq("k"), Seq("t", "e"))
+    val merge = Commit.Merge.Latest(Seq("k"), Seq("t", "e"))
     def lww(rows: Iterable[Row4]): Map[Long, Row4] =
       rows.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(r => (r._2, r._3)) }
     def rowsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Row4] = {
@@ -366,9 +366,8 @@ class CommitFuzzSpec extends SparkSpec {
               (rng.nextInt(30).toLong, rng.nextInt(12).toLong, ids.next(), rng.nextInt(1000) / 10.0))
             val deep = Commit.current(spark, root).toSeq.flatMap(_._2)
               .groupBy(_.key).values.exists(_.size >= Commit.MergeDepth)
-            // seed 2 appends under tiny splits: the append keeps its
-            // batch's 1-3 partitions, so a delta entry holds several
-            // files whose keys overlap
+            // seed 2 appends under tiny splits: the append folds in
+            // several tasks, so a delta entry holds several files
             if (seed == 2) spark.conf.set(splitConf, "256")
             val appended =
               try Commit.appendBuckets(batch.toDF("k", "t", "e", "v")
@@ -409,6 +408,161 @@ class CommitFuzzSpec extends SparkSpec {
     assert(compactions > 0, "no append ever compacted a bucket")
     assert(rebuckets > 0, "no sequence ever re-bucketed the merge table")
     assert(multiFile > 0, "no append ever wrote a bucket as several files")
+  }
+
+  test("seeded Sum merge-on-read sequences: appends, replayed epochs, compactions, " +
+      "optimizeBuckets and vacuum read as an additive oracle at every version") {
+    import spark.implicits._
+    // a row of the table: key k, count n, DECIMAL(12,2) amount s. The
+    // oracle keeps, per key, the sums of every appended row's n and s.
+    type Sums = Map[Long, (Long, BigDecimal)]
+    val merge = Commit.Merge.Sum(Seq("k"))
+    def add(m: Sums, rows: Iterable[(Long, Long, BigDecimal)]): Sums =
+      rows.foldLeft(m) { case (acc, (k, n, a)) =>
+        val (n0, a0) = acc.getOrElse(k, (0L, BigDecimal(0)))
+        acc.updated(k, (n0 + n, a0 + a))
+      }
+    def sumsOf(df: org.apache.spark.sql.DataFrame): Sums = {
+      val got = df.select(col("k"), col("n"), col("s").cast("string"))
+        .as[(Long, Long, String)].collect()
+      assert(got.map(_._1).distinct.length === got.length, "a key read back twice")
+      got.map(r => r._1 -> (r._2, BigDecimal(r._3))).toMap
+    }
+    var compactions = 0
+    var rebuckets = 0
+    var replays = 0
+    var multiFile = 0
+    val splitConf = "spark.sql.files.maxPartitionBytes"
+    val split = spark.conf.get(splitConf)
+    for (seed <- 1 to 3) {
+      val rng = new scala.util.Random(seed * 6271)
+      val root = graft.util.TempRoot.freshDir(s"sum-fuzz-$seed").toString + "/t"
+      var model: Sums = Map.empty
+      var atVersion = Map.empty[Long, Sums]
+      // the last epoch issued, and the last one a committed version recorded
+      var epoch = 0L
+      var watermark = 0L
+      for (step <- 0 until 36) {
+        val before = Commit.current(spark, root).map(_._1)
+        rng.nextInt(20) match {
+          case n if n < 15 || before.isEmpty =>
+            // a replay re-sends an epoch that already landed: it must
+            // fold once, so the table and the oracle stay put
+            val replay = watermark > 0 && rng.nextInt(5) == 0
+            val txnEpoch =
+              if (replay) 1L + rng.nextInt(watermark.toInt) else { epoch += 1; epoch }
+            val batch = Seq.fill(if (n == 0 && before.nonEmpty) 0 else 1 + rng.nextInt(10))(
+              (rng.nextInt(30).toLong, 1L + rng.nextInt(3),
+                BigDecimal(rng.nextInt(200000) - 100000, 2)))
+            val deep = Commit.current(spark, root).toSeq.flatMap(_._2)
+              .groupBy(_.key).values.exists(_.size >= Commit.MergeDepth)
+            if (seed == 2) spark.conf.set(splitConf, "256")
+            val appended =
+              try Commit.appendBuckets(batch.toDF("k", "n", "s")
+                  .withColumn("s", col("s").cast("decimal(12,2)"))
+                  .repartition(1 + rng.nextInt(3)), root, "k", 4, merge,
+                  Some("fuzz" -> txnEpoch), None)
+              finally spark.conf.set(splitConf, split)
+            if (replay) {
+              replays += 1
+              assert(appended === before, s"seed=$seed step=$step: a replay committed")
+            } else {
+              if (appended.exists(v => !before.contains(v))) watermark = txnEpoch
+              for (v <- appended; b <- Option(new java.io.File(s"$root/v=$v").listFiles())
+                  .toSeq.flatten if b.list().count(_.endsWith(".parquet")) > 1) multiFile += 1
+              if (deep) compactions += 1
+              model = add(model, batch)
+            }
+          case n if n < 17 => Commit.optimizeBuckets(spark, root)
+          case n if n < 18 && Commit.layout(spark, root).exists(_.buckets < 32) =>
+            val total = Commit.liveDataBytes(spark, root).get
+            val mod = Commit.layout(spark, root).get.buckets
+            if (Commit.optimizeBuckets(spark, root,
+                maxBucketBytes = Some(total / (2 * mod) + 1)).nonEmpty &&
+                Commit.layout(spark, root).get.buckets > mod) rebuckets += 1
+          case _ => Commit.vacuum(spark, root, retain = 1 + rng.nextInt(3))
+        }
+        val head = Commit.current(spark, root).get._1
+        atVersion += head -> model
+        assert(sumsOf(Commit.read(spark, root).get) === model, s"seed=$seed step=$step: read")
+        for (v <- Commit.history(spark, root).take(4)) {
+          assert(sumsOf(Commit.readAt(spark, root, v).get) === atVersion(v),
+            s"seed=$seed step=$step: readAt $v")
+          val feed = Commit.changesSinceKeyed(spark, root, v, Seq("k")).get
+          val upserts = sumsOf(feed.filter(col("_change") === "upsert"))
+          assert(feed.filter(col("_change") === "delete").count() === 0,
+            s"seed=$seed step=$step: a Sum key vanished from $v")
+          assert(atVersion(v) ++ upserts === model,
+            s"seed=$seed step=$step: changesSinceKeyed from $v")
+          assert(upserts.forall { case (k, r) => !atVersion(v).get(k).contains(r) },
+            s"seed=$seed step=$step: the feed from $v re-delivered an unchanged row")
+        }
+      }
+    }
+    assert(compactions > 0, s"no append ever compacted a bucket ($rebuckets rebuckets, " +
+      s"$replays replays, $multiFile multi-file buckets)")
+    assert(rebuckets > 0, "no sequence ever re-bucketed the Sum table")
+    assert(replays > 0, "no sequence ever replayed an epoch")
+    assert(multiFile > 0, "no append ever wrote a bucket as several files")
+  }
+
+  test("a Sum overflowing its stored DECIMAL fails loudly with ANSI on or off: " +
+      "alone in one batch at the append, across appends at read and compaction") {
+    import spark.implicits._
+    val merge = Commit.Merge.Sum(Seq("k"))
+    def batch(rows: (Long, String)*) = rows.toDF("k", "s")
+      .withColumn("s", col("s").cast("decimal(6,2)"))
+    def overflowed(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("merge Sum overflow"))
+    val ansiConf = "spark.sql.ansi.enabled"
+    val ansi = spark.conf.get(ansiConf)
+    for (mode <- Seq("true", "false")) {
+      spark.conf.set(ansiConf, mode)
+      try {
+        val root = graft.util.TempRoot.freshDir(s"sum-overflow-$mode").toString + "/t"
+        def append(rows: (Long, String)*) =
+          Commit.appendBuckets(batch(rows: _*), root, "k", 4, merge, None, None)
+        append(1L -> "1.00", 2L -> "2.00")
+        val head = Commit.current(spark, root).get._1
+        // 6000.00 + 6000.00 exceeds DECIMAL(6,2) within one batch: the
+        // append's own fold fails before the pointer swap
+        val alone = intercept[Exception](append(1L -> "6000.00", 1L -> "6000.00"))
+        assert(overflowed(alone), s"ansi=$mode: $alone")
+        assert(Commit.current(spark, root).get._1 === head, s"ansi=$mode: the head moved")
+        // each delta fits alone; only their sum overflows
+        append(1L -> "5000.00")
+        append(1L -> "5000.00")
+        val combined = Commit.current(spark, root).get._1
+        val read = intercept[Exception](Commit.read(spark, root).get.collect())
+        assert(overflowed(read), s"ansi=$mode: $read")
+        val compact = intercept[Exception](Commit.optimizeBuckets(spark, root))
+        assert(overflowed(compact), s"ansi=$mode: $compact")
+        assert(Commit.current(spark, root).get._1 === combined,
+          s"ansi=$mode: the failed compaction moved the head")
+        // a key whose sum fits still reads through its own bucket
+        assert(Commit.read(spark, root).get.filter(col("k") === 2L)
+          .select(col("s").cast("string")).as[String].collect().toSeq === Seq("2.00"))
+      } finally spark.conf.set(ansiConf, ansi)
+    }
+  }
+
+  test("a malformed #merge= line or an unknown merge kind fails the read") {
+    import spark.implicits._
+    val root = graft.util.TempRoot.freshDir("merge-line").toString + "/t"
+    Commit.appendBuckets(Seq((1L, 2L)).toDF("k", "n"), root, "k", 4,
+      Commit.Merge.Sum(Seq("k")), None, None)
+    val mf = java.nio.file.Paths.get(root,
+      Files.readString(java.nio.file.Paths.get(root, "_POINTER")).trim)
+    val text = Files.readString(mf)
+    assert(text.linesIterator.contains("#merge=sum\tk"), text)
+    assert(Commit.read(spark, root).get.select("k", "n").as[(Long, Long)].collect().toSeq ===
+      Seq(1L -> 2L))
+    for (bad <- Seq("#merge=avg\tk", "#merge=sum", "#merge=latest\tk")) {
+      Files.writeString(mf, text.replace("#merge=sum\tk", bad))
+      val e = intercept[IllegalStateException](Commit.read(spark, root))
+      assert(e.getMessage.contains("merge"), s"$bad: ${e.getMessage}")
+    }
   }
 
   test("CDF conforms evolved column TYPES by casting the old side (int -> long)") {

@@ -330,32 +330,6 @@ class CommitSpec extends SparkSpec {
       .get.count() === 1)
   }
 
-  test("publishBuckets with expectBuckets aborts pre-swap on a surprise bucket") {
-    // the guard behind GoldStage.refreshHourly's probe/merge split: an
-    // input that re-evaluates into a bucket the probe never saw (whose
-    // existing state was therefore not folded) must abort BEFORE the
-    // pointer swap — loud error, readers unharmed — never commit
-    // batch-only rows over accumulated state
-    val root = tmp("commit-expect")
-    Commit.publishBuckets(statusDf(1L -> 1.0, 2L -> 2.0), root) // v1: buckets 1,2
-    val e = intercept[IllegalArgumentException] {
-      Commit.publishBuckets(statusDf(1L -> 5.0, 3L -> 3.0), root,
-        expectBuckets = Some(Set(1)))
-    }
-    assert(e.getMessage.contains("outside"), e.getMessage)
-    // readers still on the complete v1 snapshot; the aborted version is
-    // unreferenced garbage for vacuum
-    assert(Commit.current(spark, root).get._1 === 1L)
-    assert(Commit.read(spark, root).get.select("user_id", "v")
-      .as[(Long, Double)].collect().toSet === Set(1L -> 1.0, 2L -> 2.0))
-    Commit.vacuum(spark, root)
-    assert(!Files.exists(Paths.get(root, "v=2")))
-    // a publish matching its expectation commits normally
-    Commit.publishBuckets(statusDf(1L -> 5.0), root, expectBuckets = Some(Set(1)))
-    assert(Commit.read(spark, root).get.select("user_id", "v")
-      .as[(Long, Double)].collect().toSet === Set(1L -> 5.0, 2L -> 2.0))
-  }
-
   test("schema-less CDF fallback null-fills additive evolution instead of failing") {
     // legacy manifests without #schema= lines give the diff no committed
     // column set: the whole-table fallback must conform the OLD side to

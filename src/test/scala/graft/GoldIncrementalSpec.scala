@@ -40,22 +40,31 @@ class GoldIncrementalSpec extends SparkSpec {
       "incrementally-maintained fact differs from the from-scratch build")
   }
 
-  test("the refresh merge plans as ONE exchange, keyed on the bucket") {
-    val ev = events.filter(col("event_id") % 20 === 0) // slim, exchange-free slice
-    val unioned = GoldStage.singletonPartials(GoldStage.withQuality(ev))
-      .withColumn("bucket", pmod(col("user_id"), lit(16)).cast("int"))
-    val merged = GoldStage.mergeBucketAligned(unioned, 16)
-    // AQE wraps the tree, so count exchanges in the rendered plan
-    val plan = merged.queryExecution.executedPlan.toString
-    val exchanges = plan.linesIterator.filter(_.contains("Exchange ")).toSeq
+  test("the refresh's compaction fold plans as ONE exchange, keyed on the bucket") {
+    val path = graft.util.TempRoot
+      .freshDir("graft-gold-compact").toString + "/hourly"
+    val ev = events
+    // MergeDepth appends leave every touched bucket MergeDepth entries
+    // deep, so the next refresh compacts them
+    val k = sources.Commit.MergeDepth + 1
+    val batches = (0 until k).map(r => ev.filter(pmod(col("event_id"), lit(k)) === r))
+    batches.init.foreach(b => GoldStage.refreshHourly(b, path, buckets = 4))
+    val deep = sources.Commit.current(spark, path).get._2.groupBy(_.key)
+      .collect { case (b, es) if es.size >= sources.Commit.MergeDepth => b }.toSet
+    assert(deep.nonEmpty, "no bucket reached MergeDepth entries")
+    val (_, runs) = sqlRunsOf(GoldStage.refreshHourly(batches.last, path, buckets = 4))
+    assert(runs.size === 1, s"${runs.size} executions")
+    val plan = runs.head.plan.mkString("\n")
+    val exchanges = runs.head.plan.filter(_.trim.startsWith("Exchange"))
     assert(exchanges.size === 1,
-      s"expected ONE exchange (bucket-keyed, reused by the agg):\n$plan")
+      s"expected ONE exchange (bucket-keyed, reused by the fold):\n$plan")
     assert(exchanges.head.contains("hashpartitioning(bucket"),
       s"the single exchange must be keyed on the bucket column:\n$plan")
-    // and the fold itself matches mergePartials (same grain + measures)
-    val viaAligned = canon(merged)
-    val viaPlain = canon(GoldStage.mergePartials(unioned.drop("bucket")))
-    assert(viaAligned.sameElements(viaPlain))
+    val after = sources.Commit.current(spark, path).get._2.groupBy(_.key)
+    deep.foreach(b => assert(after(b).size === 1, s"bucket $b not compacted: ${after(b)}"))
+    // and the compacted fold is the from-scratch build's
+    assert(canon(GoldStage.readHourly(spark, path).get.drop("bucket"))
+      .sameElements(canon(full(ev))))
   }
 
   test("a batch keyed to one bucket writes only that bucket into the new version") {

@@ -16,7 +16,7 @@ class PhaseTimerSpec extends SparkSpec {
 
   private val Labels = Set(
     "upsert.total", "upsert.layout_read",
-    "refresh-timing.touched-probe", "refresh-timing.merge+publish",
+    "refresh-timing.merge+publish",
     "publish.write", "publish.harvest", "publish.manifest")
 
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)

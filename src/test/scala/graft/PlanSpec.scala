@@ -104,30 +104,28 @@ class PlanSpec extends SparkSpec {
       !largePlan.contains("Coalesce"), largePlan)
   }
 
-  test("touched-bucket probe: one stage, no exchange; a null key fails") {
+  test("a null user_id fails a status and a gold append loudly, naming the " +
+      "null bucket, and the head does not move") {
     import spark.implicits._
-    import sources.Commit
-    val layout = Commit.Layout(16, "user_id")
-    val batch = Seq(1L, 17L, 2L, 35L, 900000000L, -3L).toDF("user_id").repartition(3)
-    val probe = Commit.touchedProbe(batch, layout)
-    probe.collect()
-    val p = probe.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    // the repartition above is the input's own; the probe adds none
-    assert("Exchange".r.findAllIn(p).size === 1, p)
-    val unshuffled = Commit.touchedProbe(Seq(1L, 2L).toDF("user_id"), layout)
-    assert(!unshuffled.queryExecution.executedPlan.toString.contains("Exchange"),
-      unshuffled.queryExecution.executedPlan.toString)
-    // the same set the old select(bucket).distinct() gave
-    assert(Commit.touchedBuckets(batch, layout) ===
-      batch.select(layout.bucketExpr).distinct().as[Int].collect().toSeq.sorted)
-    assert(Commit.touchedBuckets(batch, layout) === Seq(0, 1, 2, 3, 13))
-    assert(Commit.touchedBuckets(batch.limit(0), layout).isEmpty)
-    val err = intercept[Exception] {
-      Commit.touchedBuckets(Seq(Some(1L), None).toDF("user_id"), layout)
+    import graft.streaming.Streams
+    import graft.warehouse.GoldStage
+    val dir = graft.util.TempRoot.freshDir("plan-null-key").toString
+    def batch(rows: (Option[Long], Long)*) = rows
+      .map { case (u, sec) =>
+        (u, new java.sql.Timestamp(sec * 1000L), 1.0, "flow", sec, """{"k":50}""") }
+      .toDF("user_id", "ts", "value", "event_type", "event_id", "props")
+    def failsOnNull(root: String)(append: org.apache.spark.sql.DataFrame => Unit) = {
+      append(batch(Some(1L) -> 10L, Some(2L) -> 11L))
+      val head = sources.Commit.current(spark, root).map(_._1)
+      val rows = sources.Commit.read(spark, root).get.collect().toSet
+      val err = intercept[Exception](append(batch(Some(3L) -> 12L, None -> 13L)))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("null bucket")), err)
+      assert(sources.Commit.current(spark, root).map(_._1) === head, root)
+      assert(sources.Commit.read(spark, root).get.collect().toSet === rows, root)
     }
-    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("null bucket")), err)
+    failsOnNull(s"$dir/status")(Streams.statusUpsert(_, s"$dir/status", buckets = 4))
+    failsOnNull(s"$dir/gold")(GoldStage.refreshHourly(_, s"$dir/gold", buckets = 4))
   }
 
   test("q_scan_project: filter pushed to scan, columns pruned") {

@@ -187,32 +187,42 @@ class WriteThroughSpec extends SparkSpec {
 
   test("a status upsert that compacts nothing runs ONE job, opens no file " +
       "of the table, and leaves no _temporary or _SUCCESS") {
+    // both maintainers append the same way: a status upsert and a gold
+    // refresh of a landed-file batch
     val dir = graft.util.TempRoot.freshDir("write-through-jobs").toString
-    val root = s"$dir/status"
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     def batch(rows: (Long, Long, Double)*) = rows
-      .map { case (u, t, v) => (u, ts(t), v, "flow", t) }
-      .toDF("user_id", "ts", "value", "event_type", "event_id")
-    Streams.statusUpsert(batch((1L, 10L, 1.0), (2L, 11L, 2.0), (7L, 12L, 3.0)), root, buckets = 4)
+      .map { case (u, t, v) => (u, ts(t), v, "flow", t, s"""{"k":${t * 3}}""") }
+      .toDF("user_id", "ts", "value", "event_type", "event_id", "props")
     // the second batch is a landed file, so its write scans a file
     batch((1L, 20L, 9.0), (6L, 21L, 6.0)).coalesce(1).write.parquet(s"$dir/b2")
-    val b2 = spark.read.parquet(s"$dir/b2")
-    val ((_, upsertJobs), runs) =
-      sqlRunsOf(jobsOf(Streams.statusUpsert(b2, root, buckets = 4)))
-    assert(upsertJobs === 1, s"upsert ran $upsertJobs jobs")
-    assert(runs.size === 1, s"${runs.size} SQL executions")
-    val scans = runs.head.scans
-    // one scan, of the batch's one-path index; a table read would be a
-    // ManifestFileIndex
-    assert(scans.size === 1 && scans.head._1.contains("InMemoryFileIndex(1 paths)"),
-      s"the write scanned more than its batch: ${scans.map(_._1).mkString("\n")}")
-    assert(scans.map(_._2).sum === 1L, s"the write opened ${scans.map(_._2).sum} files")
-    val v2 = Paths.get(root, "v=2")
-    val names = Files.walk(v2).iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(!names.exists(n => n == "_temporary" || n == "_SUCCESS"),
-      s"v=2 holds ${names.mkString(", ")}")
-    assert(Streams.readStatus(spark, root).get.select("user_id", "last_value")
+    def appendsOnce(root: String)(append: DataFrame => Unit): Unit = {
+      append(batch((1L, 10L, 1.0), (2L, 11L, 2.0), (7L, 12L, 3.0)))
+      val b2 = spark.read.parquet(s"$dir/b2")
+      val ((_, appendJobs), runs) = sqlRunsOf(jobsOf(append(b2)))
+      assert(appendJobs === 1, s"$root: the append ran $appendJobs jobs")
+      assert(runs.size === 1, s"$root: ${runs.size} SQL executions")
+      val scans = runs.head.scans
+      // one scan, of the batch's one-path index; a table read would be a
+      // ManifestFileIndex
+      assert(scans.size === 1 && scans.head._1.contains("InMemoryFileIndex(1 paths)"),
+        s"$root: the write scanned more than its batch: ${scans.map(_._1).mkString("\n")}")
+      assert(scans.map(_._2).sum === 1L, s"$root: the write opened ${scans.map(_._2).sum} files")
+      val v2 = Paths.get(root, "v=2")
+      val names = Files.walk(v2).iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(!names.exists(n => n == "_temporary" || n == "_SUCCESS"),
+        s"$root: v=2 holds ${names.mkString(", ")}")
+    }
+    val status = s"$dir/status"
+    appendsOnce(status)(Streams.statusUpsert(_, status, buckets = 4))
+    assert(Streams.readStatus(spark, status).get.select("user_id", "last_value")
       .as[(Long, Double)].collect().toSet ===
       Set(1L -> 9.0, 2L -> 2.0, 6L -> 6.0, 7L -> 3.0))
+    val gold = s"$dir/gold"
+    appendsOnce(gold)(graft.warehouse.GoldStage.refreshHourly(_, gold, buckets = 4))
+    assert(graft.warehouse.GoldStage.readHourly(spark, gold).get
+      .select(col("user_id"), col("n"), col("v_sum").cast("double"))
+      .as[(Long, Long, Double)].collect().toSet ===
+      Set((1L, 2L, 10.0), (2L, 1L, 2.0), (6L, 1L, 6.0), (7L, 1L, 3.0)))
   }
 }
