@@ -104,8 +104,7 @@ class PlanSpec extends SparkSpec {
       !largePlan.contains("Coalesce"), largePlan)
   }
 
-  test("a null user_id fails a status and a gold append loudly, naming the " +
-      "null bucket, and the head does not move") {
+  test("a null user_id fails status and gold appends naming the null bucket; head stays") {
     import spark.implicits._
     import graft.streaming.Streams
     import graft.warehouse.GoldStage
