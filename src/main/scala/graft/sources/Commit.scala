@@ -50,9 +50,8 @@ import java.nio.charset.StandardCharsets
   * that one manifest. In-driver writers therefore behave as SOME
   * serial order — one that committed while another waited on the lock
   * is compacted in, never overwritten. Blind writers
-  * ([[publishBuckets]], [[publishDir]], a non-compacting
-  * [[appendBuckets]]) write data that does not depend on the head and
-  * only carry forward from it.
+  * ([[publishBuckets]], a non-compacting [[appendBuckets]]) write data
+  * that does not depend on the head and only carry forward from it.
   *
   * Merge-on-read: a table whose manifest declares a fold (`#merge=`, a
   * [[Merge]] of one of two kinds: [[Merge.Latest]], per key the row
@@ -77,21 +76,22 @@ import java.nio.charset.StandardCharsets
   *                              meta "#stats=…", "#fstats=…", "#files=…";
   *                              then "<bucket>\t<dir>" entries (several
   *                              per bucket on a merge-on-read table)
-  *   <root>/v=<v>/bucket=<b>/…  parquet data (or v=<v>/… for whole dirs)
+  *   <root>/v=<v>/bucket=<b>/…  parquet data, one dir per bucket entry
   * }}}
   *
   * What the manifest records per publish: the fresh entries, the
   * snapshot schema, the rows written, each entry's zone maps (and
-  * per-file ones where an entry has several files), and — for every
-  * bucketed publish, which writes through ([[writeBuckets]]) — the name
-  * and size of EVERY file of each fresh entry (`#files=`). A bucketed
-  * write has no file-commit protocol of its own: its tasks write final
-  * names into the claimed `v=<n>` dir and report each file with its
-  * footer's zone map, and the manifest naming those files is the
-  * commit (the Delta Lake log's contract). Readers open exactly the
-  * named files without listing, so a file a retried task attempt left
-  * behind is never read. Entries written before `#files=` existed, and
-  * whole dirs from [[publishDir]], are listed when a snapshot opens.
+  * per-file ones where an entry has several files), and the name and
+  * size of EVERY file of each fresh entry (`#files=`). Every entry is a
+  * bucket written through ([[writeBuckets]]), which has no file-commit
+  * protocol of its own: its tasks write final names into the claimed
+  * `v=<n>` dir and report each file with its footer's zone map, and the
+  * manifest naming those files is the commit (the Delta Lake log's
+  * contract). Readers open exactly the named files without listing, so
+  * a file a retried task attempt left behind is never read. A manifest
+  * without its `#schema=` line, or with an entry no `#files=` line
+  * names, is not a table this module wrote: every read of it, and every
+  * publish over it, fails naming the version and the missing line.
   *
   * The `#parent=` line records committed lineage: [[history]] walks it
   * from the pointer, [[readAt]] time-travels to any retained link, and
@@ -101,8 +101,7 @@ import java.nio.charset.StandardCharsets
   */
 object Commit {
 
-  /** One manifest entry: bucket id → data dir relative to the root.
-    * Whole-directory (unbucketed) snapshots use key = -1. A
+  /** One manifest entry: bucket id → data dir relative to the root. A
     * merge-on-read table may list several entries for one bucket.
     */
   final case class Entry(key: Int, dir: String)
@@ -250,19 +249,19 @@ object Commit {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Parsed manifest: version, parent version (0 = none / pre-lineage
-    * manifest), the snapshot's schema + row count, entries. Lines
-    * starting with '#' are metadata: `#parent=<v>` (committed lineage,
-    * what time travel walks), `#schema=<StructType JSON>` (the snapshot
-    * OWNS its schema — reads select/cast through it, so a maintained
-    * table can evolve additively and old versions time-travel with the
-    * columns they had, not whatever parquet footer merging improvises),
-    * and `#rows=<n>` (rows written INTO this version — audit lineage,
-    * not snapshot size). Manifests written before a line existed parse
-    * with it absent and keep their old behavior.
+  /** Parsed manifest: version, parent version (0 = none), the
+    * snapshot's schema + row count, entries. Lines starting with '#'
+    * are metadata: `#parent=<v>` (committed lineage, what time travel
+    * walks), `#schema=<StructType JSON>` (the snapshot OWNS its schema —
+    * reads select/cast through it, so a maintained table can evolve
+    * additively and old versions time-travel with the columns they
+    * had, not whatever parquet footer merging improvises), and
+    * `#rows=<n>` (rows written INTO this version — audit lineage, not
+    * snapshot size). `#schema=` and a `#files=` line per entry are
+    * required ([[parseManifest]]).
     */
   private final case class Manifest(v: Long, parent: Long,
-      schema: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       rows: Option[Long], entries: Seq[Entry],
       stats: Map[String, Skipping.EntryStats] = Map.empty,
       fileStats: Map[String, Seq[(String, Skipping.EntryStats)]] = Map.empty,
@@ -277,11 +276,15 @@ object Commit {
     val parent = lines.tail.collectFirst {
       case l if l.startsWith("#parent=") => l.stripPrefix("#parent=").toLong
     }.getOrElse(0L)
+    // `#schema=` and `#files=` decide which columns and rows a read
+    // returns, so a manifest missing either fails the parse loudly
+    def missing(what: String): Nothing =
+      throw new IllegalStateException(s"manifest $v: $what")
     val schema = lines.tail.collectFirst {
       case l if l.startsWith("#schema=") =>
         org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("#schema="))
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
+    }.getOrElse(missing("no #schema= line"))
     val rows = lines.tail.collectFirst {
       case l if l.startsWith("#rows=") => l.stripPrefix("#rows=").toLong
     }
@@ -332,9 +335,9 @@ object Commit {
       } catch { case scala.util.control.NonFatal(_) => None }
     }.toMap
     // `#files=<entry dir>(\t<file rel path>\t<bytes>)*`: the COMPLETE
-    // file list of a write-through entry, which readers open instead of
-    // listing the dir. Unlike the stats lines it decides which rows a
-    // read returns, so a malformed line fails the read loudly.
+    // file list of an entry, which readers open instead of listing the
+    // dir. Unlike the stats lines it decides which rows a read returns,
+    // so a malformed or missing line fails the read loudly.
     val files = lines.tail.filter(_.startsWith("#files=")).map { l =>
       val parts = l.stripPrefix("#files=").split("\t", -1)
       if (parts.length % 2 != 1)
@@ -351,6 +354,8 @@ object Commit {
       val Array(k, dir) = l.split("\t", 2)
       Entry(k.toInt, dir)
     }
+    entries.find(e => !files.contains(e.dir))
+      .foreach(e => missing(s"entry ${e.dir} has no #files= line"))
     Manifest(v, parent, schema, rows, entries, stats, fileStats, layout, txns, files, merge)
   }
 
@@ -374,13 +379,13 @@ object Commit {
     HeavyMetaPrefixes.exists(line.startsWith) || !line.startsWith("#")
 
   /** The current snapshot's recorded bucketing discipline, if any.
-    * None for whole-dir tables, pre-layout manifests, and tables that
-    * never declared one (those writers keep owning their modulus, the
-    * pre-r17 contract). Maintainers do not call this: [[appendBuckets]]
-    * takes the layout from the manifest it reads inside the writer
-    * lock. It is for readers outside a publish — specs, tools, and a
-    * change-feed consumer detecting a re-bucket across its cursor.
-    * Streamed header read ([[headerValue]]), O(1) bytes.
+    * None for tables that never declared one (those writers keep owning
+    * their modulus, the pre-r17 contract). Maintainers do not call
+    * this: [[appendBuckets]] takes the layout from the manifest it reads
+    * inside the writer lock. It is for readers outside a publish —
+    * specs, tools, and a change-feed consumer detecting a re-bucket
+    * across its cursor. Streamed header read ([[headerValue]]), O(1)
+    * bytes.
     */
   def layout(spark: SparkSession, root: String): Option[Layout] = {
     val f = fs(spark, root)
@@ -542,31 +547,18 @@ object Commit {
     * manifest's entries are as scannable as the day they committed
     * (until [[vacuum]] reclaims them).
     */
-  def readAt(spark: SparkSession, root: String, v: Long,
-      bucketCol: String = "bucket"): Option[DataFrame] =
+  def readAt(spark: SparkSession, root: String, v: Long): Option[DataFrame] =
     if (!chainContains(spark, root, v)) None
-    else manifestAt(spark, root, v).map(m =>
-      snapshot(spark, root, m, m.entries, bucketColOf(m, bucketCol)))
+    else manifestAt(spark, root, v).map(m => snapshot(spark, root, m, m.entries))
 
-  /** Read the current snapshot. Bucketed entries come back with the
-    * bucket id as an int column named `bucketCol`; whole-dir entries
-    * (key -1) come back as-is. One parquet scan per distinct VERSION
-    * dir — versions outstanding are bounded by vacuum cadence, not by
-    * table size — each over a [[ManifestFileIndex]], so a filter on the
-    * result opens only the buckets and files it can match. Returns None
-    * before any commit.
+  /** Read the current snapshot, the bucket id as an int column named
+    * `bucket`. One parquet scan per distinct VERSION dir — versions
+    * outstanding are bounded by vacuum cadence, not by table size — each
+    * over a [[ManifestFileIndex]], so a filter on the result opens only
+    * the buckets and files it can match. Returns None before any commit.
     */
-  def read(spark: SparkSession, root: String,
-      bucketCol: String = "bucket"): Option[DataFrame] =
-    currentManifest(spark, root).map(m =>
-      snapshot(spark, root, m, m.entries, bucketColOf(m, bucketCol)))
-
-  /** The rename concerns the PARTITION column; a whole-dir snapshot has
-    * none, and a data column that happens to be named "bucket" must not
-    * be touched.
-    */
-  private def bucketColOf(m: Manifest, bucketCol: String): String =
-    if (m.entries.exists(_.key >= 0)) bucketCol else "bucket"
+  def read(spark: SparkSession, root: String): Option[DataFrame] =
+    currentManifest(spark, root).map(m => snapshot(spark, root, m, m.entries))
 
   /** Read the current snapshot filtered by `predicateSql`, one SQL
     * boolean expression over the snapshot's columns: [[read]] with the
@@ -576,9 +568,9 @@ object Commit {
     * so a narrow read of a large maintained table costs IO proportional
     * to the MATCHING data. [[planWhere]] reports that pruning.
     */
-  def readWhere(spark: SparkSession, root: String, predicateSql: String,
-      bucketCol: String = "bucket"): Option[DataFrame] =
-    read(spark, root, bucketCol).map(_.filter(expr(predicateSql)))
+  def readWhere(spark: SparkSession, root: String,
+      predicateSql: String): Option[DataFrame] =
+    read(spark, root).map(_.filter(expr(predicateSql)))
 
   /** Change feed at bucket grain: the rows of every entry the current
     * snapshot does NOT share with committed version `since` — i.e.
@@ -604,14 +596,13 @@ object Commit {
     * [[changesSinceKeyed]], which stays exact (and empty for a pure
     * re-bucket) across the boundary.
     */
-  def changesSince(spark: SparkSession, root: String, since: Long,
-      bucketCol: String = "bucket"): Option[DataFrame] =
+  def changesSince(spark: SparkSession, root: String,
+      since: Long): Option[DataFrame] =
     for {
       cur <- currentManifest(spark, root)
       if chainContains(spark, root, since)
       base <- manifestAt(spark, root, since)
-    } yield readEntries(spark, root, cur, changedEntries(base, cur),
-      bucketColOf(cur, bucketCol))
+    } yield readEntries(spark, root, cur, changedEntries(base, cur))
 
   /** Every entry of `cur` in a bucket that holds an entry `base` does
     * not: a bucket with a fresh delta is delivered whole, base and
@@ -624,18 +615,14 @@ object Commit {
   }
 
   /** [[snapshot]] over `es`, or, when `es` is empty, an EMPTY relation
-    * with `m`'s columns (the bucket column named `bc`): a change feed
-    * with nothing to deliver still has the snapshot's shape.
+    * with `m`'s columns: a change feed with nothing to deliver still has
+    * the snapshot's shape.
     */
   private def readEntries(spark: SparkSession, root: String, m: Manifest,
-      es: Seq[Entry], bc: String): DataFrame =
-    if (es.nonEmpty) snapshot(spark, root, m, es, bc)
-    else {
-      val st = m.schema.getOrElse(snapshot(spark, root, m, m.entries, bc).schema)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          st.fields.map(f => if (f.name == "bucket") f.copy(name = bc) else f)))
-    }
+      es: Seq[Entry]): DataFrame =
+    if (es.nonEmpty) snapshot(spark, root, m, es)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
 
   /** Row-level change feed over the bucket-grain [[changesSince]]: the
     * upserts and deletes that transform committed version `since` into
@@ -682,45 +669,35 @@ object Commit {
     * full rewrite, so the natural all-entries-changed path already
     * takes this shape; the explicit layout check below is defense
     * against any future publish shape that carries entries across a
-    * modulus change (publish refuses those today). Unknown layouts
-    * (legacy manifests) assume stable bucketing, the pre-r17 contract.
+    * modulus change (publish refuses those today). Tables without a
+    * recorded layout assume stable bucketing, the pre-r17 contract.
     */
   def changesSinceKeyed(spark: SparkSession, root: String, since: Long,
-      keyCols: Seq[String], bucketCol: String = "bucket"): Option[DataFrame] =
+      keyCols: Seq[String]): Option[DataFrame] =
     for {
       cur <- currentManifest(spark, root)
       if chainContains(spark, root, since)
       base <- manifestAt(spark, root, since)
     } yield {
-      val bc = bucketColOf(cur, bucketCol)
       val changed = changedEntries(base, cur)
       // buckets present at `since` that were rewritten or dropped: the
-      // delete side must scan their OLD content. A changed whole-dir
-      // entry (key -1) replaces the whole table. A legacy schema-less
-      // manifest (cur.schema None) gives the diff no committed column
-      // set to conform the OLD side to — fall back to a whole-table
-      // diff under the current read's own merged columns.
-      // whole-Layout inequality, not just the modulus: a key-expression
-      // change re-assigns buckets at the same modulus, and trusting
-      // bucket identity across it would diff the wrong content
+      // delete side must scan their OLD content. Whole-Layout
+      // inequality, not just the modulus: a key-expression change
+      // re-assigns buckets at the same modulus, and trusting bucket
+      // identity across it would diff the wrong content
       val layoutBoundary = (for (b <- base.layout; c <- cur.layout)
         yield b != c).getOrElse(false)
-      val wholeDir = changed.exists(_.key < 0) ||
-        base.entries.exists(_.key < 0) != cur.entries.exists(_.key < 0) ||
-        cur.schema.isEmpty || layoutBoundary
       val changedKeys = changed.map(_.key).toSet
       val oldSide = base.entries.filter(e =>
-        wholeDir || changedKeys.contains(e.key) ||
+        layoutBoundary || changedKeys.contains(e.key) ||
           !cur.entries.exists(_.key == e.key))
       // compare under the CURRENT schema so a schema evolution between
-      // the snapshots diffs by value, not by column-set accident. The
-      // schema-less path's applySchema is an identity, so the old side
-      // is conformed to the current read's columns EXPLICITLY: additive
-      // evolution null-fills (at the current column's type), dropped
-      // columns are projected away — the same contract applySchema
-      // gives schema-bearing manifests.
+      // the snapshots diffs by value, not by column-set accident: the old
+      // side is conformed to the current read's columns explicitly —
+      // additive evolution null-fills (at the current column's type),
+      // dropped columns are projected away
       val curRows = readEntries(spark, root, cur,
-        if (wholeDir) cur.entries else changed, bc)
+        if (layoutBoundary) cur.entries else changed)
       val cols = curRows.columns.toSeq
       val oldRows = {
         // the old side is read under ITS OWN committed schema, then
@@ -749,7 +726,7 @@ object Commit {
               org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, to)
           }
         }
-        val o0 = readEntries(spark, root, base, oldSide, bc)
+        val o0 = readEntries(spark, root, base, oldSide)
         val have = o0.columns.toSet
         o0.select(cols.map(x =>
           if (!have.contains(x))
@@ -856,12 +833,8 @@ object Commit {
       // layout epoch a row's bucket cannot change anyway (stable
       // bucketing), and across a re-bucket boundary excluding it is
       // what keeps a PURE re-bucket's feed empty instead of
-      // re-upserting the whole table. (Whole-dir snapshots have no
-      // partition column; a data column named "bucket" there stays
-      // compared.)
-      val cmpCols =
-        if (cur.entries.exists(_.key >= 0)) cols.filterNot(_ == bc) else cols
-      val rowEq = cmpCols.map { x =>
+      // re-upserting the whole table.
+      val rowEq = cols.filterNot(_ == "bucket").map { x =>
         if (nonUpcastCols.contains(x)) evolvedEq(x)
         else col(x) <=> col(s"_o_$x")
       }.reduceOption(_ && _).getOrElse(lit(true))
@@ -929,9 +902,9 @@ object Commit {
     * feed does, so a mis-keyed consumer fails here, not at apply time.
     * Returns None before any commit.
     */
-  def fullAsUpserts(spark: SparkSession, root: String, keyCols: Seq[String],
-      bucketCol: String = "bucket"): Option[DataFrame] =
-    read(spark, root, bucketCol).map { snap =>
+  def fullAsUpserts(spark: SparkSession, root: String,
+      keyCols: Seq[String]): Option[DataFrame] =
+    read(spark, root).map { snap =>
       val cols = snap.columns.toSeq
       require(keyCols.nonEmpty && keyCols.forall(cols.contains),
         s"keyCols ${keyCols.mkString(",")} must be columns of the snapshot")
@@ -949,8 +922,8 @@ object Commit {
     * [0,10] and [20,30] fold to [0,30], which "contains" 15).
     */
   private[graft] def planWhere(spark: SparkSession, root: String,
-      predicateSql: String, bucketCol: String = "bucket"): (Seq[Entry], Seq[Entry]) = {
-    val (kept, pruned) = planWhereFiles(spark, root, predicateSql, bucketCol)
+      predicateSql: String): (Seq[Entry], Seq[Entry]) = {
+    val (kept, pruned) = planWhereFiles(spark, root, predicateSql)
     (kept.map(_._1), pruned)
   }
 
@@ -961,11 +934,10 @@ object Commit {
     * snapshot schema. A predicate that does not parse keeps everything.
     */
   private[graft] def planWhereFiles(spark: SparkSession, root: String,
-      predicateSql: String, bucketCol: String = "bucket")
-      : (Seq[(Entry, Option[Seq[String]])], Seq[Entry]) =
+      predicateSql: String): (Seq[(Entry, Option[Seq[String]])], Seq[Entry]) =
     currentManifest(spark, root).map { m =>
       val pruner = ManifestFileIndex.Pruner(m.entries, m.stats, m.fileStats,
-        m.layout, m.schema, bucketCol)
+        m.layout, m.schema)
       try pruner.select(Nil,
         Seq(spark.sessionState.sqlParser.parseExpression(predicateSql)))
       catch {
@@ -1004,142 +976,102 @@ object Commit {
     * The fold needs each key's rows in one task. When the entries'
     * files (as the manifest names them) total no more than one scan
     * split (`spark.sql.files.maxPartitionBytes`), one task reads them
-    * all and folds them with no exchange; a larger or listed read is
-    * exchanged on its keys. Measured on a 400-user, 16-bucket status
-    * table (`local[4]`, two runs each): a one-user poll after each of 20
+    * all and folds them with no exchange; a larger read is exchanged on
+    * its keys. Measured on a 400-user, 16-bucket status table
+    * (`local[4]`, two runs each): a one-user poll after each of 20
     * appends took 225 and 230 ms median with the exchange, 191 and 182
     * ms in one task. A full read of a small table with deep buckets
     * pays for it: one task opens every file in turn (see
     * [[MergeDepth]]).
     */
   private def snapshot(spark: SparkSession, root: String, m: Manifest,
-      entries: Seq[Entry], bucketCol: String): DataFrame = {
-    val rows = stored(spark, root, m, entries, bucketCol)
-    val oneSplit = entries.forall(e => m.files.contains(e.dir)) &&
-      entries.flatMap(e => m.files(e.dir)).map(_._2).sum <=
-        spark.sessionState.conf.filesMaxPartitionBytes
-    folded(m, if (m.merge.nonEmpty && oneSplit) rows.coalesce(1) else rows, bucketCol)
+      entries: Seq[Entry]): DataFrame = {
+    val rows = stored(spark, root, m, entries)
+    val oneSplit = entries.flatMap(e => m.files(e.dir)).map(_._2).sum <=
+      spark.sessionState.conf.filesMaxPartitionBytes
+    folded(m, if (m.merge.nonEmpty && oneSplit) rows.coalesce(1) else rows)
   }
 
   /** The stored rows of `entries`, unfolded: only compaction reads
     * them, and folds them itself below its bucket exchange.
     */
   private def stored(spark: SparkSession, root: String, m: Manifest,
-      entries: Seq[Entry], bucketCol: String): DataFrame =
-    applySchema(assemble(spark, root, m, entries, bucketCol), m.schema, bucketCol)
+      entries: Seq[Entry]): DataFrame =
+    applySchema(assemble(spark, root, m, entries), m.schema)
 
-  private def folded(m: Manifest, rows: DataFrame, bucketCol: String): DataFrame =
-    m.merge.fold(rows)(_.fold(rows, Seq(bucketCol).filter(rows.columns.contains)))
+  private def folded(m: Manifest, rows: DataFrame): DataFrame =
+    m.merge.fold(rows)(_.fold(rows, Seq("bucket")))
 
   /** Project the assembled scan through the manifest's committed
     * schema: exactly its columns, in its order, cast to its types — a
     * carried bucket written before an additive column existed reads as
     * null for it (the standard additive-evolution contract), and a
     * column dropped later never leaks back into an old snapshot.
-    * Pre-schema manifests read as the files merge (legacy behavior).
     */
   private def applySchema(df: DataFrame,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      bucketCol: String): DataFrame =
-    schema.fold(df) { st =>
-      df.select(st.fields.toSeq.map { fld =>
-        // the manifest records the partition column under its on-disk
-        // name ("bucket" — the dir layout is fixed); a caller-renamed
-        // bucketCol must keep resolving to it, or the rename silently
-        // null-fills the column
-        val name = if (fld.name == "bucket") bucketCol else fld.name
-        (if (df.columns.contains(name)) col(name)
-         else lit(null)).cast(widenNullability(fld.dataType)).as(name)
-      }: _*)
-    }
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    df.select(schema.fields.toSeq.map { fld =>
+      (if (df.columns.contains(fld.name)) col(fld.name)
+       else lit(null)).cast(widenNullability(fld.dataType)).as(fld.name)
+    }: _*)
 
   /** The snapshot's scan over `entries` of manifest `m`: one
-    * [[ManifestFileIndex]] relation per footer schema of the bucketed
-    * entries (`bucket` an int partition column, then renamed to
-    * `bucketCol`) and one per whole-dir entry, unioned by name. Version
-    * dirs whose footers agree share one relation: every relation pays
-    * its own reader setup when the query runs, and a maintained table's
-    * snapshot spans as many version dirs as it has recent batches.
+    * [[ManifestFileIndex]] relation per footer schema (`bucket` an int
+    * partition column), unioned by name. Version dirs whose footers
+    * agree share one relation: every relation pays its own reader setup
+    * when the query runs, and a maintained table's snapshot spans as
+    * many version dirs as it has recent batches.
     *
-    * A write-through entry's files are the ones its manifest names
-    * (`#files=`), opened without listing the dir: a file there that the
-    * manifest does not name — a retried task attempt's leftover, a
-    * stray copy — is never read. Every other entry dir is listed once,
-    * on the driver, in one pooled batch ([[Skipping.listMany]]). Each
-    * version dir's data schema comes off one footer through
-    * [[ParquetScan.schemaOf]] (Spark's own inference where the session
-    * merges schemas). Opening a snapshot therefore runs no Spark job,
-    * however many buckets it has.
+    * An entry's files are the ones its manifest names (`#files=`),
+    * opened without listing the dir: a file there that the manifest
+    * does not name — a retried task attempt's leftover, a stray copy —
+    * is never read. Each version dir's data schema comes off one footer
+    * through [[ParquetScan.schemaOf]] (Spark's own inference where the
+    * session merges schemas). Opening a snapshot therefore runs no
+    * Spark job and lists nothing, however many buckets it has.
     */
   private def assemble(spark: SparkSession, root: String, m: Manifest,
-      entries: Seq[Entry], bucketCol: String): DataFrame = {
+      entries: Seq[Entry]): DataFrame = {
     import org.apache.hadoop.fs.FileStatus
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val conf = spark.sessionState.newHadoopConf()
     val f = fs(spark, root)
     val qroot = f.makeQualified(new Path(root))
     val blockSize = f.getDefaultBlockSize(qroot)
-    val (named, unnamed) = entries.partition(e => m.files.contains(e.dir))
-    val dirs = unnamed.map(e => new Path(s"$root/${e.dir}"))
-    // entry dir → (path relative to it, status) of each visible file,
+    // entry dir → (path relative to it, status) of each named file,
     // relative as #fstats and #files name them
-    val listed: Map[String, Seq[(String, FileStatus)]] = named.map { e =>
+    val named: Map[String, Seq[(String, FileStatus)]] = entries.map { e =>
       e.dir -> m.files(e.dir).map { case (rel, bytes) =>
         rel -> new FileStatus(bytes, false, 1, blockSize, 0L,
           new Path(qroot, s"${e.dir}/$rel"))
       }
-    }.toMap ++ unnamed.map(_.dir).zip(dirs).zip(Skipping.listMany(conf, dirs))
-      .map { case ((dir, p), tried) =>
-        val base = p.getFileSystem(conf).makeQualified(p).toString + "/"
-        dir -> tried.get.map(st => st.getPath.toString.stripPrefix(base) -> (st: FileStatus))
-          .filterNot(_._1.split('/').exists(ParquetScan.hidden))
-          .sortBy(_._1)
-      }
+    }.toMap
     // nullable throughout, as Spark's file sources read any schema: a
     // footer's `required` does not bind the other files of the scan
     def dataSchema(es: Seq[Entry]): StructType = {
-      val leaves = es.flatMap(e => listed(e.dir).map(_._2))
+      val leaves = es.flatMap(e => named(e.dir).map(_._2))
       widenNullability(ParquetScan.schemaOf(spark, leaves)
         .orElse(new ParquetFileFormat().inferSchema(spark, Map.empty, leaves))
         .getOrElse(throw new java.io.FileNotFoundException(
           s"no parquet data files under ${es.map(e => s"$root/${e.dir}").mkString(", ")}")))
         .asInstanceOf[StructType]
     }
-    def scan(es: Seq[Entry], dataSchema: StructType,
-        partitionSchema: StructType): DataFrame = {
-      val pruner = ManifestFileIndex.Pruner(es, m.stats, m.fileStats, m.layout,
-        Some(dataSchema), "bucket")
-      val index = new ManifestFileIndex(pruner,
-        es.map(e => e.dir -> listed(e.dir).filter(f => ParquetScan.isData(f._2))).toMap,
-        es.map(e => new Path(s"$root/${e.dir}")), partitionSchema)
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
-        dataSchema, None, new ParquetFileFormat(), Map.empty)(spark))
-    }
-    val whole = entries.filter(_.key < 0).map { e =>
-      // a whole-dir writer may nest its own partition dirs, which only
-      // Spark's partition discovery knows how to name
-      if (listed(e.dir).exists(_._1.contains("/")))
-        ParquetScan.read(spark, Seq(s"$root/${e.dir}"), Some(s"$root/${e.dir}"))
-      else scan(Seq(e), dataSchema(Seq(e)), StructType(Nil))
-    }
-    val bySchema = entries.filter(_.key >= 0)
-      .groupBy(e => e.dir.takeWhile(_ != '/')).toSeq.sortBy(_._1)
+    val partitionSchema = StructType(Seq(StructField("bucket", IntegerType, nullable = true)))
+    val bySchema = entries.groupBy(e => e.dir.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (_, es) => (dataSchema(es), es) }
-    val byVersion = bySchema.map(_._1).distinct.map { st =>
-      val part = scan(bySchema.filter(_._1 == st).flatMap(_._2), st,
-        StructType(Seq(StructField("bucket", IntegerType, nullable = true))))
-      // a bucketCol colliding with a DATA column would make the rename
-      // ambiguous — fail loudly rather than emit two same-named columns
-      require(bucketCol == "bucket" || !part.columns.contains(bucketCol),
-        s"bucketCol '$bucketCol' collides with a data column")
-      part.withColumnRenamed("bucket", bucketCol)
-    }
     // allowMissingColumns: version dirs written before an additive
     // column appeared union with it null; the manifest schema then
     // fixes column order/types in applySchema
-    (whole ++ byVersion).reduce(_.unionByName(_, allowMissingColumns = true))
+    bySchema.map(_._1).distinct.map { st =>
+      val es = bySchema.filter(_._1 == st).flatMap(_._2)
+      val pruner = ManifestFileIndex.Pruner(es, m.stats, m.fileStats, m.layout, st)
+      val index = new ManifestFileIndex(pruner,
+        es.map(e => e.dir -> named(e.dir).filter(f => ParquetScan.isData(f._2))).toMap,
+        es.map(e => new Path(s"$root/${e.dir}")), partitionSchema)
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+        st, None, new ParquetFileFormat(), Map.empty)(spark))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   private def readSmall(f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
@@ -1242,33 +1174,11 @@ object Commit {
   private def timed[T](phase: Option[(String, String)])(body: => T): T =
     phase.fold(body) { case (prefix, label) => graft.util.PhaseTimer(prefix, label)(body) }
 
-  /** Publish a new version whose data `write` writes into the fresh
-    * version dir it is given, over the head read inside the lock. The
-    * manifest's entries are the buckets `write` reports (plus carried
-    * entries for buckets this version did not rewrite), or a single
-    * whole-dir entry for a caller-written dir or an empty bucketed
-    * write. A blind write: `write` does not depend on the head.
-    */
-  private def publish(spark: SparkSession, root: String,
-      declaredLayout: Option[Layout] = None,
-      fullRewrite: Boolean = false,
-      appTxn: Option[(String, Long)] = None)
-      (write: String => Written): Long =
-    withHead(spark, root, appTxn, None) { prev =>
-      publishLocked(spark, root, declaredLayout, fullRewrite, appTxn, prev)(write)
-    }.get
-
-  /** What a publish's writer put into its fresh version dir. */
-  private sealed trait Written
   /** Write-through bucket files as their tasks reported them
     * ([[writeBuckets]]), and the data schema they were written with.
     */
   private final case class BucketFiles(files: Seq[WrittenFile],
-      dataSchema: org.apache.spark.sql.types.StructType) extends Written
-  /** A caller-written whole dir ([[publishDir]]): publish lists it and
-    * reads its footers.
-    */
-  private case object WholeDir extends Written
+      dataSchema: org.apache.spark.sql.types.StructType)
 
   /** One file a write-through task wrote: its bucket and its footer,
     * folded ([[Skipping.FileFold]]; `rel` is the name inside the bucket
@@ -1295,7 +1205,7 @@ object Commit {
       prev: Option[Manifest],
       replace: Option[Set[Int]] = None,
       declaredMerge: Option[Merge] = None)
-      (write: String => Written): Option[Long] = {
+      (write: String => BucketFiles): Option[Long] = {
     val f = fs(spark, root)
     // ---- cross-JVM version claim (r19) ----------------------------
     // The in-driver writer lock cannot see writers in OTHER JVMs. Two
@@ -1329,7 +1239,7 @@ object Commit {
     val (maxUsed, liveClaims) = scanVersions(f, root)
     val v = math.max(prevV, maxUsed) + 1
     val claimPath = new Path(root, s"$ClaimPrefix$v")
-    exclusiveCreate(f, claimPath, v).close()
+    create(f, claimPath, v, exclusive = true).close()
     faultPoint("after-claim")
     def abortClaim(reason: String): Nothing = {
       try f.delete(claimPath, false)
@@ -1357,28 +1267,18 @@ object Commit {
     // `publish.manifest`
     val written = graft.util.PhaseTimer("publish", "write")(write(s"$root/$vdir"))
     faultPoint("after-write")
-    val newBuckets = written match {
-      case BucketFiles(files, _) => files.map(_.bucket).distinct.sorted
-      case WholeDir => Nil
-    }
+    val newBuckets = written.files.map(_.bucket).distinct.sorted
     // an append that wrote no row (an empty batch, nothing to compact)
     // commits no version
     if (replace.exists(_.isEmpty) && newBuckets.isEmpty) return None
-    // an EMPTY bucketed write against an existing table must abort, not
-    // commit: it writes no bucket file, and the whole-dir shape below
-    // would publish an empty snapshot that REPLACES the table outright
-    // — an empty upsert batch silently wiping the accumulated state
-    // (found by the r16 scaled-bucket sweep review; incremental callers
-    // now no-op before publish, this guard is the backstop for any
-    // other bucketed writer). A caller that truly means "replace the
-    // table with nothing" states it with publishDir. The fresh vdir is
-    // unreferenced garbage for [[vacuum]]; readers stay on the previous
-    // snapshot.
-    require(!(written != WholeDir && newBuckets.isEmpty && prev.nonEmpty),
+    // any other EMPTY write aborts, on a new table as on an existing
+    // one: a version is its buckets, and one with none would either
+    // hold no table or replace the accumulated state with nothing. The
+    // fresh vdir is unreferenced garbage for [[vacuum]]; readers stay
+    // on the previous snapshot.
+    require(newBuckets.nonEmpty,
       s"bucketed publish to $root wrote no bucket dirs (empty input?) — " +
-        "committing would replace the existing snapshot with an empty " +
-        "whole-dir version; skip empty batches, or use publishDir for " +
-        "an intentional whole-table replace")
+        "a version needs at least one bucket; skip empty batches")
     // an append's compacted buckets fold their existing entries, so
     // each must be in the write: a missing one would drop its rows
     replace.foreach { r =>
@@ -1388,36 +1288,31 @@ object Commit {
           "but wrote none of their rows; aborting before the pointer swap, " +
           "no state was lost")
     }
-    val fresh =
-      if (newBuckets.isEmpty) Seq(Entry(-1, vdir))
-      else newBuckets.map(b => Entry(b, s"$vdir/bucket=$b"))
+    val fresh = newBuckets.map(b => Entry(b, s"$vdir/bucket=$b"))
     val parent = prev.map(_.v).getOrElse(0L)
     val carried =
-      // whole-dir snapshots replace outright; a declared FULL rewrite
-      // carries nothing even when some old bucket ids are absent from
-      // the fresh write — under a modulus change an old bucket whose
-      // keys all landed on new residues writes no dir with its old id,
-      // and carrying that old dir would DUPLICATE its rows beside
-      // their re-bucketed copies
-      if (newBuckets.isEmpty || fullRewrite) Nil
+      // a declared FULL rewrite carries nothing even when some old
+      // bucket ids are absent from the fresh write — under a modulus
+      // change an old bucket whose keys all landed on new residues
+      // writes no dir with its old id, and carrying that old dir would
+      // DUPLICATE its rows beside their re-bucketed copies
+      if (fullRewrite) Nil
       else {
         val replaced = replace.getOrElse(newBuckets.toSet)
-        prev.map(_.entries).getOrElse(Nil).filter(e => e.key >= 0 && !replaced(e.key))
+        prev.map(_.entries).getOrElse(Nil).filterNot(e => replaced(e.key))
       }
-    // Layout rules. (1) A bucketed snapshot keeps the table's recorded
-    // layout unless the writer declares a new one; a whole-dir snapshot
-    // has no buckets, so no layout. (2) CHANGING the modulus outside a
-    // declared full rewrite is refused outright: keys assigned under
-    // the old modulus would survive (carried or co-resident) beside
-    // the new assignment — the exact carry-forward-merge corruption
-    // the stable-bucketing precondition (changesSinceKeyed scaladoc)
-    // exists to prevent. (3) A declared modulus must actually bound
-    // the written bucket ids — a writer whose column disagrees with
-    // its declaration is a bug worth failing loudly on.
+    // Layout rules. (1) A snapshot keeps the table's recorded layout
+    // unless the writer declares a new one. (2) CHANGING the modulus
+    // outside a declared full rewrite is refused outright: keys
+    // assigned under the old modulus would survive (carried or
+    // co-resident) beside the new assignment — the exact
+    // carry-forward-merge corruption the stable-bucketing precondition
+    // (changesSinceKeyed scaladoc) exists to prevent. (3) A declared
+    // modulus must actually bound the written bucket ids — a writer
+    // whose column disagrees with its declaration is a bug worth
+    // failing loudly on.
     val prevLayout = prev.flatMap(_.layout)
-    val layout =
-      if (newBuckets.isEmpty) None
-      else declaredLayout.orElse(prevLayout)
+    val layout = declaredLayout.orElse(prevLayout)
     // the WHOLE layout, not just the modulus: a same-modulus change of
     // the KEY EXPRESSION ("user_id" → "hash(user_id)") migrates keys
     // between buckets exactly like a modulus change does — carried
@@ -1436,8 +1331,8 @@ object Commit {
     for (dm <- declaredMerge; pm <- prevMerge)
       require(dm == pm || fullRewrite,
         s"merge change $pm→$dm on an incremental publish of $root")
-    val merge = if (newBuckets.isEmpty) None else declaredMerge.orElse(prevMerge)
-    for (l <- layout if newBuckets.nonEmpty) {
+    val merge = declaredMerge.orElse(prevMerge)
+    for (l <- layout) {
       require(newBuckets.max < l.buckets,
         s"written bucket ids ${newBuckets.filter(_ >= l.buckets).mkString(",")} " +
           s"fall outside the declared layout of ${l.buckets} buckets")
@@ -1451,34 +1346,21 @@ object Commit {
           s"${l.buckets} buckets — the declaration does not describe " +
           "this table; re-bucket with a full rewrite instead")
     }
-    // The fresh entries' zone maps, row count, file lists and schema.
-    // A write-through write brings them with it: each task folded the
-    // footer it just wrote, so the driver only folds those reports per
-    // entry, and the schema is the one the files were written with —
-    // nullable throughout, as Spark reads any parquet file, plus the
-    // int bucket partition column. A caller-written whole dir is listed
-    // and its footers read once here; Spark infers its schema, since a
-    // whole-dir writer may nest partition dirs the footers don't know.
-    val (harvests, freshFiles, rows, snapSchema) = written match {
-      case BucketFiles(files, dataSchema) =>
-        val byBucket = files.groupBy(_.bucket)
-        val folds = fresh.map(e => e.dir -> byBucket.getOrElse(e.key, Nil).map(_.fold))
-        val hs = graft.util.PhaseTimer("publish", "harvest")(
-          folds.flatMap { case (dir, fs) => Skipping.fold(fs).map(dir -> _) }.toMap)
-        val schema = Option.when(newBuckets.nonEmpty) {
-          import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-          StructType(widenNullability(dataSchema).asInstanceOf[StructType].fields :+
-            StructField("bucket", IntegerType, nullable = true))
-        }
-        (hs, folds.map { case (dir, fs) => dir -> fs.map(x => x.rel -> x.bytes).sortBy(_._1) }.toMap,
-          Some(files.map(_.fold.rows).sum), schema)
-      case WholeDir =>
-        val hs = graft.util.PhaseTimer("publish", "harvest")(
-          Skipping.harvestMany(spark.sessionState.newHadoopConf(),
-            fresh.map(e => e.dir -> new Path(s"$root/${e.dir}"))))
-        (hs, Map.empty[String, Seq[(String, Long)]], hs.get(vdir).map(_.entry.rows),
-          try Some(ParquetScan.read(spark, Seq(s"$root/$vdir")).schema)
-          catch { case scala.util.control.NonFatal(_) => None })
+    // The fresh entries' zone maps, row count, file lists and schema
+    // come with the write: each task folded the footer it just wrote,
+    // so the driver only folds those reports per entry, and the schema
+    // is the one the files were written with — nullable throughout, as
+    // Spark reads any parquet file, plus the int bucket partition column.
+    val byBucket = written.files.groupBy(_.bucket)
+    val folds = fresh.map(e => e.dir -> byBucket(e.key).map(_.fold))
+    val harvests = graft.util.PhaseTimer("publish", "harvest")(
+      folds.flatMap { case (dir, fs) => Skipping.fold(fs).map(dir -> _) }.toMap)
+    val freshFiles = folds.map { case (dir, fs) =>
+      dir -> fs.map(x => x.rel -> x.bytes).sortBy(_._1) }.toMap
+    val snapSchema = {
+      import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+      StructType(widenNullability(written.dataSchema).asInstanceOf[StructType].fields :+
+        StructField("bucket", IntegerType, nullable = true))
     }
     val freshStats = harvests.view.mapValues(_.entry).toMap
     // single-file entries: the entry box IS the file box — no #fstats
@@ -1501,10 +1383,9 @@ object Commit {
     }
     graft.util.PhaseTimer("publish", "manifest")(
       commitManifest(spark, root, v, parent,
-        (carried ++ fresh).sortBy(_.key),
-        snapSchema, rows, carry(_.stats) ++ freshStats,
-        carry(_.fileStats) ++ freshFileStats, layout, txns,
-        carry(_.files) ++ freshFiles, merge))
+        (carried ++ fresh).sortBy(_.key), snapSchema, carry(_.files) ++ freshFiles,
+        Some(written.files.map(_.fold.rows).sum), carry(_.stats) ++ freshStats,
+        carry(_.fileStats) ++ freshFileStats, layout, txns, merge))
     Some(v)
     } finally {
       // the publish DECIDED (committed, refused a rail, or lost the
@@ -1551,21 +1432,25 @@ object Commit {
     * the version claim, so two racing writers can never both commit
     * the same version — the loser gets [[ConcurrentCommitException]]
     * while its data dir stays unreferenced garbage for [[vacuum]].
+    * `files` must name every entry's files: the writer refuses the
+    * manifest its readers would ([[parseManifest]]).
     */
   private[graft] def commitManifest(spark: SparkSession, root: String, v: Long,
       parent: Long, entries: Seq[Entry],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Map[String, Seq[(String, Long)]],
       rows: Option[Long] = None,
       stats: Map[String, Skipping.EntryStats] = Map.empty,
       fileStats: Map[String, Seq[(String, Skipping.EntryStats)]] = Map.empty,
       layout: Option[Layout] = None,
       txns: Map[String, Long] = Map.empty,
-      files: Map[String, Seq[(String, Long)]] = Map.empty,
       merge: Option[Merge] = None): Unit = {
+    require(entries.forall(e => files.contains(e.dir)),
+      s"manifest $v: entries ${entries.filterNot(e => files.contains(e.dir))
+        .map(_.dir).mkString(",")} have no #files= line")
     val f = fs(spark, root)
     val name = s"manifest-$v.txt"
-    val meta = Seq(s"#parent=$parent") ++
-      schema.map(st => s"#schema=${st.json}") ++ rows.map(n => s"#rows=$n") ++
+    val meta = Seq(s"#parent=$parent", s"#schema=${schema.json}") ++ rows.map(n => s"#rows=$n") ++
       layout.map(l => s"#layout=${l.buckets}\t${l.keyExprSql}") ++
       merge.map(m => s"#merge=${m.encode}") ++
       txns.toSeq.sortBy(_._1).map { case (app, ver) => s"#txn=$app\t$ver" } ++
@@ -1592,25 +1477,23 @@ object Commit {
       "manifest meta order violated: light header line after heavy stats lines")
     val body = (v.toString +: meta ++: entries.map(e => s"${e.key}\t${e.dir}"))
       .mkString("\n")
-    val mf = new Path(root, name)
-    val out = exclusiveCreate(f, mf, v)
+    writeSynced(create(f, new Path(root, name), v, exclusive = true), body)
+    // stage the new pointer content beside the target, then rename
+    val tmp = new Path(root, s".$Pointer.tmp-$v")
+    writeSynced(create(f, tmp, v, exclusive = false), name)
+    atomicRename(spark, tmp, new Path(root, Pointer))
+  }
+
+  /** Write `text` to `out`, sync it to the device, close it. */
+  private def writeSynced(out: java.io.OutputStream, text: String): Unit =
     try {
-      out.write(body.getBytes(StandardCharsets.UTF_8))
+      out.write(text.getBytes(StandardCharsets.UTF_8))
       out match {
         case h: org.apache.hadoop.fs.FSDataOutputStream => h.hflush(); h.hsync()
         case l: java.io.FileOutputStream => l.flush(); l.getFD.sync()
         case o => o.flush()
       }
     } finally out.close()
-    // stage the new pointer content beside the target, then rename
-    val tmp = new Path(root, s".$Pointer.tmp-$v")
-    val pout = f.create(tmp, true)
-    try {
-      pout.write(name.getBytes(StandardCharsets.UTF_8))
-      pout.hflush(); pout.hsync()
-    } finally pout.close()
-    atomicRename(spark, tmp, new Path(root, Pointer))
-  }
 
   /** Crash-fault injection point for the forked SIGKILL tests
     * (CommitCrashSpec): when `SPARK_GRAFT_FAULT` names this point, drop
@@ -1629,26 +1512,29 @@ object Commit {
       while (true) Thread.sleep(1000L)
     }
 
-  /** Exclusively create `p` — the mutual-exclusion primitive both the
-    * version claim and the manifest rely on. Hadoop's
-    * RawLocalFileSystem implements `create(p, overwrite=false)` as a
-    * non-atomic exists()-then-open (no O_EXCL), so on file:// two
-    * racing JVMs can BOTH win in the TOCTOU window; local paths
-    * therefore go through `java.nio.file.Files.createFile`
-    * (O_CREAT|O_EXCL, atomic on POSIX — the same local special-case
-    * [[atomicRename]] has), everything else through
-    * `FileSystem.create(p, false)` which IS atomic on HDFS.
+  /** Create `p` for writing — every file the commit protocol writes
+    * goes through here: the version claim and the manifest EXCLUSIVELY
+    * (the mutual-exclusion primitive both rely on), the pointer's staged
+    * tmp file overwriting. Hadoop's RawLocalFileSystem implements
+    * `create(p, overwrite=false)` as a non-atomic exists()-then-open (no
+    * O_EXCL), so on file:// two racing JVMs can BOTH win in the TOCTOU
+    * window; local paths therefore go through NIO
+    * (`java.nio.file.Files.createFile`, O_CREAT|O_EXCL, atomic on POSIX
+    * — the same local special-case [[atomicRename]] has), which also
+    * writes no `.crc` sidecar (the checksum file system's sidecar of the
+    * pointer's tmp file would outlive the rename, which moves only the
+    * data file) and forks no `chmod`. Everything else goes through
+    * `FileSystem.create`, whose non-overwriting form IS atomic on HDFS.
     *
     * Only a lost race surfaces as [[ConcurrentCommitException]]
     * (hadoop/nio FileAlreadyExistsException); any other IO failure —
     * disk full, permissions, transient FS — propagates as-is so
     * callers don't misdiagnose infrastructure as contention and retry
     * futilely. Returns the created file's content writer (empty for
-    * marker files; the manifest writes its body through it).
+    * marker files).
     */
-  private def exclusiveCreate(f: org.apache.hadoop.fs.FileSystem, p: Path,
-      v: Long)
-      : java.io.OutputStream = {
+  private def create(f: org.apache.hadoop.fs.FileSystem, p: Path,
+      v: Long, exclusive: Boolean): java.io.OutputStream = {
     if (f.getUri.getScheme == "file") {
       val local = java.nio.file.Paths.get(p.toUri.getPath)
       // hadoop's create() makes parent dirs implicitly; match that
@@ -1656,14 +1542,15 @@ object Commit {
       java.nio.file.Files.createDirectories(local.getParent)
       // createFile is the atomic exclusion point; once we own the
       // file, reopening it for write is race-free (losers never open)
-      try java.nio.file.Files.createFile(local)
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          throw new ConcurrentCommitException(v, e)
-      }
+      if (exclusive)
+        try java.nio.file.Files.createFile(local)
+        catch {
+          case e: java.nio.file.FileAlreadyExistsException =>
+            throw new ConcurrentCommitException(v, e)
+        }
       new java.io.FileOutputStream(local.toFile)
     } else {
-      try f.create(p, false)
+      try f.create(p, !exclusive)
       catch {
         case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
           throw new ConcurrentCommitException(v, e)
@@ -1698,8 +1585,8 @@ object Commit {
     }
   }
 
-  /** Commit `df` bucketed by `bucketCol`: only the buckets present
-    * in `df` are written; the rest carry forward from the current
+  /** Commit `df` bucketed by its int `bucket` column: only the buckets
+    * present in `df` are written; the rest carry forward from the current
     * manifest. This is the incremental-upsert publication: bounded
     * write amplification AND a transactional boundary. A BLIND write:
     * `df` does not read the table. A maintained table whose rows fold
@@ -1710,11 +1597,10 @@ object Commit {
     * bucket cannot be published EMPTY — the writer ([[writeBuckets]])
     * writes a file only for a bucket that has rows, so "present but
     * empty" is not expressible here.
-    * An empty `df` against an existing table is therefore refused
-    * (it would otherwise commit a whole-dir empty snapshot replacing
-    * the table); retiring a bucket's last row takes a full rewrite or
-    * [[publishDir]], and incremental maintainers no-op on empty
-    * batches ([[appendBuckets]] does).
+    * An empty `df` is therefore refused, on a new table as on an
+    * existing one; retiring a bucket's last row takes a full rewrite,
+    * and incremental maintainers no-op on empty batches
+    * ([[appendBuckets]] does).
     *
     * `layout` declares the bucketing discipline this write used
     * ([[Layout]]) — recorded in the manifest so maintainers and
@@ -1722,8 +1608,7 @@ object Commit {
     * table's recorded layout carries forward. `fullRewrite = true`
     * states `df` IS the whole table: nothing carries forward, even
     * buckets absent from the write (required for a modulus change;
-    * also the way to retire a bucket's last row without going
-    * whole-dir).
+    * also the way to retire a bucket's last row).
     *
     * `txn = Some((appId, epoch))` records the idempotent-writer
     * watermark atomically with the data (the Delta txnAppId/txnVersion
@@ -1733,33 +1618,19 @@ object Commit {
     * needs under micro-batch replay.
     */
   def publishBuckets(df: DataFrame, root: String,
-      bucketCol: String = "bucket",
       layout: Option[Layout] = None,
       fullRewrite: Boolean = false,
       txn: Option[(String, Long)] = None): Long = {
     requireTxnApp(txn)
-    publish(df.sparkSession, root,
-      declaredLayout = layout, fullRewrite = fullRewrite,
-      appTxn = txn)(writeBuckets(onDisk(df, bucketCol)))
+    withHead(df.sparkSession, root, txn, None) { prev =>
+      publishLocked(df.sparkSession, root, layout, fullRewrite, txn, prev)(writeBuckets(df))
+    }.get
   }
 
   private def requireTxnApp(txn: Option[(String, Long)]): Unit =
     txn.foreach { case (app, _) =>
       require(app.nonEmpty && !app.contains("\n") && !app.contains("\t"),
         s"txn appId must be a single manifest-line-safe token: '$app'")
-    }
-
-  /** `df` with its bucket column under the on-disk name. The layout is
-    * ALWAYS `bucket=<b>` — the manifest's entries name those dirs, and
-    * the read side renames back to the caller's bucketCol.
-    */
-  private def onDisk(df: DataFrame, bucketCol: String): DataFrame =
-    if (bucketCol == "bucket") df
-    else {
-      require(!df.columns.contains("bucket"),
-        s"bucketCol '$bucketCol' cannot be renamed to the on-disk " +
-          "'bucket': the DataFrame already has a 'bucket' column")
-      df.withColumnRenamed(bucketCol, "bucket")
     }
 
   /** The writer of every bucketed publish, write-through: `df`'s rows,
@@ -1778,7 +1649,7 @@ object Commit {
     * reports instead of listing and re-opening the files. The job runs
     * under its own SQL execution id, as a Spark write does.
     */
-  private def writeBuckets(df: DataFrame): String => Written = vdir => {
+  private def writeBuckets(df: DataFrame): String => BucketFiles = vdir => {
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types.StructType
     val spark = df.sparkSession
@@ -1909,7 +1780,7 @@ object Commit {
   private def appendInput(rows: DataFrame, root: String, prev: Option[Manifest],
       layout: Layout, merge: Merge): (DataFrame, Set[Int]) = {
     val incoming = rows.withColumn("bucket", layout.bucketExpr)
-    val depth = prev.toSeq.flatMap(_.entries.filter(_.key >= 0)).groupBy(_.key)
+    val depth = prev.toSeq.flatMap(_.entries).groupBy(_.key)
       .map { case (b, es) => b -> es.size }
     val deep =
       if (!depth.values.exists(_ >= MergeDepth)) Set.empty[Int]
@@ -1919,8 +1790,8 @@ object Commit {
       case n => incoming.repartition(n, ("bucket" +: merge.keys).map(k => col(s"`$k`")): _*)
     }
     prev.filter(_ => deep.nonEmpty).fold((merge.fold(tasks, Seq("bucket")), deep)) { m =>
-      val existing = stored(rows.sparkSession, root, m, m.entries.filter(e => deep(e.key)),
-        "bucket").withColumn("bucket", layout.bucketExpr)
+      val existing = stored(rows.sparkSession, root, m, m.entries.filter(e => deep(e.key)))
+        .withColumn("bucket", layout.bucketExpr)
       (merge.fold(existing.unionByName(incoming, allowMissingColumns = true)
         .repartition(col("bucket")), Seq("bucket")), deep)
     }
@@ -1936,26 +1807,18 @@ object Commit {
     ((size + per - 1) / per).max(1).min(Int.MaxValue).toInt
   }
 
-  /** Commit a whole-snapshot rewrite (compaction, full MV rebuild):
-    * the writer fills the fresh version dir, the manifest replaces all
-    * previous entries.
-    */
-  def publishDir(spark: SparkSession, root: String)
-      (write: String => Unit): Long =
-    publish(spark, root) { vdir => write(vdir); WholeDir }
-
-  /** Total on-disk bytes of the CURRENT snapshot's entries (live data
-    * only — superseded versions' garbage excluded): the sizing input a
-    * caller needs to pick an [[optimizeBuckets]] `maxBucketBytes`
-    * threshold, resolved through the same Hadoop FileSystem every
-    * other Commit path uses. None before any commit.
+  /** Total bytes of the CURRENT snapshot's data files (live data only —
+    * superseded versions' garbage excluded), as the manifest records
+    * them: the sizing input a caller needs to pick an
+    * [[optimizeBuckets]] `maxBucketBytes` threshold. No file-system
+    * call, and a file the manifest does not name does not count. None
+    * before any commit.
     */
   def liveDataBytes(spark: SparkSession, root: String): Option[Long] =
-    currentManifest(spark, root).map { m =>
-      val f = fs(spark, root)
-      m.entries.map(e =>
-        f.getContentSummary(new Path(s"$root/${e.dir}")).getLength).sum
-    }
+    currentManifest(spark, root).map(m => m.entries.map(entryBytes(m, _)).sum)
+
+  /** The recorded bytes of entry `e`'s files. */
+  private def entryBytes(m: Manifest, e: Entry): Long = m.files(e.dir).map(_._2).sum
 
   /** Compact the current snapshot's buckets to ONE file each and
     * publish the result as a new version — the Delta `OPTIMIZE` /
@@ -1972,9 +1835,7 @@ object Commit {
     * files). The one-partition-per-bucket repartition is correct at
     * scale because bucket count, not data volume, bounds parallelism
     * here — callers with very large buckets raise the bucket count,
-    * not the file count. No-op (None) when the table is missing or
-    * has no bucketed entries (whole-dir snapshots recompact through
-    * [[Sources.compactCommit]]).
+    * not the file count. No-op (None) when the table is missing.
     *
     * The compacted snapshot is the manifest read inside the writer
     * lock, the one this publish commits over ([[withHead]]): a writer
@@ -1999,8 +1860,8 @@ object Commit {
     * committed with the new `#layout`, after which layout-aware
     * maintainers pick up the new modulus automatically. Cost: one
     * table scan + rewrite — same as the compaction this op already is;
-    * the trigger check itself is a driver-side directory summary per
-    * bucket (≤ bucket-count listing calls, no data IO).
+    * the trigger check itself reads the entries' file sizes the
+    * manifest records (no file-system call).
     *
     * Change feeds across the boundary stay EXACT: all entries are
     * fresh, so [[changesSinceKeyed]] degrades to a whole-table keyed
@@ -2008,18 +1869,15 @@ object Commit {
     * feed (see its scaladoc).
     */
   def optimizeBuckets(spark: SparkSession, root: String,
-      bucketCol: String = "bucket",
       maxBucketBytes: Option[Long] = None): Option[Long] =
     withHead(spark, root, None, None) { prev =>
-      prev.filter(_.entries.exists(_.key >= 0)).flatMap { m =>
-        val df = stored(spark, root, m, m.entries, bucketCol)
+      prev.flatMap { m =>
+        val df = stored(spark, root, m, m.entries)
         val evolved: Option[Layout] =
           for {
             thr <- maxBucketBytes
             l <- m.layout
-            f0 = fs(spark, root)
-            sizes = m.entries.filter(_.key >= 0).map(e =>
-              f0.getContentSummary(new Path(s"$root/${e.dir}")).getLength)
+            sizes = m.entries.map(entryBytes(m, _))
             if sizes.nonEmpty && sizes.max > thr
             total = sizes.sum
           } yield {
@@ -2035,12 +1893,12 @@ object Commit {
         // layout forward.
         val (out, layout) = evolved match {
           case Some(nl) if nl.buckets != m.layout.map(_.buckets).getOrElse(0) =>
-            (df.withColumn(bucketCol, nl.bucketExpr), Some(nl))
+            (df.withColumn("bucket", nl.bucketExpr), Some(nl))
           case _ => (df, None)
         }
         publishLocked(spark, root, layout,
           fullRewrite = layout.nonEmpty, None, prev)(
-          writeBuckets(onDisk(folded(m, out.repartition(col(bucketCol)), bucketCol), bucketCol)))
+          writeBuckets(folded(m, out.repartition(col("bucket")))))
       }
     }
 
@@ -2059,9 +1917,10 @@ object Commit {
     require(retain >= 1, s"vacuum must retain the current version; got $retain")
     withWriterLock(spark, root) {
     val f = fs(spark, root)
-    if (current(spark, root).nonEmpty) {
+    // the head is parsed once; the older retained versions each once
+    currentManifest(spark, root).foreach { h =>
       val keep = history(spark, root).take(retain)
-      val live = keep.flatMap(v => manifestAt(spark, root, v))
+      val live = (h +: keep.filter(_ != h.v).flatMap(v => manifestAt(spark, root, v)))
         .flatMap(_.entries.map(_.dir.takeWhile(_ != '/'))).toSet
       f.listStatus(new Path(root)).map(_.getPath).foreach { p =>
         val n = p.getName

@@ -7,13 +7,12 @@ import org.apache.spark.sql.execution.datasources.{FileIndex,
   FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types._
 
-/** The file index of one [[Commit]] scan group: the entries of one
-  * version dir (partition column `bucket`, one value per entry) or one
-  * whole-dir entry (no partition column). The group's files were
-  * resolved once, on the driver, when the snapshot was opened — named
-  * by the manifest for a write-through entry (`#files=`), listed for an
-  * older or caller-written one — and `listFiles` hands Spark only the
-  * entries and files the pushed filters can match, never a listing.
+/** The file index of one [[Commit]] scan group: the entries of the
+  * version dirs that share a footer schema (partition column `bucket`,
+  * one value per entry). The group's files are the ones the manifest
+  * names (`#files=`), resolved once, on the driver, when the snapshot
+  * was opened, and `listFiles` hands Spark only the entries and files
+  * the pushed filters can match, never a listing.
   *
   * The manifest already records what a scan needs to skip work: each
   * entry's bucket, its zone maps (`#stats`, `#fstats`) and the table's
@@ -40,8 +39,7 @@ private[graft] final class ManifestFileIndex(
         val keep = names.toSet
         all.filter(f => keep(f._1))
       }
-      PartitionDirectory(if (e.key >= 0) InternalRow(e.key) else InternalRow.empty,
-        kept.map(f => FileStatusWithMetadata(f._2)))
+      PartitionDirectory(InternalRow(e.key), kept.map(f => FileStatusWithMetadata(f._2)))
     }
 
   override def inputFiles: Array[String] =
@@ -58,15 +56,13 @@ private[graft] object ManifestFileIndex {
   /** Which entries, and which of their files, a filter can match.
     * `schema` holds the types the filters see: a scan group's footer
     * schema for filters Spark pushes into the scan, the snapshot schema
-    * for [[Commit.planWhere]]'s parsed predicate. `bucketName` is what
-    * the filters call the bucket column.
+    * for [[Commit.planWhere]]'s parsed predicate.
     */
   final case class Pruner(entries: Seq[Commit.Entry],
       stats: Map[String, Skipping.EntryStats],
       fileStats: Map[String, Seq[(String, Skipping.EntryStats)]],
       layout: Option[Commit.Layout],
-      schema: Option[StructType],
-      bucketName: String) {
+      schema: StructType) {
 
     /** (kept entries with their surviving files — None = every file —,
       * pruned entries).
@@ -96,17 +92,18 @@ private[graft] object ManifestFileIndex {
         p
       }
       val buckets = dataFilters.flatMap(keyBuckets).reduceOption(_ intersect _)
-      def may(e: Commit.Entry, st: Option[Skipping.EntryStats]): Boolean =
-        withKey(e, st).forall(s => dataFilters.forall(f =>
+      def may(e: Commit.Entry, st: Option[Skipping.EntryStats]): Boolean = {
+        val s = withKey(e, st)
+        dataFilters.forall(f =>
           try Skipping.mayMatch(f, s)
-          catch { case scala.util.control.NonFatal(_) => true }))
+          catch { case scala.util.control.NonFatal(_) => true })
+      }
 
       val kept = Seq.newBuilder[(Commit.Entry, Option[Seq[String]])]
       val pruned = Seq.newBuilder[Commit.Entry]
       entries.foreach { e =>
-        val row = if (e.key >= 0) InternalRow(e.key) else InternalRow.empty
-        if (!exact.forall(_.eval(row)) ||
-            (e.key >= 0 && buckets.exists(!_.contains(e.key))) ||
+        if (!exact.forall(_.eval(InternalRow(e.key))) ||
+            buckets.exists(!_.contains(e.key)) ||
             !may(e, stats.get(e.dir))) pruned += e
         else fileStats.get(e.dir).filter(_.nonEmpty) match {
           case None => kept += ((e, None))
@@ -125,14 +122,10 @@ private[graft] object ManifestFileIndex {
       * dropped first; the bucket itself is the manifest's own int.
       */
     private def withKey(e: Commit.Entry, base: Option[Skipping.EntryStats])
-        : Option[Skipping.EntryStats] = {
-      val t = base.map(Skipping.trusted(_, schema))
-      if (e.key < 0) t
-      else {
-        val b = Skipping.ColStat("l", e.key.toString, e.key.toString, 0L)
-        Some(t.fold(Skipping.EntryStats(0L, Map(bucketName -> b)))(s =>
-          s.copy(cols = s.cols + (bucketName -> b))))
-      }
+        : Skipping.EntryStats = {
+      val b = Skipping.ColStat("l", e.key.toString, e.key.toString, 0L)
+      base.map(Skipping.trusted(_, schema)).fold(Skipping.EntryStats(0L, Map("bucket" -> b)))(s =>
+        s.copy(cols = s.cols + ("bucket" -> b)))
     }
 
     /** The layout's key, when it is one integral column of `schema`:
@@ -143,8 +136,7 @@ private[graft] object ManifestFileIndex {
     private val key: Option[(String, Int)] = for {
       l <- layout
       k = l.keyExprSql.trim
-      st <- schema
-      if st.fields.exists(f => f.name.equalsIgnoreCase(k) && (f.dataType match {
+      if schema.fields.exists(f => f.name.equalsIgnoreCase(k) && (f.dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
       }))

@@ -45,12 +45,11 @@ import org.apache.spark.sql.types.StructType
   * (4-core VM), opening the read took 24 ms against Spark's 123 ms at
   * 10 files, 109 against 125 ms at 1000 and 262 against 280 ms at
   * 5000: the saved job stops paying for the second listing somewhere
-  * past a few thousand files. [[Commit]] snapshot reads list once:
-  * their file index is built from the same listing [[schemaOf]] picks
-  * from. The readers that still list twice are `Tables`, `Replay` and
-  * `Sources.compact` (and `Commit` for whole-dir versions only: a
-  * publish's schema read, an entry with nested partition dirs); `Rest`
-  * reads back only the files its batch just landed.
+  * past a few thousand files. [[Commit]] snapshot reads list nothing:
+  * their file index holds the files the manifest names, and
+  * [[schemaOf]] picks from those. The readers that still list twice are
+  * `Tables`, `Replay` and `Sources.compact`; `Rest` reads back only the
+  * files its batch just landed.
   */
 object ParquetScan {
 

@@ -19,9 +19,9 @@ import java.util.Base64
   * evaluated against a read's filters by its [[ManifestFileIndex]]
   * before any file is opened. A write-through bucket publish folds
   * each file's footer in the task that just closed it ([[readFold]])
-  * and the driver folds those reports per entry ([[fold]]); a
-  * caller-written dir is swept once on the driver ([[harvestMany]]).
-  * Both run the same chunk code, so the two paths cannot disagree.
+  * and the driver folds those reports per entry ([[fold]]); a footer
+  * sweep of written dirs on the driver ([[harvestMany]]) runs the same
+  * chunk code, so the two cannot disagree.
   *
   * This is the table-format statistics lever (Delta `stats`, Iceberg
   * manifest `lower_bounds`/`upper_bounds`) re-expressed over
@@ -58,9 +58,7 @@ object Skipping {
     * split matters because the snapshot-schema cast between
     * TimestampType and TimestampNTZType SHIFTS stored values by the
     * session timezone, so stats harvested under one semantics must
-    * not prune reads under the other ("t" is the pre-r14 tag that
-    * recorded neither — [[compatible]] trusts it only where the shift
-    * is provably zero) · "a" date days · "n" the entry holds NO
+    * not prune reads under the other · "a" date days · "n" the entry holds NO
     * non-null value for the column (lo/hi empty). `nulls` is -1 when
     * any footer did not record it. The width in the tag is what
     * [[compatible]] checks against the snapshot schema: stats stay
@@ -74,8 +72,7 @@ object Skipping {
   /** Floating-domain tags (compared as Double). */
   private def isFloatTag(t: String): Boolean = t == "d" || t == "f"
   /** Timestamp-domain tags (micros, compared as Long). */
-  private def isTsTag(t: String): Boolean =
-    t == "t" || t == "tu" || t == "tn"
+  private def isTsTag(t: String): Boolean = t == "tu" || t == "tn"
   private def intTagWidth(t: String): Int = t match {
     case "i8" => 8
     case "i16" => 16
@@ -206,12 +203,12 @@ object Skipping {
   private[sources] final case class FileFold(rel: String, rows: Long, bytes: Long,
       cols: Map[String, Acc])
 
-  /** Shared daemon pool for driver-side footer reads and dir listings
-    * ([[listMany]], [[harvestMany]]): a caller-written version dir can
-    * hold many small files, and reading their footers one by one
-    * serializes cheap metadata IO. Footer reads are independent; the
-    * fold is order-insensitive (min/max/null merges commute) and its
-    * output is sorted by path for manifest stability.
+  /** Shared daemon pool for driver-side dir listings and footer reads
+    * ([[harvestMany]]): a version dir can hold many small files, and
+    * reading their footers one by one serializes cheap metadata IO.
+    * Footer reads are independent; the fold is order-insensitive
+    * (min/max/null merges commute) and its output is sorted by path for
+    * manifest stability.
     */
   private lazy val footerPool = java.util.concurrent.Executors
     .newFixedThreadPool(8, r => {
@@ -282,14 +279,18 @@ object Skipping {
         sorted.map(f => f.rel -> EntryStats(f.rows, colsOf(f.cols)))))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The recursive file listings of several dirs, in order, as one
-    * batch on the shared pool: one listing task per dir, so a snapshot
-    * of many buckets pays about one listing round trip, not one per
-    * bucket. A dir whose listing fails is a Failure in its slot.
+  /** Read every parquet footer under SEVERAL directories and fold them
+    * per dir ([[fold]]): each dir's recursive listing, then every (dir,
+    * file) footer read across all requested dirs, is one task on the
+    * shared pool — two flat batches, never a nested submit, so the
+    * fixed pool cannot deadlock on itself. A dir whose listing, ANY
+    * footer read or the fold fails is absent from the result (no stats
+    * → no pruning); other dirs are unaffected.
     */
-  def listMany(conf: Configuration, dirs: Seq[Path])
-      : Seq[scala.util.Try[Seq[org.apache.hadoop.fs.LocatedFileStatus]]] =
-    dirs.map(dir => footerPool.submit(
+  def harvestMany(conf: Configuration,
+      dirs: Seq[(String, Path)]): Map[String, Harvest] = {
+    val failed = scala.collection.mutable.Set.empty[String]
+    val listings = dirs.map { case (_, dir) => footerPool.submit(
       new java.util.concurrent.Callable[Seq[org.apache.hadoop.fs.LocatedFileStatus]] {
         def call() = {
           val it = dir.getFileSystem(conf).listFiles(dir, true)
@@ -300,27 +301,13 @@ object Skipping {
           }
           out.result()
         }
-      })).map(f => scala.util.Try(f.get()).recoverWith {
-        case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
       })
-
-  /** Read every parquet footer under SEVERAL directories through one
-    * flat pool batch and fold them per dir ([[fold]]): every (dir,
-    * file) footer read across all requested dirs is one task on the
-    * shared pool — never a nested submit, so the fixed pool cannot
-    * deadlock on itself. A dir whose listing, ANY footer read or the
-    * fold fails is absent from the result (no stats → no pruning);
-    * other dirs are unaffected.
-    */
-  def harvestMany(conf: Configuration,
-      dirs: Seq[(String, Path)]): Map[String, Harvest] = {
-    val failed = scala.collection.mutable.Set.empty[String]
-    val listed = dirs.zip(listMany(conf, dirs.map(_._2))).flatMap {
-      case ((key, dir), tried) =>
-        tried.map { files =>
-          val base = dir.getFileSystem(conf).makeQualified(dir).toString
-          (key, base, files.filter(_.getPath.getName.endsWith(".parquet")))
-        }.toOption.orElse { failed += key; None }
+    }
+    val listed = dirs.zip(listings).flatMap { case ((key, dir), listing) =>
+      try {
+        val base = dir.getFileSystem(conf).makeQualified(dir).toString
+        Some((key, base, listing.get().filter(_.getPath.getName.endsWith(".parquet"))))
+      } catch { case scala.util.control.NonFatal(_) => failed += key; None }
     }
     val futures = listed.flatMap { case (key, base, statuses) =>
       statuses.map { st =>
@@ -394,27 +381,13 @@ object Skipping {
     // only TimestampNTZType. A cross read exists (applySchema casts
     // ntz<->tz) but SHIFTS every value by the session timezone, so the
     // stored bounds describe values the reader will not see — exactly
-    // the lossy-cast class this gate refuses. The legacy "t" tag
-    // (pre-r14 manifests) recorded neither semantics: trust it for
-    // either timestamp type only when the session timezone is UTC,
-    // where the potential shift is provably zero.
+    // the lossy-cast class this gate refuses. Any other tag (an unknown
+    // one included) declines.
     case "tu" => dt == TimestampType
     case "tn" => dt == TimestampNTZType
-    case "t" => (dt == TimestampType || dt == TimestampNTZType) && utcSession
     case "a" => dt == DateType
     case _ => false
   }
-
-  /** True when the session timezone normalizes to UTC — the only
-    * setting under which an instant<->local timestamp reinterpretation
-    * is provably a zero shift. Shared by [[compatible]] (legacy "t"
-    * stats) and [[literalDom]] (cross-semantics literals).
-    */
-  private def utcSession: Boolean =
-    try java.time.ZoneId
-      .of(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
-      .normalized() == java.time.ZoneOffset.UTC
-    catch { case scala.util.control.NonFatal(_) => false }
 
   /** One column chunk's statistics, classified. */
   private def chunkAcc(ccm: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
@@ -499,20 +472,16 @@ object Skipping {
     * invalidated ([[compatible]]): reads go through
     * [[Commit.applySchema]], which casts carried buckets to the
     * CURRENT manifest schema, and a lossy cast changes values or
-    * manufactures nulls the footer stats know nothing about. A
-    * pre-schema manifest (None) performs no cast — its stats are
-    * trusted as written. Columns absent from the schema are dropped
-    * (applySchema removes them from the read anyway).
+    * manufactures nulls the footer stats know nothing about. Columns
+    * absent from the schema are dropped (applySchema removes them from
+    * the read anyway).
     */
-  def trusted(s: EntryStats,
-      schema: Option[StructType]): EntryStats =
-    schema.fold(s) { st =>
-      s.copy(cols = s.cols.filter { case (n, c) =>
-        st.fields.find(_.name == n)
-          .orElse(st.fields.find(_.name.equalsIgnoreCase(n)))
-          .exists(f => compatible(c, f.dataType))
-      })
-    }
+  def trusted(s: EntryStats, schema: StructType): EntryStats =
+    s.copy(cols = s.cols.filter { case (n, c) =>
+      schema.fields.find(_.name == n)
+        .orElse(schema.fields.find(_.name.equalsIgnoreCase(n)))
+        .exists(f => compatible(c, f.dataType))
+    })
 
   // ---------------------------------------------------------------
   // predicate evaluation against entry stats
@@ -575,12 +544,8 @@ object Skipping {
         // Timestamp literals order against the stored micros ONLY when
         // the literal's semantics match the footer's: the actual filter
         // casts a mismatched side through the session timezone, shifting
-        // every value — the same class compatible() refuses. Legacy "t"
-        // stats (unknown semantics) are trusted only under a UTC session,
-        // where the potential shift is provably zero.
+        // every value — the same class compatible() refuses.
         case (TimestampType, "tu") | (TimestampNTZType, "tn") =>
-          Some(NumD(new java.math.BigDecimal(x.asInstanceOf[Long])))
-        case (TimestampType | TimestampNTZType, "t") if utcSession =>
           Some(NumD(new java.math.BigDecimal(x.asInstanceOf[Long])))
         case (DateType, "a") =>
           Some(NumD(new java.math.BigDecimal(x.asInstanceOf[Int])))

@@ -169,23 +169,6 @@ object Sources {
     n
   }
 
-  /** [[compact]] with the swap done FOR the caller: the rewrite lands
-    * in a fresh version dir under `root` and commits via
-    * [[Commit]]'s atomic pointer swap, so a compaction killed mid-write
-    * never disturbs readers (they resolve the previous snapshot
-    * through `Commit.read(spark, root)`). This closes the "atomic swap
-    * is the caller's transaction" gap for callers without a metastore
-    * repoint of their own.
-    */
-  def compactCommit(spark: SparkSession, inDir: String, root: String,
-      targetBytes: Long = 128L * 1024 * 1024): Int = {
-    var n = 0
-    Commit.publishDir(spark, root) { vdir =>
-      n = compact(spark, inDir, vdir, targetBytes)
-    }
-    n
-  }
-
   /** Bucketed table write (beyond the reference; the co-located-join
     * story at 100 TB). Both sides of a recurring large-×-large equi-join
     * written with the SAME bucket count on the join key join with ZERO

@@ -3,27 +3,27 @@ package graft.tools
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** One writer PROCESS for the cross-JVM commit race
-  * (CommitForkedSpec): publishes a single bucket row to the given
-  * table root as its own JVM — outside the in-driver writer lock —
-  * and records the outcome to a file the parent asserts on.
+  * (CommitForkedSpec): makes CrashWriter's write for its mode
+  * (`publish`: one row into bucket 1; `append`: one Sum append under
+  * its own appId) to the given table root as its own JVM — outside the
+  * in-driver writer lock — and records the outcome to a file the
+  * parent asserts on.
   *
-  * Protocol: write `<out>.ready` once the session and plan are warm,
-  * spin until the parent creates the go file (so both racers hit
-  * `Commit.publishBuckets` in as tight a window as the OS allows),
-  * publish once (no retry — the parent wants the RAW outcome), then
-  * write `<out>` with one of:
-  *   `committed <version>`   — this writer's publish won
+  * Protocol: write `<out>.ready` once the session is warm, spin until
+  * the parent creates the go file (so both racers hit the write in as
+  * tight a window as the OS allows), write once (no retry — the parent
+  * wants the RAW outcome), then write `<out>` with one of:
+  *   `committed <version>`   — this writer's write won
   *   `refused <message>`     — clean loss (ConcurrentCommitException)
   *   `error <class>: <msg>`  — anything else (the spec fails on it)
   *
-  * args: tableRoot goFile outFile writerId
+  * args: publish|append tableRoot goFile outFile writerId
   */
 object RaceWriter {
   def main(args: Array[String]): Unit = {
-    val Array(root, goFile, outFile, id) = args
+    val Array(mode, root, goFile, outFile, id) = args
     val spark = SparkSession.builder()
       .master("local[2]")
       .appName(s"race-writer-$id")
@@ -32,13 +32,12 @@ object RaceWriter {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val df = Seq((1L, id.toDouble)).toDF("user_id", "v")
-      .withColumn("bucket", lit(1))
-    df.count() // pay plan/codegen warm-up BEFORE the race window
+    // pay plan/codegen warm-up BEFORE the race window
+    Seq((1L, 1L)).toDF("user_id", "n").count()
     Files.writeString(Path.of(outFile + ".ready"), "ready")
     while (!Files.exists(Path.of(goFile))) Thread.onSpinWait()
     val result =
-      try s"committed ${graft.sources.Commit.publishBuckets(df, root)}"
+      try s"committed ${CrashWriter.write(spark, mode, root, id).getOrElse("none")}"
       catch {
         case e: graft.sources.Commit.ConcurrentCommitException =>
           s"refused ${e.getMessage}"

@@ -11,16 +11,18 @@ import org.apache.spark.sql.functions._
   * (`.claim-v=<n>` exclusive create BEFORE any data write, plus the
   * head/in-flight guards — see the claim block in Commit.publish).
   * This spec forks two REAL JVMs (graft.tools.RaceWriter), releases
-  * them through a shared go-file into `publishBuckets` on one table,
-  * and asserts the documented contract: every outcome is either a
-  * committed version or a CLEAN refusal (ConcurrentCommitException) —
-  * never an error, never silent loss — and the final table equals the
-  * serial application of exactly the writers that reported commits.
+  * them through a shared go-file into one write each on one table —
+  * `publishBuckets`, or a Sum `appendBuckets` under distinct appIds,
+  * the maintainers' path — and asserts the documented contract: every
+  * outcome is either a committed version or a CLEAN refusal
+  * (ConcurrentCommitException) — never an error, never silent loss —
+  * and the final table equals the serial application of exactly the
+  * writers that reported commits.
   */
 class CommitForkedSpec extends SparkSpec {
   import spark.implicits._
 
-  private def forkWriter(root: String, go: Path, out: Path,
+  private def forkWriter(mode: String, root: String, go: Path, out: Path,
       id: Int): Process = {
     // the sbt test JVM's classpath already spans the compiled classes
     // and the Spark jars — pass it straight through to the child
@@ -36,24 +38,21 @@ class CommitForkedSpec extends SparkSpec {
     val cmd = (Seq("java") ++ opens ++ Seq("-Xmx1g",
       "-Dderby.system.home=" + Files.createTempDirectory("race-derby"),
       "-cp", cp, "graft.tools.RaceWriter",
-      root, go.toString, out.toString, id.toString))
+      mode, root, go.toString, out.toString, id.toString))
     new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
       .redirectOutput(Files.createTempFile(s"race-writer-$id", ".log").toFile)
       .start()
   }
 
-  test("two racing JVMs on one table: losers refuse cleanly, nothing " +
-      "is silently lost, the table equals the committed serial order") {
-    val dir = graft.util.TempRoot.freshDir("commit-forked")
+  /** Race writers 1 and 2 in `mode` on the table at `dir`/t; their
+    * outcome lines, in writer order.
+    */
+  private def race(mode: String, dir: java.nio.file.Path): Seq[String] = {
     val root = s"$dir/t"
-    // baseline so both racers carry forward real state
-    Commit.publishBuckets(
-      Seq((0L, 0.0)).toDF("user_id", "v").withColumn("bucket", lit(0)),
-      root)
     val go = Path.of(s"$dir/go")
     val outs = Seq(1, 2).map(id => Path.of(s"$dir/out-$id"))
-    val procs = Seq(1, 2).map(id => forkWriter(root, go, outs(id - 1), id))
+    val procs = Seq(1, 2).map(id => forkWriter(mode, root, go, outs(id - 1), id))
     try {
       // wait (generously — cold JVM + Spark session) for both readies
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
@@ -68,7 +67,18 @@ class CommitForkedSpec extends SparkSpec {
           "racer JVM did not exit")
       }
     } finally procs.foreach(_.destroyForcibly())
-    val results = outs.map(o => Files.readString(o).trim)
+    outs.map(o => Files.readString(o).trim)
+  }
+
+  test("two racing JVMs on one table: losers refuse cleanly, nothing " +
+      "is silently lost, the table equals the committed serial order") {
+    val dir = graft.util.TempRoot.freshDir("commit-forked")
+    val root = s"$dir/t"
+    // baseline so both racers carry forward real state
+    Commit.publishBuckets(
+      Seq((0L, 0.0)).toDF("user_id", "v").withColumn("bucket", lit(0)),
+      root)
+    val results = race("publish", dir)
     // contract: every outcome decided — committed or CLEANLY refused
     assert(results.forall(r =>
       r.startsWith("committed ") || r.startsWith("refused ")),
@@ -102,5 +112,34 @@ class CommitForkedSpec extends SparkSpec {
     assert(claims.isEmpty, s"stale claims left behind: ${claims.toSeq}")
     // the watermark/read path still works after the contention
     assert(Commit.read(spark, root).get.count() === 2)
+  }
+
+  test("two JVMs racing Sum appends under distinct appIds: the table equals " +
+      "the additive oracle over the writers that committed") {
+    val dir = graft.util.TempRoot.freshDir("commit-forked-append")
+    val root = s"$dir/t"
+    val sum = Commit.Merge.Sum(Seq("user_id"))
+    // baseline: user 0 in bucket 0; each racer adds its id to user 1
+    Commit.appendBuckets(Seq((0L, 5L)).toDF("user_id", "n"), root, "user_id", 4, sum,
+      Some(("seed", 1L)), None)
+    val results = race("append", dir)
+    assert(results.forall(r =>
+      r.startsWith("committed ") || r.startsWith("refused ")),
+      s"undecided/error outcome: $results")
+    val winners = results.zipWithIndex.collect {
+      case (r, i) if r.startsWith("committed ") => i + 1
+    }
+    assert(winners.nonEmpty, s"both racers refused: $results")
+    assert(Commit.current(spark, root).get._1 === 1L + winners.size,
+      s"expected ${1 + winners.size} dense versions (results=$results)")
+    val got = Commit.read(spark, root).get
+      .select("user_id", "n").as[(Long, Long)].collect().toMap
+    assert(got === Map(0L -> 5L, 1L -> winners.map(_.toLong).sum),
+      s"not the additive oracle over committed writers $winners (results=$results)")
+    // each committed writer's watermark landed with its data
+    winners.foreach(id => assert(Commit.lastTxn(spark, root, s"writer-$id") === Some(1L)))
+    val claims = new java.io.File(root).listFiles()
+      .map(_.getName).filter(_.startsWith(".claim-v="))
+    assert(claims.isEmpty, s"stale claims left behind: ${claims.toSeq}")
   }
 }

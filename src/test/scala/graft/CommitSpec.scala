@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Commit, Sources}
+import graft.sources.Commit
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -57,25 +57,6 @@ class CommitSpec extends SparkSpec {
       .select("user_id", "v").as[(Long, Double)].collect().toSet
     // bucket 1 (users 1) replaced wholesale; buckets of users 2,3 carried
     assert(merged === Set(1L -> 9.0, 2L -> 2.0, 3L -> 3.0))
-  }
-
-  test("a caller-renamed bucket column resolves against the recorded schema") {
-    // the manifest records the partition column under its on-disk name
-    // ("bucket"); a custom bucketCol must come back renamed and
-    // POPULATED, not silently null-filled by the schema projection
-    val root = tmp("commit-bucketcol")
-    Commit.publishBuckets(statusDf(1L -> 1.0, 2L -> 2.0), root)
-    Commit.publishBuckets(statusDf(1L -> 5.0), root) // bucket 2 is carried
-    val df = Commit.read(spark, root, bucketCol = "shard").get
-    assert(df.columns.contains("shard") && !df.columns.contains("bucket"),
-      df.columns.mkString(","))
-    val got = df.select("user_id", "v", "shard")
-      .as[(Long, Double, Int)].collect().toSet
-    assert(got === Set((1L, 5.0, 1), (2L, 2.0, 2)))
-    // time travel honors the rename too
-    val at1 = Commit.readAt(spark, root, 1L, bucketCol = "shard").get
-    assert(at1.columns.contains("shard") &&
-      at1.where(col("shard").isNull).count() === 0, at1.columns.mkString(","))
   }
 
   test("a manifest without a pointer swap is invisible; versions never rewind") {
@@ -161,13 +142,19 @@ class CommitSpec extends SparkSpec {
     // two writers scanned nextVersion concurrently and both resolved
     // v=2: the first claims manifest-2 (exclusive create) and swaps
     // the pointer; the second's claim of the SAME version must fail
-    // the create, never overwrite
-    Commit.commitManifest(spark, root, 2L, 1L,
-      Seq(Commit.Entry(1, "v=1/bucket=1")))
+    // the create, never overwrite. Both commit v=1's one bucket again,
+    // under its schema and file list
+    val schema = Commit.read(spark, root).get.schema
+    val files = Files.list(Paths.get(root, "v=1", "bucket=1")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].toFile)
+      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.length)
+    val entry = Seq(Commit.Entry(1, "v=1/bucket=1"))
+    Commit.commitManifest(spark, root, 2L, 1L, entry, schema,
+      Map("v=1/bucket=1" -> files))
     val pointerAfterWinner = Files.readString(Paths.get(root, "_POINTER"))
     val died = intercept[Commit.ConcurrentCommitException] {
-      Commit.commitManifest(spark, root, 2L, 1L,
-        Seq(Commit.Entry(1, "v=1/bucket=1")))
+      Commit.commitManifest(spark, root, 2L, 1L, entry, schema,
+        Map("v=1/bucket=1" -> files))
     }
     assert(died.getMessage.contains("version 2"))
     // the winner's pointer and manifest body are untouched
@@ -330,34 +317,13 @@ class CommitSpec extends SparkSpec {
       .get.count() === 1)
   }
 
-  test("schema-less CDF fallback null-fills additive evolution instead of failing") {
-    // legacy manifests without #schema= lines give the diff no committed
-    // column set: the whole-table fallback must conform the OLD side to
-    // the current read's columns (null-filling a column added after the
-    // cursor), not throw on the select
-    val root = tmp("commit-schemaless-cdf")
-    Seq((1L, 1.0)).toDF("user_id", "v").write.parquet(s"$root/v=1/bucket=0")
-    Seq((1L, 2.0, "x"), (2L, 3.0, "y")).toDF("user_id", "v", "note")
-      .write.parquet(s"$root/v=2/bucket=0")
-    Files.writeString(Paths.get(root, "manifest-1.txt"),
-      "1\n#parent=0\n0\tv=1/bucket=0")
-    Files.writeString(Paths.get(root, "manifest-2.txt"),
-      "2\n#parent=1\n0\tv=2/bucket=0")
-    Files.writeString(Paths.get(root, "_POINTER"), "manifest-2.txt")
-    val feed = Commit.changesSinceKeyed(spark, root, 1L, Seq("user_id")).get
-    val rows = feed.select("user_id", "v", "note", "_change")
-      .as[(Long, Double, Option[String], String)].collect().toSet
-    assert(rows === Set(
-      (1L, 2.0, Some("x"), "upsert"), (2L, 3.0, Some("y"), "upsert")), rows)
-  }
-
   test("an empty bucketed publish refuses to wipe an existing table") {
     val root = tmp("commit-empty-wipe")
     Commit.publishBuckets(statusDf(1L -> 1.0, 2L -> 2.0), root)
     val before = Commit.read(spark, root).get
       .select("user_id", "v").as[(Long, Double)].collect().toSet
-    // an empty DataFrame writes no bucket= dirs; committing it would
-    // degrade the table to a whole-dir EMPTY snapshot (carried = Nil)
+    // an empty DataFrame writes no bucket= dirs; a version holding no
+    // bucket would replace the table with nothing
     val e = intercept[IllegalArgumentException] {
       Commit.publishBuckets(statusDf().filter(lit(false)), root)
     }
@@ -399,23 +365,20 @@ class CommitSpec extends SparkSpec {
   test("optimizeBuckets with a caller-named bucket column keeps keys, carry-forward, and schema") {
     val root = tmp("commit-optimize-named")
     val df = Seq((1L, 1.0), (2L, 2.0), (5L, 5.0)).toDF("user_id", "v")
-      .withColumn("sensor", pmod(col("user_id"), lit(4)).cast("int"))
+      .withColumn("bucket", pmod(col("user_id"), lit(4)).cast("int"))
       .repartition(4)
-    Commit.publishBuckets(df, root, bucketCol = "sensor")
-    Commit.optimizeBuckets(spark, root, bucketCol = "sensor")
-    // the compacted manifest must still be BUCKETED (keys preserved,
-    // not one whole-dir entry) and the column must read back under the
-    // caller's name with unchanged content
+    Commit.publishBuckets(df, root)
+    Commit.optimizeBuckets(spark, root)
+    // the compacted manifest keeps each bucket's key, and the bucket
+    // column reads back with unchanged content
     val (_, entries) = Commit.current(spark, root).get
-    assert(entries.forall(_.key >= 0) && entries.map(_.key).toSet === Set(1, 2),
-      entries)
-    val back = Commit.read(spark, root, bucketCol = "sensor").get
-    assert(back.columns.contains("sensor") && !back.columns.contains("bucket"))
-    assert(back.select("user_id", "v", "sensor")
+    assert(entries.map(_.key).toSet === Set(1, 2), entries)
+    val back = Commit.read(spark, root).get
+    assert(back.select("user_id", "v", "bucket")
       .as[(Long, Double, Int)].collect().toSet ===
       Set((1L, 1.0, 1), (2L, 2.0, 2), (5L, 5.0, 1)))
-    // and key pruning still works through the rename
-    val (kept, _) = Commit.planWhere(spark, root, "sensor = 2", bucketCol = "sensor")
+    // and key pruning still works
+    val (kept, _) = Commit.planWhere(spark, root, "bucket = 2")
     assert(kept.map(_.key) === Seq(2))
   }
 
@@ -460,12 +423,6 @@ class CommitSpec extends SparkSpec {
     Commit.vacuum(spark, root)
     assert(!Files.exists(Paths.get(root, "v=1")))
     assert(Commit.read(spark, root).get.count() === 16)
-    // a whole-dir snapshot declines (no bucketed entries)
-    val root2 = tmp("commit-optimize-whole")
-    Commit.publishDir(spark, root2) { vdir =>
-      spark.range(10).write.parquet(vdir)
-    }
-    assert(Commit.optimizeBuckets(spark, root2).isEmpty)
   }
 
   test("streamed header readers agree with the full manifest parse") {
@@ -536,17 +493,59 @@ class CommitSpec extends SparkSpec {
     }
   }
 
-  test("compactCommit publishes whole snapshots atomically") {
-    val root = tmp("commit-compact")
-    val landing = graft.util.TempRoot.freshDir("commit-landing").toString
-    spark.range(0, 1000).repartition(8).write.mode("overwrite").parquet(landing)
-    val n = Sources.compactCommit(spark, landing, root)
-    assert(n === 1) // tiny input compacts to one file
-    assert(Commit.read(spark, root).get.count() === 1000)
-    // recompaction replaces the whole snapshot; old version vacuums away
-    Sources.compactCommit(spark, landing, root)
-    Commit.vacuum(spark, root)
-    assert(Commit.read(spark, root).get.count() === 1000)
-    assert(!Files.exists(Paths.get(root, "v=1")))
+  test("a manifest missing its #schema= line or an entry's #files= line fails reads " +
+      "and publishes, naming the version and the line") {
+    val root = tmp("commit-missing-lines")
+    Commit.publishBuckets(statusDf(1L -> 1.0, 2L -> 2.0), root) // v=1
+    Commit.publishBuckets(statusDf(1L -> 5.0), root)            // v=2
+    val mf = Paths.get(root, "manifest-2.txt")
+    val intact = Files.readString(mf)
+    val pointer = Files.readString(Paths.get(root, "_POINTER"))
+    def fails(line: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("manifest 2") && e.getMessage.contains(line),
+        e.getMessage)
+    }
+    def without(prefix: String): String =
+      intact.linesIterator.filterNot(_.startsWith(prefix)).mkString("\n")
+    // no #schema= line; then the fresh entry's #files= line dropped
+    for ((broken, line) <- Seq(
+        without("#schema=") -> "#schema=",
+        without("#files=v=2/") -> "#files=")) {
+      Files.writeString(mf, broken)
+      fails(line)(Commit.read(spark, root))
+      fails(line)(Commit.readAt(spark, root, 2L))
+      fails(line)(Commit.changesSinceKeyed(spark, root, 1L, Seq("user_id")))
+      // a publish over the broken head fails the same way; the head stays
+      fails(line)(Commit.publishBuckets(statusDf(3L -> 3.0), root))
+      assert(Files.readString(Paths.get(root, "_POINTER")) === pointer)
+      assert(!Files.exists(Paths.get(root, "manifest-3.txt")))
+    }
+    // the intact manifest reads again
+    Files.writeString(mf, intact)
+    assert(Commit.read(spark, root).get.count() === 2)
+  }
+
+  test("an empty bucketed publish is refused on a new table too") {
+    val root = tmp("commit-empty-new")
+    val e = intercept[IllegalArgumentException] {
+      Commit.publishBuckets(statusDf().filter(lit(false)), root)
+    }
+    assert(e.getMessage.contains("no bucket dirs"), e.getMessage)
+    assert(Commit.read(spark, root).isEmpty, "the refused publish created a table")
+  }
+
+  test("publishes leave no sidecar files: after vacuum the root holds the pointer, " +
+      "the retained manifests and the live version dirs") {
+    val root = tmp("commit-root-clean")
+    Commit.publishBuckets(statusDf(1L -> 1.0, 2L -> 2.0), root) // v=1
+    Commit.publishBuckets(statusDf(1L -> 5.0), root)            // v=2
+    Commit.publishBuckets(statusDf(1L -> 9.0), root)            // v=3
+    Commit.vacuum(spark, root, retain = 2)
+    val names = Files.list(Paths.get(root)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+    // v=1 holds the carried bucket 2; v=2's bucket 1 is v=2's snapshot
+    assert(names === Set("_POINTER", "manifest-2.txt", "manifest-3.txt",
+      "v=1", "v=2", "v=3"), names)
   }
 }

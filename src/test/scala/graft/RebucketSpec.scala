@@ -39,10 +39,6 @@ class RebucketSpec extends SparkSpec {
     // an incremental publish with no declaration keeps the layout
     Commit.publishBuckets(df(4, 5L -> 5.0), root)
     assert(Commit.layout(spark, root) === Some(Commit.Layout(4, "user_id")))
-    // a whole-dir replace drops it (no buckets to discipline)
-    Commit.publishDir(spark, root)(d =>
-      Seq(9L -> 9.0).toDF("user_id", "v").write.parquet(d))
-    assert(Commit.layout(spark, root).isEmpty)
   }
 
   test("a modulus change on an incremental publish is refused") {

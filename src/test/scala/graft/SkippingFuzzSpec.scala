@@ -5,8 +5,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.nio.file.{Files, Paths}
-
 /** Property-fuzz of the zone-map/skipping layer (r16 verdict #6):
   * SkippingSpec pins the pruner on hand-picked tables and predicates;
   * this drives SEEDED RANDOM tables (every stats-bearing value domain:
@@ -25,12 +23,6 @@ import java.nio.file.{Files, Paths}
   * disjunctions, constants drawn both FROM the data (hits) and outside
   * its range (prunes), timestamp literals against both semantics, and
   * the bucket key itself.
-  *
-  * A final mutation pass re-tags harvested "tu" stats as the legacy
-  * pre-r14 "t" tag directly in the manifest text and re-asserts
-  * timestamp predicates — the compatibility path that trusts "t" only
-  * where the tz shift is provably zero (UTC session here), exercised
-  * on real stats rather than a hand-written fixture.
   */
 class SkippingFuzzSpec extends SparkSpec {
 
@@ -167,29 +159,5 @@ class SkippingFuzzSpec extends SparkSpec {
     assert(prunedAtLeastOnce,
       "no predicate pruned any entry across 20 seeds — the fuzz is " +
         "not exercising the pruner at all")
-  }
-
-  test("legacy 't' timestamp tags on real harvested stats stay exact " +
-      "(UTC session: shift provably zero, stats trusted)") {
-    val rng = new scala.util.Random(7)
-    val root = graft.util.TempRoot.freshDir("skip-fuzz-legacy").toString + "/t"
-    val rows = table(rng)
-    Commit.publishBuckets(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), schema), root)
-    // re-tag the harvested instant-timestamp stats as pre-r14 "t" in
-    // the manifest text (field 2 of the stats codec; base64 fields
-    // cannot contain ',', so the delimiter match is unambiguous)
-    val ptr = Paths.get(root, "_POINTER")
-    val mf = Paths.get(root, Files.readString(ptr).trim)
-    Files.writeString(mf, Files.readString(mf).replace(",tu,", ",t,"))
-    val full = Commit.read(spark, root).get
-    val fullRows = full.collect().toSeq
-    for (_ <- 1 to 8) {
-      val pred = predicate(rng, fullRows.filter(_ != null))
-        .replaceAll("t_loc", "t_ins") // focus the instant column
-      val pruned = Commit.readWhere(spark, root, pred).get
-      assert(canon(pruned) === canon(full.filter(expr(pred))),
-        s"legacy-t pred=[$pred]: pruned read diverged")
-    }
   }
 }

@@ -128,13 +128,13 @@ class SkippingSpec extends SparkSpec {
 
   test("file-grain zone maps: a range-sorted snapshot's narrow read opens a strict file subset") {
     val root = tmp("skip-files")
-    // the engine's own maintained layout: writeRangeSorted stripes the
-    // key space across files — exactly the case entry-grain boxes
-    // cannot exploit (every file is inside the one entry)
-    val df = (0 until 800).map(i => (i.toLong, i, s"r$i"))
-      .toDF("user_id", "v", "name")
-    Commit.publishDir(spark, root)(vdir =>
-      graft.sources.Sources.writeRangeSorted(df, vdir, "v", files = 8))
+    // one bucket whose eight files each hold one contiguous stripe of
+    // the key space — exactly the case entry-grain boxes cannot
+    // exploit (every file is inside the one entry)
+    val df = spark.range(0, 800, 1, 8).select(col("id").as("user_id"),
+      col("id").cast("int").as("v"), concat(lit("r"), col("id")).as("name"),
+      lit(0).as("bucket"))
+    Commit.publishBuckets(df, root)
     val m = Files.readString(Paths.get(root, "manifest-1.txt"))
     assert(m.linesIterator.count(_.startsWith("#fstats=")) === 8, m.take(400))
 
@@ -171,10 +171,10 @@ class SkippingSpec extends SparkSpec {
     // an entry whose folded box matches but whose every FILE refutes:
     // two disjoint stripes [0,99] and [300,399] fold to [0,399]
     val root2 = tmp("skip-files-gap")
-    val gap = ((0 until 100) ++ (300 until 400)).map(i => (i.toLong, i))
-      .toDF("user_id", "v")
-    Commit.publishDir(spark, root2)(vdir =>
-      graft.sources.Sources.writeRangeSorted(gap, vdir, "v", files = 2))
+    val gap = spark.range(0, 200, 1, 2).select(col("id").as("user_id"),
+      when(col("id") < 100, col("id")).otherwise(col("id") + 200).cast("int").as("v"),
+      lit(0).as("bucket"))
+    Commit.publishBuckets(gap, root2)
     val (kept2, pruned2) = Commit.planWhereFiles(spark, root2, "v = 200")
     assert(kept2.isEmpty && pruned2.size === 1,
       "entry with no surviving file must drop entirely")
@@ -211,7 +211,7 @@ class SkippingSpec extends SparkSpec {
     def st(t: String, lo: String, hi: String) =
       EntryStats(1L, Map("x" -> ColStat(t, lo, hi, 0L)))
     def kept(s: EntryStats, dt: DataType): Boolean =
-      Skipping.trusted(s, Some(StructType(Seq(StructField("x", dt)))))
+      Skipping.trusted(s, StructType(Seq(StructField("x", dt))))
         .cols.contains("x")
     // integral: widening trusted, narrowing (or legacy width-unknown
     // "l" against a narrower type) refused
@@ -236,8 +236,6 @@ class SkippingSpec extends SparkSpec {
     // all-null survives any type (casting null is null)
     assert(kept(st("n", "", ""), IntegerType) &&
       kept(st("n", "", ""), StringType))
-    // pre-schema manifests cast nothing — trusted as written
-    assert(Skipping.trusted(st("l", "1", "9"), None).cols.contains("x"))
 
     // integration: narrow the RECORDED schema of a committed table (v
     // int → short) — the guard must decline to prune on v, and the
@@ -269,20 +267,6 @@ class SkippingSpec extends SparkSpec {
     assert(Skipping.compatible(c("tn"), TimestampNTZType))
     assert(!Skipping.compatible(c("tn"), TimestampType))
 
-    // legacy "t" (pre-r14 manifests, semantics unknown): trusted for
-    // either timestamp type ONLY when the session tz is UTC, where the
-    // potential shift is provably zero
-    val tzKey = "spark.sql.session.timeZone"
-    val saved = spark.conf.get(tzKey)
-    try {
-      spark.conf.set(tzKey, "UTC")
-      assert(Skipping.compatible(c("t"), TimestampType))
-      assert(Skipping.compatible(c("t"), TimestampNTZType))
-      spark.conf.set(tzKey, "America/New_York")
-      assert(!Skipping.compatible(c("t"), TimestampType))
-      assert(!Skipping.compatible(c("t"), TimestampNTZType))
-    } finally spark.conf.set(tzKey, saved)
-
     // literal gate: even when the stat survived the schema cast, a
     // comparison literal of the OTHER semantics goes through a session-
     // tz cast in the actual filter — its raw micros must not prune
@@ -295,49 +279,6 @@ class SkippingSpec extends SparkSpec {
     assert(Skipping.mayMatch(ntzLit, stat("tu")), "cross semantics decline")
     assert(!Skipping.mayMatch(ntzLit, stat("tn")), "matching semantics prune")
     assert(Skipping.mayMatch(tzLit, stat("tn")), "cross semantics decline")
-    try {
-      spark.conf.set(tzKey, "UTC")
-      assert(!Skipping.mayMatch(tzLit, stat("t")), "legacy t prunes under UTC")
-      assert(!Skipping.mayMatch(ntzLit, stat("t")))
-      spark.conf.set(tzKey, "America/New_York")
-      assert(Skipping.mayMatch(tzLit, stat("t")), "legacy t declines off-UTC")
-      assert(Skipping.mayMatch(ntzLit, stat("t")))
-    } finally spark.conf.set(tzKey, saved)
-  }
-
-  test("legacy t manifest prunes under UTC, keeps everything off-UTC, result unchanged") {
-    import graft.sources.Skipping
-    import graft.sources.Skipping.{ColStat, EntryStats}
-    org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    val root = tmp("skip-legacy-t")
-    val df = zonedDf.filter(col("bucket") === 1).drop("bucket")
-    df.write.parquet(s"$root/v=1/bucket=1")
-    // hand-write a pre-r14 manifest: schema-bearing, ts stat tagged "t"
-    // with the data's true micro bounds (Jan 2 00:00 .. Jan 2 00:09)
-    val lo = 1704153600000000L // 2024-01-02T00:00:00Z in micros
-    val hi = lo + 9L * 60 * 1000000
-    val enc = Skipping.encode(EntryStats(10L,
-      Map("ts" -> ColStat("t", lo.toString, hi.toString, 0L))))
-    Files.writeString(Paths.get(root, "manifest-1.txt"),
-      s"1\n#parent=0\n#schema=${df.schema.json}\n" +
-        s"#stats=v=1/bucket=1\t$enc\n1\tv=1/bucket=1")
-    Files.writeString(Paths.get(root, "_POINTER"), "manifest-1.txt")
-
-    val refuted = "ts >= timestamp_ntz'2024-06-01 00:00:00'"
-    val tzKey = "spark.sql.session.timeZone"
-    val saved = spark.conf.get(tzKey)
-    try {
-      spark.conf.set(tzKey, "UTC")
-      assert(keptDirs(root, refuted) === Set.empty[String],
-        "legacy t stat must prune under a UTC session")
-      assert(Commit.readWhere(spark, root, refuted).get.count() === 0)
-      spark.conf.set(tzKey, "America/New_York")
-      assert(keptDirs(root, refuted) === Set("v=1/bucket=1"),
-        "legacy t stat must be ignored under a non-UTC session")
-      // and the unpruned read still answers correctly
-      assert(Commit.readWhere(spark, root,
-        "ts >= timestamp_ntz'2024-01-02 00:05:00'").get.count() === 5)
-    } finally spark.conf.set(tzKey, saved)
   }
 
   test("NANOS footers: harvested micro bounds widen outward, semantics tagged") {
@@ -397,18 +338,23 @@ class SkippingSpec extends SparkSpec {
 
   test("stats-less manifests and unknown shapes decline to prune") {
     val root = tmp("skip-legacy")
-    // a pre-skipping manifest, hand-written exactly as round 11 wrote
-    // them: no #stats lines
-    zonedDf.filter(col("bucket") === 1).drop("bucket")
-      .write.parquet(s"$root/v=1/bucket=1")
-    Files.writeString(Paths.get(root, "manifest-1.txt"),
-      "1\n#parent=0\n1\tv=1/bucket=1")
-    val tmpPtr = Paths.get(root, "_POINTER")
-    Files.writeString(tmpPtr, "manifest-1.txt")
+    // a manifest whose zone-map lines are gone: no #stats / #fstats
+    Commit.publishBuckets(zonedDf.filter(col("bucket") === 1), root)
+    val mf = Paths.get(root, "manifest-1.txt")
+    Files.writeString(mf, Files.readString(mf).linesIterator
+      .filterNot(l => l.startsWith("#stats=") || l.startsWith("#fstats=")).mkString("\n"))
     // a value predicate cannot prune without stats — but the read
     // still answers correctly
     assert(keptDirs(root, "v >= 10000") === Set("v=1/bucket=1"))
     assert(Commit.readWhere(spark, root, "v >= 100").get.count() === 10)
+    // a timestamp stat under a tag the evaluator does not know ("t",
+    // which records no instant/local semantics) declines too
+    val rootT = tmp("skip-untagged-ts")
+    Commit.publishBuckets(zonedDf, rootT)
+    val mfT = Paths.get(rootT, "manifest-1.txt")
+    Files.writeString(mfT, Files.readString(mfT).replace(",tn,", ",t,"))
+    assert(keptDirs(rootT, "ts >= timestamp_ntz'2024-06-01 00:00:00'").size === 4)
+    sameAsUnpruned(rootT, "ts >= timestamp_ntz'2024-01-03 00:00:00'")
     // unknown column / unsupported shape keep everything
     val root2 = tmp("skip-conservative")
     Commit.publishBuckets(zonedDf, root2)
